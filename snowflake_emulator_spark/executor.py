@@ -2263,7 +2263,7 @@ class Executor:
             if key not in self._dyntable_defs:
                 raise errors.execution_error(f"{tm.name} is not a dynamic table")
             df = self.query_df(self._dyntable_defs[key][0], ctx)
-            self.catalog.write_table(tm, df, mode="overwrite")
+            self.catalog.write_table(tm, lambda _live: df)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _CREATE_MV_RE.match(sql)
@@ -2293,7 +2293,7 @@ class Executor:
             if key not in self._dyntable_defs or tm.kind != "MATERIALIZED VIEW":
                 raise errors.execution_error(f"{tm.name} is not a materialized view")
             df = self.query_df(self._dyntable_defs[key][0], ctx)
-            self.catalog.write_table(tm, df, mode="overwrite")
+            self.catalog.write_table(tm, lambda _live: df)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _DROP_MV_RE.match(sql)
@@ -2447,11 +2447,16 @@ class Executor:
             old, new = m.group(2).upper(), m.group(3).upper()
             if not any(c.name == old for c in tm.columns):
                 raise errors.object_not_found(f"{tm.name}.{old}")
-            df = self.catalog.read_table(tm).withColumnRenamed(old, new)
-            for c in tm.columns:
-                if c.name == old:
-                    c.name = new
-            self.catalog.write_table(tm, df, mode="overwrite")
+
+            def renamed(live: DataFrame) -> DataFrame:
+                # live was read with the old names; the rename of the
+                # metadata lands inside the table lock with the data
+                for c in tm.columns:
+                    if c.name == old:
+                        c.name = new
+                return live.withColumnRenamed(old, new)
+
+            self.catalog.write_table(tm, renamed)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_DROP_COL_RE.match(sql)
@@ -2462,14 +2467,17 @@ class Executor:
                 raise errors.object_not_found(f"{tm.name}.{col}")
             if len(tm.columns) == 1:
                 raise errors.execution_error("cannot drop the only column")
-            df = self.catalog.read_table(tm).drop(col)
-            tm.columns = [c for c in tm.columns if c.name != col]
-            self.catalog.write_table(tm, df, mode="overwrite")
+
+            def dropped(live: DataFrame) -> DataFrame:
+                tm.columns = [c for c in tm.columns if c.name != col]
+                return live.drop(col)
+
+            self.catalog.write_table(tm, dropped)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         # CLUSTER BY is extracted up-front (the greedy column-list regex
         # would otherwise swallow it); recorded as metadata AND acted on:
-        # writes repartition+sort by the key (catalog._write_version)
+        # writes repartition+sort by the key (Catalog._layout)
         clustering_key = None
         cm = re.search(r"\bCLUSTER\s+BY\s*\(([^)]*)\)", sql, re.I)
         if cm:
@@ -2575,7 +2583,7 @@ class Executor:
             if not tm.clustering_key:
                 raise errors.invalid_parameter(
                     f"{tm.name} has no clustering key")
-            self.catalog.write_table(tm, self.catalog.read_table(tm))
+            self.catalog.write_table(tm, lambda live: live)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = re.match(
@@ -2597,14 +2605,16 @@ class Executor:
         if m and "RENAME" not in up:
             tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
             col = ColumnDef(m.group(2).upper(), m.group(3))
-            df = self.catalog.read_table(tm)
             from pyspark.sql import functions as F
 
             from .functions.typemap import snowflake_to_spark
 
-            df = df.withColumn(col.name, F.lit(None).cast(snowflake_to_spark(col.sf_type)))
-            tm.columns.append(col)
-            self.catalog.write_table(tm, df, mode="overwrite")
+            def added(live: DataFrame) -> DataFrame:
+                tm.columns.append(col)
+                return live.withColumn(
+                    col.name, F.lit(None).cast(snowflake_to_spark(col.sf_type)))
+
+            self.catalog.write_table(tm, added)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_RENAME_RE.match(sql)
@@ -2678,10 +2688,13 @@ class Executor:
             mt = None  # an action keyword, not a bare type name
         if mt:
             new_sf = mt.group(1).upper()
-            df = self.catalog.read_table(tm)
-            df = df.withColumn(col.name, df[col.name].cast(snowflake_to_spark(new_sf)))
-            col.sf_type = new_sf
-            self.catalog.write_table(tm, df)
+
+            def recast(live: DataFrame) -> DataFrame:
+                col.sf_type = new_sf
+                return live.withColumn(
+                    col.name, live[col.name].cast(snowflake_to_spark(new_sf)))
+
+            self.catalog.write_table(tm, recast)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         if re.match(r"^SET\s+NOT\s+NULL$", r, re.I):
@@ -2764,7 +2777,7 @@ class Executor:
                     m.group(2), ctx.database, ctx.schema):
                 return Result.status("Statement executed successfully.")
             tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            self.catalog.write_table(tm, self.spark.createDataFrame([], tm.spark_schema()))
+            self.catalog.write_table(tm, lambda _live: None)
             self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         raise errors.syntax_error(f"unsupported DML: {sql[:80]}")
@@ -2882,7 +2895,7 @@ class Executor:
                     tm, branch.toDF(*[c.name for c in tm.columns][:len(branch.columns)])
                     if col_list is None and values else branch, col_list)
                 self.catalog.write_table(
-                    tm, aligned, mode="overwrite" if overwrite else "append")
+                    tm, (lambda _live: aligned) if overwrite else aligned)
                 total += int(obs.get["n"])
             self.sync_namespace_views(ctx)
             r = Result(columns=["number of rows inserted"], rows=[[total]])
@@ -2909,7 +2922,7 @@ class Executor:
         obs = Observation()
         src = src.observe(obs, F.count(F.lit(1)).alias("n"))
         src = self._align_insert_columns(tm, src, col_list)
-        self.catalog.write_table(tm, src, mode="overwrite" if overwrite else "append")
+        self.catalog.write_table(tm, (lambda _live: src) if overwrite else src)
         n = int(obs.get["n"])
         if not body.upper().startswith("VALUES"):
             self._advance_streams_referenced(body, ctx)
@@ -2961,21 +2974,23 @@ class Executor:
         tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
         sets = self._parse_set_clauses(m.group(2))
         cond = self.translator.translate_expr(m.group(3)) if m.group(3) else "TRUE"
-        df = self.catalog.read_table(tm)
         from pyspark.sql import Observation
 
         obs = Observation()
-        df = df.observe(
-            obs,
-            F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
-        )
-        out = df.select(*[
-            F.when(F.expr(cond), F.expr(sets[c.name.upper()])).otherwise(F.col(c.name))
-            .cast(df.schema[c.name].dataType).alias(c.name)
-            if c.name.upper() in sets else F.col(c.name)
-            for c in tm.columns
-        ])
-        self.catalog.write_table(tm, out, mode="overwrite")
+
+        def updated(df: DataFrame) -> DataFrame:
+            df = df.observe(
+                obs,
+                F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
+            )
+            return df.select(*[
+                F.when(F.expr(cond), F.expr(sets[c.name.upper()])).otherwise(F.col(c.name))
+                .cast(df.schema[c.name].dataType).alias(c.name)
+                if c.name.upper() in sets else F.col(c.name)
+                for c in tm.columns
+            ])
+
+        self.catalog.write_table(tm, updated)
         n_updated = int(obs.get["n"] or 0)
         self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows updated"], rows=[[n_updated]])
@@ -2998,36 +3013,39 @@ class Executor:
         s_alias = m.group(5) or m.group(4).split(".")[-1]
         cond = self.translator.translate_expr(m.group(6))
 
-        target = self.catalog.read_table(tm).withColumn("__rid", F.monotonically_increasing_id())
         source = self.catalog.read_table(src_tm)
         tv, sv = "__upd_target_v", "__upd_source_v"
-        target.createOrReplaceTempView(tv)
-        source.createOrReplaceTempView(sv)
         set_exprs = ", ".join(
             f"({expr}) AS __set_{col}" for col, expr in sets.items()
         )
-        joined = self.spark.sql(
-            f"SELECT {t_alias}.__rid AS __rid, {set_exprs}, TRUE AS __matched "
-            f"FROM {tv} AS {t_alias} JOIN {sv} AS {s_alias} ON ({cond})"
-        )
-        w = Window.partitionBy("__rid").orderBy(F.lit(1))
-        one_match = joined.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
-        # explicit __matched flag (not coalesce) so SET x = NULL writes
-        # NULL instead of silently keeping the old value
         from pyspark.sql import Observation
 
         obs = Observation()
-        merged = target.join(one_match, "__rid", "left").observe(
-            obs, F.sum(F.when(F.col("__matched"), 1).otherwise(0)).alias("n")
-        )
-        out = merged.select(*[
-            F.when(F.coalesce(F.col("__matched"), F.lit(False)), F.col(f"__set_{c.name.upper()}"))
-            .otherwise(F.col(c.name))
-            .cast(tm.spark_schema()[c.name].dataType).alias(c.name)
-            if c.name.upper() in sets else F.col(c.name)
-            for c in tm.columns
-        ])
-        self.catalog.write_table(tm, out, mode="overwrite")
+
+        def updated(live: DataFrame) -> DataFrame:
+            target = live.withColumn("__rid", F.monotonically_increasing_id())
+            target.createOrReplaceTempView(tv)
+            source.createOrReplaceTempView(sv)
+            joined = self.spark.sql(
+                f"SELECT {t_alias}.__rid AS __rid, {set_exprs}, TRUE AS __matched "
+                f"FROM {tv} AS {t_alias} JOIN {sv} AS {s_alias} ON ({cond})"
+            )
+            w = Window.partitionBy("__rid").orderBy(F.lit(1))
+            one_match = joined.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+            # explicit __matched flag (not coalesce) so SET x = NULL
+            # writes NULL instead of silently keeping the old value
+            merged = target.join(one_match, "__rid", "left").observe(
+                obs, F.sum(F.when(F.col("__matched"), 1).otherwise(0)).alias("n")
+            )
+            return merged.select(*[
+                F.when(F.coalesce(F.col("__matched"), F.lit(False)), F.col(f"__set_{c.name.upper()}"))
+                .otherwise(F.col(c.name))
+                .cast(tm.spark_schema()[c.name].dataType).alias(c.name)
+                if c.name.upper() in sets else F.col(c.name)
+                for c in tm.columns
+            ])
+
+        self.catalog.write_table(tm, updated)
         n_updated = int(obs.get["n"] or 0)
         self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows updated"], rows=[[n_updated]])
@@ -3049,15 +3067,17 @@ class Executor:
         # single pass: observe target rows entering the anti-join and
         # surviving rows flowing into the write; deleted = before - after
         obs_before, obs_after = Observation(), Observation()
-        self.catalog.read_table(tm).observe(
-            obs_before, F.count(F.lit(1)).alias("n")
-        ).createOrReplaceTempView(tv)
-        self.catalog.read_table(src_tm).createOrReplaceTempView(sv)
-        out = self.spark.sql(
-            f"SELECT {t_alias}.* FROM {tv} AS {t_alias} "
-            f"WHERE NOT EXISTS (SELECT 1 FROM {sv} AS {s_alias} WHERE ({cond}))"
-        ).observe(obs_after, F.count(F.lit(1)).alias("n"))
-        self.catalog.write_table(tm, out, mode="overwrite")
+        source = self.catalog.read_table(src_tm)
+
+        def kept(live: DataFrame) -> DataFrame:
+            live.observe(obs_before, F.count(F.lit(1)).alias("n")).createOrReplaceTempView(tv)
+            source.createOrReplaceTempView(sv)
+            return self.spark.sql(
+                f"SELECT {t_alias}.* FROM {tv} AS {t_alias} "
+                f"WHERE NOT EXISTS (SELECT 1 FROM {sv} AS {s_alias} WHERE ({cond}))"
+            ).observe(obs_after, F.count(F.lit(1)).alias("n"))
+
+        self.catalog.write_table(tm, kept)
         n_deleted = int(obs_before.get["n"]) - int(obs_after.get["n"])
         self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
@@ -3077,23 +3097,30 @@ class Executor:
         from pyspark.sql import functions as F
 
         tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        df = self.catalog.read_table(tm)
         if m.group(2):
             from pyspark.sql import Observation
 
             cond = self.translator.translate_expr(m.group(2))
             obs = Observation()
-            df = df.observe(
-                obs,
-                F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
-            )
-            out = df.filter(~F.coalesce(F.expr(cond), F.lit(False)))
-            self.catalog.write_table(tm, out, mode="overwrite")
+
+            def kept(df: DataFrame) -> DataFrame:
+                df = df.observe(
+                    obs,
+                    F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
+                )
+                return df.filter(~F.coalesce(F.expr(cond), F.lit(False)))
+
+            self.catalog.write_table(tm, kept)
             n_deleted = int(obs.get["n"] or 0)
         else:
-            n_deleted = df.count()
-            out = self.spark.createDataFrame([], tm.spark_schema())
-            self.catalog.write_table(tm, out, mode="overwrite")
+            counted: list[int] = []
+
+            def emptied(df: DataFrame) -> None:
+                counted.append(df.count())
+                return None
+
+            self.catalog.write_table(tm, emptied)
+            n_deleted = counted[0]
         self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
         r.rows_deleted = n_deleted

@@ -6,10 +6,11 @@ differences in our Spark build, by design:
 
 * **Bulk loads, not per-row INSERTs.** The reference issues one INSERT
   per record (copy_processor.go:365-372) — its standout inefficiency
-  (BASELINE.md). We read each file with ``spark.read`` and append the
-  parquet files of the result directly into the table's current version
-  directory (`Catalog.append_files_fast`), so a load is O(new data) and
-  fully parallel — the only ingest pattern that survives 100 TB.
+  (BASELINE.md). We read each file with ``spark.read`` and append all
+  files of one COPY with one `Catalog.write_table`: the new version
+  hard-links the live version's files and adds the parquet files of the
+  load, so a load is O(new data) and fully parallel — the only ingest
+  pattern that survives 100 TB.
 * PARQUET is supported (the reference declares the format type but
   rejects it, copy_processor.go:266-268).
 * ON_ERROR maps to Spark read modes: CONTINUE -> DROPMALFORMED,
@@ -243,37 +244,26 @@ class CopyProcessor:
         if not files and not skipped:
             return Result.status("Copy executed with 0 files processed.")
 
-        rows_loaded = 0
-        files_loaded = 0
         errs: list[str] = []
-        loaded_paths: list[str] = []
+        loads: list[tuple[str, DataFrame]] = []
         for rel in files:
-            full = os.path.join(stage.directory, rel)
             try:
-                df = self._read_file(full, stmt, tm)
+                df = self._read_file(os.path.join(stage.directory, rel), stmt, tm)
                 if stmt.validation_mode and stmt.validation_mode.startswith("RETURN"):
                     # RETURN_ERRORS / RETURN_ALL_ERRORS / RETURN_n_ROWS:
                     # every VALIDATION_MODE validates WITHOUT loading
                     # (falling through loaded data on a dry run)
                     df.count()  # force read; errors surface, nothing loaded
                     continue
-                # single-pass: count rows as they flow into the append
-                # write (the r1 version read each file twice)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-                self.catalog.append_files_fast(tm, df)
-                rows_loaded += int(obs.get["n"])
-                files_loaded += 1
-                loaded_paths.append(full)
-                if not stmt.validation_mode:
-                    hist[os.path.join(stage.directory, rel)] = _sig(rel)
+                loads.append((rel, self.catalog.conform(tm, df)))
             except Exception as e:
-                if stmt.on_error in ("CONTINUE", "SKIP_FILE"):
-                    errs.append(f"{rel}: {e}")
-                    continue
-                raise errors.execution_error(f"COPY failed on {rel}: {e}") from e
+                self._file_failed(stmt, rel, e, errs)
+        loaded, rows_loaded = self._append(tm, stmt, loads, errs)
+        loaded_paths = [os.path.join(stage.directory, rel) for rel in loaded]
+        if not stmt.validation_mode:
+            for rel in loaded:
+                hist[os.path.join(stage.directory, rel)] = _sig(rel)
+        files_loaded = len(loaded)
         if stmt.purge:
             for p in loaded_paths:
                 try:
@@ -290,6 +280,46 @@ class CopyProcessor:
         r.files_loaded = files_loaded
         r.errors = errs
         return r
+
+    def _append(self, tm: TableMeta, stmt: CopyStatement,
+                loads: list[tuple[str, DataFrame]], errs: list[str]) -> tuple[list[str], int]:
+        """Load the files of one COPY as ONE append, so the COPY is one
+        new table version and the versions before it stay reachable by
+        time travel; returns the files loaded and the rows. The row
+        count rides the write (one pass over each file). If the write
+        fails, each file is run on its own through a no-op write to
+        name the bad one: ON_ERROR CONTINUE / SKIP_FILE drop it and load
+        the rest, any other mode raises."""
+        if not loads:
+            return [], 0
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        rows = loads[0][1]
+        for _rel, df in loads[1:]:
+            rows = rows.union(df)
+        try:
+            self.catalog.write_table(tm, rows.observe(obs, F.count(F.lit(1)).alias("n")))
+            return [rel for rel, _df in loads], int(obs.get["n"])
+        except Exception as e:
+            failure = e
+        good = []
+        for rel, df in loads:
+            try:
+                df.write.format("noop").mode("overwrite").save()
+                good.append((rel, df))
+            except Exception as e:
+                self._file_failed(stmt, rel, e, errs)
+        if len(good) == len(loads):
+            raise errors.execution_error(f"COPY failed: {failure}") from failure
+        return self._append(tm, stmt, good, errs)
+
+    @staticmethod
+    def _file_failed(stmt: CopyStatement, rel: str, e: Exception, errs: list[str]) -> None:
+        if stmt.on_error in ("CONTINUE", "SKIP_FILE"):
+            errs.append(f"{rel}: {e}")
+            return
+        raise errors.execution_error(f"COPY failed on {rel}: {e}") from e
 
     # ------------------------------------------------------------------
 

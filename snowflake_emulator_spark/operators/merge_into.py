@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import errors
 from ..catalog import Catalog
@@ -168,7 +168,6 @@ class MergeProcessor:
     def execute(self, sql: str, ctx) -> Result:
         stmt = parse_merge(sql)
         tm = self.catalog.get_table(stmt.target, ctx.database, ctx.schema)
-        target_df = self.catalog.read_table(tm)
         if stmt.source.startswith("("):
             source_df = self.executor.query_df(stmt.source[1:-1], ctx)
         else:
@@ -190,11 +189,6 @@ class MergeProcessor:
         tv, sv = f"__merge_target_{suffix}", f"__merge_source_{suffix}"
         from pyspark.sql import functions as F
 
-        (
-            target_df.withColumn("__t_exists", F.lit(True))
-            .withColumn("__tid", F.monotonically_increasing_id())
-            .createOrReplaceTempView(tv)
-        )
         (
             source_df.withColumn("__s_exists", F.lit(True))
             .withColumn("__sid", F.monotonically_increasing_id())
@@ -302,7 +296,6 @@ class MergeProcessor:
             f"ORDER BY CASE WHEN ({matched_action}) = 'NONE' THEN 1 ELSE 0 END, {s}.__sid) AS __rn "
             f"FROM {tv} AS {t} FULL OUTER JOIN {sv} AS {s} ON ({on})"
         )
-        pre = self.spark.sql(join_sql)
         # ERROR_ON_NONDETERMINISTIC_MERGE (Snowflake defaults to the
         # strict mode, and so does config.DEFAULT_SESSION_PARAMETERS): a
         # target row matched by MULTIPLE actionable source rows raises
@@ -312,9 +305,10 @@ class MergeProcessor:
         # matches first). The duplicate probe rides the SAME Observation
         # as the DML counters — attached below the __rn filter so every
         # join row flows through it — so strict mode costs zero extra
-        # jobs; on violation the freshly written version is reverted
-        # (versions are immutable dirs, so revert = move the pointer
-        # back) and the statement raises, leaving the table unchanged.
+        # jobs; the check runs after the write job and before the
+        # version is published, inside the table lock, so on violation
+        # the new version is discarded and the statement raises,
+        # leaving the table unchanged.
         strict = str(getattr(ctx, "parameters", {}).get(
             "ERROR_ON_NONDETERMINISTIC_MERGE", "TRUE")).upper() == "TRUE"
 
@@ -322,34 +316,42 @@ class MergeProcessor:
 
         obs = Observation()
         rn1 = F.col("__rn") == 1
-        observed = pre.observe(
-            obs,
-            F.sum(F.when(rn1 & (F.col("__action") == "UPDATE"), 1).otherwise(0)).alias("upd"),
-            F.sum(F.when(rn1 & (F.col("__action") == "DELETE"), 1).otherwise(0)).alias("del"),
-            F.sum(F.when(rn1 & (F.col("__action") == "INSERT"), 1).otherwise(0)).alias("ins"),
-            F.sum(
-                F.when((F.col("__rn") == 2) & F.col("__action").isin("UPDATE", "DELETE"), 1)
-                .otherwise(0)
-            ).alias("dups"),
-        )
-        final = (
-            observed.filter("__rn = 1").filter("__keep").drop("__keep", "__action", "__rn")
-        )
-        prev_version = tm.version
-        self.catalog.write_table(tm, final, mode="overwrite")
-        stats = obs.get
-        if strict and int(stats["dups"] or 0):
-            self.catalog.revert_to_version(tm, prev_version)
+
+        def merged(target_df: DataFrame) -> DataFrame:
+            (
+                target_df.withColumn("__t_exists", F.lit(True))
+                .withColumn("__tid", F.monotonically_increasing_id())
+                .createOrReplaceTempView(tv)
+            )
+            observed = self.spark.sql(join_sql).observe(
+                obs,
+                F.sum(F.when(rn1 & (F.col("__action") == "UPDATE"), 1).otherwise(0)).alias("upd"),
+                F.sum(F.when(rn1 & (F.col("__action") == "DELETE"), 1).otherwise(0)).alias("del"),
+                F.sum(F.when(rn1 & (F.col("__action") == "INSERT"), 1).otherwise(0)).alias("ins"),
+                F.sum(
+                    F.when((F.col("__rn") == 2) & F.col("__action").isin("UPDATE", "DELETE"), 1)
+                    .otherwise(0)
+                ).alias("dups"),
+            )
+            return observed.filter("__rn = 1").filter("__keep").drop("__keep", "__action", "__rn")
+
+        def deterministic() -> None:
+            if strict and int(obs.get["dups"] or 0):
+                raise errors.execution_error(
+                    "Duplicate row detected during DML action: a target row "
+                    "was matched by multiple source rows "
+                    "(ERROR_ON_NONDETERMINISTIC_MERGE=TRUE)"
+                )
+
+        try:
+            self.catalog.write_table(tm, merged, check=deterministic)
+        finally:
             for v in (tv, sv):
                 try:
                     self.spark.catalog.dropTempView(v)
                 except Exception:
                     pass
-            raise errors.execution_error(
-                "Duplicate row detected during DML action: a target row "
-                "was matched by multiple source rows "
-                "(ERROR_ON_NONDETERMINISTIC_MERGE=TRUE)"
-            )
+        stats = obs.get
         n_upd = int(stats["upd"] or 0)
         n_del = int(stats["del"] or 0)
         n_ins = int(stats["ins"] or 0)
@@ -360,9 +362,4 @@ class MergeProcessor:
             rows=[[n_ins, n_upd, n_del]],
         )
         r.rows_inserted, r.rows_updated, r.rows_deleted = n_ins, n_upd, n_del
-        for v in (tv, sv):
-            try:
-                self.spark.catalog.dropTempView(v)
-            except Exception:
-                pass
         return r

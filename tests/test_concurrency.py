@@ -86,3 +86,86 @@ def test_concurrent_identical_copy_loads_once(engine, tmp_path):
         t.join()
     assert not errs
     assert engine.execute("SELECT count(*) AS n FROM cc_lh", ctx).rows == [[3]]
+
+
+def test_concurrent_updates_of_one_table_lose_nothing(engine):
+    """Read-modify-write DML reads the live version inside the table's
+    write lock: four sessions incrementing their own row of one table
+    concurrently must not overwrite each other's increments."""
+    import sys
+
+    ctx = SessionContext()
+    engine.execute("CREATE TABLE lost_upd (id INTEGER, n INTEGER)", ctx)
+    engine.execute("INSERT INTO lost_upd VALUES (0, 0), (1, 0), (2, 0), (3, 0)", ctx)
+    errs: list[Exception] = []
+
+    def bump(i: int):
+        try:
+            c = SessionContext()
+            for _ in range(3):
+                engine.execute(f"UPDATE lost_upd SET n = n + 1 WHERE id = {i}", c)
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ts = [threading.Thread(target=bump, args=(i,)) for i in range(4)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    assert not errs, errs
+    res = engine.execute("SELECT id, n FROM lost_upd ORDER BY id", ctx)
+    assert [tuple(r) for r in res.rows] == [(0, 3), (1, 3), (2, 3), (3, 3)]
+
+
+def test_rejected_merge_loses_no_concurrent_insert(engine):
+    """A strict MERGE that matches a target row twice is rejected before
+    its version is published, inside the table lock, so an INSERT that
+    runs meanwhile on another session is kept."""
+    import sys
+
+    ctx = SessionContext()
+    engine.execute("CREATE TABLE mg_t (id INTEGER, n INTEGER)", ctx)
+    engine.execute("INSERT INTO mg_t VALUES (0, 0)", ctx)
+    engine.execute("CREATE TABLE mg_src (id INTEGER, n INTEGER)", ctx)
+    engine.execute("INSERT INTO mg_src VALUES (0, 1), (0, 2)", ctx)
+    errs: list[Exception] = []
+    rejected: list[Exception] = []
+
+    def merge():
+        c = SessionContext()
+        for _ in range(4):
+            try:
+                engine.execute("MERGE INTO mg_t USING mg_src ON mg_t.id = mg_src.id "
+                               "WHEN MATCHED THEN UPDATE SET n = mg_src.n", c)
+            except Exception as e:  # noqa: BLE001
+                rejected.append(e)
+
+    def insert():
+        try:
+            c = SessionContext()
+            for i in range(1, 9):
+                engine.execute(f"INSERT INTO mg_t VALUES ({i}, 0)", c)
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ts = [threading.Thread(target=merge), threading.Thread(target=insert)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    assert not errs, errs
+    assert len(rejected) == 4 and all("Duplicate row" in str(e) for e in rejected)
+    res = engine.execute("SELECT id, n FROM mg_t ORDER BY id", ctx)
+    assert [tuple(r) for r in res.rows] == [(i, 0) for i in range(9)]
