@@ -535,11 +535,7 @@ class Engine:
         or an already-cleaned session."""
         if session is None:
             return
-        for _db, _sch, tbl in self.catalog.drop_temp_tables(session):
-            try:
-                self.spark.catalog.dropTempView(tbl)
-            except Exception:
-                pass
+        self.catalog.drop_temp_tables(session)
 
     def sql(self, sql: str, ctx: SessionContext | None = None) -> DataFrame:
         """Query entry returning the lazy DataFrame (Snowflake SQL in)."""

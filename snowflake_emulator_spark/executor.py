@@ -8,9 +8,10 @@ DDL and DML are parsed in this layer and applied through the catalog.
 Name resolution: Snowflake's 3-level ``DB.SCHEMA.TABLE`` is flattened
 onto Spark temp views named ``DB__SCHEMA__TABLE``
 (cf. `pkg/query/table_naming.go:23-40`). Qualified references in SQL are
-rewritten onto those views; tables of the session's current namespace
-are additionally aliased under their bare names so unqualified SQL works
-exactly like the reference's default-namespace behavior.
+rewritten onto those views; bare names of the session's current
+namespace are bound inside the statement itself, one CTE per name, so
+unqualified SQL works like the reference's default-namespace behavior
+without one session's namespace living in Spark's shared temp views.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import time
 import uuid
 from collections import OrderedDict
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from . import config, errors
@@ -315,6 +317,10 @@ _ALTER_COLUMN_RE = re.compile(
 )
 
 
+_LEADING_WITH_RE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*WITH\b", re.I | re.S)
+_SUBQUERY_RE = re.compile(r"\(\s*(?:SELECT|WITH)\b", re.I)
+
+
 def _inside_string(s: str, pos: int) -> bool:
     """True when ``pos`` falls inside a single-quoted SQL string
     (''-escape aware). Comment spans (``-- ...`` / ``/* ... */``) are
@@ -380,24 +386,16 @@ class Executor:
         self._history_lock = threading.Lock()
         self._history_path = os.path.join(catalog.base_dir, "_metadata", "query_history.jsonl")
         self._load_history()
-        # bare-name alias views already registered: alias -> (TableMeta
-        # uid, version, data_epoch) at registration. Re-register only
-        # when the table (or the binding) changed — not per statement.
-        self._alias_cache: dict[str, tuple[int, int, int]] = {}
         # stream views registered: view name -> (offset_version, src uid,
         # src version, src data_epoch) at registration
         self._stream_view_cache: dict[str, tuple[int, int, int, int]] = {}
-        # named-view registrations: temp-view name -> (ViewMeta uid,
-        # catalog.mutation) at registration — re-planned only when the
-        # catalog changed since
-        self._view_cache: dict[str, tuple[int, int]] = {}
         # views currently being planned (cycle guard) — PER THREAD:
         # a shared set made two concurrent first queries of the same
         # view spuriously raise 'cyclic view reference'
         self._views_in_progress_tl = threading.local()
-        # INFORMATION_SCHEMA registrations: view name -> (database,
-        # catalog.mutation) at build time
-        self._info_schema_cache: dict[str, tuple[str, int]] = {}
+        # INFORMATION_SCHEMA registrations: view name -> catalog.mutation
+        # at build time
+        self._info_schema_cache: dict[str, int] = {}
         # dynamic tables: table key -> (stored SELECT, target_lag)
         self._dyntable_defs: dict[tuple[str, str, str], tuple[str, str | None]] = {}
         # RESULT_SCAN store: query id -> Result, newest-last, capped.
@@ -862,7 +860,11 @@ class Executor:
                  bindings: dict | None = None) -> DataFrame:
         """Translate + resolve a SELECT and return the (lazy) DataFrame."""
         ctx = ctx or SessionContext()
-        sql = bindmod.apply_bindings(sql, bindings)
+        return self.spark.sql(self._query_sql(bindmod.apply_bindings(sql, bindings), ctx))
+
+    def _query_sql(self, sql: str, ctx: SessionContext) -> str:
+        """The Spark SQL text of a Snowflake SELECT: rewritten,
+        translated and name-resolved."""
         sql = self._rewrite_match_recognize(sql, ctx)
         sql = self._rewrite_result_scan(sql, ctx)
         sql = self._rewrite_nextval(sql, ctx)
@@ -876,9 +878,7 @@ class Executor:
         if "$" in translated:
             translated = _STREAM_META_RE.sub(
                 lambda m: f"`METADATA${m.group(1).upper()}`", translated)
-        translated = self._resolve_time_travel(translated, ctx)
-        resolved = self._resolve_names(translated, ctx)
-        return self.spark.sql(resolved)
+        return self._resolve_names(translated, ctx)
 
     def describe_result(self, sql: str, ctx: SessionContext | None = None,
                         bindings: dict | None = None) -> Result:
@@ -1294,10 +1294,14 @@ class Executor:
         re.I,
     )
 
-    def _resolve_time_travel(self, sql: str, ctx: SessionContext) -> str:
+    def _resolve_time_travel(self, sql: str, ctx: SessionContext,
+                             ctes: dict[str, str]) -> str:
         """Rewrite ``FROM t AT|BEFORE(VERSION => n | OFFSET => -secs |
         TIMESTAMP => 'ts' | STATEMENT => 'qid')`` onto a temp view over
-        the matching immutable version dir. AT picks the newest version
+        the matching immutable version dir (bound in ``ctes`` through the
+        table's CURRENT policies when it is governed: Snowflake evaluates
+        policies with the querying identity at query time, even against
+        historical data). AT picks the newest version
         whose write time is <= the target instant; BEFORE (r11) is
         STRICT — the newest version written before it (Snowflake
         semantics: BEFORE excludes the target statement's changes, AT
@@ -1330,17 +1334,9 @@ class Executor:
             if not os.path.isdir(tm.version_path(version)):
                 raise errors.execution_error(_TT_UNAVAILABLE.format(tm.name))
             view = f"{tm.physical}__at_v{version}"
-            df = self.spark.read.schema(tm.spark_schema()).parquet(
-                tm.version_path(version))
-            if self._table_governed(tm):
-                # time-travel reads honor the CURRENT policies with the
-                # querying identity (Snowflake: policies are evaluated
-                # at query time, even against historical data); the
-                # view is re-registered per statement so identity is
-                # never stale
-                df = self._governed_projection(df, tm, ctx)
-            df.createOrReplaceTempView(view)
-            return view
+            self.spark.read.schema(tm.spark_schema()).parquet(
+                tm.version_path(version)).createOrReplaceTempView(view)
+            return self._governed_ref(tm, view, ctx, ctes)
 
         return self._AT_RE.sub(repl, sql)
 
@@ -1490,20 +1486,25 @@ class Executor:
     # ------------------------------------------------------------------
 
     def _resolve_names(self, sql: str, ctx: SessionContext) -> str:
-        """Rewrite qualified ``DB.SCHEMA.TABLE`` / ``SCHEMA.TABLE`` onto
-        flattened temp-view names; bare names are handled via namespace
-        alias views (see sync_namespace_views).
+        """Resolve a translated statement's relation names.
 
-        Single identifier-aware pass: string literals, double-quoted
-        identifiers and comments are skipped verbatim, and each
+        Qualified ``DB.SCHEMA.NAME`` / ``SCHEMA.NAME`` references are
+        rewritten onto what the catalog object resolves to (see
+        ``_relation_ref``). Bare names of the session's current schema
+        are bound inside the statement: it becomes ``WITH `T` AS
+        (SELECT * FROM <ref>), ... (<statement>)``, together with any
+        per-reader projection a reference needs. A CTE belongs to its
+        statement, so sessions with different schemas or roles never
+        see each other's bindings; a user's own ``WITH T`` shadows the
+        binding, and ``T.col`` qualifiers keep working.
+
+        Single identifier-aware pass: string literals, quoted
+        identifiers and comments are never rewritten, and each
         identifier chain is probed against the catalog with O(1) dict
-        lookups — O(len(sql)) per statement regardless of catalog size
-        (the old per-table regex loop was O(catalog x len(sql)) and
-        rewrote names inside string literals)."""
-        self.sync_namespace_views(ctx)
-        tables = self.catalog.tables
-        streams = self.catalog.streams
-        views = self.catalog.views
+        lookups — O(len(sql)) per statement regardless of catalog size."""
+        ctes: dict[str, str] = {}
+        sql = self._resolve_time_travel(sql, ctx, ctes)
+        bare: set[str] = set()
         out: list[str] = []
         i, n = 0, len(sql)
         while i < n:
@@ -1520,9 +1521,11 @@ class Executor:
                 out.append(sql[i:j + 1])
                 i = j + 1
                 continue
-            if c == '"':  # quoted identifier: pass through untouched
+            if c == '"':  # quoted identifier: kept verbatim, bound when bare
                 j = sql.find('"', i + 1)
                 j = n - 1 if j < 0 else j
+                if sql[i - 1:i] != "." and sql[j + 1:j + 2] != ".":
+                    bare.add(sql[i + 1:j])
                 out.append(sql[i:j + 1])
                 i = j + 1
                 continue
@@ -1553,60 +1556,108 @@ class Executor:
                         j = k
                         break
                 ids = [sql[a:b].upper() for a, b in parts]
-                rewrote = False
+                ref = None
                 if len(ids) >= 3:
-                    key = (ids[0], ids[1], ids[2])
-                    if key in tables:
-                        out.append(self._table_ref(tables[key], ctx) + sql[parts[2][1]:j])
-                        rewrote = True
-                if not rewrote and len(ids) >= 2:
-                    key = (ctx.database, ids[0], ids[1])
-                    if key in tables:
-                        out.append(self._table_ref(tables[key], ctx) + sql[parts[1][1]:j])
-                        rewrote = True
-                if not rewrote and streams:
-                    # qualified stream references rewrite onto the
-                    # registered stream-diff view (bare names resolve
-                    # via sync_namespace_views aliasing)
-                    skey = tail = None
-                    if len(ids) >= 3 and (ids[0], ids[1], ids[2]) in streams:
-                        skey, tail = (ids[0], ids[1], ids[2]), parts[2][1]
-                    elif len(ids) >= 2 and (ctx.database, ids[0], ids[1]) in streams:
-                        skey, tail = (ctx.database, ids[0], ids[1]), parts[1][1]
-                    if skey is not None:
-                        sm = streams[skey]
-                        out.append(self._register_stream_view(sm, sm.physical, ctx) + sql[tail:j])
-                        rewrote = True
-                if not rewrote and views:
-                    # qualified view references rewrite onto the lazily
-                    # (re-)planned view temp view; bare names resolve via
-                    # sync_namespace_views aliasing
-                    vkey = vtail = None
-                    if len(ids) >= 3 and (ids[0], ids[1], ids[2]) in views:
-                        vkey, vtail = (ids[0], ids[1], ids[2]), parts[2][1]
-                    elif len(ids) >= 2 and (ctx.database, ids[0], ids[1]) in views:
-                        vkey, vtail = (ctx.database, ids[0], ids[1]), parts[1][1]
-                    if vkey is not None:
-                        vm = views[vkey]
-                        out.append(self._register_named_view(vm, vm.physical, ctx) + sql[vtail:j])
-                        rewrote = True
-                if not rewrote and len(ids) >= 2 and "INFORMATION_SCHEMA" in ids[:2]:
-                    idb = itail = None
+                    ref = self._relation_ref((ids[0], ids[1], ids[2]), ctx, ctes)
+                    tail = parts[2][1]
+                if ref is None and len(ids) >= 2:
+                    ref = self._relation_ref((ctx.database, ids[0], ids[1]), ctx, ctes)
+                    tail = parts[1][1]
+                if ref is None and len(ids) >= 2 and "INFORMATION_SCHEMA" in ids[:2]:
                     if ids[0] == "INFORMATION_SCHEMA" and ids[1] in self._INFO_SCHEMA_VIEWS:
-                        idb, iname, itail = ctx.database, ids[1], parts[1][1]
+                        ref = self._register_info_schema_view(ids[1], ctx.database)
+                        tail = parts[1][1]
                     elif (len(ids) >= 3 and ids[1] == "INFORMATION_SCHEMA"
                           and ids[2] in self._INFO_SCHEMA_VIEWS):
-                        idb, iname, itail = ids[0], ids[2], parts[2][1]
-                    if idb is not None:
-                        out.append(self._register_info_schema_view(iname, idb) + sql[itail:j])
-                        rewrote = True
-                if not rewrote:
+                        ref = self._register_info_schema_view(ids[2], ids[0])
+                        tail = parts[2][1]
+                if ref is not None:
+                    out.append(ref + sql[tail:j])
+                else:
+                    if len(ids) == 1 and sql[i - 1:i] != ".":
+                        bare.add(ids[0])
                     out.append(sql[i:j])
                 i = j
                 continue
             out.append(c)
             i += 1
-        return "".join(out)
+        self.sync_namespace_views(bare, ctx, ctes)
+        resolved = "".join(out)
+        if not ctes:
+            return resolved
+        bound = "WITH " + ", ".join(f"{name} AS ({body})" for name, body in ctes.items())
+        if _LEADING_WITH_RE.match(resolved):
+            # the statement's own CTEs stay inside, so they shadow the
+            # bindings; the newline keeps a trailing -- comment off the
+            # closing paren. (Without parens Spark analyzes ~2 ms faster.)
+            return f"{bound} (\n{resolved}\n)"
+        return f"{bound}\n{resolved}"
+
+    def _resolve_subqueries(self, expr: str, ctx: SessionContext) -> str:
+        """Resolve the relation names of each top-level ``(SELECT ...)`` /
+        ``(WITH ...)`` subquery of translated SQL text that is not run
+        through ``_resolve_names`` as a whole: a DML condition or value,
+        a MERGE join, a policy projection. Each subquery binds its own
+        bare names."""
+        from .plans.translator import match_paren
+
+        out: list[str] = []
+        pos = 0
+        for m in _SUBQUERY_RE.finditer(expr):
+            if m.start() < pos or _inside_string(expr, m.start()):
+                continue
+            close = match_paren(expr, m.start())
+            if close < 0:
+                break
+            out += [expr[pos:m.start() + 1],
+                    self._resolve_names(expr[m.start() + 1:close], ctx)]
+            pos = close
+        return "".join(out) + expr[pos:]
+
+    def _dml_expr(self, text: str, ctx: SessionContext) -> str:
+        """Translate a DML condition or value expression and resolve the
+        relation names of its subqueries."""
+        return self._resolve_subqueries(self.translator.translate_expr(text), ctx)
+
+    def sync_namespace_views(self, names: set[str], ctx: SessionContext,
+                             ctes: dict[str, str]) -> None:
+        """Bind a statement's bare ``names`` (normalized identifiers)
+        that name a table, stream or view of ``ctx``'s current schema:
+        each becomes ``NAME AS (SELECT * FROM <ref>)`` in ``ctes``,
+        <ref> being what the qualified name resolves to. No bare name is
+        ever registered as a Spark temp view. (perfbench's tracing times
+        this step under this name.)"""
+        for name in names:
+            try:
+                ref = self._relation_ref((ctx.database, ctx.schema, name), ctx, ctes)
+            except (errors.SnowflakeError, AnalysisException):
+                # a broken view or stale stream: an identifier that only
+                # shares its name (a column, an alias) must still work,
+                # and a real reference fails as not-found
+                continue
+            if ref is not None:
+                ctes["`" + name.replace("`", "``") + "`"] = f"SELECT * FROM {ref}"
+
+    def _relation_ref(self, key: tuple[str, str, str], ctx: SessionContext,
+                      ctes: dict[str, str]) -> str | None:
+        """What the table, stream or view ``key`` resolves to inside a
+        statement, or None when ``key`` names none of them: the shared
+        temp view of its current contents, or a name bound in ``ctes``
+        when the read can depend on the reader (views, governed tables
+        and streams)."""
+        tm = self.catalog.tables.get(key)
+        if tm is not None:
+            return self._governed_ref(tm, tm.physical, ctx, ctes)
+        sm = self.catalog.streams.get(key)
+        if sm is not None:
+            return self._stream_ref(sm, ctx, ctes)
+        vm = self.catalog.views.get(key)
+        if vm is not None:
+            # a view's plan can depend on its reader (context functions,
+            # governed tables, views under it that do): never shared
+            ctes[vm.physical] = self._view_sql(vm, ctx)
+            return vm.physical
+        return None
 
     def _views_in_progress(self) -> set:
         s = getattr(self._views_in_progress_tl, "s", None)
@@ -1619,59 +1670,21 @@ class Executor:
     # dynamic data masking (beyond reference; Snowflake masking policies)
     # ------------------------------------------------------------------
 
-    def _masking_state(self, tm, ctx: SessionContext):
-        """Identity+policy component of a masked table's registration
-        cache key, or None when no column carries a policy (the common
-        case stays on the pure (uid, version, epoch) key)."""
-        bound = tuple(
-            (c.name, c.masking_policy,
-             self.catalog.masking_policies.get(
-                 self.catalog.resolve(c.masking_policy, tm.database, tm.schema))
-             and self.catalog.masking_policies[
-                 self.catalog.resolve(c.masking_policy, tm.database, tm.schema)].body)
-            for c in tm.columns if c.masking_policy)
-        row = None
-        if tm.row_access_policy:
-            rp = self.catalog.row_access_policies.get(
-                self.catalog.resolve(tm.row_access_policy, tm.database, tm.schema))
-            row = (tm.row_access_policy, tuple(tm.row_access_columns),
-                   rp.body if rp else None)
-        if not bound and row is None:
-            return None
-        return (bound, row, ctx.role, ctx.user)
-
-    def _masked_df(self, tm, ctx: SessionContext) -> DataFrame:
-        """Apply attached masking policies to a table read: each masked
-        column is replaced by the policy body with the column substituted
-        for the policy argument, context functions evaluated with the
-        QUERYING session's identity (Snowflake evaluation model). The
-        whole projection stays a translated Spark SQL expression —
-        JVM-side, zero per-row Python. A row access policy filters FIRST,
-        over cleartext values (Snowflake: row policies see unmasked
-        data), then masking projects."""
-        return self._governed_projection(self.catalog.read_table(tm), tm, ctx)
-
-    def _governed_projection(self, df: DataFrame, tm,
-                             ctx: SessionContext) -> DataFrame:
-        """Apply ``tm``'s row access policy + masking policies to an
-        arbitrary DataFrame carrying the table's columns (the table read
-        itself, or a stream's change diff — whose METADATA$ columns pass
-        through untouched)."""
-        if tm.row_access_policy:
-            rp = self.catalog.get_row_access_policy(
-                tm.row_access_policy, tm.database, tm.schema)
-            pred = rp.body
-            for arg, coln in zip(rp.arg_names, tm.row_access_columns):
-                pred = re.sub(rf"(?<![\w$]){re.escape(arg)}(?![\w$])",
-                              f"`{coln}`", pred, flags=re.I)
-            pred = self._rewrite_context_fns(pred, ctx)
-            src0 = tm.physical + "__prerow"
-            df.createOrReplaceTempView(src0)
-            df = self.spark.sql(self.translator.translate(
-                f"SELECT * FROM {src0} WHERE {pred}"))
-        if not self._table_has_masking(tm):
-            return df
-        table_cols = {c.name.upper() for c in tm.columns}
+    def _governed_ref(self, tm, src: str, ctx: SessionContext,
+                      ctes: dict[str, str], passthrough: tuple[str, ...] = ()) -> str:
+        """Name under which a read of ``src`` — a relation carrying
+        ``tm``'s columns, plus ``passthrough`` ones such as a stream's
+        METADATA$ columns — honors ``tm``'s policies: ``src`` itself
+        when none is attached, else a CTE bound in ``ctes``, so the
+        projection belongs to the reading statement. Each masked column
+        is replaced by its policy body with the column substituted for
+        the policy argument, context functions evaluated with the
+        QUERYING session's identity (Snowflake evaluation model). A row
+        access policy filters over the cleartext values (Snowflake: row
+        policies see unmasked data). The projection stays Spark SQL —
+        JVM-side, zero per-row Python."""
+        if not (tm.row_access_policy or any(c.masking_policy for c in tm.columns)):
+            return src
         exprs = []
         for c in tm.columns:
             if not c.masking_policy:
@@ -1681,92 +1694,22 @@ class Executor:
                 c.masking_policy, tm.database, tm.schema)
             body = re.sub(rf"(?<![\w$]){re.escape(pm.arg_name)}(?![\w$])",
                           f"`{c.name}`", pm.body, flags=re.I)
-            body = self._rewrite_context_fns(body, ctx)
-            exprs.append(f"({body}) AS `{c.name}`")
-        # passthrough for non-table columns (stream METADATA$ACTION etc.)
-        exprs += [f"`{f}`" for f in df.columns if f.upper() not in table_cols]
-        src = tm.physical + "__premask"
-        df.createOrReplaceTempView(src)
-        sel = self.translator.translate(
-            f"SELECT {', '.join(exprs)} FROM {src}")
-        return self.spark.sql(sel)
-
-    def _register_masked_view(self, tm, ctx: SessionContext) -> str:
-        """Register (cached) the per-identity masked projection of ``tm``
-        under ``<physical>__masked`` and return that name. Same
-        single-process registration model as context-function views:
-        the view is (re-)registered immediately before the statement
-        that reads it."""
-        name = tm.physical + "__masked"
-        state = (tm.uid, tm.version, tm.data_epoch, self._masking_state(tm, ctx))
-        if self._view_cache.get(name) != state:
-            self._masked_df(tm, ctx).createOrReplaceTempView(name)
-            self._view_cache[name] = state
+            exprs.append(f"({self._rewrite_context_fns(body, ctx)}) AS `{c.name}`")
+        exprs += [f"`{f}`" for f in passthrough]
+        sel = f"SELECT {', '.join(exprs)} FROM {src}"
+        if tm.row_access_policy:
+            rp = self.catalog.get_row_access_policy(
+                tm.row_access_policy, tm.database, tm.schema)
+            pred = rp.body
+            for arg, coln in zip(rp.arg_names, tm.row_access_columns):
+                pred = re.sub(rf"(?<![\w$]){re.escape(arg)}(?![\w$])",
+                              f"`{coln}`", pred, flags=re.I)
+            sel += f" WHERE {self._rewrite_context_fns(pred, ctx)}"
+        name = src + "__masked"
+        # names in a policy body resolve in the table's namespace
+        ctes[name] = self._resolve_subqueries(
+            self.translator.translate(sel), self._ctx_in(tm.database, tm.schema, ctx))
         return name
-
-    def _table_has_masking(self, tm) -> bool:
-        return any(c.masking_policy for c in tm.columns)
-
-    def _table_governed(self, tm) -> bool:
-        return self._table_has_masking(tm) or bool(tm.row_access_policy)
-
-    def _table_ref(self, tm, ctx: SessionContext) -> str:
-        """Temp-view name a qualified table reference resolves to:
-        the physical view normally, the per-identity governed projection
-        when a masking or row access policy is attached."""
-        if self._table_governed(tm):
-            return self._register_masked_view(tm, ctx)
-        return tm.physical
-
-    def sync_namespace_views(self, ctx: SessionContext) -> None:
-        """Register bare-name aliases for every table in the session's
-        current namespace. Version-keyed: a table's alias is
-        (re-)registered only when the table is new to the alias, or its
-        version changed since registration — repeat statements against
-        an unchanged catalog make zero Spark calls here.
-
-        Aliases belonging to OTHER namespaces are dropped first: after
-        USE DATABASE/SCHEMA a stale alias would silently serve the old
-        namespace's rows instead of raising object-not-found.
-        (catalog dicts are snapshotted with list() — another HTTP
-        session may CREATE/DROP concurrently.)"""
-        current = {
-            tbl: tm
-            for (db, sch, tbl), tm in list(self.catalog.tables.items())
-            if db == ctx.database and sch == ctx.schema
-        }
-        for tbl in list(self._alias_cache):
-            if tbl not in current:
-                try:
-                    self.spark.catalog.dropTempView(tbl)
-                except Exception:
-                    pass
-                del self._alias_cache[tbl]
-        for tbl, tm in current.items():
-            state = (tm.uid, tm.version, tm.data_epoch,
-                     self._masking_state(tm, ctx))
-            if self._alias_cache.get(tbl) == state:
-                continue
-            try:
-                src = (self._masked_df(tm, ctx) if state[3] is not None
-                       else self.catalog.read_table(tm))
-                src.createOrReplaceTempView(tbl)
-                self._alias_cache[tbl] = state
-            except Exception:
-                pass
-        for (db, sch, name), sm in list(self.catalog.streams.items()):
-            if db == ctx.database and sch == ctx.schema:
-                try:
-                    self._register_stream_view(sm, name, ctx)
-                except Exception:
-                    pass  # stale stream: query fails on reference instead
-        for (db, sch, name), vm in list(self.catalog.views.items()):
-            if db == ctx.database and sch == ctx.schema and (db, sch, name) not in self._views_in_progress():
-                try:
-                    self._register_named_view(vm, name, ctx)
-                except Exception:
-                    pass  # invalid view (e.g. dropped base table): the
-                    #       query fails at reference with not-found instead
 
     # INFORMATION_SCHEMA (reference parity: its DuckDB backend exposes
     # information_schema.tables, exercised by
@@ -1777,8 +1720,10 @@ class Executor:
                           "STREAMS", "TASKS", "SEQUENCES", "FUNCTIONS", "PIPES"}
 
     def _register_info_schema_view(self, which: str, db: str) -> str:
-        view = f"__info_schema_{which.lower()}"
-        state = (db, self.catalog.mutation)
+        # one registration per database: sessions in different databases
+        # never replace each other's view between resolution and analysis
+        view = "`" + f"__info_schema_{which.lower()}_{db}".replace("`", "``") + "`"
+        state = self.catalog.mutation
         if self._info_schema_cache.get(view) == state:
             return view
         c = self.catalog
@@ -1848,72 +1793,55 @@ class Executor:
         self._info_schema_cache[view] = state
         return view
 
-    def _view_df(self, vm, caller_ctx: SessionContext | None = None) -> DataFrame:
-        """Plan a view's stored SELECT against current table versions.
-        The definition binds to the view's own namespace (Snowflake
-        semantics); cyclic view references raise instead of recursing.
-        Context functions in the body evaluate with the CALLER's
-        identity (Snowflake: CURRENT_ROLE() in a view is query-time)."""
+    @staticmethod
+    def _ctx_in(database: str, schema: str,
+                caller_ctx: SessionContext | None) -> SessionContext:
+        """A context for ``database.schema`` carrying the identity of
+        ``caller_ctx`` (when given)."""
+        ctx = SessionContext(database, schema)
+        if caller_ctx is not None:
+            for f in ("user", "role", "warehouse", "account", "session_id"):
+                setattr(ctx, f, getattr(caller_ctx, f, None))
+        return ctx
+
+    def _view_sql(self, vm, caller_ctx: SessionContext | None = None) -> str:
+        """Spark SQL planning a view's stored SELECT against current
+        table versions. The definition binds to the view's own namespace
+        (Snowflake semantics); cyclic view references raise instead of
+        recursing. Context functions and policies evaluate with the
+        CALLER's identity (Snowflake: CURRENT_ROLE() in a view is
+        query-time)."""
         key = (vm.database, vm.schema, vm.name)
         if key in self._views_in_progress():
             raise errors.execution_error(f"cyclic view reference involving {vm.name}")
         self._views_in_progress().add(key)
         try:
-            vctx = SessionContext(vm.database, vm.schema)
-            if caller_ctx is not None:
-                for f in ("user", "role", "warehouse", "account", "session_id"):
-                    setattr(vctx, f, getattr(caller_ctx, f, None))
-            df = self.query_df(vm.sql_text, vctx)
+            sql = self._query_sql(
+                vm.sql_text, self._ctx_in(vm.database, vm.schema, caller_ctx))
             if vm.column_names:
-                df = df.toDF(*vm.column_names)
-            return df
+                cols = ", ".join(f"`{c}`" for c in vm.column_names)
+                sql = f"SELECT * FROM (\n{sql}\n) AS `__v`({cols})"
+            return sql
         finally:
             self._views_in_progress().discard(key)
 
-    @staticmethod
-    def _view_identity(vm, ctx: SessionContext | None):
-        """Session-identity component of a view's registration cache key
-        — non-None only when the body reads context functions, so the
-        common no-context view still caches purely on (uid, mutation)."""
-        if ctx is None or "CURRENT_" not in vm.sql_text.upper():
-            return None
-        return (ctx.user, ctx.role, ctx.warehouse, ctx.account, ctx.session_id)
+    # the METADATA$ columns Catalog.stream_changes_df adds to a diff
+    _STREAM_META_COLS = ("METADATA$ACTION", "METADATA$ISUPDATE", "METADATA$ROW_ID")
 
-    def _register_named_view(self, vm, view_name: str,
-                             ctx: SessionContext | None = None) -> str:
-        """(Re-)register a temp view for a named view; cached on
-        (view uid, catalog mutation counter [, caller identity when the
-        body reads context functions]) so repeated statements against an
-        unchanged catalog make zero Spark calls."""
-        state = (vm.uid, self.catalog.mutation, self._view_identity(vm, ctx))
-        if self._view_cache.get(view_name) != state:
-            self._view_df(vm, ctx).createOrReplaceTempView(view_name)
-            # record AFTER planning succeeds, using the pre-registration
-            # mutation value (registration itself does not mutate data)
-            self._view_cache[view_name] = state
-        return view_name
-
-    def _register_stream_view(self, sm, view_name: str,
-                              ctx: SessionContext | None = None) -> str:
-        """(Re-)register a temp view holding the stream's change diff;
-        cached on (offset, source identity/version[, caller identity
-        when the source table is governed]) so an unchanged stream
-        costs zero Spark calls. Masking / row access policies on the
-        SOURCE table apply to the diff like Snowflake (METADATA$
-        columns pass through)."""
+    def _stream_ref(self, sm, ctx: SessionContext, ctes: dict[str, str]) -> str:
+        """Name a stream is read under. Its change diff is one shared
+        temp view, cached on (offset, source identity/version) so an
+        unchanged stream costs zero Spark calls; masking / row access
+        policies on the SOURCE table apply to the diff per statement,
+        like Snowflake (METADATA$ columns pass through)."""
         tm = self.catalog.tables.get(sm.src)
         if tm is None:
             raise errors.execution_error(f"stream {sm.name} is stale")
-        gstate = (self._masking_state(tm, ctx)
-                  if ctx is not None and self._table_governed(tm) else None)
-        state = (sm.offset_version, tm.uid, tm.version, tm.data_epoch, gstate)
-        if self._stream_view_cache.get(view_name) != state:
-            df = self.catalog.stream_changes_df(sm)
-            if gstate is not None:
-                df = self._governed_projection(df, tm, ctx)
-            df.createOrReplaceTempView(view_name)
-            self._stream_view_cache[view_name] = state
-        return view_name
+        state = (sm.offset_version, tm.uid, tm.version, tm.data_epoch)
+        if self._stream_view_cache.get(sm.physical) != state:
+            self.catalog.stream_changes_df(sm).createOrReplaceTempView(sm.physical)
+            self._stream_view_cache[sm.physical] = state
+        return self._governed_ref(tm, sm.physical, ctx, ctes, self._STREAM_META_COLS)
 
     # ------------------------------------------------------------------
     # DDL
@@ -2019,15 +1947,10 @@ class Executor:
             self.catalog.clone_table(src, m.group(3), ctx.database, ctx.schema,
                                      at_version=at_version,
                                      if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
-            self.sync_namespace_views(ctx)
             return Result.status(f"Table {m.group(3).upper()} successfully created.")
         m = _UNDROP_TABLE_RE.match(sql)
         if m:
-            tm = self.catalog.undrop_table(m.group(1), ctx.database, ctx.schema)
-            # the bare-name alias view was dropped with the table and the
-            # meta's (uid, version) is unchanged — force re-registration
-            self._alias_cache.pop(tm.name, None)
-            self.sync_namespace_views(ctx)
+            self.catalog.undrop_table(m.group(1), ctx.database, ctx.schema)
             return Result.status(f"Table {m.group(1).upper()} successfully restored.")
         m = re.match(
             r"^\s*GRANT\s+([\w\s,]+?)\s+ON\s+(ALL|FUTURE)\s+"
@@ -2212,12 +2135,11 @@ class Executor:
                 if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
             try:
                 # validate the definition now (Snowflake compiles the view
-                # at creation); also warms the temp-view registration
-                self._register_named_view(vm, vm.physical)
+                # at creation)
+                self.spark.sql(self._view_sql(vm))
             except Exception as e:
                 if prior_vm is not None:
                     self.catalog.views[prior_key] = prior_vm
-                    self._view_cache.pop(vm.physical, None)
                 else:
                     self.catalog.drop_view(vm.name, vm.database, vm.schema, if_exists=True)
                 if isinstance(e, errors.SnowflakeError):
@@ -2226,15 +2148,8 @@ class Executor:
             return Result.status(f"View {vm.name} successfully created.")
         m = _DROP_VIEW_RE.match(sql)
         if m:
-            vm = self.catalog.drop_view(m.group(2), ctx.database, ctx.schema,
-                                        if_exists=bool(m.group(1)))
-            if vm is not None:
-                for view in (vm.name, vm.physical):
-                    self._view_cache.pop(view, None)
-                    try:
-                        self.spark.catalog.dropTempView(view)
-                    except Exception:
-                        pass
+            self.catalog.drop_view(m.group(2), ctx.database, ctx.schema,
+                                   if_exists=bool(m.group(1)))
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CREATE_DYNTABLE_RE.match(sql)
         if m:
@@ -2254,7 +2169,6 @@ class Executor:
             tm.kind = "DYNAMIC TABLE"
             self._dyntable_defs[(tm.database, tm.schema, tm.name)] = (
                 m.group(4).strip(), m.group(3))
-            self.sync_namespace_views(ctx)
             return Result.status(f"Dynamic table {m.group(2).upper()} successfully created.")
         m = _REFRESH_DYNTABLE_RE.match(sql)
         if m:
@@ -2264,7 +2178,6 @@ class Executor:
                 raise errors.execution_error(f"{tm.name} is not a dynamic table")
             df = self.query_df(self._dyntable_defs[key][0], ctx)
             self.catalog.write_table(tm, lambda _live: df)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _CREATE_MV_RE.match(sql)
         if m:
@@ -2283,7 +2196,6 @@ class Executor:
             tm.kind = "MATERIALIZED VIEW"
             self._dyntable_defs[(tm.database, tm.schema, tm.name)] = (
                 m.group(3).strip(), None)
-            self.sync_namespace_views(ctx)
             return Result.status(
                 f"Materialized view {m.group(2).upper()} successfully created.")
         m = _REFRESH_MV_RE.match(sql)
@@ -2294,7 +2206,6 @@ class Executor:
                 raise errors.execution_error(f"{tm.name} is not a materialized view")
             df = self.query_df(self._dyntable_defs[key][0], ctx)
             self.catalog.write_table(tm, lambda _live: df)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _DROP_MV_RE.match(sql)
         if m:
@@ -2311,7 +2222,6 @@ class Executor:
                     f"{tm.name} is not a materialized view")
             self._dyntable_defs.pop((tm.database, tm.schema, tm.name), None)
             self.catalog.drop_table(m.group(2), ctx.database, ctx.schema)
-            self.sync_namespace_views(ctx)
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _DROP_DYNTABLE_RE.match(sql)
         if m:
@@ -2326,7 +2236,6 @@ class Executor:
                     raise errors.execution_error(
                         f"{tm.name} is not a dynamic table")
                 self._dyntable_defs.pop((tm.database, tm.schema, tm.name), None)
-                self.spark.catalog.dropTempView(tm.name)
                 self.catalog.drop_table(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CREATE_TASK_RE.match(sql)
@@ -2358,7 +2267,6 @@ class Executor:
                 append_only=bool(m.group(5)) and m.group(5).upper() == "TRUE",
                 comment=m.group(6), if_not_exists=bool(m.group(2)),
                 or_replace=bool(m.group(1)))
-            self.sync_namespace_views(ctx)
             return Result.status(f"Stream {m.group(3).upper()} successfully created.")
         m = _DROP_STREAM_RE.match(sql)
         if m:
@@ -2368,13 +2276,8 @@ class Executor:
             except errors.SnowflakeError:
                 pass
             self.catalog.drop_stream(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            if sm is not None:
-                for view in (sm.name, sm.physical):
-                    self._stream_view_cache.pop(view, None)
-                    try:
-                        self.spark.catalog.dropTempView(view)
-                    except Exception:
-                        pass
+            if sm is not None:  # the catalog dropped its temp view
+                self._stream_view_cache.pop(sm.physical, None)
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CTAS_RE.match(sql)
         if m and " AS " in up:
@@ -2386,7 +2289,6 @@ class Executor:
             self.catalog.create_table(m.group(4), cols, ctx.database, ctx.schema,
                                       if_not_exists=bool(m.group(3)), or_replace=bool(m.group(1)), df=df)
             self._apply_table_kind(m.group("kind"), m.group(4), ctx)
-            self.sync_namespace_views(ctx)
             return Result.status(f"Table {m.group(4).upper()} successfully created.")
         m = _CREATE_TABLE_LIKE_RE.match(sql)
         if m:
@@ -2397,7 +2299,6 @@ class Executor:
                 m.group(3), copy.deepcopy(src.columns), ctx.database, ctx.schema,
                 comment=src.comment, clustering_key=src.clustering_key,
                 if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
-            self.sync_namespace_views(ctx)
             return Result.status(f"Table {m.group(3).upper()} successfully created.")
         m = _COMMENT_ON_RE.match(sql)
         if m:
@@ -2427,11 +2328,6 @@ class Executor:
                 vm.database, vm.schema, vm.name = new_key
                 self.catalog.views[new_key] = vm
                 self.catalog.mutation += 1
-            try:  # the old bare-name registration must stop resolving
-                self.spark.catalog.dropTempView(old_key[2])
-            except Exception:
-                pass
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_RETENTION_RE.match(sql)
         if m:
@@ -2457,7 +2353,6 @@ class Executor:
                 return live.withColumnRenamed(old, new)
 
             self.catalog.write_table(tm, renamed)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_DROP_COL_RE.match(sql)
         if m and not re.search(r"\bADD\b|\bRENAME\b", up):
@@ -2473,7 +2368,6 @@ class Executor:
                 return live.drop(col)
 
             self.catalog.write_table(tm, dropped)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         # CLUSTER BY is extracted up-front (the greedy column-list regex
         # would otherwise swallow it); recorded as metadata AND acted on:
@@ -2503,14 +2397,12 @@ class Executor:
             self.catalog.register_external_source(
                 m.group(3), path, fmt, ff_opts, ctx.database, ctx.schema,
                 or_replace=bool(m.group(1)))
-            self.sync_namespace_views(ctx)
             return Result.status(
                 f"Table {m.group(3).upper()} successfully created.")
         m = _ALTER_EXT_REFRESH_RE.match(sql)
         if m:
             tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
             self.catalog.refresh_external(tm)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         # ---- PIPE (Snowpipe-lite, beyond reference): a stored COPY
         # executed by ALTER PIPE ... REFRESH. No auto-ingest daemon —
@@ -2561,7 +2453,6 @@ class Executor:
                                       comment=m.group(5), if_not_exists=bool(m.group(2)),
                                       or_replace=or_replace, clustering_key=clustering_key)
             self._apply_table_kind(m.group("kind"), m.group(3), ctx)
-            self.sync_namespace_views(ctx)
             return Result.status(f"Table {m.group(3).upper()} successfully created.")
         m = _DROP_TABLE_RE.match(sql)
         if m:
@@ -2572,7 +2463,6 @@ class Executor:
                 if not m.group(1):
                     raise
             if tm is not None:
-                self.spark.catalog.dropTempView(tm.name)
                 self.catalog.drop_table(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _ALTER_TABLE_RECLUSTER_RE.match(sql)
@@ -2584,7 +2474,6 @@ class Executor:
                 raise errors.invalid_parameter(
                     f"{tm.name} has no clustering key")
             self.catalog.write_table(tm, lambda live: live)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.\"$]+)\s+ADD\s+"
@@ -2615,16 +2504,13 @@ class Executor:
                     col.name, F.lit(None).cast(snowflake_to_spark(col.sf_type)))
 
             self.catalog.write_table(tm, added)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_RENAME_RE.match(sql)
         if m:
             tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
             df = self.catalog.read_table(tm)
             self.catalog.create_table(m.group(2), tm.columns, ctx.database, ctx.schema, df=df)
-            self.spark.catalog.dropTempView(tm.name)
             self.catalog.drop_table(m.group(1), ctx.database, ctx.schema)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_SWAP_RE.match(sql)
         if m:
@@ -2637,7 +2523,6 @@ class Executor:
             # the OTHER table's current version
             self.catalog.register_view(ta)
             self.catalog.register_view(tb)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         mm_ = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.\"$]+)\s+(?:ALTER|MODIFY)\s*\((.*)\)\s*$",
@@ -2695,7 +2580,6 @@ class Executor:
                     col.name, live[col.name].cast(snowflake_to_spark(new_sf)))
 
             self.catalog.write_table(tm, recast)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         if re.match(r"^SET\s+NOT\s+NULL$", r, re.I):
             nulls = self.catalog.read_table(tm).where(
@@ -2778,7 +2662,6 @@ class Executor:
                 return Result.status("Statement executed successfully.")
             tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
             self.catalog.write_table(tm, lambda _live: None)
-            self.sync_namespace_views(ctx)
             return Result.status("Statement executed successfully.")
         raise errors.syntax_error(f"unsupported DML: {sql[:80]}")
 
@@ -2857,8 +2740,7 @@ class Executor:
             for is_else, cond, tname, cols, values in clauses:
                 tm = self.catalog.get_table(tname, ctx.database, ctx.schema)
                 branch = src
-                cond_expr = (self.translator.translate_expr(cond)
-                             if cond else None)
+                cond_expr = self._dml_expr(cond, ctx) if cond else None
                 # "not matched" means "condition not TRUE": a NULL WHEN
                 # condition must still route the row to ELSE (and, in
                 # FIRST mode, to a later matching branch) — bare
@@ -2879,7 +2761,7 @@ class Executor:
                     branch = branch.filter(f)
                     prev_conds.append(cond_expr)
                 if values:
-                    exprs = [self.translator.translate_expr(a.strip())
+                    exprs = [self._dml_expr(a.strip(), ctx)
                              for a in Translator()._split_args(values)]
                     branch = branch.selectExpr(*[
                         f"({e}) AS __mi_{k}" for k, e in enumerate(exprs)])
@@ -2897,7 +2779,6 @@ class Executor:
                 self.catalog.write_table(
                     tm, (lambda _live: aligned) if overwrite else aligned)
                 total += int(obs.get["n"])
-            self.sync_namespace_views(ctx)
             r = Result(columns=["number of rows inserted"], rows=[[total]])
             r.rows_inserted = total
             return r
@@ -2912,7 +2793,7 @@ class Executor:
         if body.upper().startswith("VALUES"):
             body = self._fill_values_defaults(body, tm, col_list)
         src = self.query_df(body, ctx) if not body.upper().startswith("VALUES") else self.spark.sql(
-            self.translator.translate_expr(self._rewrite_nextval_literal(body, ctx))
+            self._dml_expr(self._rewrite_nextval_literal(body, ctx), ctx)
         )
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
@@ -2926,7 +2807,6 @@ class Executor:
         n = int(obs.get["n"])
         if not body.upper().startswith("VALUES"):
             self._advance_streams_referenced(body, ctx)
-        self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows inserted"], rows=[[n]])
         r.rows_inserted = n
         return r
@@ -2972,8 +2852,8 @@ class Executor:
         from pyspark.sql import functions as F
 
         tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        sets = self._parse_set_clauses(m.group(2))
-        cond = self.translator.translate_expr(m.group(3)) if m.group(3) else "TRUE"
+        sets = self._parse_set_clauses(m.group(2), ctx)
+        cond = self._dml_expr(m.group(3), ctx) if m.group(3) else "TRUE"
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -2992,7 +2872,6 @@ class Executor:
 
         self.catalog.write_table(tm, updated)
         n_updated = int(obs.get["n"] or 0)
-        self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows updated"], rows=[[n_updated]])
         r.rows_updated = n_updated
         return r
@@ -3008,28 +2887,23 @@ class Executor:
 
         tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
         t_alias = m.group(2) or m.group(1).split(".")[-1]
-        sets = self._parse_set_clauses(m.group(3))
+        sets = self._parse_set_clauses(m.group(3), ctx)
         src_tm = self.catalog.get_table(m.group(4), ctx.database, ctx.schema)
         s_alias = m.group(5) or m.group(4).split(".")[-1]
-        cond = self.translator.translate_expr(m.group(6))
+        cond = self._dml_expr(m.group(6), ctx)
 
-        source = self.catalog.read_table(src_tm)
-        tv, sv = "__upd_target_v", "__upd_source_v"
-        set_exprs = ", ".join(
-            f"({expr}) AS __set_{col}" for col, expr in sets.items()
-        )
+        source = self.catalog.read_table(src_tm).alias(s_alias)
+        set_exprs = [f"({expr}) AS __set_{col}" for col, expr in sets.items()]
         from pyspark.sql import Observation
 
         obs = Observation()
 
         def updated(live: DataFrame) -> DataFrame:
             target = live.withColumn("__rid", F.monotonically_increasing_id())
-            target.createOrReplaceTempView(tv)
-            source.createOrReplaceTempView(sv)
-            joined = self.spark.sql(
-                f"SELECT {t_alias}.__rid AS __rid, {set_exprs}, TRUE AS __matched "
-                f"FROM {tv} AS {t_alias} JOIN {sv} AS {s_alias} ON ({cond})"
-            )
+            # DataFrame aliases, not temp views: the relations of one
+            # statement never enter Spark's shared temp-view namespace
+            joined = target.alias(t_alias).join(source, F.expr(cond)).selectExpr(
+                f"{t_alias}.__rid AS __rid", *set_exprs, "TRUE AS __matched")
             w = Window.partitionBy("__rid").orderBy(F.lit(1))
             one_match = joined.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
             # explicit __matched flag (not coalesce) so SET x = NULL
@@ -3047,7 +2921,6 @@ class Executor:
 
         self.catalog.write_table(tm, updated)
         n_updated = int(obs.get["n"] or 0)
-        self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows updated"], rows=[[n_updated]])
         r.rows_updated = n_updated
         return r
@@ -3059,38 +2932,33 @@ class Executor:
         t_alias = m.group(2) or m.group(1).split(".")[-1]
         src_tm = self.catalog.get_table(m.group(3), ctx.database, ctx.schema)
         s_alias = m.group(4) or m.group(3).split(".")[-1]
-        cond = self.translator.translate_expr(m.group(5))
+        cond = self._dml_expr(m.group(5), ctx)
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        tv, sv = "__del_target_v", "__del_source_v"
         # single pass: observe target rows entering the anti-join and
         # surviving rows flowing into the write; deleted = before - after
         obs_before, obs_after = Observation(), Observation()
-        source = self.catalog.read_table(src_tm)
+        source = self.catalog.read_table(src_tm).alias(s_alias)
 
         def kept(live: DataFrame) -> DataFrame:
-            live.observe(obs_before, F.count(F.lit(1)).alias("n")).createOrReplaceTempView(tv)
-            source.createOrReplaceTempView(sv)
-            return self.spark.sql(
-                f"SELECT {t_alias}.* FROM {tv} AS {t_alias} "
-                f"WHERE NOT EXISTS (SELECT 1 FROM {sv} AS {s_alias} WHERE ({cond}))"
-            ).observe(obs_after, F.count(F.lit(1)).alias("n"))
+            return (live.observe(obs_before, F.count(F.lit(1)).alias("n")).alias(t_alias)
+                    .join(source, F.expr(cond), "left_anti")
+                    .observe(obs_after, F.count(F.lit(1)).alias("n")))
 
         self.catalog.write_table(tm, kept)
         n_deleted = int(obs_before.get["n"]) - int(obs_after.get["n"])
-        self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
         r.rows_deleted = n_deleted
         return r
 
-    def _parse_set_clauses(self, text: str) -> dict[str, str]:
+    def _parse_set_clauses(self, text: str, ctx: SessionContext) -> dict[str, str]:
         parts = Translator()._split_args(text)
         sets: dict[str, str] = {}
         for p in parts:
             col, expr = p.split("=", 1)
             col = col.strip().split(".")[-1].strip('"').upper()  # strip alias qualifier
-            sets[col] = self.translator.translate_expr(expr.strip())
+            sets[col] = self._dml_expr(expr.strip(), ctx)
         return sets
 
     def _delete(self, m: re.Match, ctx: SessionContext) -> Result:
@@ -3100,7 +2968,7 @@ class Executor:
         if m.group(2):
             from pyspark.sql import Observation
 
-            cond = self.translator.translate_expr(m.group(2))
+            cond = self._dml_expr(m.group(2), ctx)
             obs = Observation()
 
             def kept(df: DataFrame) -> DataFrame:
@@ -3121,7 +2989,6 @@ class Executor:
 
             self.catalog.write_table(tm, emptied)
             n_deleted = counted[0]
-        self.sync_namespace_views(ctx)
         r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
         r.rows_deleted = n_deleted
         return r
@@ -3439,7 +3306,7 @@ class Executor:
             vm = self.catalog.get_view(vm_.group(1), ctx.database, ctx.schema)
             from .functions.typemap import spark_to_snowflake_name
 
-            fields = self._view_df(vm).schema.fields
+            fields = self.spark.sql(self._view_sql(vm)).schema.fields
             return Result(
                 columns=["name", "type", "kind", "null?"],
                 rows=[[f.name.upper(), spark_to_snowflake_name(f.dataType), "COLUMN",

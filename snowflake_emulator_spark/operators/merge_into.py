@@ -296,6 +296,7 @@ class MergeProcessor:
             f"ORDER BY CASE WHEN ({matched_action}) = 'NONE' THEN 1 ELSE 0 END, {s}.__sid) AS __rn "
             f"FROM {tv} AS {t} FULL OUTER JOIN {sv} AS {s} ON ({on})"
         )
+        join_sql = self.executor._resolve_subqueries(join_sql, ctx)
         # ERROR_ON_NONDETERMINISTIC_MERGE (Snowflake defaults to the
         # strict mode, and so does config.DEFAULT_SESSION_PARAMETERS): a
         # target row matched by MULTIPLE actionable source rows raises
@@ -356,7 +357,6 @@ class MergeProcessor:
         n_del = int(stats["del"] or 0)
         n_ins = int(stats["ins"] or 0)
         self.executor._advance_streams_referenced(stmt.source, ctx)
-        self.executor.sync_namespace_views(ctx)
         r = Result(
             columns=["number of rows inserted", "number of rows updated", "number of rows deleted"],
             rows=[[n_ins, n_upd, n_del]],

@@ -169,3 +169,40 @@ def test_rejected_merge_loses_no_concurrent_insert(engine):
     assert len(rejected) == 4 and all("Duplicate row" in str(e) for e in rejected)
     res = engine.execute("SELECT id, n FROM mg_t ORDER BY id", ctx)
     assert [tuple(r) for r in res.rows] == [(i, 0) for i in range(9)]
+
+
+def test_concurrent_update_from_on_different_tables(engine):
+    """Two sessions run UPDATE ... FROM on different tables at once:
+    each joins its own source (the join is not a shared temp view)."""
+    import sys
+
+    ctx = SessionContext()
+    for t, v in (("A", 1), ("B", 100)):
+        engine.execute(f"CREATE TABLE UF_T{t} (ID INTEGER, V INTEGER)", ctx)
+        engine.execute(f"CREATE TABLE UF_S{t} (ID INTEGER, V INTEGER)", ctx)
+        engine.execute(f"INSERT INTO UF_T{t} VALUES (1, 0)", ctx)
+        engine.execute(f"INSERT INTO UF_S{t} VALUES (1, {v})", ctx)
+    errs = []
+
+    def run(t):
+        try:
+            for _ in range(6):
+                engine.execute(f"UPDATE UF_T{t} SET V = UF_T{t}.V + s.V FROM UF_S{t} s "
+                               f"WHERE UF_T{t}.ID = s.ID", SessionContext())
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=run, args=(t,)) for t in ("A", "B")]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs
+    assert engine.execute("SELECT V FROM UF_TA", ctx).rows[0][0] == 6
+    assert engine.execute("SELECT V FROM UF_TB", ctx).rows[0][0] == 600
