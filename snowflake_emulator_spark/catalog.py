@@ -912,8 +912,10 @@ class Catalog:
     append_files_fast = write_table
 
     def register_view(self, tm: TableMeta) -> None:
-        self.mutation += 1  # every data change routes through here
         self.read_table(tm).createOrReplaceTempView(tm.physical)
+        # every data change routes through here. Bumped after the swap,
+        # so a reader that sees the new count also sees the new view
+        self.mutation += 1
 
     def register_all_views(self) -> None:
         for tm in self.tables.values():

@@ -154,9 +154,16 @@ _SET_VAR_RE = re.compile(r"^\s*SET\s+([A-Za-z_]\w*)\s*=\s*(.+)$", re.I | re.S)
 _UNSET_VAR_RE = re.compile(r"^\s*UNSET\s+([A-Za-z_]\w*)\s*$", re.I)
 _ALTER_SESSION_UNSET_RE = re.compile(r"^\s*ALTER\s+SESSION\s+UNSET\s+(.+)$", re.I | re.S)
 _PARAM_PAIR_RE = re.compile(r"(\w+)\s*=\s*('(?:[^']*)'|[^\s,]+)")
+# a bulk bind's INSERT: group 1 is everything before VALUES, and the
+# match ends at the tuple's open paren
+_INSERT_VALUES_RE = re.compile(
+    r"^(INSERT\s+INTO\s+[^()]+?(?:\([^)]*\))?\s*)VALUES\s*\(", re.I | re.S)
 
 
 class Engine:
+    # rows per bulk-bind INSERT statement (execute_bind_stage)
+    BIND_BATCH_ROWS = 1000
+
     def __init__(self, spark: SparkSession | None = None, base_dir: str | None = None):
         self.spark = ensure_engine_confs(spark) if spark is not None else build_spark()
         self.catalog = Catalog(self.spark, base_dir=base_dir)
@@ -184,10 +191,10 @@ class Engine:
         client-side threshold the driver CSV-uploads the bind rows to a
         stage and sends ``bindStage: "STAGE_NAME/prefix"`` instead of
         inline bindings. Each CSV row is one execution of the statement
-        with positional TEXT binds; the common ``INSERT ... VALUES
-        (?, ...)`` shape is rewritten into multi-row VALUES batches so
-        a bulk insert stays a handful of distributed statements, not
-        one Spark job per row."""
+        with positional TEXT binds. ``INSERT INTO t [(cols)] VALUES
+        (<one tuple>)`` runs as an INSERT ... SELECT over the bind rows
+        (``_insert_bind_rows``); any other statement runs once per
+        row."""
         import csv
         import io
 
@@ -203,26 +210,17 @@ class Engine:
             raise errors.invalid_parameter(
                 f"bind stage {bind_stage!r} contains no bind rows")
         s = sql.strip().rstrip(";")
-        # INSERT ... VALUES (?, ...) — one tuple, all placeholders:
-        # expand to multi-row VALUES in batches of 1000 tuples
-        m = re.match(r"^(INSERT\s+INTO\s+[^()]+?(?:\([^)]*\))?\s*VALUES\s*)"
-                     r"(\(.*\))\s*$", s, re.I | re.S)
-        if m and m.group(2).count("(") == 1:
-            from .plans.bindings import apply_bindings
+        m = _INSERT_VALUES_RE.match(s)
+        if m:
+            from .plans.translator import match_paren
 
-            head, tmpl = m.group(1), m.group(2)
-            total = None
-            for i in range(0, len(rows), 1000):
-                tuples = []
-                for row in rows[i:i + 1000]:
-                    binds = {str(j + 1): {"type": "TEXT", "value": v}
-                             for j, v in enumerate(row)}
-                    tuples.append(apply_bindings(tmpl, binds))
-                res = self.execute(head + ", ".join(tuples), ctx,
-                                   query_id=query_id)
-                total = (total or 0) + (res.rows_inserted or 0)
-            res.rows_inserted = total or 0
-            return res
+            close = match_paren(s, m.end() - 1)
+            tuple_ = s[m.end():close]
+            # DEFAULT is filled in per VALUES row (Executor._insert)
+            if (close == len(s) - 1
+                    and not re.search(r"\bDEFAULT\b", tuple_, re.I)):
+                return self._insert_bind_rows(m.group(1), tuple_, rows, ctx,
+                                              query_id)
         # general statement: one execution per bind row (bounded)
         if len(rows) > 10_000:
             raise errors.invalid_parameter(
@@ -233,6 +231,37 @@ class Engine:
             binds = {str(j + 1): {"type": "TEXT", "value": v}
                      for j, v in enumerate(row)}
             res = self.execute(s, ctx, binds, query_id=query_id)
+        return res
+
+    def _insert_bind_rows(self, head: str, tuple_: str, rows: list[list[str]],
+                          ctx: SessionContext, query_id: str | None) -> Result:
+        """Run ``<head> VALUES (<tuple_>)`` once per bind row, as
+        ``<head> SELECT <tuple_> FROM <bind relation>`` once per batch of
+        ``BIND_BATCH_ROWS`` rows. The bind relation is a one-partition
+        DataFrame of string columns built from an Arrow table (no Python
+        workers), and the k-th placeholder of the tuple reads its k-th
+        column: each value is a STRING cast to its column's type, as a
+        TEXT binding is, and no bind value becomes SQL text. Each batch
+        is one statement and one table version; the reply counts the
+        last batch, ``rows_inserted`` all of them."""
+        import uuid
+
+        from .plans.bindings import bind_column_refs, bind_table
+
+        table = bind_table(rows)
+        select = (f"{head.rstrip()} SELECT "
+                  f"{bind_column_refs(tuple_, table.num_columns)} FROM ")
+        total = 0
+        for i in range(0, len(rows), self.BIND_BATCH_ROWS):
+            view = f"__binds_{uuid.uuid4().hex[:12]}"
+            (self.spark.createDataFrame(table.slice(i, self.BIND_BATCH_ROWS))
+             .coalesce(1).createOrReplaceTempView(view))
+            try:
+                res = self.execute(select + view, ctx, query_id=query_id)
+            finally:
+                self.spark.catalog.dropTempView(view)
+            total += res.rows_inserted
+        res.rows_inserted = total
         return res
 
     def execute(self, sql: str, ctx: SessionContext | None = None,

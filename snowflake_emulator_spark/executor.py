@@ -16,6 +16,7 @@ without one session's namespace living in Spark's shared temp views.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -319,6 +320,12 @@ _ALTER_COLUMN_RE = re.compile(
 
 _LEADING_WITH_RE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*WITH\b", re.I | re.S)
 _SUBQUERY_RE = re.compile(r"\(\s*(?:SELECT|WITH)\b", re.I)
+# keywords that open a clause: a comma names another relation only in a
+# FROM clause (Executor._resolve_names)
+_CLAUSE_WORDS = frozenset((
+    "SELECT", "FROM", "WHERE", "GROUP", "HAVING", "QUALIFY", "ORDER", "LIMIT",
+    "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS", "VALUES", "SET",
+    "PIVOT", "UNPIVOT"))
 
 
 def _inside_string(s: str, pos: int) -> bool:
@@ -428,9 +435,7 @@ class Executor:
         entry = {"sql": sql, "status": "RUNNING", "start": started, "rows": 0,
                  "error": None, "query_id": qid}
         self.history.append(entry)
-        if getattr(self._tt_local, "pins", None) is None:
-            self._tt_local.pins = []
-        tt_depth = len(self._tt_local.pins)
+        tt_depth = len(self._tt_pins())
         try:
             res = self._dispatch(sql, ctx, bindings)
             entry["status"] = "SUCCESS"
@@ -448,16 +453,31 @@ class Executor:
             entry["error"] = str(e)
             raise errors.from_spark(e) from e
         finally:
-            # release the AT() read pins THIS call took (recursion-safe:
-            # a nested execute releases only pins above its own depth)
-            while len(self._tt_local.pins) > tt_depth:
-                key, version = self._tt_local.pins.pop()
-                self.catalog.unpin_version_for_read(key, version)
+            self._release_time_travel(tt_depth)
             # precise end instant (float seconds) for AT(STATEMENT =>)
             # resolution; "ms" stays the history-display duration
             entry["end"] = time.time()
             entry["ms"] = int((entry["end"] - started) * 1000)
             self._persist_history(entry)
+
+    def _tt_pins(self) -> list[tuple[tuple[str, str, str], int, str]]:
+        """This thread's AT() reads: (table key, pinned version, temp
+        view over the version), taken by ``_resolve_time_travel``."""
+        pins = getattr(self._tt_local, "pins", None)
+        if pins is None:
+            pins = self._tt_local.pins = []
+        return pins
+
+    def _release_time_travel(self, depth: int) -> None:
+        """Drop the version views and release the read pins of the AT()
+        reads taken on this thread above ``depth`` (recursion-safe: a
+        nested statement releases only its own). Each view's plan is
+        analyzed by then, so dropping it cannot change a running read."""
+        pins = self._tt_pins()
+        while len(pins) > depth:
+            key, version, view = pins.pop()
+            self.spark.catalog.dropTempView(view)
+            self.catalog.unpin_version_for_read(key, version)
 
     # ------------------------------------------------------------------
     # RESULT_SCAN (beyond reference: Snowflake result re-serve)
@@ -890,9 +910,7 @@ class Executor:
         finally for that, which describeOnly never reaches (r6
         advice)."""
         ctx = ctx or SessionContext()
-        if getattr(self._tt_local, "pins", None) is None:
-            self._tt_local.pins = []
-        tt_depth = len(self._tt_local.pins)
+        tt_depth = len(self._tt_pins())
         prev_flag = getattr(self._tt_local, "describe_only", False)
         self._tt_local.describe_only = True
         try:
@@ -902,9 +920,7 @@ class Executor:
             return Result.from_dataframe(df.limit(0))
         finally:
             self._tt_local.describe_only = prev_flag
-            while len(self._tt_local.pins) > tt_depth:
-                key, version = self._tt_local.pins.pop()
-                self.catalog.unpin_version_for_read(key, version)
+            self._release_time_travel(tt_depth)
 
     _GET_DDL_RE = re.compile(
         r"\bGET_DDL\s*\(\s*'(\w+)'\s*,\s*'([\w.\"$]+)'\s*\)", re.I)
@@ -1325,15 +1341,15 @@ class Executor:
             # the executing statement (execute()'s finally). Pin FIRST,
             # then re-check the dir: if GC won the race the check
             # fails and we raise the Snowflake-shaped error instead of
-            # reading a half-deleted version.
+            # reading a half-deleted version. The version's temp view
+            # belongs to the statement (unique name) and is dropped with
+            # the pin.
             key = (tm.database, tm.schema, tm.name)
+            view = f"{tm.physical}__at_v{version}_{uuid.uuid4().hex[:12]}"
             self.catalog.pin_version_for_read(key, version)
-            if getattr(self._tt_local, "pins", None) is None:
-                self._tt_local.pins = []
-            self._tt_local.pins.append((key, version))
+            self._tt_pins().append((key, version, view))
             if not os.path.isdir(tm.version_path(version)):
                 raise errors.execution_error(_TT_UNAVAILABLE.format(tm.name))
-            view = f"{tm.physical}__at_v{version}"
             self.spark.read.schema(tm.spark_schema()).parquet(
                 tm.version_path(version)).createOrReplaceTempView(view)
             return self._governed_ref(tm, view, ctx, ctes)
@@ -1437,9 +1453,12 @@ class Executor:
             if up.startswith("EXPLAIN"):
                 return self._explain(sql, ctx)
             key = self._query_cache_key(sql, ctx)
+            # read BEFORE the query runs, so that a write committing
+            # while it runs invalidates the entry it stores
+            stamp = self.catalog.mutation
             if key is not None:
                 hit = self._query_cache.get(key)
-                if hit is not None and hit[0] == self.catalog.mutation:
+                if hit is not None and hit[0] == stamp:
                     try:  # racing LRU eviction on another thread is fine
                         self._query_cache.move_to_end(key)
                     except KeyError:
@@ -1452,7 +1471,7 @@ class Executor:
                     return copy.copy(hit[1])
             res = Result.from_dataframe(self.query_df(sql, ctx))
             if key is not None:
-                self._query_cache[key] = (self.catalog.mutation, res)
+                self._query_cache[key] = (stamp, res)
                 while len(self._query_cache) > self._query_cache_cap:
                     self._query_cache.popitem(last=False)
             return res
@@ -1505,6 +1524,15 @@ class Executor:
         ctes: dict[str, str] = {}
         sql = self._resolve_time_travel(sql, ctx, ctes)
         bare: set[str] = set()
+        # bare names read as relations (after FROM or JOIN, or a comma
+        # of a FROM clause), for the streams a DML consumes; the
+        # previous token and each paren level's clause keyword tell them
+        relations: set[str] = set()
+        prev, clause = "", [""]
+
+        def at_relation() -> bool:
+            return prev in ("FROM", "JOIN") or (prev == "," and clause[-1] == "FROM")
+
         out: list[str] = []
         i, n = 0, len(sql)
         while i < n:
@@ -1526,6 +1554,9 @@ class Executor:
                 j = n - 1 if j < 0 else j
                 if sql[i - 1:i] != "." and sql[j + 1:j + 2] != ".":
                     bare.add(sql[i + 1:j])
+                    if at_relation():
+                        relations.add(sql[i + 1:j])
+                prev = '"'
                 out.append(sql[i:j + 1])
                 i = j + 1
                 continue
@@ -1558,11 +1589,13 @@ class Executor:
                 ids = [sql[a:b].upper() for a, b in parts]
                 ref = None
                 if len(ids) >= 3:
-                    ref = self._relation_ref((ids[0], ids[1], ids[2]), ctx, ctes)
-                    tail = parts[2][1]
+                    key, tail = (ids[0], ids[1], ids[2]), parts[2][1]
+                    ref = self._relation_ref(key, ctx, ctes)
                 if ref is None and len(ids) >= 2:
-                    ref = self._relation_ref((ctx.database, ids[0], ids[1]), ctx, ctes)
-                    tail = parts[1][1]
+                    key, tail = (ctx.database, ids[0], ids[1]), parts[1][1]
+                    ref = self._relation_ref(key, ctx, ctes)
+                if ref is not None:
+                    self._note_stream_read(key)
                 if ref is None and len(ids) >= 2 and "INFORMATION_SCHEMA" in ids[:2]:
                     if ids[0] == "INFORMATION_SCHEMA" and ids[1] in self._INFO_SCHEMA_VIEWS:
                         ref = self._register_info_schema_view(ids[1], ctx.database)
@@ -1576,12 +1609,25 @@ class Executor:
                 else:
                     if len(ids) == 1 and sql[i - 1:i] != ".":
                         bare.add(ids[0])
+                        if at_relation():
+                            relations.add(ids[0])
                     out.append(sql[i:j])
+                if len(ids) == 1 and ids[0] in _CLAUSE_WORDS:
+                    clause[-1] = ids[0]
+                prev = ids[-1]
                 i = j
                 continue
+            if c == "(":
+                clause.append("")
+            elif c == ")" and len(clause) > 1:
+                clause.pop()
+            if not c.isspace():
+                prev = c
             out.append(c)
             i += 1
         self.sync_namespace_views(bare, ctx, ctes)
+        for name in relations:
+            self._note_stream_read((ctx.database, ctx.schema, name))
         resolved = "".join(out)
         if not ctes:
             return resolved
@@ -1637,6 +1683,14 @@ class Executor:
                 continue
             if ref is not None:
                 ctes["`" + name.replace("`", "``") + "`"] = f"SELECT * FROM {ref}"
+
+    def _note_stream_read(self, key: tuple[str, str, str]) -> None:
+        """Record that the statement reads ``key`` when it is a stream
+        and a ``reading_streams`` block is collecting on this thread."""
+        reading = getattr(self._tt_local, "streams", None)
+        sm = self.catalog.streams.get(key)
+        if reading is not None and sm is not None:
+            reading.append(sm)
 
     def _relation_ref(self, key: tuple[str, str, str], ctx: SessionContext,
                       ctes: dict[str, str]) -> str | None:
@@ -2792,9 +2846,10 @@ class Executor:
         body = m.group(4)
         if body.upper().startswith("VALUES"):
             body = self._fill_values_defaults(body, tm, col_list)
-        src = self.query_df(body, ctx) if not body.upper().startswith("VALUES") else self.spark.sql(
-            self._dml_expr(self._rewrite_nextval_literal(body, ctx), ctx)
-        )
+        with self.reading_streams() as streams:
+            src = self.query_df(body, ctx) if not body.upper().startswith("VALUES") else self.spark.sql(
+                self._dml_expr(self._rewrite_nextval_literal(body, ctx), ctx)
+            )
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -2805,8 +2860,8 @@ class Executor:
         src = self._align_insert_columns(tm, src, col_list)
         self.catalog.write_table(tm, (lambda _live: src) if overwrite else src)
         n = int(obs.get["n"])
-        if not body.upper().startswith("VALUES"):
-            self._advance_streams_referenced(body, ctx)
+        for sm in streams:
+            self.catalog.advance_stream(sm)
         r = Result(columns=["number of rows inserted"], rows=[[n]])
         r.rows_inserted = n
         return r
@@ -2837,16 +2892,17 @@ class Executor:
                 out_cols.append(F.lit(None).cast(snowflake_to_spark(c.sf_type)).alias(c.name))
         return renamed.select(*out_cols)
 
-    def _advance_streams_referenced(self, text: str, ctx: SessionContext) -> None:
-        """Snowflake stream-consumption semantics (best-effort textual
-        detection): a DML whose source references a stream advances that
-        stream's offset when the statement commits."""
-        if not self.catalog.streams:
-            return
-        up = text.upper()
-        for (db, sch, name), sm in list(self.catalog.streams.items()):
-            if db == ctx.database and re.search(rf"\b{re.escape(name)}\b", up):
-                self.catalog.advance_stream(sm)
+    @contextlib.contextmanager
+    def reading_streams(self):
+        """Collect the streams that the statements resolved on this
+        thread inside the block read as relations (``_resolve_names``):
+        the streams a DML consumes (advances) once it commits."""
+        outer = getattr(self._tt_local, "streams", None)
+        self._tt_local.streams = streams = []
+        try:
+            yield streams
+        finally:
+            self._tt_local.streams = outer
 
     def _update(self, m: re.Match, ctx: SessionContext) -> Result:
         from pyspark.sql import functions as F

@@ -168,15 +168,16 @@ class MergeProcessor:
     def execute(self, sql: str, ctx) -> Result:
         stmt = parse_merge(sql)
         tm = self.catalog.get_table(stmt.target, ctx.database, ctx.schema)
-        if stmt.source.startswith("("):
-            source_df = self.executor.query_df(stmt.source[1:-1], ctx)
-        else:
-            try:
-                stm = self.catalog.get_table(stmt.source, ctx.database, ctx.schema)
-                source_df = self.catalog.read_table(stm)
-            except errors.SnowflakeError:
-                # not a table: a stream or other resolvable relation
-                source_df = self.executor.query_df(f"SELECT * FROM {stmt.source}", ctx)
+        with self.executor.reading_streams() as streams:
+            if stmt.source.startswith("("):
+                source_df = self.executor.query_df(stmt.source[1:-1], ctx)
+            else:
+                try:
+                    stm = self.catalog.get_table(stmt.source, ctx.database, ctx.schema)
+                    source_df = self.catalog.read_table(stm)
+                except errors.SnowflakeError:
+                    # not a table: a stream or other resolvable relation
+                    source_df = self.executor.query_df(f"SELECT * FROM {stmt.source}", ctx)
 
         t, s = stmt.target_alias, stmt.source_alias
         # per-statement unique view names: fixed names let a concurrent
@@ -356,7 +357,8 @@ class MergeProcessor:
         n_upd = int(stats["upd"] or 0)
         n_del = int(stats["del"] or 0)
         n_ins = int(stats["ins"] or 0)
-        self.executor._advance_streams_referenced(stmt.source, ctx)
+        for sm in streams:
+            self.catalog.advance_stream(sm)
         r = Result(
             columns=["number of rows inserted", "number of rows updated", "number of rows deleted"],
             rows=[[n_ins, n_upd, n_del]],

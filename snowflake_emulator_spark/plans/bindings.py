@@ -17,6 +17,9 @@ comments are never rewritten, and substituted values are never
 re-scanned (sequential re.sub let a binding value containing ``:1``
 be rewritten by a later pass).
 
+Bulk binds (``bind_table`` / ``bind_column_refs``) do not substitute
+values: the rows become a relation and the placeholders its columns.
+
 Spark 3.4+ offers ``spark.sql(sql, args=...)`` server-side parameters;
 we keep literal substitution to reproduce the reference's validation
 error surface, but the executor can route through either.
@@ -118,6 +121,41 @@ def apply_bindings(sql: str, bindings: dict[str, dict] | None) -> str:
 
         sql = _scan_substitute(sql, qmark_repl)
     return sql
+
+
+def bind_table(rows: list[list[str]]):
+    """A ``pyarrow.Table`` of bind rows (each a list of strings, one
+    per placeholder): string columns ``__b1..__bN``, read by a template
+    from ``bind_column_refs``."""
+    import pyarrow as pa
+
+    width = len(rows[0]) if rows else 0
+    if not width or any(len(r) != width for r in rows):
+        raise errors.invalid_parameter(
+            "bind rows must all have the same, nonzero number of values")
+    return pa.table({f"__b{k + 1}": pa.array(col, pa.string())
+                     for k, col in enumerate(zip(*rows))})
+
+
+def bind_column_refs(sql: str, width: int) -> str:
+    """Replace the placeholders of ``sql`` with the columns of a
+    ``bind_table`` of ``width`` columns: ``:k`` and the k-th ``?``
+    become ``__bk``, in the order ``apply_bindings`` assigns values, so
+    a row of that table binds exactly as the same row passed as
+    positional bindings. Placeholders past ``width`` stay as they are."""
+    names = {str(k): f"__b{k}" for k in range(1, width + 1)}
+
+    def named_repl(token: str) -> str | None:
+        m = _NAMED_RE.fullmatch(token)
+        return names.get(m.group(1)) if m else None
+
+    sql = _scan_substitute(sql, named_repl)
+    qmarks = iter(range(1, width + 1))
+
+    def qmark_repl(token: str) -> str | None:
+        return names.get(str(next(qmarks, 0))) if token == "?" else None
+
+    return _scan_substitute(sql, qmark_repl)
 
 
 def _scan_substitute(sql: str, repl) -> str:
