@@ -38,8 +38,10 @@ import re
 import shutil
 import threading
 import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -73,6 +75,16 @@ class ColumnDef:
 
     def spark_field(self) -> T.StructField:
         return T.StructField(self.name, snowflake_to_spark(self.sf_type), self.nullable)
+
+
+def column_defs(schema: T.StructType) -> list[ColumnDef]:
+    """The columns of a table made from a DataFrame (CTAS, external
+    tables): each field's Snowflake type, a DECIMAL keeping its
+    precision and scale."""
+    return [ColumnDef(f.name, f"NUMBER({f.dataType.precision},{f.dataType.scale})"
+                      if isinstance(f.dataType, T.DecimalType)
+                      else spark_to_snowflake_name(f.dataType), f.nullable)
+            for f in schema.fields]
 
 
 @dataclass
@@ -670,8 +682,12 @@ class Catalog:
             raise errors.execution_error(
                 f"column count mismatch for {tm.physical}: got {len(df.schema.fields)}, want {len(target)}"
             )
-        return df.select(*[df[src.name].cast(f.dataType).alias(f.name)
-                           for f, src in zip(target, df.schema.fields)])
+        # renamed by position first: a source column may be named like
+        # an expression, `(1.5 + 1)`, or twice, `1`, `1`
+        renamed = df.toDF(*[f.name for f in target])
+        return renamed.select(*[
+            renamed["`" + f.name.replace("`", "``") + "`"].cast(f.dataType).alias(f.name)
+            for f in target])
 
     def _layout(self, tm: TableMeta, df: DataFrame, files: int | None = None) -> DataFrame:
         """Partition ``df`` for writing; ``files`` caps the files written.
@@ -856,33 +872,45 @@ class Catalog:
 
     def write_table(self, tm: TableMeta,
                     rows: DataFrame | Callable[[DataFrame], DataFrame | None],
-                    check: Callable[[], None] | None = None) -> None:
+                    check: Callable[[], None] | None = None) -> int | None:
         """The one table-write primitive: build version N+1 of ``tm``
         under the table's write lock, then swap the pointer to it.
 
         * append, ``rows`` a DataFrame of new rows: v(N+1) holds hard
           links to every data file of v(N) plus files of the new rows
-          only (clustered like any write): one Spark job over the new
-          rows, and the live version is never read. An append that
-          could leave more than ``max_data_files`` files folds the live
-          files and the new rows into an overwrite instead.
+          only (clustered like any write), and the live version is never
+          read. Rows Spark's optimizer has already folded onto the driver
+          (``_driver_rows``: VALUES and its casts) are taken before the
+          lock and written as one parquet file by pyarrow, with no Spark
+          job; any other rows by one Spark job. An append that could
+          leave more than ``max_data_files`` files folds the live files
+          and the new rows into an overwrite instead. Returns the number
+          of rows appended.
         * overwrite, ``rows`` a function of the live DataFrame, called
           inside the lock, that returns the new contents (None: empty).
           Because the live version is read under the lock, a
           read-modify-write (UPDATE, DELETE, MERGE) cannot lose a
-          concurrent write to the same table.
+          concurrent write to the same table. Returns None.
 
         ``check`` runs after the Spark job, still inside the lock: an
         error it raises discards v(N+1) unpublished (strict MERGE's
         nondeterministic-match check reads the job's Observation).
 
         Holds only this table's write lock for the duration of the
-        Spark job, so concurrent writes to different tables proceed in
+        write, so concurrent writes to different tables proceed in
         parallel."""
         if tm.kind == "EXTERNAL" or not tm.location:
             raise errors.execution_error(
                 f"cannot write to external table {tm.name}")
+        new = local = obs = None
+        if not callable(rows):
+            schema = tm.spark_schema()
+            new, local, obs = self._new_rows(tm, rows)
         with self._table_lock(tm):
+            if new is not None and tm.spark_schema() != schema:
+                # a column DDL (RENAME/DROP COLUMN) changed the columns
+                # inside this lock after the rows were conformed
+                new, local, obs = self._new_rows(tm, rows)
             live_dir, version = tm.version_path(), tm.version + 1
             path = tm.version_path(version)
             try:
@@ -890,16 +918,21 @@ class Catalog:
                     self._write_dir(tm, rows(self.read_table(tm)), path)
                 elif (len(self._data_files(live_dir)) + self.append_files
                       <= self.max_data_files):
-                    new = self.conform(tm, rows)
                     # an abandoned dir from a rolled-back write may sit
                     # at this version number: linking into it as-is
                     # would resurrect the rolled-back rows
                     shutil.rmtree(path, ignore_errors=True)
                     os.makedirs(path)
                     self._link_files(live_dir, path)
-                    self._layout(tm, new, self.append_files).write.mode("append").parquet(path)
+                    if local is not None:
+                        import pyarrow.parquet as pq
+
+                        pq.write_table(local, os.path.join(
+                            path, f"part-{uuid.uuid4()}.parquet"))
+                    else:
+                        self._layout(tm, new, self.append_files).write.mode("append").parquet(path)
                 else:
-                    self._write_dir(tm, self.read_table(tm).unionByName(self.conform(tm, rows)),
+                    self._write_dir(tm, self.read_table(tm).unionByName(new),
                                     path, self.append_files)
                 if check is not None:
                     check()
@@ -907,6 +940,59 @@ class Catalog:
                 shutil.rmtree(path, ignore_errors=True)
                 raise
             self._publish(tm, version)
+        if local is not None:
+            return local.num_rows
+        return None if obs is None else int(obs.get["n"])
+
+    def _new_rows(self, tm: TableMeta, df: DataFrame):
+        """The rows ``df`` to append, conformed to ``tm``'s columns, as
+        ``(conformed, driver_rows, count)``: ``driver_rows`` the
+        ``_driver_rows`` table or None, and ``count`` an Observation of
+        the Spark write when they are not on the driver."""
+        new = self.conform(tm, df)
+        local = self._driver_rows(tm, new)
+        if local is not None:
+            return new, local, None
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        obs = Observation()
+        return new.observe(obs, F.count(F.lit(1)).alias("n")), None, obs
+
+    def _driver_rows(self, tm: TableMeta, df: DataFrame):
+        """The conformed rows ``df`` as a ``pyarrow.Table``, if they are
+        already on the driver: Spark's optimizer has folded them into a
+        LocalRelation (VALUES and the casts of ``conform``), so
+        ``collect()`` starts no Spark job. A Spark job costs a few
+        hundred ms however few rows it writes. None when the rows need
+        a job, and for a CLUSTER BY table, whose files ``_layout`` sorts.
+
+        ``collect()`` returns TIMESTAMP_LTZ/TZ values as naive local
+        datetimes; they become aware UTC ones, so the file holds the
+        instants Spark would have written."""
+        if tm.clustering_key or (df._jdf.queryExecution().optimizedPlan()
+                                 .getClass().getSimpleName() != "LocalRelation"):
+            return None
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        spark_schema = tm.spark_schema()
+        # every column nullable, as Spark writes it: NOT NULL is not
+        # enforced on INSERT
+        schema = pa.schema([f.with_nullable(True) for f in to_arrow_schema(spark_schema)])
+        try:
+            arrays = []
+            for values, field, typ in zip(list(zip(*df.collect())) or [()] * len(schema),
+                                          spark_schema.fields, schema.types):
+                if isinstance(field.dataType, T.TimestampType):
+                    values = [None if v is None else v.astimezone(timezone.utc)
+                              for v in values]
+                arrays.append(pa.array(values, typ))
+            return pa.Table.from_arrays(arrays, schema=schema)
+        except (ValueError, OverflowError):
+            # a value outside Python's datetime range (years 1-9999
+            # after the local-time conversion): Spark writes it
+            return None
 
     # the former COPY entry point; perfbench/tracing.py wraps it by name
     append_files_fast = write_table
@@ -1367,8 +1453,7 @@ class Catalog:
             if (db, sch, tbl) in self.tables and not or_replace:
                 raise errors.object_exists(".".join((db, sch, tbl)))
             df = self._read_external(path, fmt.upper(), options)
-            cols = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable)
-                    for f in df.schema.fields]
+            cols = column_defs(df.schema)
             tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", location=None)
             df.createOrReplaceTempView(tm.physical)
             tm.read_df = df  # type: ignore[attr-defined]
@@ -1387,8 +1472,7 @@ class Catalog:
                 raise errors.invalid_parameter(f"{tm.name} is not an external table")
             df = self._read_external(tm.external_path, tm.external_format,
                                      tm.external_options)
-            tm.columns = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable)
-                          for f in df.schema.fields]
+            tm.columns = column_defs(df.schema)
             df.createOrReplaceTempView(tm.physical)
             tm.read_df = df  # type: ignore[attr-defined]
             # namespace-view caches key on (uid, version, data_epoch);
@@ -1422,7 +1506,7 @@ class Catalog:
         with self._lock:
             db, sch, tbl = self.resolve(name, database, schema)
             df = self.spark.read.parquet(path)
-            cols = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable) for f in df.schema.fields]
+            cols = column_defs(df.schema)
             tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", location=None)
             df.createOrReplaceTempView(tm.physical)
             tm.read_df = df  # type: ignore[attr-defined]

@@ -194,19 +194,16 @@ class Engine:
         with positional TEXT binds. ``INSERT INTO t [(cols)] VALUES
         (<one tuple>)`` runs as an INSERT ... SELECT over the bind rows
         (``_insert_bind_rows``); any other statement runs once per
-        row."""
-        import csv
-        import io
+        row. A NULL bind value (``bind_table``) binds NULL."""
+        from .plans.bindings import bind_table
 
         ctx = ctx or SessionContext()
         path = bind_stage.strip().lstrip("@")
         name, _, prefix = path.partition("/")
         stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
-        rows: list[list[str]] = []
-        for rel in self.stages.list_files(stage, prefix=prefix or None):
-            data = self.stages.get_file(stage, rel)
-            rows.extend(csv.reader(io.StringIO(data.decode("utf-8"))))
-        if not rows:
+        table = bind_table([self.stages.get_file(stage, rel) for rel in
+                            self.stages.list_files(stage, prefix=prefix or None)])
+        if table is None:
             raise errors.invalid_parameter(
                 f"bind stage {bind_stage!r} contains no bind rows")
         s = sql.strip().rstrip(";")
@@ -219,21 +216,21 @@ class Engine:
             # DEFAULT is filled in per VALUES row (Executor._insert)
             if (close == len(s) - 1
                     and not re.search(r"\bDEFAULT\b", tuple_, re.I)):
-                return self._insert_bind_rows(m.group(1), tuple_, rows, ctx,
+                return self._insert_bind_rows(m.group(1), tuple_, table, ctx,
                                               query_id)
         # general statement: one execution per bind row (bounded)
-        if len(rows) > 10_000:
+        if table.num_rows > 10_000:
             raise errors.invalid_parameter(
                 "bind stage row-per-statement execution is capped at "
                 "10000 rows for non-INSERT statements")
         res = None
-        for row in rows:
+        for row in zip(*(c.to_pylist() for c in table.columns)):
             binds = {str(j + 1): {"type": "TEXT", "value": v}
                      for j, v in enumerate(row)}
             res = self.execute(s, ctx, binds, query_id=query_id)
         return res
 
-    def _insert_bind_rows(self, head: str, tuple_: str, rows: list[list[str]],
+    def _insert_bind_rows(self, head: str, tuple_: str, table,
                           ctx: SessionContext, query_id: str | None) -> Result:
         """Run ``<head> VALUES (<tuple_>)`` once per bind row, as
         ``<head> SELECT <tuple_> FROM <bind relation>`` once per batch of
@@ -246,13 +243,12 @@ class Engine:
         last batch, ``rows_inserted`` all of them."""
         import uuid
 
-        from .plans.bindings import bind_column_refs, bind_table
+        from .plans.bindings import bind_column_refs
 
-        table = bind_table(rows)
         select = (f"{head.rstrip()} SELECT "
                   f"{bind_column_refs(tuple_, table.num_columns)} FROM ")
         total = 0
-        for i in range(0, len(rows), self.BIND_BATCH_ROWS):
+        for i in range(0, table.num_rows, self.BIND_BATCH_ROWS):
             view = f"__binds_{uuid.uuid4().hex[:12]}"
             (self.spark.createDataFrame(table.slice(i, self.BIND_BATCH_ROWS))
              .coalesce(1).createOrReplaceTempView(view))

@@ -29,7 +29,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from . import config, errors
-from .catalog import Catalog, ColumnDef
+from .catalog import Catalog, ColumnDef, column_defs
 from .plans import bindings as bindmod
 from .plans.classifier import StatementType, classify
 from .plans.translator import Translator
@@ -377,10 +377,9 @@ class Executor:
         self.spark = spark
         self.catalog = catalog
         self.translator = Translator()
-        # per-thread stack of (table key, version) pins taken by AT()
-        # time-travel reads in the statement currently executing on
-        # this thread; released in execute()'s finally (recursion-safe
-        # via depth snapshots)
+        # per-thread stack of the temp views (and AT() read pins) of
+        # the statement currently executing on this thread; released in
+        # execute()'s finally (recursion-safe via depth snapshots)
         self._tt_local = threading.local()
         # query-history log (reference persists to its metadata store,
         # pkg/metadata/repository.go:1213-1378). Persisted as an
@@ -435,7 +434,7 @@ class Executor:
         entry = {"sql": sql, "status": "RUNNING", "start": started, "rows": 0,
                  "error": None, "query_id": qid}
         self.history.append(entry)
-        tt_depth = len(self._tt_pins())
+        views_depth = len(self._statement_views())
         try:
             res = self._dispatch(sql, ctx, bindings)
             entry["status"] = "SUCCESS"
@@ -453,31 +452,34 @@ class Executor:
             entry["error"] = str(e)
             raise errors.from_spark(e) from e
         finally:
-            self._release_time_travel(tt_depth)
+            self._release_statement_views(views_depth)
             # precise end instant (float seconds) for AT(STATEMENT =>)
             # resolution; "ms" stays the history-display duration
             entry["end"] = time.time()
             entry["ms"] = int((entry["end"] - started) * 1000)
             self._persist_history(entry)
 
-    def _tt_pins(self) -> list[tuple[tuple[str, str, str], int, str]]:
-        """This thread's AT() reads: (table key, pinned version, temp
-        view over the version), taken by ``_resolve_time_travel``."""
+    def _statement_views(self) -> list[tuple[tuple[str, str, str] | None, int | None, str]]:
+        """This thread's statement-scoped temp views: (table key, pinned
+        version, view over the version) for each AT() read taken by
+        ``_resolve_time_travel``, and (None, None, view) for each
+        MATCH_RECOGNIZE output (``_rewrite_match_recognize``)."""
         pins = getattr(self._tt_local, "pins", None)
         if pins is None:
             pins = self._tt_local.pins = []
         return pins
 
-    def _release_time_travel(self, depth: int) -> None:
-        """Drop the version views and release the read pins of the AT()
+    def _release_statement_views(self, depth: int) -> None:
+        """Drop the statement views and release the read pins of the AT()
         reads taken on this thread above ``depth`` (recursion-safe: a
         nested statement releases only its own). Each view's plan is
         analyzed by then, so dropping it cannot change a running read."""
-        pins = self._tt_pins()
+        pins = self._statement_views()
         while len(pins) > depth:
             key, version, view = pins.pop()
             self.spark.catalog.dropTempView(view)
-            self.catalog.unpin_version_for_read(key, version)
+            if key is not None:
+                self.catalog.unpin_version_for_read(key, version)
 
     # ------------------------------------------------------------------
     # RESULT_SCAN (beyond reference: Snowflake result re-serve)
@@ -874,6 +876,7 @@ class Executor:
             out_df = out_df.selectExpr(*sel, *renames)
         view = "__match_recognize_" + uuid.uuid4().hex[:10]
         out_df.createOrReplaceTempView(view)
+        self._statement_views().append((None, None, view))
         return sql[:m.start()] + f"FROM {view}{alias}" + tail
 
     def query_df(self, sql: str, ctx: SessionContext | None = None,
@@ -910,7 +913,7 @@ class Executor:
         finally for that, which describeOnly never reaches (r6
         advice)."""
         ctx = ctx or SessionContext()
-        tt_depth = len(self._tt_pins())
+        views_depth = len(self._statement_views())
         prev_flag = getattr(self._tt_local, "describe_only", False)
         self._tt_local.describe_only = True
         try:
@@ -920,7 +923,7 @@ class Executor:
             return Result.from_dataframe(df.limit(0))
         finally:
             self._tt_local.describe_only = prev_flag
-            self._release_time_travel(tt_depth)
+            self._release_statement_views(views_depth)
 
     _GET_DDL_RE = re.compile(
         r"\bGET_DDL\s*\(\s*'(\w+)'\s*,\s*'([\w.\"$]+)'\s*\)", re.I)
@@ -1347,7 +1350,7 @@ class Executor:
             key = (tm.database, tm.schema, tm.name)
             view = f"{tm.physical}__at_v{version}_{uuid.uuid4().hex[:12]}"
             self.catalog.pin_version_for_read(key, version)
-            self._tt_pins().append((key, version, view))
+            self._statement_views().append((key, version, view))
             if not os.path.isdir(tm.version_path(version)):
                 raise errors.execution_error(_TT_UNAVAILABLE.format(tm.name))
             self.spark.read.schema(tm.spark_schema()).parquet(
@@ -2213,10 +2216,7 @@ class Executor:
             # mode of Snowflake's dynamic tables; incremental refresh is
             # the stream+task+MERGE triad this engine also supports).
             df = self.query_df(m.group(4), ctx)
-            from .functions.typemap import spark_to_snowflake_name
-
-            cols = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable)
-                    for f in df.schema.fields]
+            cols = column_defs(df.schema)
             self.catalog.create_table(m.group(2), cols, ctx.database, ctx.schema,
                                       or_replace=bool(m.group(1)), df=df)
             tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
@@ -2240,10 +2240,7 @@ class Executor:
             # immutable versioned table; Snowflake's background
             # auto-refresh becomes explicit ALTER … REFRESH here
             df = self.query_df(m.group(3), ctx)
-            from .functions.typemap import spark_to_snowflake_name
-
-            cols = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable)
-                    for f in df.schema.fields]
+            cols = column_defs(df.schema)
             self.catalog.create_table(m.group(2), cols, ctx.database, ctx.schema,
                                       or_replace=bool(m.group(1)), df=df)
             tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
@@ -2336,10 +2333,7 @@ class Executor:
         m = _CTAS_RE.match(sql)
         if m and " AS " in up:
             df = self.query_df(m.group(5), ctx)
-            from .functions.typemap import spark_to_snowflake_name
-
-            cols = [ColumnDef(f.name, spark_to_snowflake_name(f.dataType), f.nullable)
-                    for f in df.schema.fields]
+            cols = column_defs(df.schema)
             self.catalog.create_table(m.group(4), cols, ctx.database, ctx.schema,
                                       if_not_exists=bool(m.group(3)), or_replace=bool(m.group(1)), df=df)
             self._apply_table_kind(m.group("kind"), m.group(4), ctx)
@@ -2821,18 +2815,21 @@ class Executor:
                         f"({e}) AS __mi_{k}" for k, e in enumerate(exprs)])
                 col_list = ([c.strip().upper() for c in cols.split(",")]
                             if cols else None)
-                from pyspark.sql import Observation
-                from pyspark.sql import functions as F
+                if overwrite:
+                    from pyspark.sql import Observation
+                    from pyspark.sql import functions as F
 
-                # count rides the write (no extra action per target)
-                obs = Observation()
-                branch = branch.observe(obs, F.count(F.lit(1)).alias("n"))
+                    # count rides the write (no extra action per target)
+                    obs = Observation()
+                    branch = branch.observe(obs, F.count(F.lit(1)).alias("n"))
                 aligned = self._align_insert_columns(
                     tm, branch.toDF(*[c.name for c in tm.columns][:len(branch.columns)])
                     if col_list is None and values else branch, col_list)
-                self.catalog.write_table(
-                    tm, (lambda _live: aligned) if overwrite else aligned)
-                total += int(obs.get["n"])
+                if overwrite:
+                    self.catalog.write_table(tm, lambda _live: aligned)
+                    total += int(obs.get["n"])
+                else:
+                    total += self.catalog.write_table(tm, aligned)
             r = Result(columns=["number of rows inserted"], rows=[[total]])
             r.rows_inserted = total
             return r
@@ -2846,20 +2843,29 @@ class Executor:
         body = m.group(4)
         if body.upper().startswith("VALUES"):
             body = self._fill_values_defaults(body, tm, col_list)
+            if re.search(r"\(\s*SELECT\b", body, re.I):
+                # Spark allows no subquery in an inline table: one
+                # SELECT per row instead
+                body = " UNION ALL ".join(
+                    f"SELECT {row.strip()[1:-1]}"
+                    for row in Translator()._split_args(body[len("VALUES"):]))
         with self.reading_streams() as streams:
             src = self.query_df(body, ctx) if not body.upper().startswith("VALUES") else self.spark.sql(
                 self._dml_expr(self._rewrite_nextval_literal(body, ctx), ctx)
             )
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
+        if overwrite:
+            from pyspark.sql import Observation
+            from pyspark.sql import functions as F
 
-        # single-pass count: observe rows as they flow into the write
-        # (an INSERT..SELECT scans its source exactly once)
-        obs = Observation()
-        src = src.observe(obs, F.count(F.lit(1)).alias("n"))
-        src = self._align_insert_columns(tm, src, col_list)
-        self.catalog.write_table(tm, (lambda _live: src) if overwrite else src)
-        n = int(obs.get["n"])
+            # single-pass count: observe rows as they flow into the
+            # write (an INSERT..SELECT scans its source exactly once)
+            obs = Observation()
+            src = self._align_insert_columns(
+                tm, src.observe(obs, F.count(F.lit(1)).alias("n")), col_list)
+            self.catalog.write_table(tm, lambda _live: src)
+            n = int(obs.get["n"])
+        else:
+            n = self.catalog.write_table(tm, self._align_insert_columns(tm, src, col_list))
         for sm in streams:
             self.catalog.advance_stream(sm)
         r = Result(columns=["number of rows inserted"], rows=[[n]])

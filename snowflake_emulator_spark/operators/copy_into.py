@@ -292,15 +292,11 @@ class CopyProcessor:
         the rest, any other mode raises."""
         if not loads:
             return [], 0
-        from pyspark.sql import Observation
-
-        obs = Observation()
         rows = loads[0][1]
         for _rel, df in loads[1:]:
             rows = rows.union(df)
         try:
-            self.catalog.write_table(tm, rows.observe(obs, F.count(F.lit(1)).alias("n")))
-            return [rel for rel, _df in loads], int(obs.get["n"])
+            return [rel for rel, _df in loads], self.catalog.write_table(tm, rows)
         except Exception as e:
             failure = e
         good = []

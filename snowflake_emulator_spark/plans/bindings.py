@@ -123,18 +123,47 @@ def apply_bindings(sql: str, bindings: dict[str, dict] | None) -> str:
     return sql
 
 
-def bind_table(rows: list[list[str]]):
-    """A ``pyarrow.Table`` of bind rows (each a list of strings, one
-    per placeholder): string columns ``__b1..__bN``, read by a template
-    from ``bind_column_refs``."""
-    import pyarrow as pa
+def bind_table(files: list[bytes]):
+    """A ``pyarrow.Table`` of the bind rows in gosnowflake's bind CSV
+    files (``bind_uploader.go``): string columns ``__b1..__bN``, one
+    per placeholder, read by a template from ``bind_column_refs``. An
+    unquoted empty field is NULL and a quoted ``""`` the empty string,
+    so in a one-column file an empty line is a NULL row; a quoted value
+    may hold newlines. Empty files hold no rows; rows of unequal width
+    are rejected."""
+    import csv
+    import io
 
-    width = len(rows[0]) if rows else 0
-    if not width or any(len(r) != width for r in rows):
-        raise errors.invalid_parameter(
-            "bind rows must all have the same, nonzero number of values")
-    return pa.table({f"__b{k + 1}": pa.array(col, pa.string())
-                     for k, col in enumerate(zip(*rows))})
+    import pyarrow as pa
+    from pyarrow import csv as pacsv
+
+    ragged = errors.invalid_parameter(
+        "bind rows must all have the same, nonzero number of values")
+    tables = []
+    try:
+        for data in files:
+            if not data:
+                continue
+            text = io.StringIO(data.decode("utf-8"))
+            # an empty first line is one NULL value
+            width = max(1, len(next(csv.reader(text))))
+            names = [f"__b{k + 1}" for k in range(width)]
+            tables.append(pacsv.read_csv(
+                pa.py_buffer(data),
+                read_options=pacsv.ReadOptions(column_names=names),
+                parse_options=pacsv.ParseOptions(newlines_in_values=True,
+                                                 ignore_empty_lines=False),
+                convert_options=pacsv.ConvertOptions(
+                    column_types=dict.fromkeys(names, pa.string()),
+                    null_values=[""], strings_can_be_null=True,
+                    quoted_strings_can_be_null=False)))
+            # pyarrow reads an empty line as a row of NULLs whatever the
+            # width; in a wider file it is a ragged row
+            if width > 1 and b"\n\n" in data and not all(csv.reader(text)):
+                raise ragged
+        return pa.concat_tables(tables) if tables else None
+    except pa.ArrowInvalid as e:
+        raise ragged from e
 
 
 def bind_column_refs(sql: str, width: int) -> str:

@@ -2,8 +2,6 @@
 (<one tuple>)`` over staged CSV bind rows lands each row exactly as the
 same row bound inline with positional TEXT binds."""
 
-import csv
-import io
 import uuid
 
 import pytest
@@ -28,15 +26,28 @@ def ctx():
     return SessionContext()
 
 
+def _csv_field(v) -> str:
+    """One bind value as gosnowflake's ``escapeForCSV`` writes it
+    (``bind_uploader.go``): NULL is an empty field, the empty string a
+    quoted ``""``, and a value holding a quote, comma, newline or
+    backslash is quoted with its quotes doubled."""
+    if v is None:
+        return ""
+    if v == "":
+        return '""'
+    if any(c in v for c in '",\n\\'):
+        return '"' + v.replace('"', '""') + '"'
+    return v
+
+
 def _stage_binds(engine, ctx, tmp_path, rows) -> str:
     """CSV-encode ``rows`` as gosnowflake's bind uploader does and PUT
     them under a fresh prefix of the SYSTEM$BIND stage."""
     engine.execute("CREATE TEMPORARY STAGE IF NOT EXISTS SYSTEM$BIND", ctx)
-    buf = io.StringIO()
-    csv.writer(buf).writerows(rows)
     req = uuid.uuid4().hex
     local = tmp_path / f"{req}_0.csv"
-    local.write_text(buf.getvalue(), encoding="utf-8")
+    local.write_text("".join(",".join(map(_csv_field, r)) + "\n" for r in rows),
+                     encoding="utf-8")
     engine.execute(f"PUT file://{local} @SYSTEM$BIND/{req}", ctx)
     return f"SYSTEM$BIND/{req}"
 
@@ -124,3 +135,39 @@ def test_bulk_bind_template_with_default(engine, ctx, tmp_path):
     stage = _stage_binds(engine, ctx, tmp_path, [["1"], ["2"]])
     engine.execute_bind_stage("INSERT INTO DFLT VALUES (?, DEFAULT)", stage, ctx)
     assert _rows(engine, ctx, "DFLT") == [(1, "d"), (2, "d")]
+
+
+def test_bulk_bind_keeps_null_apart_from_the_empty_string(engine, ctx, tmp_path):
+    """An unquoted empty field is NULL, a quoted "" the empty string, on
+    the INSERT ... SELECT path and on the per-row path."""
+    rows = [["1", None, ""], ["2", "5", None]]
+    for t, insert in (("NB_BULK", "INSERT INTO NB_BULK (ID, V, S) VALUES (?, ?, ?)"),
+                      ("NB_ROW", "INSERT INTO NB_ROW VALUES (?, ?, ?, DEFAULT)")):
+        engine.execute(f"CREATE TABLE {t} (ID INT, V INT, S VARCHAR, D INT DEFAULT 0)", ctx)
+        engine.execute_bind_stage(insert, _stage_binds(engine, ctx, tmp_path, rows), ctx)
+        assert _rows(engine, ctx, t) == [(1, None, "", 0), (2, 5, None, 0)]
+
+
+def test_one_column_bulk_bind_keeps_null_rows(engine, ctx, tmp_path):
+    """In a one-column bind file a NULL row is an empty line, first in
+    the file or between two values."""
+    rows = [[None], ["a"], [None], ["b"], [""]]
+    for t, insert in (("NV_BULK", "INSERT INTO NV_BULK (V) VALUES (?)"),
+                      ("NV_ROW", "INSERT INTO NV_ROW VALUES (?, DEFAULT)")):
+        engine.execute(f"CREATE TABLE {t} (V VARCHAR, D INT DEFAULT 0)", ctx)
+        engine.execute_bind_stage(insert, _stage_binds(engine, ctx, tmp_path, rows), ctx)
+        got = engine.execute(
+            f"SELECT V, D FROM {t} ORDER BY V NULLS FIRST", ctx).rows
+        assert [tuple(r) for r in got] == [(None, 0), (None, 0), ("", 0),
+                                           ("a", 0), ("b", 0)]
+
+
+def test_bulk_bind_rejects_an_empty_line_among_wider_rows(engine, ctx, tmp_path):
+    """An empty line is a NULL row only in a one-column file."""
+    from snowflake_emulator_spark import errors
+
+    engine.execute("CREATE TABLE GAP (ID INTEGER, S VARCHAR)", ctx)
+    stage = _stage_binds(engine, ctx, tmp_path, [["1", "a"], [], ["2", "b"]])
+    with pytest.raises(errors.SnowflakeError):
+        engine.execute_bind_stage("INSERT INTO GAP VALUES (?, ?)", stage, ctx)
+    assert _rows(engine, ctx, "GAP") == []

@@ -55,7 +55,8 @@ def test_dml_consumes_only_the_streams_it_reads(engine, ctx):
     assert engine.execute("SELECT COUNT(*) FROM OTHER", ctx).rows == [[3]]
 
 
-_STATEMENT_VIEWS = ("__binds_", "__merge_", "__copy_xform_", "__at_v")
+_STATEMENT_VIEWS = ("__binds_", "__merge_", "__copy_xform_", "__at_v",
+                    "__match_recognize_")
 
 
 def _statement_views(spark) -> set[str]:
@@ -64,8 +65,8 @@ def _statement_views(spark) -> set[str]:
 
 
 def test_statements_drop_their_temp_views(engine, ctx, tmp_path):
-    """A bulk bind, a MERGE, a COPY transform and a time-travel read
-    leave no temp view in Spark's shared namespace."""
+    """A bulk bind, a MERGE, a COPY transform, a time-travel read and a
+    MATCH_RECOGNIZE leave no temp view in Spark's shared namespace."""
     before = _statement_views(engine.spark)
     engine.execute("CREATE TABLE TV_T (ID INTEGER, NAME VARCHAR)", ctx)
     engine.execute("INSERT INTO TV_T VALUES (1, 'a')", ctx)
@@ -88,4 +89,7 @@ def test_statements_drop_their_temp_views(engine, ctx, tmp_path):
                           ctx).rows == [[4]]
     assert engine.execute("SELECT ID, NAME FROM TV_T ORDER BY ID", ctx).rows == [
         [1, "z"], [2, "b"], [3, "c"], [4, "D"]]
+    assert len(engine.execute(
+        "SELECT * FROM TV_T MATCH_RECOGNIZE (PARTITION BY NAME ORDER BY ID "
+        "PATTERN (A) DEFINE A AS ID > 2)", ctx).rows) == 2
     assert _statement_views(engine.spark) - before == set()
