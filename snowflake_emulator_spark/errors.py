@@ -109,6 +109,9 @@ def from_spark(e: Exception) -> SnowflakeError:
         except Exception:
             cls = ""
     msg = str(e)
+    # Spark 4 messages may start with a newline: the first non-empty
+    # line is the one that names the error
+    first_line = next((ln for ln in msg.split("\n") if ln.strip()), "")[:200]
     if "TABLE_OR_VIEW_NOT_FOUND" in cls or "TABLE_OR_VIEW_NOT_FOUND" in msg:
         m = _re.search(r"`+([\w.]+)`+", msg)
         return object_not_found(m.group(1) if m else "unknown")
@@ -116,11 +119,11 @@ def from_spark(e: Exception) -> SnowflakeError:
         m = _re.search(r"`([\w.]+)`", msg)
         return invalid_identifier(m.group(1) if m else "unknown")
     if "PARSE_SYNTAX_ERROR" in cls or "PARSE_SYNTAX_ERROR" in msg:
-        return syntax_error(msg.split("\n")[0][:200])
+        return syntax_error(first_line)
     if "DIVIDE_BY_ZERO" in cls or "DIVIDE_BY_ZERO" in msg:
         return division_by_zero()
     if ("CAST_INVALID_INPUT" in cls or "CAST_INVALID_INPUT" in msg
             or "NUMERIC_VALUE_OUT_OF_RANGE" in cls
             or "NUMERIC_VALUE_OUT_OF_RANGE" in msg):
-        return numeric_value_error(msg.split("\n")[0][:200])
+        return numeric_value_error(first_line)
     return execution_error(msg)

@@ -255,22 +255,8 @@ _COMMENT_ON_COLUMN_RE = re.compile(
 )
 _ALTER_VIEW_RENAME_RE = re.compile(
     r"^\s*ALTER\s+VIEW\s+([\w.\"$]+)\s+RENAME\s+TO\s+([\w.\"$]+)\s*$", re.I)
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+([\w.\"$]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", re.I | re.S
-)
-_UPDATE_FROM_RE = re.compile(
-    r"^\s*UPDATE\s+([\w.\"$]+)(?:\s+(?:AS\s+)?(\w+))?\s+SET\s+(.*?)\s+FROM\s+([\w.\"$]+)"
-    r"(?:\s+(?:AS\s+)?(\w+))?\s+WHERE\s+(.*)$",
-    re.I | re.S,
-)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([\w.\"$]+)(?:\s+WHERE\s+(.*))?$", re.I | re.S
-)
-_DELETE_USING_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([\w.\"$]+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+([\w.\"$]+)"
-    r"(?:\s+(?:AS\s+)?(\w+))?\s+WHERE\s+(.*)$",
-    re.I | re.S,
-)
+_DELETE_ALL_RE = re.compile(r"^\s*DELETE\s+FROM\s+([\w.\"$]+)\s*$", re.I)
+_UPDATE_DELETE_RE = re.compile(r"^\s*(UPDATE|DELETE)\b", re.I)
 _USE_RE = re.compile(r"^\s*USE\s+(?:(DATABASE|SCHEMA|WAREHOUSE|ROLE)\s+)?([\w.\"$]+)\s*$", re.I)
 # negative lookahead: ADD PRIMARY KEY / UNIQUE / CONSTRAINT / FOREIGN
 # KEY must NOT parse as an add-column (the constraint keyword would
@@ -1490,7 +1476,7 @@ class Executor:
         if t == StatementType.MERGE:
             from .operators.merge_into import MergeProcessor
 
-            return MergeProcessor(self.spark, self.catalog, self).execute(sql, ctx)
+            return MergeProcessor(self).execute(self._dml_rewrites(sql, ctx), ctx)
         if t == StatementType.TRANSACTION:
             return self._transaction(sql)
         m = _EXECUTE_TASK_RE.match(sql)
@@ -1646,8 +1632,8 @@ class Executor:
         """Resolve the relation names of each top-level ``(SELECT ...)`` /
         ``(WITH ...)`` subquery of translated SQL text that is not run
         through ``_resolve_names`` as a whole: a DML condition or value,
-        a MERGE join, a policy projection. Each subquery binds its own
-        bare names."""
+        the SELECT of operators/merge_into.py, a policy projection. Each
+        subquery binds its own bare names."""
         from .plans.translator import match_paren
 
         out: list[str] = []
@@ -2677,32 +2663,34 @@ class Executor:
     # DML
     # ------------------------------------------------------------------
 
-    def _dml(self, sql: str, ctx: SessionContext) -> Result:
-        # DML bodies get the same session-variable / SQL-UDF expansion
-        # as queries: INSERT ... VALUES ($v), UPDATE t SET x = my_udf(y)
-        # are valid Snowflake (query_df applies these for SELECTs; the
-        # DML regexes below parse the already-substituted text)
+    def _dml_rewrites(self, sql: str, ctx: SessionContext) -> str:
+        """DML bodies get the same session-variable / SQL-UDF expansion
+        as queries: INSERT ... VALUES ($v), UPDATE t SET x = my_udf(y),
+        MERGE ... UPDATE SET x = $v are valid Snowflake (query_df applies
+        these for SELECTs; the DML parsers read the substituted text)."""
         sql = self._rewrite_context_fns(sql, ctx)
         sql = self._substitute_variables(sql, ctx)
-        sql = self._expand_udfs(sql, ctx)
+        return self._expand_udfs(sql, ctx)
+
+    def _dml(self, sql: str, ctx: SessionContext) -> Result:
+        sql = self._dml_rewrites(sql, ctx)
         m = _INSERT_MULTI_RE.match(sql)
         if m:
             return self._insert_multi(m, ctx)
         m = _INSERT_RE.match(sql)
         if m:
             return self._insert(m, ctx)
-        m = _UPDATE_FROM_RE.match(sql)
+        m = _DELETE_ALL_RE.match(sql)
         if m:
-            return self._update_from(m, ctx)
-        m = _UPDATE_RE.match(sql)
+            return self._delete_all(m, ctx)
+        m = _UPDATE_DELETE_RE.match(sql)
         if m:
-            return self._update(m, ctx)
-        m = _DELETE_USING_RE.match(sql)
-        if m:
-            return self._delete_using(m, ctx)
-        m = _DELETE_RE.match(sql)
-        if m:
-            return self._delete(m, ctx)
+            # one compiler for both (and MERGE): operators/merge_into.py
+            from .operators import merge_into
+
+            verb = m.group(1).upper()
+            parse = merge_into.parse_update if verb == "UPDATE" else merge_into.parse_delete
+            return merge_into.run_dml(self, parse(sql), ctx, (verb,))
         m = _TRUNCATE_RE.match(sql)
         if m:
             if m.group(1) and not self.catalog.has_table(
@@ -2910,149 +2898,18 @@ class Executor:
         finally:
             self._tt_local.streams = outer
 
-    def _update(self, m: re.Match, ctx: SessionContext) -> Result:
-        from pyspark.sql import functions as F
-
+    def _delete_all(self, m: re.Match, ctx: SessionContext) -> Result:
+        """DELETE FROM t without a condition: an empty next version."""
         tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        sets = self._parse_set_clauses(m.group(2), ctx)
-        cond = self._dml_expr(m.group(3), ctx) if m.group(3) else "TRUE"
-        from pyspark.sql import Observation
+        counted: list[int] = []
 
-        obs = Observation()
+        def emptied(df: DataFrame) -> None:
+            counted.append(df.count())
+            return None
 
-        def updated(df: DataFrame) -> DataFrame:
-            df = df.observe(
-                obs,
-                F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
-            )
-            return df.select(*[
-                F.when(F.expr(cond), F.expr(sets[c.name.upper()])).otherwise(F.col(c.name))
-                .cast(df.schema[c.name].dataType).alias(c.name)
-                if c.name.upper() in sets else F.col(c.name)
-                for c in tm.columns
-            ])
-
-        self.catalog.write_table(tm, updated)
-        n_updated = int(obs.get["n"] or 0)
-        r = Result(columns=["number of rows updated"], rows=[[n_updated]])
-        r.rows_updated = n_updated
-        return r
-
-    def _update_from(self, m: re.Match, ctx: SessionContext) -> Result:
-        """UPDATE t SET ... FROM src WHERE cond — the multi-table UPDATE
-        the reference emits in decomposed MERGE
-        (merge_processor.go:493-548). One join job, atomic version swap;
-        rows with multiple matches take an arbitrary single match
-        (Snowflake's nondeterministic-update semantics)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        t_alias = m.group(2) or m.group(1).split(".")[-1]
-        sets = self._parse_set_clauses(m.group(3), ctx)
-        src_tm = self.catalog.get_table(m.group(4), ctx.database, ctx.schema)
-        s_alias = m.group(5) or m.group(4).split(".")[-1]
-        cond = self._dml_expr(m.group(6), ctx)
-
-        source = self.catalog.read_table(src_tm).alias(s_alias)
-        set_exprs = [f"({expr}) AS __set_{col}" for col, expr in sets.items()]
-        from pyspark.sql import Observation
-
-        obs = Observation()
-
-        def updated(live: DataFrame) -> DataFrame:
-            target = live.withColumn("__rid", F.monotonically_increasing_id())
-            # DataFrame aliases, not temp views: the relations of one
-            # statement never enter Spark's shared temp-view namespace
-            joined = target.alias(t_alias).join(source, F.expr(cond)).selectExpr(
-                f"{t_alias}.__rid AS __rid", *set_exprs, "TRUE AS __matched")
-            w = Window.partitionBy("__rid").orderBy(F.lit(1))
-            one_match = joined.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
-            # explicit __matched flag (not coalesce) so SET x = NULL
-            # writes NULL instead of silently keeping the old value
-            merged = target.join(one_match, "__rid", "left").observe(
-                obs, F.sum(F.when(F.col("__matched"), 1).otherwise(0)).alias("n")
-            )
-            return merged.select(*[
-                F.when(F.coalesce(F.col("__matched"), F.lit(False)), F.col(f"__set_{c.name.upper()}"))
-                .otherwise(F.col(c.name))
-                .cast(tm.spark_schema()[c.name].dataType).alias(c.name)
-                if c.name.upper() in sets else F.col(c.name)
-                for c in tm.columns
-            ])
-
-        self.catalog.write_table(tm, updated)
-        n_updated = int(obs.get["n"] or 0)
-        r = Result(columns=["number of rows updated"], rows=[[n_updated]])
-        r.rows_updated = n_updated
-        return r
-
-    def _delete_using(self, m: re.Match, ctx: SessionContext) -> Result:
-        """DELETE FROM t USING src WHERE cond
-        (merge_processor.go:551-582 analog): keep = NOT EXISTS match."""
-        tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        t_alias = m.group(2) or m.group(1).split(".")[-1]
-        src_tm = self.catalog.get_table(m.group(3), ctx.database, ctx.schema)
-        s_alias = m.group(4) or m.group(3).split(".")[-1]
-        cond = self._dml_expr(m.group(5), ctx)
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        # single pass: observe target rows entering the anti-join and
-        # surviving rows flowing into the write; deleted = before - after
-        obs_before, obs_after = Observation(), Observation()
-        source = self.catalog.read_table(src_tm).alias(s_alias)
-
-        def kept(live: DataFrame) -> DataFrame:
-            return (live.observe(obs_before, F.count(F.lit(1)).alias("n")).alias(t_alias)
-                    .join(source, F.expr(cond), "left_anti")
-                    .observe(obs_after, F.count(F.lit(1)).alias("n")))
-
-        self.catalog.write_table(tm, kept)
-        n_deleted = int(obs_before.get["n"]) - int(obs_after.get["n"])
-        r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
-        r.rows_deleted = n_deleted
-        return r
-
-    def _parse_set_clauses(self, text: str, ctx: SessionContext) -> dict[str, str]:
-        parts = Translator()._split_args(text)
-        sets: dict[str, str] = {}
-        for p in parts:
-            col, expr = p.split("=", 1)
-            col = col.strip().split(".")[-1].strip('"').upper()  # strip alias qualifier
-            sets[col] = self._dml_expr(expr.strip(), ctx)
-        return sets
-
-    def _delete(self, m: re.Match, ctx: SessionContext) -> Result:
-        from pyspark.sql import functions as F
-
-        tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-        if m.group(2):
-            from pyspark.sql import Observation
-
-            cond = self._dml_expr(m.group(2), ctx)
-            obs = Observation()
-
-            def kept(df: DataFrame) -> DataFrame:
-                df = df.observe(
-                    obs,
-                    F.sum(F.when(F.coalesce(F.expr(cond), F.lit(False)), 1).otherwise(0)).alias("n"),
-                )
-                return df.filter(~F.coalesce(F.expr(cond), F.lit(False)))
-
-            self.catalog.write_table(tm, kept)
-            n_deleted = int(obs.get["n"] or 0)
-        else:
-            counted: list[int] = []
-
-            def emptied(df: DataFrame) -> None:
-                counted.append(df.count())
-                return None
-
-            self.catalog.write_table(tm, emptied)
-            n_deleted = counted[0]
-        r = Result(columns=["number of rows deleted"], rows=[[n_deleted]])
-        r.rows_deleted = n_deleted
+        self.catalog.write_table(tm, emptied)
+        r = Result(columns=["number of rows deleted"], rows=[[counted[0]]])
+        r.rows_deleted = counted[0]
         return r
 
     # ------------------------------------------------------------------

@@ -1,49 +1,54 @@
-"""MERGE INTO — upsert as one declarative Spark job.
+"""The one DML compiler: UPDATE, DELETE and MERGE as one SQL SELECT.
 
 Reference: `/root/reference/pkg/query/merge_processor.go` (parser
 24-272, execution 348-367). The reference first tries the engine's
-native MERGE and otherwise *decomposes* into sequential UPDATE / DELETE
-/ INSERT statements (493-631) — non-atomic, phase-ordered.
+native MERGE and otherwise *decomposes* it into sequential UPDATE /
+DELETE / INSERT statements (493-631) — non-atomic, phase-ordered.
 
-Spark-first redesign: we build the post-merge table as ONE DataFrame —
-a full-outer join of target and source with per-column CASE expressions
-implementing WHEN-clause first-match semantics — and atomically swap it
-in as a new table version. This is both atomic (the reference's
-decomposed mode is not, gosnowflake_test.go:427-530 documents the
-sequential semantics) and single-shuffle: at 100 TB it is a join +
-write, not three separate scans of the target.
+Here it goes the other way: every statement that changes rows in place
+is parsed into a ``MergeStatement`` and compiled by ``compile_dml`` into
+ONE Spark SQL ``SELECT`` over the live version — a CASE expression per
+column implementing WHEN-clause first-match semantics, plus an
+``__action`` per output row — which ``run_dml`` writes as the next
+table version in one job:
+
+* ``UPDATE t [AS a] SET … [FROM src [AS s]] [WHERE c]`` is one
+  ``WHEN MATCHED THEN UPDATE``; ``DELETE FROM t [AS a] [USING src [AS
+  s]] [WHERE c]`` is one ``WHEN MATCHED THEN DELETE``.
+* Without a source, "matched" is ``COALESCE(c, FALSE)``: no join and no
+  window, and ``c`` may hold IN / EXISTS subqueries.
+* With a source, the target joins it (LEFT, or FULL OUTER when a NOT
+  MATCHED clause can insert). A target row matched by N source rows
+  contributes exactly ONE output row: the first match by a
+  deterministic window order, actionable matches first. The dedup
+  window partitions matched rows by a per-target-row id and unmatched
+  source rows by a per-source-row id, so no single window partition can
+  absorb all inserts (skew-safe at scale).
 
 Counts (RowsInserted/Updated/Deleted, result.go:43-47) are collected
-via ``DataFrame.observe`` during the single write pass — the join runs
-exactly once (the r1 version re-ran it for a separate stats query).
-
-Nondeterministic-match semantics: a target row matched by N source rows
-contributes exactly ONE output row (first match by a deterministic
-window order), mirroring the reference's decomposed ``UPDATE ... FROM``
-which updates each target row once (merge_processor.go:493-548) —
-Snowflake's ERROR_ON_NONDETERMINISTIC_MERGE=false behavior. The dedup
-window partitions matched rows by a per-target-row id and unmatched
-source rows by a per-source-row id, so no single window partition can
-absorb all inserts (skew-safe at scale).
+via ``DataFrame.observe`` during the single write pass.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from .. import errors
-from ..catalog import Catalog
 from ..plans.translator import Translator
 from ..result import Result
 
-_MERGE_HEAD_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+([\w.\"$]+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+",
-    re.I,
-)
 _WHEN_SPLIT_RE = re.compile(r"\bWHEN\s+(NOT\s+)?MATCHED\b", re.I)
+# a relation of a DML: a name or a (subquery), with an optional alias
+_RELATION_RE = re.compile(r"\s*(\(.*\)|[\w.\"$]+)(?:\s+(?:AS\s+)?(\w+))?\s*", re.I | re.S)
+
+_COUNT_COLUMNS = {"INSERT": "number of rows inserted",
+                  "UPDATE": "number of rows updated",
+                  "DELETE": "number of rows deleted"}
 
 
 @dataclass
@@ -60,51 +65,64 @@ class WhenClause:
 class MergeStatement:
     target: str
     target_alias: str
-    source: str  # table name or (subquery)
-    source_alias: str
-    on_condition: str
+    source: str | None  # table name or (subquery); None: the target alone
+    source_alias: str | None
+    on_condition: str | None  # None: every row matches
     when_clauses: list[WhenClause] = field(default_factory=list)
 
 
+def _keyword(text: str, kw: str) -> int | None:
+    """Index of the first top-level (outside strings and parens)
+    occurrence of keyword ``kw`` in ``text``; the FROM of ``IS [NOT]
+    DISTINCT FROM`` is not one."""
+    pos = 0
+    while (at := Translator()._find_top_level_keyword(text[pos:], kw)) is not None:
+        at += pos
+        if not re.search(r"\bDISTINCT\s*$", text[:at], re.I):
+            return at
+        pos = at + len(kw)
+    return None
+
+
+def _relation(text: str, default_alias: str | None = None) -> tuple[str, str]:
+    """(name or (subquery), alias) of ``text``; the alias defaults to
+    the name's last part, or ``default_alias`` for a subquery."""
+    m = _RELATION_RE.fullmatch(text)
+    if not m:
+        raise errors.syntax_error(f"cannot parse relation: {text.strip()[:80]}")
+    name = m.group(1)
+    return name, m.group(2) or (default_alias if name.startswith("(") else name.split(".")[-1])
+
+
+def _set_clauses(text: str) -> dict[str, str]:
+    """``col = expr, …`` by upper-cased column name (alias qualifiers
+    dropped)."""
+    sets: dict[str, str] = {}
+    for part in Translator()._split_args(text):
+        if "=" not in part:
+            raise errors.syntax_error(f"cannot parse SET clause: {part.strip()[:60]}")
+        col, expr = part.split("=", 1)
+        sets[col.strip().split(".")[-1].strip('"').upper()] = expr.strip()
+    return sets
+
+
 def parse_merge(sql: str) -> MergeStatement:
-    """Regex/scanner parser mirroring the reference's state machine
+    """Scanner parser mirroring the reference's state machine
     (merge_processor.go:110-272), tolerant of subquery sources."""
     s = sql.strip().rstrip(";")
-    m = _MERGE_HEAD_RE.match(s)
-    if not m:
+    m = re.match(r"MERGE\s+INTO\s+", s, re.I)
+    using = _keyword(s, "USING") if m else None
+    if using is None:
         raise errors.syntax_error(f"cannot parse MERGE INTO: {s[:80]}")
-    target, target_alias = m.group(1), m.group(2)
-    rest = s[m.end():]
+    target, target_alias = _relation(s[m.end():using])
+    rest = s[using + len("USING"):]
+    on = _keyword(rest, "ON")
+    if on is None:
+        raise errors.syntax_error("MERGE missing ON condition")
+    source, source_alias = _relation(rest[:on], "SRC")
+    rest = rest[on + len("ON"):]
 
-    # source: either (subquery) [AS] alias  or  name [AS] alias
-    rest = rest.lstrip()
-    if rest.startswith("("):
-        depth = 0
-        for i, ch in enumerate(rest):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        source = rest[: i + 1]
-        rest = rest[i + 1 :].lstrip()
-    else:
-        sm = re.match(r"([\w.\"$]+)", rest)
-        source = sm.group(1)
-        rest = rest[sm.end():].lstrip()
-    am = re.match(r"(?:AS\s+)?(\w+)\s+ON\s+", rest, re.I)
-    if am and am.group(1).upper() != "ON":
-        source_alias = am.group(1)
-        rest = rest[am.end():]
-    else:
-        om = re.match(r"ON\s+", rest, re.I)
-        if not om:
-            raise errors.syntax_error("MERGE missing ON condition")
-        source_alias = None
-        rest = rest[om.end():]
-
-    # ON condition runs until the first top-level WHEN
+    # ON condition runs until the first WHEN [NOT] MATCHED
     wm = _WHEN_SPLIT_RE.search(rest)
     if not wm:
         raise errors.syntax_error("MERGE missing WHEN clauses")
@@ -130,12 +148,10 @@ def parse_merge(sql: str) -> MergeStatement:
         up = body.upper()
         if up.startswith("UPDATE"):
             setm = re.match(r"UPDATE\s+SET\s+(.*)$", body, re.I | re.S)
-            sets: dict[str, str] = {}
-            for part in Translator()._split_args(setm.group(1)):
-                col, expr = part.split("=", 1)
-                col = col.strip().split(".")[-1].strip('"').upper()
-                sets[col] = expr.strip()
-            clauses.append(WhenClause(is_matched, cond, "UPDATE", set_clauses=sets))
+            if not setm:
+                raise errors.syntax_error(f"cannot parse MERGE UPDATE: {body[:60]}")
+            clauses.append(WhenClause(is_matched, cond, "UPDATE",
+                                      set_clauses=_set_clauses(setm.group(1))))
         elif up.startswith("DELETE"):
             clauses.append(WhenClause(is_matched, cond, "DELETE"))
         elif up.startswith("INSERT"):
@@ -147,221 +163,205 @@ def parse_merge(sql: str) -> MergeStatement:
             clauses.append(WhenClause(is_matched, cond, "INSERT", insert_cols=cols, insert_vals=vals))
         else:
             raise errors.syntax_error(f"unknown MERGE action: {body[:40]}")
-    stmt = MergeStatement(
-        target=target,
-        target_alias=target_alias or target.split(".")[-1],
-        source=source,
-        source_alias=source_alias or (source if not source.startswith("(") else "SRC").split(".")[-1],
-        on_condition=on_condition,
-        when_clauses=clauses,
-    )
-    return stmt
+    return MergeStatement(target, target_alias, source, source_alias, on_condition, clauses)
+
+
+def parse_update(sql: str) -> MergeStatement:
+    """``UPDATE t [AS a] SET … [FROM src [AS s]] [WHERE c]`` as one
+    ``WHEN MATCHED THEN UPDATE``."""
+    s = sql.strip().rstrip(";")
+    m = re.match(r"UPDATE\s+", s, re.I)
+    set_at = _keyword(s, "SET") if m else None
+    if set_at is None:
+        raise errors.syntax_error(f"cannot parse UPDATE: {s[:80]}")
+    target, target_alias = _relation(s[m.end():set_at])
+    sets, source, cond = _split_tail(s[set_at + len("SET"):], "FROM")
+    return _matched_statement(target, target_alias, source, cond,
+                              WhenClause(True, None, "UPDATE", set_clauses=_set_clauses(sets)))
+
+
+def parse_delete(sql: str) -> MergeStatement:
+    """``DELETE FROM t [AS a] [USING src [AS s]] [WHERE c]`` as one
+    ``WHEN MATCHED THEN DELETE``."""
+    s = sql.strip().rstrip(";")
+    m = re.match(r"DELETE\s+FROM\s+", s, re.I)
+    if not m:
+        raise errors.syntax_error(f"cannot parse DELETE: {s[:80]}")
+    target, source, cond = _split_tail(s[m.end():], "USING")
+    return _matched_statement(*_relation(target), source, cond,
+                              WhenClause(True, None, "DELETE"))
+
+
+def _split_tail(text: str, source_kw: str) -> tuple[str, str | None, str | None]:
+    """``head [<source_kw> source] [WHERE cond]`` as (head, source,
+    cond)."""
+    where = _keyword(text, "WHERE")
+    cond = text[where + len("WHERE"):].strip() if where is not None else None
+    text = text[:where] if where is not None else text
+    at = _keyword(text, source_kw)
+    if at is None:
+        return text, None, cond
+    return text[:at], text[at + len(source_kw):], cond
+
+
+def _matched_statement(target: str, target_alias: str, source: str | None,
+                       cond: str | None, clause: WhenClause) -> MergeStatement:
+    source_alias = None
+    if source is not None:
+        source, source_alias = _relation(source, "SRC")
+    return MergeStatement(target, target_alias, source, source_alias, cond, [clause])
+
+
+def compile_dml(stmt: MergeStatement, columns: list[str], target_view: str,
+                source_view: str | None, expr) -> str:
+    """The Spark SQL SELECT of ``stmt``'s new table contents over
+    ``target_view`` (the live version, with a ``__tid`` row id when
+    there is a source) and ``source_view`` (with a ``__sid`` row id):
+    one column per name of ``columns``, then ``__action`` (UPDATE,
+    DELETE, INSERT, NONE for a match no clause takes, KEEP for an
+    unmatched target row, SKIP for an unmatched source row no clause
+    inserts) and ``__rn`` (1 for the row to write). ``expr`` translates
+    a Snowflake expression into Spark SQL."""
+    t, s = stmt.target_alias, stmt.source_alias
+    matched = [c for c in stmt.when_clauses if c.is_matched]
+    inserts = [c for c in stmt.when_clauses if not c.is_matched]
+
+    def first(clauses: list[WhenClause], value, otherwise: str) -> str:
+        """The value of the first clause whose condition holds."""
+        if not clauses:
+            return otherwise
+        return "CASE " + " ".join(
+            f"WHEN ({expr(c.condition) if c.condition else 'TRUE'}) THEN ({value(c)})"
+            for c in clauses) + f" ELSE {otherwise} END"
+
+    if source_view is None:
+        is_match = f"coalesce(({expr(stmt.on_condition)}), FALSE)" if stmt.on_condition else "TRUE"
+        relation = f"{target_view} AS {t}"
+    else:
+        is_match = f"{s}.__sid IS NOT NULL" + (f" AND {t}.__tid IS NOT NULL" if inserts else "")
+        join = "FULL OUTER" if inserts else "LEFT"
+        relation = (f"{target_view} AS {t} {join} JOIN {source_view} AS {s} "
+                    f"ON ({expr(stmt.on_condition) if stmt.on_condition else 'TRUE'})")
+
+    def per_row(on_match: str, on_target: str, on_source: str) -> str:
+        if not inserts:
+            return f"CASE WHEN {is_match} THEN {on_match} ELSE {on_target} END"
+        return (f"CASE WHEN {is_match} THEN {on_match} "
+                f"WHEN {t}.__tid IS NOT NULL THEN {on_target} ELSE {on_source} END")
+
+    keys = [n.upper() for n in columns]
+
+    def set_value(c: WhenClause, key: str, col: str) -> str:
+        return expr(c.set_clauses[key]) if key in c.set_clauses else col
+
+    def insert_value(c: WhenClause, key: str) -> str:
+        names = c.insert_cols or keys
+        return expr(c.insert_vals[names.index(key)]) if key in names else "NULL"
+
+    items = []
+    for name, key in zip(columns, keys):
+        quoted = "`" + name.replace("`", "``") + "`"
+        col = f"{t}.{quoted}"
+        updated = (first(matched, lambda c: set_value(c, key, col), col)
+                   if any(key in c.set_clauses for c in matched) else col)
+        inserted = first(inserts, lambda c: insert_value(c, key), "NULL")
+        items.append(f"{per_row(updated, col, inserted)} AS {quoted}")
+    match_action = first(matched, lambda c: f"'{c.action}'", "'NONE'")
+    items.append(per_row(match_action, "'KEEP'", first(inserts, lambda c: "'INSERT'", "'SKIP'"))
+                 + " AS __action")
+    rn = "1"
+    if source_view is not None:
+        # one row per target row (unmatched source rows: one each),
+        # the first actionable match first
+        rn = (f"ROW_NUMBER() OVER (PARTITION BY coalesce({t}.__tid, -1 - {s}.__sid) "
+              f"ORDER BY CASE WHEN {match_action} = 'NONE' THEN 1 ELSE 0 END, {s}.__sid)")
+    items.append(f"{rn} AS __rn")
+    return f"SELECT {', '.join(items)} FROM {relation}"
+
+
+def run_dml(executor, stmt: MergeStatement, ctx, actions: tuple[str, ...],
+            strict: bool = False) -> Result:
+    """Run ``stmt`` as one write job of the next version of its target
+    and return the counts of ``actions``. The source (a name or a
+    subquery) is read through ``query_df``, so it honors masking and row
+    access policies, and the streams the statement reads are consumed
+    once it commits. ``strict`` (ERROR_ON_NONDETERMINISTIC_MERGE) rejects
+    a target row matched by several actionable source rows; otherwise
+    the first match is applied once."""
+    catalog = executor.catalog
+    tm = catalog.get_table(stmt.target, ctx.database, ctx.schema)
+    views = executor._statement_views()
+    # per-statement view names: concurrent DML on other tables (per-
+    # table write locks allow it) must never replace them
+    suffix = uuid.uuid4().hex[:12]
+    target_view, source_view = f"__dml_target_{suffix}", None
+    with executor.reading_streams() as streams:
+        if stmt.source is not None:
+            source_view = f"__dml_source_{suffix}"
+            src = stmt.source[1:-1] if stmt.source.startswith("(") else f"SELECT * FROM {stmt.source}"
+            executor.query_df(src, ctx).withColumn(
+                "__sid", F.monotonically_increasing_id()).createOrReplaceTempView(source_view)
+            views.append((None, None, source_view))
+        sql = executor._resolve_subqueries(compile_dml(
+            stmt, [c.name for c in tm.columns], target_view, source_view,
+            executor.translator.translate_expr), ctx)
+
+    obs = Observation()
+    rn1 = F.col("__rn") == 1
+
+    def count(action: str, name: str):
+        return F.sum(F.when(rn1 & (F.col("__action") == action), 1).otherwise(0)).alias(name)
+
+    def changed(live: DataFrame) -> DataFrame:
+        # registered inside the table lock: the live version the
+        # statement rewrites is the one no concurrent write can replace
+        if source_view is not None:
+            live = live.withColumn("__tid", F.monotonically_increasing_id())
+        live.createOrReplaceTempView(target_view)
+        views.append((None, None, target_view))
+        # the duplicate-match probe rides the same Observation: __rn = 2
+        # with an actionable action means at least two UPDATE/DELETE
+        # matches landed on one target row (actionable matches sort
+        # first), so strict mode costs no extra job
+        return (executor.spark.sql(sql).observe(
+            obs, count("UPDATE", "upd"), count("DELETE", "del"), count("INSERT", "ins"),
+            F.sum(F.when((F.col("__rn") == 2) & F.col("__action").isin("UPDATE", "DELETE"), 1)
+                  .otherwise(0)).alias("dups"))
+            .filter("__rn = 1 AND __action NOT IN ('DELETE', 'SKIP')")
+            .drop("__action", "__rn"))
+
+    def deterministic() -> None:
+        # after the write job, still inside the lock: raising discards
+        # the new version unpublished
+        if int(obs.get["dups"] or 0):
+            raise errors.execution_error(
+                "Duplicate row detected during DML action: a target row "
+                "was matched by multiple source rows "
+                "(ERROR_ON_NONDETERMINISTIC_MERGE=TRUE)")
+
+    catalog.write_table(tm, changed, check=deterministic if strict else None)
+    for sm in streams:
+        catalog.advance_stream(sm)
+    stats = obs.get
+    counts = {"INSERT": int(stats["ins"] or 0), "UPDATE": int(stats["upd"] or 0),
+              "DELETE": int(stats["del"] or 0)}
+    r = Result(columns=[_COUNT_COLUMNS[a] for a in actions], rows=[[counts[a] for a in actions]])
+    r.rows_inserted, r.rows_updated, r.rows_deleted = (
+        counts["INSERT"], counts["UPDATE"], counts["DELETE"])
+    return r
 
 
 class MergeProcessor:
-    def __init__(self, spark: SparkSession, catalog: Catalog, executor):
-        self.spark = spark
-        self.catalog = catalog
+    """MERGE INTO: the entry point of MERGE statements only (UPDATE and
+    DELETE call ``run_dml`` directly)."""
+
+    def __init__(self, executor):
         self.executor = executor
-        self.tr = Translator()
 
     def execute(self, sql: str, ctx) -> Result:
-        stmt = parse_merge(sql)
-        tm = self.catalog.get_table(stmt.target, ctx.database, ctx.schema)
-        with self.executor.reading_streams() as streams:
-            if stmt.source.startswith("("):
-                source_df = self.executor.query_df(stmt.source[1:-1], ctx)
-            else:
-                try:
-                    stm = self.catalog.get_table(stmt.source, ctx.database, ctx.schema)
-                    source_df = self.catalog.read_table(stm)
-                except errors.SnowflakeError:
-                    # not a table: a stream or other resolvable relation
-                    source_df = self.executor.query_df(f"SELECT * FROM {stmt.source}", ctx)
-
-        t, s = stmt.target_alias, stmt.source_alias
-        # per-statement unique view names: fixed names let a concurrent
-        # MERGE on ANOTHER table replace the view between registration
-        # and plan analysis (per-table write locks deliberately allow
-        # cross-table parallelism) — silent cross-table corruption
-        import uuid as _uuid
-
-        suffix = _uuid.uuid4().hex[:12]
-        tv, sv = f"__merge_target_{suffix}", f"__merge_source_{suffix}"
-        from pyspark.sql import functions as F
-
-        (
-            source_df.withColumn("__s_exists", F.lit(True))
-            .withColumn("__sid", F.monotonically_increasing_id())
-            .createOrReplaceTempView(sv)
-        )
-
-        on = self.tr.translate_expr(stmt.on_condition)
-        matched = [c for c in stmt.when_clauses if c.is_matched]
-        not_matched = [c for c in stmt.when_clauses if not c.is_matched]
-
-        # -- per-column value expression -------------------------------
-        def matched_value(col: str) -> str:
-            branches = []
-            for c in matched:
-                cond = self.tr.translate_expr(c.condition) if c.condition else "TRUE"
-                if c.action == "UPDATE":
-                    val = self.tr.translate_expr(c.set_clauses.get(col, f"{t}.{col}"))
-                elif c.action == "DELETE":
-                    val = f"{t}.{col}"  # row filtered out; value irrelevant
-                branches.append(f"WHEN ({cond}) THEN ({val})")
-            if not branches:
-                return f"{t}.{col}"
-            return "CASE " + " ".join(branches) + f" ELSE {t}.{col} END"
-
-        def insert_value(col: str, tcols: list[str]) -> str:
-            branches = []
-            for c in not_matched:
-                cond = self.tr.translate_expr(c.condition) if c.condition else "TRUE"
-                cols = c.insert_cols or tcols
-                if col in cols:
-                    val = self.tr.translate_expr(c.insert_vals[cols.index(col)])
-                else:
-                    val = "NULL"
-                branches.append(f"WHEN ({cond}) THEN ({val})")
-            if not branches:
-                return "NULL"
-            return "CASE " + " ".join(branches) + " ELSE NULL END"
-
-        tcols = [c.name.upper() for c in tm.columns]
-        col_exprs = []
-        for c in tm.columns:
-            cu = c.name.upper()
-            expr = (
-                f"CASE WHEN coalesce({t}.__t_exists, FALSE) AND coalesce({s}.__s_exists, FALSE) "
-                f"THEN ({matched_value(cu)}) "
-                f"WHEN coalesce({t}.__t_exists, FALSE) THEN {t}.{cu} "
-                f"ELSE ({insert_value(cu, tcols)}) END AS {cu}"
-            )
-            col_exprs.append(expr)
-
-        # -- row-keep expression ---------------------------------------
-        matched_keep_branches = []
-        for c in matched:
-            cond = self.tr.translate_expr(c.condition) if c.condition else "TRUE"
-            keep = "FALSE" if c.action == "DELETE" else "TRUE"
-            matched_keep_branches.append(f"WHEN ({cond}) THEN {keep}")
-        matched_keep = (
-            "CASE " + " ".join(matched_keep_branches) + " ELSE TRUE END"
-            if matched_keep_branches
-            else "TRUE"
-        )
-        insert_keep_branches = []
-        for c in not_matched:
-            cond = self.tr.translate_expr(c.condition) if c.condition else "TRUE"
-            insert_keep_branches.append(f"WHEN ({cond}) THEN TRUE")
-        insert_keep = (
-            "CASE " + " ".join(insert_keep_branches) + " ELSE FALSE END"
-            if insert_keep_branches
-            else "FALSE"
-        )
-        keep = (
-            f"CASE WHEN coalesce({t}.__t_exists, FALSE) AND coalesce({s}.__s_exists, FALSE) THEN ({matched_keep}) "
-            f"WHEN coalesce({t}.__t_exists, FALSE) THEN TRUE "
-            f"ELSE ({insert_keep}) END"
-        )
-
-        # first-match action id per matched row (drives both dedup
-        # ordering — actionable matches win — and the observed counts)
-        action_branches = []
-        for c in matched:
-            cond = self.tr.translate_expr(c.condition) if c.condition else "TRUE"
-            action_branches.append(f"WHEN ({cond}) THEN '{c.action}'")
-        matched_action = (
-            "CASE " + " ".join(action_branches) + " ELSE 'NONE' END" if action_branches else "'NONE'"
-        )
-        tex = f"coalesce({t}.__t_exists, FALSE)"
-        sex = f"coalesce({s}.__s_exists, FALSE)"
-        action_expr = (
-            f"CASE WHEN {tex} AND {sex} THEN ({matched_action}) "
-            f"WHEN {tex} THEN 'KEEP' "
-            f"WHEN ({insert_keep}) THEN 'INSERT' ELSE 'SKIP' END"
-        )
-        # dedup key: matched/unmatched-target rows group by target row
-        # id; unmatched-source rows each form their own partition so
-        # every NOT MATCHED source row is preserved and no partition
-        # collects all inserts (skew-safe)
-        part_key = (
-            f"CASE WHEN {t}.__tid IS NOT NULL THEN concat('t', {t}.__tid) "
-            f"ELSE concat('s', {s}.__sid) END"
-        )
-        join_sql = (
-            f"SELECT {', '.join(col_exprs)}, ({keep}) AS __keep, "
-            f"({action_expr}) AS __action, "
-            f"ROW_NUMBER() OVER (PARTITION BY {part_key} "
-            f"ORDER BY CASE WHEN ({matched_action}) = 'NONE' THEN 1 ELSE 0 END, {s}.__sid) AS __rn "
-            f"FROM {tv} AS {t} FULL OUTER JOIN {sv} AS {s} ON ({on})"
-        )
-        join_sql = self.executor._resolve_subqueries(join_sql, ctx)
-        # ERROR_ON_NONDETERMINISTIC_MERGE (Snowflake defaults to the
-        # strict mode, and so does config.DEFAULT_SESSION_PARAMETERS): a
-        # target row matched by MULTIPLE actionable source rows raises
-        # instead of silently applying the first match. __rn = 2 with an
-        # actionable action means at least two UPDATE/DELETE matches
-        # landed on one target partition (the ORDER BY sorts actionable
-        # matches first). The duplicate probe rides the SAME Observation
-        # as the DML counters — attached below the __rn filter so every
-        # join row flows through it — so strict mode costs zero extra
-        # jobs; the check runs after the write job and before the
-        # version is published, inside the table lock, so on violation
-        # the new version is discarded and the statement raises,
-        # leaving the table unchanged.
+        # ERROR_ON_NONDETERMINISTIC_MERGE: Snowflake defaults to the
+        # strict mode, and so does config.DEFAULT_SESSION_PARAMETERS
         strict = str(getattr(ctx, "parameters", {}).get(
             "ERROR_ON_NONDETERMINISTIC_MERGE", "TRUE")).upper() == "TRUE"
-
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rn1 = F.col("__rn") == 1
-
-        def merged(target_df: DataFrame) -> DataFrame:
-            (
-                target_df.withColumn("__t_exists", F.lit(True))
-                .withColumn("__tid", F.monotonically_increasing_id())
-                .createOrReplaceTempView(tv)
-            )
-            observed = self.spark.sql(join_sql).observe(
-                obs,
-                F.sum(F.when(rn1 & (F.col("__action") == "UPDATE"), 1).otherwise(0)).alias("upd"),
-                F.sum(F.when(rn1 & (F.col("__action") == "DELETE"), 1).otherwise(0)).alias("del"),
-                F.sum(F.when(rn1 & (F.col("__action") == "INSERT"), 1).otherwise(0)).alias("ins"),
-                F.sum(
-                    F.when((F.col("__rn") == 2) & F.col("__action").isin("UPDATE", "DELETE"), 1)
-                    .otherwise(0)
-                ).alias("dups"),
-            )
-            return observed.filter("__rn = 1").filter("__keep").drop("__keep", "__action", "__rn")
-
-        def deterministic() -> None:
-            if strict and int(obs.get["dups"] or 0):
-                raise errors.execution_error(
-                    "Duplicate row detected during DML action: a target row "
-                    "was matched by multiple source rows "
-                    "(ERROR_ON_NONDETERMINISTIC_MERGE=TRUE)"
-                )
-
-        try:
-            self.catalog.write_table(tm, merged, check=deterministic)
-        finally:
-            for v in (tv, sv):
-                try:
-                    self.spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
-        stats = obs.get
-        n_upd = int(stats["upd"] or 0)
-        n_del = int(stats["del"] or 0)
-        n_ins = int(stats["ins"] or 0)
-        for sm in streams:
-            self.catalog.advance_stream(sm)
-        r = Result(
-            columns=["number of rows inserted", "number of rows updated", "number of rows deleted"],
-            rows=[[n_ins, n_upd, n_del]],
-        )
-        r.rows_inserted, r.rows_updated, r.rows_deleted = n_ins, n_upd, n_del
-        return r
+        return run_dml(self.executor, parse_merge(sql), ctx,
+                       ("INSERT", "UPDATE", "DELETE"), strict)

@@ -1293,9 +1293,17 @@ def run_merge_cases(engine, cases, tname: str = "fz_mrg_t",
     return failures
 
 
+DML_KINDS = ("upd_where", "upd_multi", "upd_case", "upd_all", "del_where",
+             "del_null", "upd_from", "del_using")
+# subquery conditions, target aliases and subquery sources
+DML_SUBQUERY_KINDS = ("upd_in", "del_not_in", "upd_exists", "del_not_exists",
+                      "upd_alias", "del_alias", "upd_from_sub", "del_using_sub")
+
+
 def generate_dml_cases(seed: int, count: int,
                        tname: str = "fz_dml_t",
-                       sname: str = "fz_dml_s") -> list[dict]:
+                       sname: str = "fz_dml_s",
+                       kinds: tuple[str, ...] = DML_KINDS) -> list[dict]:
     """Random UPDATE/DELETE (simple + FROM/USING) statements; the SAME
     statement text runs on the engine and on DuckDB natively, comparing
     affected-row counts and final table states."""
@@ -1308,9 +1316,7 @@ def generate_dml_cases(seed: int, count: int,
                                             rng.randint(4, 12)))
         c = rng.randint(1, 15)
         k = rng.randint(1, 9)
-        kind = rng.choice(["upd_where", "upd_multi", "upd_case",
-                           "upd_all", "del_where", "del_null",
-                           "upd_from", "del_using"])
+        kind = rng.choice(kinds)
         if kind == "upd_where":
             sql = f"UPDATE {tname} SET V = V + {k} WHERE V % 2 = 0"
         elif kind == "upd_multi":
@@ -1328,9 +1334,32 @@ def generate_dml_cases(seed: int, count: int,
         elif kind == "upd_from":
             sql = (f"UPDATE {tname} SET V = s.V + {k} FROM {sname} AS s "
                    f"WHERE {tname}.ID = s.ID AND s.V > {c}")
-        else:  # del_using
+        elif kind == "del_using":
             sql = (f"DELETE FROM {tname} USING {sname} AS s "
                    f"WHERE {tname}.ID = s.ID AND s.V >= {c}")
+        elif kind == "upd_in":
+            sql = (f"UPDATE {tname} SET V = V + {k} "
+                   f"WHERE ID IN (SELECT ID FROM {sname} WHERE V > {c})")
+        elif kind == "del_not_in":
+            # the subquery's V may be NULL: NOT IN is then never TRUE
+            sql = (f"DELETE FROM {tname} WHERE V NOT IN "
+                   f"(SELECT V FROM {sname} WHERE ID < {c + 20})")
+        elif kind == "upd_exists":
+            sql = (f"UPDATE {tname} AS a SET W = 'e' WHERE EXISTS "
+                   f"(SELECT 1 FROM {sname} WHERE {sname}.ID = a.ID AND {sname}.V > {c})")
+        elif kind == "del_not_exists":
+            sql = (f"DELETE FROM {tname} WHERE NOT EXISTS (SELECT 1 FROM {sname} "
+                   f"WHERE {sname}.ID = {tname}.ID)")
+        elif kind == "upd_alias":
+            sql = f"UPDATE {tname} AS a SET V = a.V - {k} WHERE a.V > {c}"
+        elif kind == "del_alias":
+            sql = f"DELETE FROM {tname} AS a WHERE a.W = 'b' OR a.V < {c}"
+        elif kind == "upd_from_sub":
+            sql = (f"UPDATE {tname} SET V = s.M FROM (SELECT ID, MAX(V) AS M FROM {sname} "
+                   f"GROUP BY ID) AS s WHERE {tname}.ID = s.ID")
+        else:  # del_using_sub
+            sql = (f"DELETE FROM {tname} AS a USING (SELECT ID FROM {sname} "
+                   f"WHERE V > {c}) AS s WHERE a.ID = s.ID")
         cases.append({"desc": f"dml[{kind}]", "target": target,
                       "source": source, "sql": sql})
     return cases

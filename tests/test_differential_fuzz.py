@@ -173,6 +173,23 @@ def test_differential_fuzz_update_delete(probes, tmp_path):
         f"{len(failures)} UPDATE/DELETE mismatches:\n" + "\n".join(failures[:10]))
 
 
+def test_differential_fuzz_update_delete_subquery_forms(probes, tmp_path):
+    """UPDATE/DELETE with IN / NOT IN / EXISTS / NOT EXISTS conditions,
+    target aliases and FROM/USING (subquery) sources, checked against
+    DuckDB running the same text."""
+    spark, con = probes
+    from snowflake_emulator_spark.engine import Engine
+
+    from difffuzz import DML_SUBQUERY_KINDS, generate_dml_cases, run_dml_cases
+
+    eng = Engine(spark, base_dir=str(tmp_path / "dml_sub_wh"))
+    cases = generate_dml_cases(SEED + 11, 21, kinds=DML_SUBQUERY_KINDS)
+    assert {c["desc"] for c in cases} == {f"dml[{k}]" for k in DML_SUBQUERY_KINDS}
+    failures = run_dml_cases(eng, cases)
+    assert not failures, (
+        f"{len(failures)} UPDATE/DELETE mismatches:\n" + "\n".join(failures[:10]))
+
+
 def test_differential_fuzz_mr_overlap(probes, tmp_path):
     """r10 (VERDICT r9 item 5): overlapping DEFINE predicates + SKIP TO
     NEXT ROW vs a byte-encoded character-class replay through Python's

@@ -3,6 +3,7 @@ and Spark temp views belong to the statement that made them."""
 
 import pytest
 
+from snowflake_emulator_spark import errors
 from snowflake_emulator_spark.executor import SessionContext
 
 
@@ -55,7 +56,7 @@ def test_dml_consumes_only_the_streams_it_reads(engine, ctx):
     assert engine.execute("SELECT COUNT(*) FROM OTHER", ctx).rows == [[3]]
 
 
-_STATEMENT_VIEWS = ("__binds_", "__merge_", "__copy_xform_", "__at_v",
+_STATEMENT_VIEWS = ("__binds_", "__merge_", "__dml_", "__copy_xform_", "__at_v",
                     "__match_recognize_")
 
 
@@ -65,8 +66,9 @@ def _statement_views(spark) -> set[str]:
 
 
 def test_statements_drop_their_temp_views(engine, ctx, tmp_path):
-    """A bulk bind, a MERGE, a COPY transform, a time-travel read and a
-    MATCH_RECOGNIZE leave no temp view in Spark's shared namespace."""
+    """A bulk bind, a MERGE, a COPY transform, a time-travel read, a
+    MATCH_RECOGNIZE, an UPDATE ... FROM, a DELETE and a failed MERGE
+    leave no temp view in Spark's shared namespace."""
     before = _statement_views(engine.spark)
     engine.execute("CREATE TABLE TV_T (ID INTEGER, NAME VARCHAR)", ctx)
     engine.execute("INSERT INTO TV_T VALUES (1, 'a')", ctx)
@@ -92,4 +94,12 @@ def test_statements_drop_their_temp_views(engine, ctx, tmp_path):
     assert len(engine.execute(
         "SELECT * FROM TV_T MATCH_RECOGNIZE (PARTITION BY NAME ORDER BY ID "
         "PATTERN (A) DEFINE A AS ID > 2)", ctx).rows) == 2
+    engine.execute("UPDATE TV_T SET NAME = s.NAME FROM (SELECT 2 AS ID, 'y' AS NAME) s "
+                   "WHERE TV_T.ID = s.ID", ctx)
+    engine.execute("DELETE FROM TV_T WHERE ID = 4", ctx)
+    with pytest.raises(errors.SnowflakeError, match="Duplicate row"):
+        engine.execute("MERGE INTO TV_T t USING (SELECT 1 AS ID UNION ALL SELECT 1) s "
+                       "ON t.ID = s.ID WHEN MATCHED THEN DELETE", ctx)
+    assert engine.execute("SELECT ID, NAME FROM TV_T ORDER BY ID", ctx).rows == [
+        [1, "z"], [2, "y"], [3, "c"]]
     assert _statement_views(engine.spark) - before == set()

@@ -208,6 +208,31 @@ def test_parse_merge_subquery_source_and_conditions():
     assert st.when_clauses[1].action == "UPDATE"
 
 
+def test_parse_update_and_delete_as_merge_statements():
+    from snowflake_emulator_spark.operators.merge_into import parse_delete, parse_update
+
+    st = parse_update(
+        "UPDATE t AS a SET a.x = CASE WHEN a.x IS DISTINCT FROM s.y THEN s.y END, w = 'v' "
+        "FROM (SELECT id, MAX(y) y FROM u WHERE y IS NOT DISTINCT FROM 1 GROUP BY id) s "
+        "WHERE a.id = s.id AND a.id IN (SELECT id FROM u)")
+    assert (st.target, st.target_alias, st.source_alias) == ("t", "a", "s")
+    assert st.source.startswith("(SELECT id") and st.source.endswith("GROUP BY id)")
+    assert st.on_condition == "a.id = s.id AND a.id IN (SELECT id FROM u)"
+    [clause] = st.when_clauses
+    assert (clause.is_matched, clause.action) == (True, "UPDATE")
+    assert clause.set_clauses == {
+        "X": "CASE WHEN a.x IS DISTINCT FROM s.y THEN s.y END", "W": "'v'"}
+
+    st = parse_update("UPDATE db.sch.t SET x = 1")
+    assert (st.target_alias, st.source, st.on_condition) == ("t", None, None)
+
+    st = parse_delete("DELETE FROM t USING u WHERE t.id = u.id")
+    assert (st.target_alias, st.source, st.source_alias) == ("t", "u", "u")
+    assert st.when_clauses[0].action == "DELETE"
+    st = parse_delete("DELETE FROM t a WHERE a.x IS DISTINCT FROM 2")
+    assert (st.target_alias, st.source, st.on_condition) == ("a", None, "a.x IS DISTINCT FROM 2")
+
+
 # ---- warehouse state machine (reference: pkg/warehouse/manager.go) ----
 
 def test_warehouse_lifecycle():
