@@ -19,9 +19,9 @@ Spark-first design decisions:
   semantics (restore version pointers) that the reference gets from
   DuckDB's ACID (`pkg/query/executor.go:399-426`) — see
   ``Engine.begin/commit/rollback``.
-* Each table version is registered as a Spark temp view under its
-  flattened physical name (``DB__SCHEMA__TABLE``); name resolution in
-  SQL happens by rewriting qualified names onto those views.
+* Each table version a statement reads is a Spark temp view named
+  ``__t<uid>_v<N>`` (``Catalog.register_view``); name resolution binds
+  a statement's table names to the views of the versions it pinned.
 * Column metadata (Snowflake type text, nullable, default, primary key)
   lives driver-side, mirroring the serialized coldefs of the reference
   (`pkg/metadata/repository.go:584-661`); Spark neither enforces PK nor
@@ -32,7 +32,6 @@ Spark-first design decisions:
 from __future__ import annotations
 
 import itertools
-import json
 import os
 import re
 import shutil
@@ -99,13 +98,9 @@ class TableMeta:
     version: int = 0
     location: str | None = None  # base dir holding v<N> subdirs
     created_on: float = field(default_factory=time.time)
-    # unique per TableMeta instance: lets caches distinguish a table
-    # that was dropped and re-created (same name, same version number)
+    # unique per TableMeta instance and kept through SWAP and RENAME:
+    # names the table's version views (Catalog.register_view)
     uid: int = field(default_factory=itertools.count().__next__)
-    # bumped when an external table's file list is refreshed without a
-    # new version: view caches keyed on (uid, version, data_epoch) then
-    # refresh their file listing
-    data_epoch: int = 0
     # versions kept for time travel beyond the live one (the
     # DATA_RETENTION_TIME_IN_DAYS analog in an emulator whose history
     # unit is the write, not the day); ALTER TABLE ... SET
@@ -118,10 +113,6 @@ class TableMeta:
     # p ON (cols)): policy name + the table columns bound to its args
     row_access_policy: str | None = None
     row_access_columns: list[str] = field(default_factory=list)
-
-    @property
-    def physical(self) -> str:
-        return physical_name(self.database, self.schema, self.name)
 
     def version_path(self, v: int | None = None) -> str:
         assert self.location
@@ -136,8 +127,8 @@ class StreamMeta:
     """CDC stream over a versioned table (Snowflake CREATE STREAM;
     beyond the reference). The stream's offset is a pinned version of
     the source table; reading the stream diffs the table's current
-    contents against that version. The offset version is exempt from
-    GC while the stream exists."""
+    contents against that version (``Executor._stream_ref``). The
+    offset version is exempt from GC while the stream exists."""
     database: str
     schema: str
     name: str
@@ -304,11 +295,12 @@ class Catalog:
         )
         os.makedirs(self.base_dir, exist_ok=True)
         self._lock = threading.RLock()
-        # per-table write locks: long-running write jobs must not
-        # serialize against writes to OTHER tables (N10 analog —
+        # per-table write locks, keyed by TableMeta.uid so a lock follows
+        # its table through SWAP and RENAME: long-running write jobs must
+        # not serialize against writes to OTHER tables (N10 analog —
         # reference serializes all writes behind one mutex,
         # connection/manager.go:39-43; per-table is the scalable design)
-        self._table_locks: dict[tuple[str, str, str], threading.Lock] = {}
+        self._table_locks: dict[int, threading.Lock] = {}
         # an append writes its new rows as at most one file per core
         # Spark runs on; a live version holds at most max_data_files
         self.append_files = spark.sparkContext.defaultParallelism
@@ -316,9 +308,12 @@ class Catalog:
         # versions referenced by open transaction snapshots (table key
         # -> set of protected version numbers): GC must not delete them
         self._protected: dict[tuple[str, str, str], set[int]] = {}
-        # time-travel read pins: key -> {version: [pin timestamps]}
-        # (see pin_version_for_read below)
-        self._tt_pins: dict[tuple[str, str, str], dict[int, list[float]]] = {}
+        # read pins: (table uid, version) -> pin timestamps (see
+        # pin_version_for_read below)
+        self._tt_pins: dict[tuple[int, int], list[float]] = {}
+        # registered version views: (table uid, version) -> the table's
+        # columns when the view was registered (see register_view)
+        self._views: dict[tuple[int, int], tuple] = {}
         # thread-local sink collecting table keys written by the
         # statement currently executing on this thread (set by
         # Engine.execute while a transaction is open, so ROLLBACK can
@@ -496,7 +491,7 @@ class Catalog:
                 os.rename(staging, tm.location)
                 self.tables[key] = tm
                 self._mark_dirty(tm)
-                self.register_view(tm)
+                self.mutation += 1
             return tm
         finally:
             shutil.rmtree(staging, ignore_errors=True)
@@ -568,11 +563,13 @@ class Catalog:
             return keys
 
     def _drop_table_key(self, key: tuple[str, str, str]) -> None:
+        """Drop table ``key`` and its version views (caller holds
+        self._lock); UNDROP registers views again on first read."""
         tm = self.tables.pop(key)
         self.temp_owners.pop(key, None)
         self.copy_load_history.pop(key, None)
         self.mutation += 1
-        self.spark.catalog.dropTempView(tm.physical)
+        self._drop_views(tm)
         if not tm.location or not os.path.exists(tm.location) or tm.kind == "EXTERNAL":
             return
         # UNDROP retention (Snowflake time-travel drop semantics, beyond
@@ -615,7 +612,10 @@ class Catalog:
                     pass  # keep serving from the graveyard dir
             tm.dropped_on = None
             self.tables[key] = tm
-            self.register_view(tm)
+            # a read racing the DROP may have registered a view over the
+            # graveyard path
+            self._drop_views(tm)
+            self.mutation += 1
             return tm
 
     def clone_table(self, src: TableMeta, dst_name: str, database: str | None = None,
@@ -657,13 +657,37 @@ class Catalog:
             os.makedirs(dst_dir, exist_ok=True)
             self._link_files(src_dir, dst_dir)
             self.tables[(db, sch, tbl)] = tm
-            self.register_view(tm)
+            self.mutation += 1
             return tm
 
-    def read_table(self, tm: TableMeta) -> DataFrame:
+    def rename_table(self, name: str, new_name: str, database: str | None = None,
+                     schema: str | None = None) -> None:
+        """ALTER TABLE ... RENAME TO: a metadata-only move of the
+        TableMeta, like ``swap_tables``; its versions, views, kind,
+        clustering key, comment, policies and streams go with it."""
+        old = self.resolve(name, database, schema)
+        new = self.resolve(new_name, database, schema)
+        with self._lock:
+            tm = self.tables.get(old)
+            if tm is None:
+                raise errors.object_not_found(".".join(old))
+            self._create_conflict(new, if_not_exists=False, or_replace=False)
+            del self.tables[old]
+            tm.database, tm.schema, tm.name = new
+            self.tables[new] = tm
+            for store in (self.temp_owners, self.copy_load_history):
+                if old in store:
+                    store[new] = store.pop(old)
+            for sm in self.streams.values():
+                if sm.src == old and sm.src_uid == tm.uid:
+                    sm.src = new
+            self.mutation += 1
+
+    def read_table(self, tm: TableMeta, version: int | None = None) -> DataFrame:
+        """Version ``version`` of ``tm`` (None: the live one)."""
         if tm.kind == "EXTERNAL":
             return getattr(tm, "read_df")
-        return self.spark.read.schema(tm.spark_schema()).parquet(tm.version_path())
+        return self.spark.read.schema(tm.spark_schema()).parquet(tm.version_path(version))
 
     def conform(self, tm: TableMeta, df: DataFrame) -> DataFrame:
         """Cast ``df`` column-by-column, positionally, to the table's
@@ -680,7 +704,7 @@ class Catalog:
                 f"({len(df.schema.fields)} vs {len(target)})")
         if len(df.schema.fields) != len(target):
             raise errors.execution_error(
-                f"column count mismatch for {tm.physical}: got {len(df.schema.fields)}, want {len(target)}"
+                f"column count mismatch for {tm.name}: got {len(df.schema.fields)}, want {len(target)}"
             )
         # renamed by position first: a source column may be named like
         # an expression, `(1.5 + 1)`, or twice, `1`, `1`
@@ -732,16 +756,20 @@ class Catalog:
                 shutil.copy2(s, d)
 
     def _publish(self, tm: TableMeta, version: int) -> None:
-        """Swap the live-version pointer to a fully written version dir."""
-        tm.version = version
+        """Swap the live-version pointer to a fully written version dir,
+        whose view is registered first."""
+        self.register_view(tm, version)
+        with self._lock:
+            tm.version = version
+            # after the swap, so a reader that sees the new count also
+            # reads the new version
+            self.mutation += 1
         self._mark_dirty(tm)
-        self.register_view(tm)
         self._gc_versions(tm)
 
     def _table_lock(self, tm: TableMeta) -> threading.Lock:
-        key = (tm.database, tm.schema, tm.name)
         with self._lock:
-            return self._table_locks.setdefault(key, threading.Lock())
+            return self._table_locks.setdefault(tm.uid, threading.Lock())
 
     # ---------------- masking policies ----------------
 
@@ -837,15 +865,16 @@ class Catalog:
         return pm
 
     def swap_tables(self, name_a: str, name_b: str,
-                    database: str | None = None, schema: str | None = None) -> tuple:
+                    database: str | None = None, schema: str | None = None) -> None:
         """ALTER TABLE a SWAP WITH b (Snowflake): atomically exchange the
         two tables' contents AND metadata. Pure pointer swap — the
         TableMeta objects (location, versions, columns, uid) trade
         catalog keys and identity fields; no data is read or rewritten,
-        exactly like Snowflake's metadata-only swap. DDL is
-        non-transactional (Snowflake: implicit commit), so an open
-        transaction's per-key snapshots intentionally track the KEY, not
-        the swapped object."""
+        exactly like Snowflake's metadata-only swap. Write locks and
+        version views belong to the uid, so both follow their table.
+        DDL is non-transactional (Snowflake: implicit commit), so an
+        open transaction's per-key snapshots intentionally track the
+        KEY, not the swapped object."""
         key_a = self.resolve(name_a, database, schema)
         key_b = self.resolve(name_b, database, schema)
         if key_a == key_b:
@@ -858,17 +887,10 @@ class Catalog:
                 raise errors.object_not_found(".".join(key_a))
             if tb is None:
                 raise errors.object_not_found(".".join(key_b))
-            # both write locks, key-ordered to dodge AB/BA deadlock
-            locks = sorted((key_a, key_b))
-            l0 = self._table_locks.setdefault(locks[0], threading.Lock())
-            l1 = self._table_locks.setdefault(locks[1], threading.Lock())
-        with l0, l1:
-            with self._lock:
-                self.tables[key_a], self.tables[key_b] = tb, ta
-                (tb.database, tb.schema, tb.name) = key_a
-                (ta.database, ta.schema, ta.name) = key_b
-                self.mutation += 1
-        return ta, tb
+            self.tables[key_a], self.tables[key_b] = tb, ta
+            (tb.database, tb.schema, tb.name) = key_a
+            (ta.database, ta.schema, ta.name) = key_b
+            self.mutation += 1
 
     def write_table(self, tm: TableMeta,
                     rows: DataFrame | Callable[[DataFrame], DataFrame | None],
@@ -997,64 +1019,83 @@ class Catalog:
     # the former COPY entry point; perfbench/tracing.py wraps it by name
     append_files_fast = write_table
 
-    def register_view(self, tm: TableMeta) -> None:
-        self.read_table(tm).createOrReplaceTempView(tm.physical)
-        # every data change routes through here. Bumped after the swap,
-        # so a reader that sees the new count also sees the new view
-        self.mutation += 1
-
-    def register_all_views(self) -> None:
-        for tm in self.tables.values():
-            self.register_view(tm)
-
-    def _gc_versions(self, tm: TableMeta, keep: int | None = None) -> None:
-        if keep is None:
-            keep = max(1, tm.retention_versions)
-        if not tm.location or not os.path.isdir(tm.location):
-            return
-        # never GC a protected version: an open transaction's snapshot
-        # must survive arbitrarily many writes so its ROLLBACK can
-        # restore it (see Engine transaction handling); likewise a
-        # stream's offset version must stay readable for the diff
-        key = (tm.database, tm.schema, tm.name)
-        protected = (self._protected.get(key, set()) | self._stream_pins(key)
-                     | self._read_pins(key))
-        versions = sorted(
-            (int(d[1:]) for d in os.listdir(tm.location) if re.fullmatch(r"v\d+", d)),
-        )
-        for v in versions[:-keep]:
-            if v != tm.version and v not in protected:
-                shutil.rmtree(os.path.join(tm.location, f"v{v}"), ignore_errors=True)
-
-    # ---------------- time-travel read pins ----------------
-    # an AT(...) read pins its resolved version for the duration of the
-    # executing statement so concurrent writers' GC cannot delete the
-    # version dir mid-read. Pins are counted (concurrent readers of the
-    # same version) and carry a timestamp: a pin older than
-    # _READ_PIN_TTL seconds is ignored by GC, so a leaked pin (a lazy
-    # DataFrame handed out by query_df and never consumed) degrades to
-    # the old behavior instead of pinning disk forever.
+    # ---------------- version views and read pins ----------------
+    # (docs/DESIGN.md, "Reads pin their version"). GC chooses and deletes
+    # versions under self._lock, the lock a pin is taken under, so no
+    # read pins a version GC has chosen. A pin older than _READ_PIN_TTL
+    # seconds is ignored by GC, so a leaked one cannot hold disk forever.
 
     _READ_PIN_TTL = 600.0
 
-    def pin_version_for_read(self, key: tuple[str, str, str], v: int) -> None:
-        with self._lock:
-            self._tt_pins.setdefault(key, {}).setdefault(v, []).append(time.time())
+    def register_view(self, tm: TableMeta, version: int | None = None) -> str:
+        """Register the temp view over version ``version`` of ``tm``
+        (None: the live one), read with the table's current columns,
+        and return its name."""
+        v = tm.version if version is None else version
+        columns = self._columns(tm)
+        name = f"__t{tm.uid}_v{v}"
+        self.read_table(tm, v).createOrReplaceTempView(name)
+        self._views[(tm.uid, v)] = columns
+        return name
 
-    def unpin_version_for_read(self, key: tuple[str, str, str], v: int) -> None:
+    def version_view(self, tm: TableMeta, version: int) -> str:
+        """The temp view over ``version`` of ``tm``, which the caller has
+        pinned: registered here on its first read, and again once the
+        table's columns have changed since it was."""
+        if self._views.get((tm.uid, version)) != self._columns(tm):
+            return self.register_view(tm, version)
+        return f"__t{tm.uid}_v{version}"
+
+    @staticmethod
+    def _columns(tm: TableMeta) -> tuple:
+        """What ``tm.spark_schema()`` is built from, cheap to compare."""
+        return tuple((c.name, c.sf_type, c.nullable) for c in tm.columns)
+
+    def _drop_views(self, tm: TableMeta, versions: list[int] | None = None) -> None:
+        """Drop the views of ``versions`` of ``tm`` (None: all of them)."""
+        if versions is None:
+            versions = [v for uid, v in list(self._views) if uid == tm.uid]
+        for v in versions:
+            if self._views.pop((tm.uid, v), None) is not None:
+                self.spark.catalog.dropTempView(f"__t{tm.uid}_v{v}")
+
+    def pin_version_for_read(self, tm: TableMeta, version: int | None = None) -> int:
+        """Pin ``version`` of ``tm`` (None: the live one) for a read and
+        return it. Raises when GC has already deleted the version."""
         with self._lock:
-            stamps = self._tt_pins.get(key, {}).get(v)
+            v = tm.version if version is None else version
+            if tm.location and not os.path.isdir(tm.version_path(v)):
+                raise errors.time_travel_unavailable(tm.name)
+            self._tt_pins.setdefault((tm.uid, v), []).append(time.time())
+            return v
+
+    def unpin_version_for_read(self, tm: TableMeta, version: int) -> None:
+        with self._lock:
+            stamps = self._tt_pins.get((tm.uid, version))
             if stamps:
                 stamps.pop()
                 if not stamps:
-                    self._tt_pins[key].pop(v, None)
-                    if not self._tt_pins[key]:
-                        self._tt_pins.pop(key, None)
+                    del self._tt_pins[(tm.uid, version)]
 
-    def _read_pins(self, key: tuple[str, str, str]) -> set[int]:
+    def _gc_versions(self, tm: TableMeta) -> None:
+        """Delete the version dirs of ``tm`` older than its newest
+        ``retention_versions``, with their views, except the live version
+        and those pinned by reads, stream offsets and open transactions."""
+        keep = max(1, tm.retention_versions)
+        if not tm.location or not os.path.isdir(tm.location):
+            return
+        key = (tm.database, tm.schema, tm.name)
         now = time.time()
-        return {v for v, stamps in self._tt_pins.get(key, {}).items()
-                if any(now - t < self._READ_PIN_TTL for t in stamps)}
+        with self._lock:
+            protected = (self._protected.get(key, set()) | self._stream_pins(key)
+                         | {v for (uid, v), stamps in self._tt_pins.items()
+                            if uid == tm.uid and now - stamps[-1] < self._READ_PIN_TTL})
+            versions = sorted(
+                int(d[1:]) for d in os.listdir(tm.location) if re.fullmatch(r"v\d+", d))
+            doomed = [v for v in versions[:-keep] if v != tm.version and v not in protected]
+            for v in doomed:
+                shutil.rmtree(os.path.join(tm.location, f"v{v}"), ignore_errors=True)
+            self._drop_views(tm, doomed)
 
     def set_protected_versions(self, protected: dict[tuple[str, str, str], set[int]] | None) -> None:
         """Versions pinned by open transaction snapshots (union over all
@@ -1116,7 +1157,7 @@ class Catalog:
                 tm = self.tables.get(key)
                 if tm is not None and tm.version != v and os.path.isdir(tm.version_path(v)):
                     tm.version = v
-                    self.register_view(tm)
+                    self.mutation += 1
 
     # ---------------- streams (CDC, beyond reference) ----------------
 
@@ -1186,11 +1227,6 @@ class Catalog:
             sm = self.streams.pop(key, None)
             if sm is None and not if_exists:
                 raise errors.object_not_found(".".join(key))
-            if sm is not None:
-                try:
-                    self.spark.catalog.dropTempView(sm.physical)
-                except Exception:
-                    pass
 
     def advance_stream(self, sm: StreamMeta) -> None:
         """Move the stream offset to the source table's current version
@@ -1204,36 +1240,6 @@ class Catalog:
         """Versions of table ``key`` pinned as stream offsets."""
         return {sm.offset_version for sm in self.streams.values()
                 if sm.src == key}
-
-    def stream_changes_df(self, sm: StreamMeta) -> DataFrame:
-        """Row-level delta of the source table since the stream offset:
-        multiset diff (exceptAll both ways — one hash shuffle per side,
-        fully distributed) with Snowflake's METADATA$ columns. ISUPDATE
-        is always false: without engine row tracking an UPDATE surfaces
-        as a DELETE + INSERT pair, which is the documented semantics of
-        this implementation (and exactly what consumers of the
-        reference's change model must handle anyway)."""
-        from pyspark.sql import functions as F
-        tm = self.tables.get(sm.src)
-        if tm is None or tm.uid != sm.src_uid:
-            raise errors.execution_error(
-                f"stream {sm.name} is stale: source table {'.'.join(sm.src)} "
-                "was dropped or replaced")
-        cur = self.read_table(tm)
-        old = self.spark.read.schema(tm.spark_schema()).parquet(
-            tm.version_path(sm.offset_version))
-        data_cols = [c.name for c in tm.columns]
-        def with_meta(df: DataFrame, action: str) -> DataFrame:
-            row_id = F.md5(F.concat_ws(
-                "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                          for c in data_cols]))
-            return (df.withColumn("METADATA$ACTION", F.lit(action))
-                      .withColumn("METADATA$ISUPDATE", F.lit(False))
-                      .withColumn("METADATA$ROW_ID", row_id))
-        inserts = with_meta(cur.exceptAll(old), "INSERT")
-        if sm.append_only:
-            return inserts
-        return inserts.unionByName(with_meta(old.exceptAll(cur), "DELETE"))
 
     # ---------------- views (beyond reference) ----------------
 
@@ -1453,9 +1459,11 @@ class Catalog:
             if (db, sch, tbl) in self.tables and not or_replace:
                 raise errors.object_exists(".".join((db, sch, tbl)))
             df = self._read_external(path, fmt.upper(), options)
+            if (db, sch, tbl) in self.tables:
+                self._drop_table_key((db, sch, tbl))
             cols = column_defs(df.schema)
-            tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", location=None)
-            df.createOrReplaceTempView(tm.physical)
+            tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", version=1,
+                           location=None)
             tm.read_df = df  # type: ignore[attr-defined]
             tm.external_path = path  # type: ignore[attr-defined]
             tm.external_format = fmt.upper()  # type: ignore[attr-defined]
@@ -1473,11 +1481,10 @@ class Catalog:
             df = self._read_external(tm.external_path, tm.external_format,
                                      tm.external_options)
             tm.columns = column_defs(df.schema)
-            df.createOrReplaceTempView(tm.physical)
             tm.read_df = df  # type: ignore[attr-defined]
-            # namespace-view caches key on (uid, version, data_epoch);
-            # the refresh changes data without a new version
-            tm.data_epoch += 1
+            # a new version: reads register a view over the new file list
+            self._drop_views(tm, [tm.version])
+            tm.version += 1
             self.mutation += 1
 
     def _read_external(self, path: str, fmt: str, options: dict) -> DataFrame:
@@ -1506,9 +1513,11 @@ class Catalog:
         with self._lock:
             db, sch, tbl = self.resolve(name, database, schema)
             df = self.spark.read.parquet(path)
+            if (db, sch, tbl) in self.tables:
+                self._drop_table_key((db, sch, tbl))
             cols = column_defs(df.schema)
-            tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", location=None)
-            df.createOrReplaceTempView(tm.physical)
+            tm = TableMeta(db, sch, tbl, columns=cols, kind="EXTERNAL", version=1,
+                           location=None)
             tm.read_df = df  # type: ignore[attr-defined]
             self.tables[(db, sch, tbl)] = tm
             return tm
@@ -1526,13 +1535,3 @@ class Catalog:
             }
             for c in tm.columns
         ]
-
-    def export_meta(self) -> str:
-        return json.dumps(
-            {
-                "databases": list(self.databases),
-                "schemas": [list(k) for k in self.schemas],
-                "tables": {"|".join(k): [c.__dict__ for c in tm.columns] for k, tm in self.tables.items()},
-            },
-            indent=2,
-        )

@@ -418,7 +418,8 @@ class Engine:
         # references substitute as $var inside later statements
         m = _SET_VAR_RE.match(s)
         if m and not re.match(r"SET\s+SESSION\s", up):
-            val = self.executor.query_df(f"SELECT {m.group(2)}", ctx).collect()[0][0]
+            with self.executor._statement_scope():  # pins held through collect
+                val = self.executor.query_df(f"SELECT {m.group(2)}", ctx).collect()[0][0]
             self._session_vars(ctx)[m.group(1).upper()] = val
             return Result.status("Statement executed successfully.")
         m = _UNSET_VAR_RE.match(s)

@@ -76,6 +76,15 @@ def execution_error(msg: str) -> SnowflakeError:
     return SnowflakeError("100037", f"SQL execution error: {msg}", "P0000")
 
 
+def time_travel_unavailable(table: str, detail: str = "") -> SnowflakeError:
+    """The requested version or instant is outside retention, or GC
+    deleted the version before the read could pin it."""
+    return execution_error(
+        f"Time travel data is not available for table {table}. The requested "
+        "time is either beyond the allowed time travel period or before the "
+        "object creation time." + detail)
+
+
 def statement_not_found(handle: str) -> SnowflakeError:
     return SnowflakeError("390144", f"Statement handle {handle} not found", "02000")
 
@@ -102,7 +111,7 @@ def from_spark(e: Exception) -> SnowflakeError:
     import re as _re
 
     cls = ""
-    get_cls = getattr(e, "getErrorClass", None)
+    get_cls = getattr(e, "getCondition", None)
     if callable(get_cls):
         try:
             cls = get_cls() or ""

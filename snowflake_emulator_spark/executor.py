@@ -70,13 +70,8 @@ def _result_scan_view_name(qid: str) -> str:
     return "__result_scan_" + re.sub(r"\W", "_", qid.lower())
 
 
-# Snowflake's time-travel error shape (error 002003-adjacent wording):
-# raised when the requested version/timestamp falls outside retention
-# or the version dir was GC'd before the read could pin it
-_TT_UNAVAILABLE = ("Time travel data is not available for table {}. "
-                   "The requested time is either beyond the allowed time "
-                   "travel period or before the object creation time.")
-
+# query-history entries kept in memory and reloaded from the log
+HISTORY_CAP = 1000
 
 _LAST_QID_RE = re.compile(r"\bLAST_QUERY_ID\s*\(\s*(-?\d+)?\s*\)", re.I)
 
@@ -363,9 +358,8 @@ class Executor:
         self.spark = spark
         self.catalog = catalog
         self.translator = Translator()
-        # per-thread stack of the temp views (and AT() read pins) of
-        # the statement currently executing on this thread; released in
-        # execute()'s finally (recursion-safe via depth snapshots)
+        # per-thread stack of the read pins and temp views of the
+        # statement running on this thread (_statement_scope)
         self._tt_local = threading.local()
         # query-history log (reference persists to its metadata store,
         # pkg/metadata/repository.go:1213-1378). Persisted as an
@@ -373,14 +367,12 @@ class Executor:
         # analog; a Spark table write per statement would add a full
         # write job to every query, which no engine does for history —
         # and reloaded on engine start so SHOW QUERY HISTORY survives
-        # restarts.
+        # restarts. Memory holds the newest HISTORY_CAP entries, as the
+        # reload does.
         self.history: list[dict] = []
         self._history_lock = threading.Lock()
         self._history_path = os.path.join(catalog.base_dir, "_metadata", "query_history.jsonl")
         self._load_history()
-        # stream views registered: view name -> (offset_version, src uid,
-        # src version, src data_epoch) at registration
-        self._stream_view_cache: dict[str, tuple[int, int, int, int]] = {}
         # views currently being planned (cycle guard) — PER THREAD:
         # a shared set made two concurrent first queries of the same
         # view spuriously raise 'cyclic view reference'
@@ -419,10 +411,12 @@ class Executor:
         qid = query_id or new_query_id()
         entry = {"sql": sql, "status": "RUNNING", "start": started, "rows": 0,
                  "error": None, "query_id": qid}
-        self.history.append(entry)
-        views_depth = len(self._statement_views())
+        with self._history_lock:
+            self.history.append(entry)
+            del self.history[:-HISTORY_CAP]
         try:
-            res = self._dispatch(sql, ctx, bindings)
+            with self._statement_scope():
+                res = self._dispatch(sql, ctx, bindings)
             entry["status"] = "SUCCESS"
             entry["rows"] = res.row_count or res.rows_inserted + res.rows_updated + res.rows_deleted
             res.query_id = qid
@@ -438,34 +432,41 @@ class Executor:
             entry["error"] = str(e)
             raise errors.from_spark(e) from e
         finally:
-            self._release_statement_views(views_depth)
             # precise end instant (float seconds) for AT(STATEMENT =>)
             # resolution; "ms" stays the history-display duration
             entry["end"] = time.time()
             entry["ms"] = int((entry["end"] - started) * 1000)
             self._persist_history(entry)
 
-    def _statement_views(self) -> list[tuple[tuple[str, str, str] | None, int | None, str]]:
-        """This thread's statement-scoped temp views: (table key, pinned
-        version, view over the version) for each AT() read taken by
-        ``_resolve_time_travel``, and (None, None, view) for each
-        MATCH_RECOGNIZE output (``_rewrite_match_recognize``)."""
+    def _statement_views(self) -> list[tuple]:
+        """This thread's stack of what the running statement holds until
+        it ends: (table, version, None) for each version a read pinned
+        (``_pinned_view``), and (None, None, view) for each temp view it
+        registered (MATCH_RECOGNIZE output, DML sources and targets)."""
         pins = getattr(self._tt_local, "pins", None)
         if pins is None:
             pins = self._tt_local.pins = []
         return pins
 
-    def _release_statement_views(self, depth: int) -> None:
-        """Drop the statement views and release the read pins of the AT()
-        reads taken on this thread above ``depth`` (recursion-safe: a
-        nested statement releases only its own). Each view's plan is
-        analyzed by then, so dropping it cannot change a running read."""
-        pins = self._statement_views()
-        while len(pins) > depth:
-            key, version, view = pins.pop()
-            self.spark.catalog.dropTempView(view)
-            if key is not None:
-                self.catalog.unpin_version_for_read(key, version)
+    @contextlib.contextmanager
+    def _statement_scope(self):
+        """Run the block as one statement: release the read pins and
+        temp views it takes on this thread when it ends (a nested scope
+        releases only its own). Each view's plan is analyzed by then, so
+        dropping it cannot change a running read."""
+        stack = self._statement_views()
+        depth, outer = len(stack), getattr(self._tt_local, "in_statement", False)
+        self._tt_local.in_statement = True
+        try:
+            yield
+        finally:
+            self._tt_local.in_statement = outer
+            while len(stack) > depth:
+                tm, version, view = stack.pop()
+                if view is not None:
+                    self.spark.catalog.dropTempView(view)
+                else:
+                    self.catalog.unpin_version_for_read(tm, version)
 
     # ------------------------------------------------------------------
     # RESULT_SCAN (beyond reference: Snowflake result re-serve)
@@ -579,7 +580,7 @@ class Executor:
             with open(self._history_path, encoding="utf-8") as f:
                 # keep the reload bounded: SHOW QUERY HISTORY serves the
                 # most recent 100 entries
-                lines = f.readlines()[-1000:]
+                lines = f.readlines()[-HISTORY_CAP:]
             self.history = [json.loads(ln) for ln in lines if ln.strip()]
         except FileNotFoundError:
             pass
@@ -867,9 +868,15 @@ class Executor:
 
     def query_df(self, sql: str, ctx: SessionContext | None = None,
                  bindings: dict | None = None) -> DataFrame:
-        """Translate + resolve a SELECT and return the (lazy) DataFrame."""
+        """Translate + resolve a SELECT and return the (lazy) DataFrame.
+        Outside a statement it is its own, whose pins end once the plan
+        is analyzed (docs/DESIGN.md, "Reads pin their version")."""
         ctx = ctx or SessionContext()
-        return self.spark.sql(self._query_sql(bindmod.apply_bindings(sql, bindings), ctx))
+        sql = bindmod.apply_bindings(sql, bindings)
+        if getattr(self._tt_local, "in_statement", False):
+            return self.spark.sql(self._query_sql(sql, ctx))
+        with self._statement_scope():
+            return self.spark.sql(self._query_sql(sql, ctx))
 
     def _query_sql(self, sql: str, ctx: SessionContext) -> str:
         """The Spark SQL text of a Snowflake SELECT: rewritten,
@@ -894,22 +901,19 @@ class Executor:
         """Schema-only preparation (REST describeOnly) with NO side
         effects: seq.NEXTVAL does not reserve a sequence block (the
         rewrite substitutes a schema-identical zero-based expression),
-        and AT() time-travel read pins taken while resolving the plan
-        are released HERE — query_df alone relies on execute()'s
-        finally for that, which describeOnly never reaches (r6
-        advice)."""
+        and the read pins taken while resolving the plan are released
+        when it returns (r6 advice)."""
         ctx = ctx or SessionContext()
-        views_depth = len(self._statement_views())
         prev_flag = getattr(self._tt_local, "describe_only", False)
         self._tt_local.describe_only = True
         try:
-            df = self.query_df(sql, ctx, bindings)
-            # materialize the schema (and the empty rowset) while the
-            # pins still hold the version dirs alive
-            return Result.from_dataframe(df.limit(0))
+            with self._statement_scope():
+                df = self.query_df(sql, ctx, bindings)
+                # materialize the schema (and the empty rowset) while the
+                # pins still hold the version dirs alive
+                return Result.from_dataframe(df.limit(0))
         finally:
             self._tt_local.describe_only = prev_flag
-            self._release_statement_views(views_depth)
 
     _GET_DDL_RE = re.compile(
         r"\bGET_DDL\s*\(\s*'(\w+)'\s*,\s*'([\w.\"$]+)'\s*\)", re.I)
@@ -1302,9 +1306,10 @@ class Executor:
     def _resolve_time_travel(self, sql: str, ctx: SessionContext,
                              ctes: dict[str, str]) -> str:
         """Rewrite ``FROM t AT|BEFORE(VERSION => n | OFFSET => -secs |
-        TIMESTAMP => 'ts' | STATEMENT => 'qid')`` onto a temp view over
-        the matching immutable version dir (bound in ``ctes`` through the
-        table's CURRENT policies when it is governed: Snowflake evaluates
+        TIMESTAMP => 'ts' | STATEMENT => 'qid')`` onto the pinned view
+        of the matching immutable version (``_pinned_view``; bound in
+        ``ctes`` through the table's CURRENT policies when it is
+        governed: Snowflake evaluates
         policies with the querying identity at query time, even against
         historical data). AT picks the newest version
         whose write time is <= the target instant; BEFORE (r11) is
@@ -1325,23 +1330,7 @@ class Executor:
                 return m.group(0)  # not a catalog table: leave untouched
             version = self._pick_version(tm, kind, value,
                                          before=(mode == "BEFORE"))
-            # pin the resolved version so a concurrent writer's GC
-            # cannot delete the dir mid-read; released at the end of
-            # the executing statement (execute()'s finally). Pin FIRST,
-            # then re-check the dir: if GC won the race the check
-            # fails and we raise the Snowflake-shaped error instead of
-            # reading a half-deleted version. The version's temp view
-            # belongs to the statement (unique name) and is dropped with
-            # the pin.
-            key = (tm.database, tm.schema, tm.name)
-            view = f"{tm.physical}__at_v{version}_{uuid.uuid4().hex[:12]}"
-            self.catalog.pin_version_for_read(key, version)
-            self._statement_views().append((key, version, view))
-            if not os.path.isdir(tm.version_path(version)):
-                raise errors.execution_error(_TT_UNAVAILABLE.format(tm.name))
-            self.spark.read.schema(tm.spark_schema()).parquet(
-                tm.version_path(version)).createOrReplaceTempView(view)
-            return self._governed_ref(tm, view, ctx, ctes)
+            return self._governed_ref(tm, self._pinned_view(tm, version), ctx, ctes)
 
         return self._AT_RE.sub(repl, sql)
 
@@ -1353,22 +1342,19 @@ class Executor:
             if re.fullmatch(r"v\d+", d)
         )
         if not versions:
-            raise errors.object_not_found(tm.physical)
+            raise errors.object_not_found(".".join((tm.database, tm.schema, tm.name)))
         if kind == "VERSION":
             v = int(value.strip().strip("'\""))
             if before:
                 # BEFORE(VERSION => n): newest retained version < n
                 prior = [x for x in versions if x < v]
                 if not prior:
-                    raise errors.execution_error(
-                        _TT_UNAVAILABLE.format(tm.name)
-                        + f" (no version before v{v}; retained: {versions})")
+                    raise errors.time_travel_unavailable(
+                        tm.name, f" (no version before v{v}; retained: {versions})")
                 return prior[-1]
             if v not in versions:
-                raise errors.execution_error(
-                    _TT_UNAVAILABLE.format(tm.name)
-                    + f" (version {v} requested; retained: {versions})"
-                )
+                raise errors.time_travel_unavailable(
+                    tm.name, f" (version {v} requested; retained: {versions})")
             return v
         if kind == "OFFSET":
             target = time.time() + float(value)  # value is negative seconds
@@ -1377,7 +1363,7 @@ class Executor:
             # END for AT (its changes included), its START for BEFORE
             # (its changes excluded; Snowflake semantics)
             qid = value.strip().strip("'\"")
-            entry = next((e for e in reversed(self.history)
+            entry = next((e for e in reversed(list(self.history))
                           if e.get("query_id") == qid), None)
             if entry is None:
                 raise errors.execution_error(
@@ -1417,10 +1403,8 @@ class Executor:
                 if os.path.getmtime(os.path.join(tm.location, f"v{v}")) <= cmp_target
             ]
         if not eligible:
-            raise errors.execution_error(
-                _TT_UNAVAILABLE.format(tm.name)
-                + f" (earliest retained version is v{versions[0]})"
-            )
+            raise errors.time_travel_unavailable(
+                tm.name, f" (earliest retained version is v{versions[0]})")
         return eligible[-1]
 
     # ------------------------------------------------------------------
@@ -1684,13 +1668,13 @@ class Executor:
     def _relation_ref(self, key: tuple[str, str, str], ctx: SessionContext,
                       ctes: dict[str, str]) -> str | None:
         """What the table, stream or view ``key`` resolves to inside a
-        statement, or None when ``key`` names none of them: the shared
-        temp view of its current contents, or a name bound in ``ctes``
-        when the read can depend on the reader (views, governed tables
-        and streams)."""
+        statement, or None when ``key`` names none of them: the view of
+        the table version the statement pinned (``_pinned_view``), or a
+        name bound in ``ctes`` when the read can depend on the reader
+        (views, governed tables and streams)."""
         tm = self.catalog.tables.get(key)
         if tm is not None:
-            return self._governed_ref(tm, tm.physical, ctx, ctes)
+            return self._governed_ref(tm, self._pinned_view(tm), ctx, ctes)
         sm = self.catalog.streams.get(key)
         if sm is not None:
             return self._stream_ref(sm, ctx, ctes)
@@ -1701,6 +1685,15 @@ class Executor:
             ctes[vm.physical] = self._view_sql(vm, ctx)
             return vm.physical
         return None
+
+    def _pinned_view(self, tm, version: int | None = None) -> str:
+        """The temp view of ``version`` of ``tm`` (None: the live one),
+        pinned until the statement ends so that GC cannot delete its
+        files under the read: how every table read, live, AT/BEFORE or
+        stream, binds its version."""
+        v = self.catalog.pin_version_for_read(tm, version)
+        self._statement_views().append((tm, v, None))
+        return self.catalog.version_view(tm, v)
 
     def _views_in_progress(self) -> set:
         s = getattr(self._views_in_progress_tl, "s", None)
@@ -1868,22 +1861,33 @@ class Executor:
         finally:
             self._views_in_progress().discard(key)
 
-    # the METADATA$ columns Catalog.stream_changes_df adds to a diff
+    # the METADATA$ columns of a stream's diff (_stream_ref)
     _STREAM_META_COLS = ("METADATA$ACTION", "METADATA$ISUPDATE", "METADATA$ROW_ID")
 
     def _stream_ref(self, sm, ctx: SessionContext, ctes: dict[str, str]) -> str:
-        """Name a stream is read under. Its change diff is one shared
-        temp view, cached on (offset, source identity/version) so an
-        unchanged stream costs zero Spark calls; masking / row access
-        policies on the SOURCE table apply to the diff per statement,
-        like Snowflake (METADATA$ columns pass through)."""
+        """Name a stream is read under: the multiset diff (EXCEPT ALL
+        both ways) of its source's pinned live and offset versions with
+        Snowflake's METADATA$ columns, bound in ``ctes`` as
+        ``sm.physical``. ISUPDATE is always false: without row tracking
+        an UPDATE is a DELETE + INSERT pair. The SOURCE table's policies
+        apply to the diff, like Snowflake."""
         tm = self.catalog.tables.get(sm.src)
-        if tm is None:
-            raise errors.execution_error(f"stream {sm.name} is stale")
-        state = (sm.offset_version, tm.uid, tm.version, tm.data_epoch)
-        if self._stream_view_cache.get(sm.physical) != state:
-            self.catalog.stream_changes_df(sm).createOrReplaceTempView(sm.physical)
-            self._stream_view_cache[sm.physical] = state
+        if tm is None or tm.uid != sm.src_uid:
+            raise errors.execution_error(
+                f"stream {sm.name} is stale: source table {'.'.join(sm.src)} "
+                "was dropped or replaced")
+        cur, old = self._pinned_view(tm), self._pinned_view(tm, sm.offset_version)
+        row_id = "md5(concat_ws('\\u001F', {}))".format(", ".join(
+            f"coalesce(CAST(`{c.name.replace('`', '``')}` AS STRING), '\\u0000')"
+            for c in tm.columns))
+
+        def changes(new: str, gone: str, action: str) -> str:
+            return (f"SELECT *, '{action}' AS `METADATA$ACTION`, FALSE AS `METADATA$ISUPDATE`, "
+                    f"{row_id} AS `METADATA$ROW_ID` "
+                    f"FROM (SELECT * FROM {new} EXCEPT ALL SELECT * FROM {gone})")
+
+        ctes[sm.physical] = changes(cur, old, "INSERT") + (
+            "" if sm.append_only else " UNION ALL " + changes(old, cur, "DELETE"))
         return self._governed_ref(tm, sm.physical, ctx, ctes, self._STREAM_META_COLS)
 
     # ------------------------------------------------------------------
@@ -2307,14 +2311,7 @@ class Executor:
             return Result.status(f"Stream {m.group(3).upper()} successfully created.")
         m = _DROP_STREAM_RE.match(sql)
         if m:
-            sm = None
-            try:
-                sm = self.catalog.get_stream(m.group(2), ctx.database, ctx.schema)
-            except errors.SnowflakeError:
-                pass
             self.catalog.drop_stream(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            if sm is not None:  # the catalog dropped its temp view
-                self._stream_view_cache.pop(sm.physical, None)
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CTAS_RE.match(sql)
         if m and " AS " in up:
@@ -2541,22 +2538,14 @@ class Executor:
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_RENAME_RE.match(sql)
         if m:
-            tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-            df = self.catalog.read_table(tm)
-            self.catalog.create_table(m.group(2), tm.columns, ctx.database, ctx.schema, df=df)
-            self.catalog.drop_table(m.group(1), ctx.database, ctx.schema)
+            self.catalog.rename_table(m.group(1), m.group(2), ctx.database, ctx.schema)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_SWAP_RE.match(sql)
         if m:
             if m.group(1) and not self.catalog.has_table(
                     m.group(2), ctx.database, ctx.schema):
                 return Result.status("Statement executed successfully.")
-            ta, tb = self.catalog.swap_tables(
-                m.group(2), m.group(3), ctx.database, ctx.schema)
-            # re-register both temp views: each physical name now serves
-            # the OTHER table's current version
-            self.catalog.register_view(ta)
-            self.catalog.register_view(tb)
+            self.catalog.swap_tables(m.group(2), m.group(3), ctx.database, ctx.schema)
             return Result.status("Statement executed successfully.")
         mm_ = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.\"$]+)\s+(?:ALTER|MODIFY)\s*\((.*)\)\s*$",

@@ -7,8 +7,8 @@ are uppercased (`/root/reference/pkg/query/table_naming.go:24-27`), the
 (`/root/reference/pkg/query/table_naming.go:23-40`), and the default
 namespace is ``TEST_DB.PUBLIC``.
 
-In our Spark engine, a fully-qualified table materializes as the Spark
-temp-view / catalog name ``DB__SCHEMA__TABLE`` (Spark identifiers cannot
+In our Spark engine, a statement binds a view's or stream's reading
+under the flattened name ``DB__SCHEMA__NAME`` (Spark identifiers cannot
 contain dots without backticks; a double-underscore separator keeps the
 flattening reversible).
 """
@@ -66,7 +66,7 @@ def _split_dotted(name: str) -> list[str]:
 
 
 def physical_name(db: str, schema: str, table: str) -> str:
-    """Flattened single-level physical name used for Spark views/tables."""
+    """Flattened single-level name a statement binds a view or stream under."""
     return f"{normalize_ident(db)}{SEP}{normalize_ident(schema)}{SEP}{normalize_ident(table)}"
 
 

@@ -895,16 +895,14 @@ def test_time_travel_read_pin_blocks_gc(engine):
     engine.execute("INSERT INTO tt_pin VALUES (1)", ctx)
     engine.execute("ALTER TABLE tt_pin SET DATA_RETENTION_VERSIONS = 1", ctx)
     tm = engine.catalog.get_table("tt_pin", ctx.database, ctx.schema)
-    key = (tm.database, tm.schema, tm.name)
-    pinned_v = tm.version
-    engine.catalog.pin_version_for_read(key, pinned_v)
+    pinned_v = engine.catalog.pin_version_for_read(tm)
     try:
         for i in range(4):
             engine.execute(f"UPDATE tt_pin SET id = {i + 10}", ctx)
         assert os.path.isdir(tm.version_path(pinned_v)), (
             "GC deleted a version pinned by an in-flight AT() read")
     finally:
-        engine.catalog.unpin_version_for_read(key, pinned_v)
+        engine.catalog.unpin_version_for_read(tm, pinned_v)
     engine.execute("UPDATE tt_pin SET id = 99", ctx)
     assert not os.path.isdir(tm.version_path(pinned_v)), (
         "unpinned version should be GC'd on the next write")

@@ -128,9 +128,9 @@ def test_query_cache_respects_session_variables(engine):
 def test_query_cache_safe_across_transaction_rollback(engine):
     """The stale-cache hazard scenario: SELECT (cached) -> BEGIN ->
     INSERT -> SELECT (cached with in-tx data) -> ROLLBACK -> SELECT.
-    The rollback's restore_versions re-registers views (bumping the
-    mutation counter), so the post-rollback SELECT must re-execute and
-    see the restored data, not the in-tx cached rows."""
+    The rollback's restore_versions bumps the mutation counter, so the
+    post-rollback SELECT must re-execute and see the restored data,
+    not the in-tx cached rows."""
     from snowflake_emulator_spark.sessions import SessionContext
 
     ctx = SessionContext()
