@@ -1084,18 +1084,29 @@ class Catalog:
         keep = max(1, tm.retention_versions)
         if not tm.location or not os.path.isdir(tm.location):
             return
+        with self._lock:
+            self._delete_versions(
+                tm, [v for v in self.versions(tm)[:-keep] if v != tm.version])
+
+    @staticmethod
+    def versions(tm: TableMeta) -> list[int]:
+        """The version numbers of ``tm`` on disk, ascending."""
+        return sorted(int(d[1:]) for d in os.listdir(tm.location or "")
+                      if re.fullmatch(r"v\d+", d))
+
+    def _delete_versions(self, tm: TableMeta, versions: list[int]) -> None:
+        """Delete the dirs and views of ``versions`` of ``tm``, except
+        those pinned by reads, stream offsets and open transactions
+        (caller holds ``self._lock``)."""
         key = (tm.database, tm.schema, tm.name)
         now = time.time()
-        with self._lock:
-            protected = (self._protected.get(key, set()) | self._stream_pins(key)
-                         | {v for (uid, v), stamps in self._tt_pins.items()
-                            if uid == tm.uid and now - stamps[-1] < self._READ_PIN_TTL})
-            versions = sorted(
-                int(d[1:]) for d in os.listdir(tm.location) if re.fullmatch(r"v\d+", d))
-            doomed = [v for v in versions[:-keep] if v != tm.version and v not in protected]
-            for v in doomed:
-                shutil.rmtree(os.path.join(tm.location, f"v{v}"), ignore_errors=True)
-            self._drop_views(tm, doomed)
+        protected = (self._protected.get(key, set()) | self._stream_pins(key)
+                     | {v for (uid, v), stamps in self._tt_pins.items()
+                        if uid == tm.uid and now - stamps[-1] < self._READ_PIN_TTL})
+        doomed = [v for v in versions if v not in protected]
+        for v in doomed:
+            shutil.rmtree(os.path.join(tm.location, f"v{v}"), ignore_errors=True)
+        self._drop_views(tm, doomed)
 
     def set_protected_versions(self, protected: dict[tuple[str, str, str], set[int]] | None) -> None:
         """Versions pinned by open transaction snapshots (union over all
@@ -1151,13 +1162,26 @@ class Catalog:
 
     def restore_versions(self, snap: dict[tuple[str, str, str], int]) -> None:
         """Best-effort rollback: restore version pointers for tables that
-        still exist and whose snapshotted version dir is still on disk."""
-        with self._lock:
-            for key, v in snap.items():
+        still exist and whose snapshotted version dir is still on disk,
+        and delete the versions rolled back past (the next write clears
+        a pinned one), so time travel cannot read them.
+
+        Takes each table's write lock before ``self._lock``, in the order
+        ``write_table`` and ``_publish`` take them, so no write is
+        building a version from the dirs it deletes."""
+        for key, v in snap.items():
+            with self._lock:
                 tm = self.tables.get(key)
-                if tm is not None and tm.version != v and os.path.isdir(tm.version_path(v)):
+            if tm is None:
+                continue
+            with self._table_lock(tm), self._lock:
+                live = tm.version
+                if (self.tables.get(key) is tm and live != v
+                        and os.path.isdir(tm.version_path(v))):
                     tm.version = v
                     self.mutation += 1
+                    self._delete_versions(
+                        tm, [x for x in self.versions(tm) if v < x <= live])
 
     # ---------------- streams (CDC, beyond reference) ----------------
 
@@ -1178,14 +1202,6 @@ class Catalog:
                             append_only=append_only, comment=comment)
             self.streams[key] = sm
             return sm
-
-    def get_stream(self, name: str, database: str | None = None,
-                   schema: str | None = None) -> StreamMeta:
-        key = self.resolve(name, database, schema)
-        sm = self.streams.get(key)
-        if sm is None:
-            raise errors.object_not_found(".".join(key))
-        return sm
 
     def create_task(self, name: str, sql_text: str, database: str | None = None,
                     schema: str | None = None, schedule: str | None = None,

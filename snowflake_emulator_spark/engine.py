@@ -1,28 +1,23 @@
 """Engine facade: the one object a client (or the HTTP server) talks to.
 
 Wires SparkSession + Catalog + Executor + managers, and implements the
-statement surface the reference exposes through its executor routing
-(`/root/reference/pkg/query/executor.go:299-426`): queries, DDL, DML,
-COPY, MERGE, transactions, stage/file-format/warehouse DDL.
+statement surface the reference routes in its executor
+(`pkg/query/executor.go:299-426`), plus session variables and
+parameters. ``Engine.execute`` is the one entry for a statement and the
+one place that opens its record in the statement store
+(``statements.py``), engine-level statements included.
 
-Transactions: BEGIN snapshots every table's version pointer; ROLLBACK
-restores the pointers (version dirs are immutable, so this is a real
-rollback for table data); COMMIT discards the snapshot. This gives the
-emulator-grade ACID the reference inherits from DuckDB
-(`executor.go:399-426`) without requiring a transactional table format.
-
-Transaction state is PER SESSION (the reference gets this from
-per-connection DuckDB transactions): each session's BEGIN owns its own
-snapshot, writes made inside the transaction are tracked per session
-(thread-local capture during statement execution), and ROLLBACK
-restores only tables that session itself wrote — committed writes from
-other sessions in the interim are never reverted. Snapshot versions of
-every open transaction are pinned against GC and against COPY's
-in-place fast-append.
+Transactions are per session, as the reference's per-connection DuckDB
+transactions are (`executor.go:399-426`). BEGIN snapshots every table's
+version pointer and pins those versions against GC; the session's
+writes are captured per thread while its statements run; ROLLBACK
+restores only the tables it wrote and deletes the versions rolled back
+past, so other sessions' commits survive. COMMIT drops the snapshot.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import threading
 
@@ -34,6 +29,7 @@ from .executor import Executor, SessionContext
 from .result import ColumnMetadata, Result
 from .session_factory import build_spark, ensure_engine_confs
 from .sources.stage import StageManager
+from .statements import StatementStore
 from .warehouse import WarehouseManager
 
 _CREATE_STAGE_RE = re.compile(
@@ -161,13 +157,15 @@ _INSERT_VALUES_RE = re.compile(
 
 
 class Engine:
-    # rows per bulk-bind INSERT statement (execute_bind_stage)
+    # rows per bulk-bind INSERT statement (_run_bind_stage)
     BIND_BATCH_ROWS = 1000
 
     def __init__(self, spark: SparkSession | None = None, base_dir: str | None = None):
         self.spark = ensure_engine_confs(spark) if spark is not None else build_spark()
         self.catalog = Catalog(self.spark, base_dir=base_dir)
-        self.executor = Executor(self.spark, self.catalog)
+        self.statements = StatementStore(self.spark, os.path.join(
+            self.catalog.base_dir, "_metadata", "query_history.jsonl"))
+        self.executor = Executor(self.spark, self.catalog, self.statements)
         self.stages = StageManager(self.catalog)
         self.warehouses = WarehouseManager()
         # open transactions keyed by owner id: id(Session) for HTTP
@@ -184,20 +182,16 @@ class Engine:
 
     # ------------------------------------------------------------------
 
-    def execute_bind_stage(self, sql: str, bind_stage: str,
-                           ctx: SessionContext | None = None,
-                           query_id: str | None = None) -> Result:
+    def _run_bind_stage(self, sql: str, bind_stage: str, ctx: SessionContext) -> Result:
         """gosnowflake bulk array binds (bind_uploader.go): above the
         client-side threshold the driver CSV-uploads the bind rows to a
-        stage and sends ``bindStage: "STAGE_NAME/prefix"`` instead of
-        inline bindings. Each CSV row is one execution of the statement
-        with positional TEXT binds. ``INSERT INTO t [(cols)] VALUES
-        (<one tuple>)`` runs as an INSERT ... SELECT over the bind rows
-        (``_insert_bind_rows``); any other statement runs once per
-        row. A NULL bind value (``bind_table``) binds NULL."""
+        stage and sends ``bindStage: "STAGE_NAME/prefix"``. Each CSV row
+        is one execution of the statement with positional TEXT binds:
+        ``INSERT INTO t [(cols)] VALUES (<one tuple>)`` runs as an
+        INSERT ... SELECT over them (``_insert_bind_rows``), any other
+        statement once per row. A NULL bind value binds NULL."""
         from .plans.bindings import bind_table
 
-        ctx = ctx or SessionContext()
         path = bind_stage.strip().lstrip("@")
         name, _, prefix = path.partition("/")
         stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
@@ -216,8 +210,7 @@ class Engine:
             # DEFAULT is filled in per VALUES row (Executor._insert)
             if (close == len(s) - 1
                     and not re.search(r"\bDEFAULT\b", tuple_, re.I)):
-                return self._insert_bind_rows(m.group(1), tuple_, table, ctx,
-                                              query_id)
+                return self._insert_bind_rows(m.group(1), tuple_, table, ctx)
         # general statement: one execution per bind row (bounded)
         if table.num_rows > 10_000:
             raise errors.invalid_parameter(
@@ -227,11 +220,11 @@ class Engine:
         for row in zip(*(c.to_pylist() for c in table.columns)):
             binds = {str(j + 1): {"type": "TEXT", "value": v}
                      for j, v in enumerate(row)}
-            res = self.execute(s, ctx, binds, query_id=query_id)
+            res = self._run(s, ctx, binds)
         return res
 
     def _insert_bind_rows(self, head: str, tuple_: str, table,
-                          ctx: SessionContext, query_id: str | None) -> Result:
+                          ctx: SessionContext) -> Result:
         """Run ``<head> VALUES (<tuple_>)`` once per bind row, as
         ``<head> SELECT <tuple_> FROM <bind relation>`` once per batch of
         ``BIND_BATCH_ROWS`` rows. The bind relation is a one-partition
@@ -253,7 +246,7 @@ class Engine:
             (self.spark.createDataFrame(table.slice(i, self.BIND_BATCH_ROWS))
              .coalesce(1).createOrReplaceTempView(view))
             try:
-                res = self.execute(select + view, ctx, query_id=query_id)
+                res = self._run(select + view, ctx)
             finally:
                 self.spark.catalog.dropTempView(view)
             total += res.rows_inserted
@@ -261,30 +254,34 @@ class Engine:
         return res
 
     def execute(self, sql: str, ctx: SessionContext | None = None,
-                bindings: dict | None = None, query_id: str | None = None) -> Result:
+                bindings: dict | None = None, query_id: str | None = None,
+                request_id: str | None = None, bind_stage: str | None = None) -> Result:
+        """Run ``sql`` under its record in the statement store (a new
+        query id unless ``query_id`` is given; ``request_id`` is the
+        gosnowflake client's id, which cancels it too) and return its
+        result; a failure raises a SnowflakeError. ``bind_stage`` runs
+        it once per row of a staged bind file (``_run_bind_stage``)."""
         ctx = ctx or SessionContext()
+        res = self.statements.run(
+            sql, lambda: (self._run_bind_stage(sql, bind_stage, ctx) if bind_stage
+                          else self._run(sql, ctx, bindings)),
+            query_id=query_id, request_id=request_id)
+        ctx.last_query_id = res.query_id
+        return res
+
+    def _run(self, sql: str, ctx: SessionContext, bindings: dict | None = None) -> Result:
         parts = _split_statements(sql)
         if len(parts) > 1:
             # multi-statement script (gosnowflake MULTI_STATEMENT shape;
-            # beyond reference): run sequentially in one session. Each
-            # statement gets its OWN query id and lands in the result
-            # store, so every child result is independently fetchable
-            # via RESULT_SCAN('<id>'); the returned result is the LAST
-            # statement's (Snowflake returns a summary + child handles —
-            # the protocol layer exposes ours as data.resultIds, r8).
-            from .executor import new_query_id
-
+            # beyond reference): each statement gets its own record, so
+            # every child result is fetchable via RESULT_SCAN('<id>'); the
+            # script's result is the last one's (the protocol layer
+            # lists the children as data.resultIds, r8)
             res = None
             child_ids: list[str] = []
             for p in parts:
-                cid = new_query_id()
-                res = self.execute(p, ctx, bindings, query_id=cid)
-                child_ids.append(cid)
-            if query_id:
-                # the parent id must also resolve (RESULT_SCAN of the
-                # request's own queryId -> last statement's result)
-                res.query_id = query_id
-                self.executor._store_result(query_id, res)
+                res = self.execute(p, ctx, bindings)
+                child_ids.append(res.query_id)
             res.child_result_ids = child_ids
             return res
         if not parts:
@@ -302,7 +299,6 @@ class Engine:
 
             res = scripting.try_handle(self, s, ctx)
             if res is not None:
-                res.query_id = query_id or ""
                 return res
         # object-DDL handled at engine level (stage / file format / warehouse)
         m = _CREATE_STAGE_RE.match(s)
@@ -316,16 +312,15 @@ class Engine:
             # filesystem, so PUT reads the file:// source directly (the
             # reference exposes PutFile as an API, manager.go:89; the
             # SQL statement surface is what gosnowflake sends)
-            import os as _os
             import urllib.parse as _up
 
             local = _up.unquote(_up.urlparse(m.group(1).strip("'")).path)
             name, _, prefix = m.group(2).partition("/")
             stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
-            base = _os.path.basename(local)
+            base = os.path.basename(local)
             dest = f"{prefix.rstrip('/')}/{base}" if prefix else base
             self.stages.put_file(stage, local, dest)
-            size = _os.path.getsize(local)
+            size = os.path.getsize(local)
             r = Result(
                 columns=["source", "target", "source_size", "target_size",
                          "source_compression", "target_compression",
@@ -341,15 +336,13 @@ class Engine:
         if m:
             name, _, prefix = m.group(1).partition("/")
             stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
-            import os as _os
-
             files = self.stages.list_files(stage, prefix=prefix or None)
             return Result(
                 columns=["name", "size", "md5", "last_modified"],
                 column_types=[ColumnMetadata(c, "TEXT") for c in
                               ("name", "size", "md5", "last_modified")],
                 rows=[[f"{name.lower()}/{rel}",
-                       str(_os.path.getsize(self.stages._resolve_inside(stage, rel))),
+                       str(os.path.getsize(self.stages._resolve_inside(stage, rel))),
                        "", ""] for rel in files])
         m = _REMOVE_STAGE_RE.match(s)
         if m:
@@ -363,20 +356,19 @@ class Engine:
         m = _GET_STAGE_RE.match(s)
         if m:
             # local emulation of the client download (complement of PUT)
-            import os as _os
             import urllib.parse as _up
 
             dest_dir = _up.unquote(_up.urlparse(m.group(2).strip("'")).path)
-            _os.makedirs(dest_dir, exist_ok=True)
+            os.makedirs(dest_dir, exist_ok=True)
             name, _, prefix = m.group(1).partition("/")
             stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
             rows = []
             for rel in self.stages.list_files(stage, prefix=prefix or None):
                 data = self.stages.get_file(stage, rel)
-                out_path = _os.path.join(dest_dir, _os.path.basename(rel))
+                out_path = os.path.join(dest_dir, os.path.basename(rel))
                 with open(out_path, "wb") as fh:
                     fh.write(data)
-                rows.append([_os.path.basename(rel), str(len(data)),
+                rows.append([os.path.basename(rel), str(len(data)),
                              "DOWNLOADED", ""])
             return Result(
                 columns=["file", "size", "status", "message"],
@@ -516,10 +508,10 @@ class Engine:
         if tx is not None:
             self.catalog.begin_dirty_capture(tx[1])
             try:
-                return self.executor.execute(s, ctx, bindings, query_id=query_id)
+                return self.executor.execute(s, ctx, bindings)
             finally:
                 self.catalog.end_dirty_capture()
-        return self.executor.execute(s, ctx, bindings, query_id=query_id)
+        return self.executor.execute(s, ctx, bindings)
 
     @staticmethod
     def _session_vars(ctx: SessionContext) -> dict:
@@ -573,8 +565,6 @@ class Engine:
         external catalog tables (FIXTURES.md §2: each fixture appears as
         ``TEST_DB.PUBLIC.<NAME>`` so inventory queries run through the
         full Snowflake SQL path)."""
-        import os
-
         mounted = []
         for fname in sorted(os.listdir(sf_dir)):
             if not fname.endswith(".parquet"):

@@ -40,16 +40,8 @@ def invalid_token(msg: str = "Invalid session token") -> SnowflakeError:
     return SnowflakeError("390104", msg, "08001")
 
 
-def login_failed(msg: str = "Incorrect username or password") -> SnowflakeError:
-    return SnowflakeError("390100", msg, "08001")
-
-
 def missing_token(msg: str = "Missing authentication token") -> SnowflakeError:
     return SnowflakeError("390101", msg, "08001")
-
-
-def session_gone(msg: str = "Session no longer exists") -> SnowflakeError:
-    return SnowflakeError("390111", msg, "08001")
 
 
 def master_token_expired(msg: str = "Master token expired") -> SnowflakeError:
@@ -85,6 +77,10 @@ def time_travel_unavailable(table: str, detail: str = "") -> SnowflakeError:
         "object creation time." + detail)
 
 
+def canceled() -> SnowflakeError:
+    return SnowflakeError("000604", "SQL execution canceled", "57014")
+
+
 def statement_not_found(handle: str) -> SnowflakeError:
     return SnowflakeError("390144", f"Statement handle {handle} not found", "02000")
 
@@ -107,9 +103,11 @@ def from_spark(e: Exception) -> SnowflakeError:
     """Map a Spark exception onto the Snowflake error model by error
     class (the reference surfaces DuckDB errors as generic execution
     errors, query.go error path; this is finer-grained parity with
-    real Snowflake's codes)."""
+    real Snowflake's codes). A SnowflakeError maps onto itself."""
     import re as _re
 
+    if isinstance(e, SnowflakeError):
+        return e
     cls = ""
     get_cls = getattr(e, "getCondition", None)
     if callable(get_cls):

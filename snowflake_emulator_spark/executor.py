@@ -17,7 +17,6 @@ without one session's namespace living in Spark's shared temp views.
 from __future__ import annotations
 
 import contextlib
-import json
 import os
 import re
 import threading
@@ -34,6 +33,7 @@ from .plans import bindings as bindmod
 from .plans.classifier import StatementType, classify
 from .plans.translator import Translator
 from .result import Result
+from .statements import StatementStore
 
 
 class SessionContext:
@@ -59,19 +59,6 @@ class SessionContext:
         # SET <var> = <expr> session variables ($var substitution)
         self.variables: dict[str, object] = {}
 
-
-def new_query_id() -> str:
-    """Snowflake-shaped query id (same format the server hands to
-    gosnowflake clients, so RESULT_SCAN works on protocol-visible ids)."""
-    return "01" + format(int(time.time() * 1000), "x") + "-" + uuid.uuid4().hex[:12]
-
-
-def _result_scan_view_name(qid: str) -> str:
-    return "__result_scan_" + re.sub(r"\W", "_", qid.lower())
-
-
-# query-history entries kept in memory and reloaded from the log
-HISTORY_CAP = 1000
 
 _LAST_QID_RE = re.compile(r"\bLAST_QUERY_ID\s*\(\s*(-?\d+)?\s*\)", re.I)
 
@@ -354,25 +341,15 @@ def sql_literal(v) -> str:
 
 
 class Executor:
-    def __init__(self, spark: SparkSession, catalog: Catalog):
+    def __init__(self, spark: SparkSession, catalog: Catalog, statements: StatementStore):
         self.spark = spark
         self.catalog = catalog
+        # the engine's per-query records: history, RESULT_SCAN, AT(STATEMENT)
+        self.statements = statements
         self.translator = Translator()
         # per-thread stack of the read pins and temp views of the
         # statement running on this thread (_statement_scope)
         self._tt_local = threading.local()
-        # query-history log (reference persists to its metadata store,
-        # pkg/metadata/repository.go:1213-1378). Persisted as an
-        # append-only JSONL under the warehouse dir — the metadata-store
-        # analog; a Spark table write per statement would add a full
-        # write job to every query, which no engine does for history —
-        # and reloaded on engine start so SHOW QUERY HISTORY survives
-        # restarts. Memory holds the newest HISTORY_CAP entries, as the
-        # reload does.
-        self.history: list[dict] = []
-        self._history_lock = threading.Lock()
-        self._history_path = os.path.join(catalog.base_dir, "_metadata", "query_history.jsonl")
-        self._load_history()
         # views currently being planned (cycle guard) — PER THREAD:
         # a shared set made two concurrent first queries of the same
         # view spuriously raise 'cyclic view reference'
@@ -382,12 +359,6 @@ class Executor:
         self._info_schema_cache: dict[str, int] = {}
         # dynamic tables: table key -> (stored SELECT, target_lag)
         self._dyntable_defs: dict[tuple[str, str, str], tuple[str, str | None]] = {}
-        # RESULT_SCAN store: query id -> Result, newest-last, capped.
-        # Snowflake's result cache is a remote store; here the rows are
-        # already materialized driver-side at the protocol boundary, so
-        # retaining the last N Result objects costs no extra compute.
-        self._result_store: "OrderedDict[str, Result]" = OrderedDict()
-        self._result_store_cap = 100
         # query result cache (r8; Snowflake USE_CACHED_RESULT): an
         # identical SELECT against an unchanged catalog re-serves the
         # stored Result instead of re-executing. Keyed on the bound
@@ -397,46 +368,12 @@ class Executor:
         # correct). LRU-capped.
         self._query_cache: "OrderedDict[str, tuple[int, Result]]" = OrderedDict()
         self._query_cache_cap = 50
-        # temp views registered for RESULT_SCAN (dropped on eviction)
-        self._result_views: set[str] = set()
 
-    # ------------------------------------------------------------------
-    # public entry
-    # ------------------------------------------------------------------
-
-    def execute(self, sql: str, ctx: SessionContext | None = None,
-                bindings: dict | None = None, query_id: str | None = None) -> Result:
-        ctx = ctx or SessionContext()
-        started = time.time()
-        qid = query_id or new_query_id()
-        entry = {"sql": sql, "status": "RUNNING", "start": started, "rows": 0,
-                 "error": None, "query_id": qid}
-        with self._history_lock:
-            self.history.append(entry)
-            del self.history[:-HISTORY_CAP]
-        try:
-            with self._statement_scope():
-                res = self._dispatch(sql, ctx, bindings)
-            entry["status"] = "SUCCESS"
-            entry["rows"] = res.row_count or res.rows_inserted + res.rows_updated + res.rows_deleted
-            res.query_id = qid
-            ctx.last_query_id = qid
-            self._store_result(qid, res)
-            return res
-        except errors.SnowflakeError as e:
-            entry["status"] = "FAILED"
-            entry["error"] = str(e)
-            raise
-        except Exception as e:  # Spark errors -> Snowflake error model
-            entry["status"] = "FAILED"
-            entry["error"] = str(e)
-            raise errors.from_spark(e) from e
-        finally:
-            # precise end instant (float seconds) for AT(STATEMENT =>)
-            # resolution; "ms" stays the history-display duration
-            entry["end"] = time.time()
-            entry["ms"] = int((entry["end"] - started) * 1000)
-            self._persist_history(entry)
+    def execute(self, sql: str, ctx: SessionContext,
+                bindings: dict | None = None) -> Result:
+        """Run one statement; ``Engine.execute`` holds its record."""
+        with self._statement_scope():
+            return self._dispatch(sql, ctx, bindings)
 
     def _statement_views(self) -> list[tuple]:
         """This thread's stack of what the running statement holds until
@@ -472,27 +409,12 @@ class Executor:
     # RESULT_SCAN (beyond reference: Snowflake result re-serve)
     # ------------------------------------------------------------------
 
-    def _store_result(self, qid: str, res: Result) -> None:
-        if not res.columns:
-            return
-        self._result_store[qid] = res
-        while len(self._result_store) > self._result_store_cap:
-            old_qid, _ = self._result_store.popitem(last=False)
-            view = _result_scan_view_name(old_qid)
-            if view in self._result_views:
-                self._result_views.discard(view)
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:
-                    pass
-
     def _result_scan_view(self, qid: str) -> str:
-        res = self._result_store.get(qid)
-        if res is None:
-            raise errors.execution_error(
-                f"Result for query id {qid or '<none>'} not found or expired")
-        view = _result_scan_view_name(qid)
-        if view not in self._result_views:
+        """The temp view over the stored result of ``qid``, registered on
+        its first RESULT_SCAN and dropped with the result."""
+        res = self.statements.result(qid)
+        st = self.statements.get(qid)
+        if st.view is None:
             if getattr(res, "_df", None) is not None:
                 # StreamedResult: re-serve straight from the DataFrame —
                 # RESULT_SCAN over a large result never materializes it
@@ -505,9 +427,10 @@ class Executor:
                 schema = T.StructType([T.StructField(c, T.StringType()) for c in res.columns])
                 df = self.spark.createDataFrame(
                     [[None if v is None else str(v) for v in r] for r in res.rows], schema)
+            view = "__result_scan_" + re.sub(r"\W", "_", qid.lower())
             df.createOrReplaceTempView(view)
-            self._result_views.add(view)
-        return view
+            st.view = view
+        return st.view
 
     def _rewrite_nextval_literal(self, sql: str, ctx: SessionContext) -> str:
         """NEXTVAL inside inline ``VALUES`` rows: Spark forbids
@@ -570,31 +493,6 @@ class Executor:
         sql = re.sub(r"\bTABLE\s*\(\s*RESULT_SCAN\s*\(\s*'([^']*)'\s*\)\s*\)",
                      repl, sql, flags=re.I)
         return re.sub(r"\bRESULT_SCAN\s*\(\s*'([^']*)'\s*\)", repl, sql, flags=re.I)
-
-    # ------------------------------------------------------------------
-    # query-history persistence
-    # ------------------------------------------------------------------
-
-    def _load_history(self) -> None:
-        try:
-            with open(self._history_path, encoding="utf-8") as f:
-                # keep the reload bounded: SHOW QUERY HISTORY serves the
-                # most recent 100 entries
-                lines = f.readlines()[-HISTORY_CAP:]
-            self.history = [json.loads(ln) for ln in lines if ln.strip()]
-        except FileNotFoundError:
-            pass
-        except Exception:
-            self.history = []  # corrupt log: start fresh, never fail startup
-
-    def _persist_history(self, entry: dict) -> None:
-        try:
-            with self._history_lock:
-                os.makedirs(os.path.dirname(self._history_path), exist_ok=True)
-                with open(self._history_path, "a", encoding="utf-8") as f:
-                    f.write(json.dumps(entry, default=str) + "\n")
-        except Exception:
-            pass  # history is best-effort; never fail the statement
 
     def _apply_table_kind(self, kindkw: str | None, name: str,
                           ctx: SessionContext) -> None:
@@ -1336,11 +1234,7 @@ class Executor:
 
     def _pick_version(self, tm, kind: str, value: str,
                       before: bool = False) -> int:
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(tm.location or "")
-            if re.fullmatch(r"v\d+", d)
-        )
+        versions = self.catalog.versions(tm)
         if not versions:
             raise errors.object_not_found(".".join((tm.database, tm.schema, tm.name)))
         if kind == "VERSION":
@@ -1363,23 +1257,13 @@ class Executor:
             # END for AT (its changes included), its START for BEFORE
             # (its changes excluded; Snowflake semantics)
             qid = value.strip().strip("'\"")
-            entry = next((e for e in reversed(list(self.history))
-                          if e.get("query_id") == qid), None)
-            if entry is None:
+            st = self.statements.get(qid)
+            if st is None:
                 raise errors.execution_error(
                     f"statement {qid} not found in query history")
-            if before:
-                target = float(entry["start"])
-            else:
-                # r12 (ADVICE): use the statement's precise recorded end
-                # instant — the old floor-rounded ms + 1ms pad wrongly
-                # included a DIFFERENT statement's version written within
-                # 1ms after the target statement ended. Fall back to the
-                # padded form only for pre-r12 persisted history entries.
-                if "end" in entry:
-                    target = float(entry["end"])
-                else:
-                    target = float(entry["start"]) + (entry.get("ms", 0) + 1) / 1000.0
+            # the precise end instant: a padded one would include a
+            # different statement's version written just after it
+            target = st.start if before else (st.end or time.time())
         else:  # TIMESTAMP
             from datetime import datetime, timezone
 
@@ -3134,11 +3018,12 @@ class Executor:
             return Result(columns=["name", "type"], rows=rows)
         if first == "QUERY":
             # query-history log (reference: pkg/metadata/repository.go:1213-1378)
-            rows = [
-                [e["sql"][:200], e["status"], e.get("rows", 0), e.get("ms", 0), e.get("error")]
-                for e in self.history[-100:]
-            ]
-            return Result(columns=["query_text", "status", "rows", "total_elapsed_time", "error_message"], rows=rows)
+            rows = [[st.sql[:200], st.status.value, st.rows,
+                     int(((st.end or time.time()) - st.start) * 1000),
+                     st.error.message if st.error else None, st.query_id]
+                    for st in self.statements.recent(100)]
+            return Result(columns=["query_text", "status", "rows", "total_elapsed_time",
+                                   "error_message", "query_id"], rows=rows)
         if first == "ROW":  # SHOW ROW ACCESS POLICIES
             rows = [[pm.name, db, sch,
                      "(" + ", ".join(f"{n} {t}" for n, t in
@@ -3196,11 +3081,7 @@ class Executor:
             r"^\s*DESC(?:RIBE)?\s+RESULT\s+(?:'([^']+)'|LAST_QUERY_ID\s*\(\s*\))\s*$",
             sql, re.I)
         if rm_:
-            qid = rm_.group(1) or ctx.last_query_id
-            res = self._result_store.get(qid or "")
-            if res is None:
-                raise errors.execution_error(
-                    f"Result for query {qid or '<none>'} has expired or does not exist")
+            res = self.statements.result(rm_.group(1) or ctx.last_query_id)
             from .functions.typemap import spark_to_snowflake_name
 
             if getattr(res, "spark_schema", None) is not None:

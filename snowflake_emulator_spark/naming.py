@@ -68,7 +68,3 @@ def _split_dotted(name: str) -> list[str]:
 def physical_name(db: str, schema: str, table: str) -> str:
     """Flattened single-level name a statement binds a view or stream under."""
     return f"{normalize_ident(db)}{SEP}{normalize_ident(schema)}{SEP}{normalize_ident(table)}"
-
-
-def physical_from_qualified(name: str, database: str | None = None, schema: str | None = None) -> str:
-    return physical_name(*split_qualified(name, database, schema))

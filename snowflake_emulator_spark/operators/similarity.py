@@ -77,16 +77,6 @@ def _norm(a: Column, dim: int | None = 64) -> Column:
     return F.sqrt(_dot(a, a, dim))
 
 
-def _dot_lit(a: Column, values: list[float]) -> Column:
-    """Dot product against a Python-side constant vector: inline each
-    literal (an ``F.array(lits)[i]`` reference would rebuild the whole
-    literal array once per element)."""
-    acc = a[0].cast("double") * values[0]
-    for i in range(1, len(values)):
-        acc = acc + a[i].cast("double") * values[i]
-    return acc
-
-
 def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 10,
                            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query id.

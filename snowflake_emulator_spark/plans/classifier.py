@@ -70,11 +70,3 @@ def classify(sql: str) -> ClassifyResult:
     if first == "INSERT":
         return ClassifyResult(StatementType.DML, config.STATEMENT_TYPE_INSERT, is_dml=True)
     return ClassifyResult(StatementType.DML, config.STATEMENT_TYPE_DML, is_dml=True)
-
-
-def is_create_table(sql: str) -> bool:
-    return bool(re.match(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP(ORARY)?\s+|TRANSIENT\s+)?TABLE\b", sql, re.I))
-
-
-def is_drop_table(sql: str) -> bool:
-    return bool(re.match(r"^\s*DROP\s+TABLE\b", sql, re.I))

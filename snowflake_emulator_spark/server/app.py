@@ -36,7 +36,6 @@ import datetime
 import json
 import re
 import threading
-import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs
@@ -47,7 +46,7 @@ from ..executor import SessionContext
 from ..plans.classifier import StatementType, classify
 from ..result import StreamedResult
 from ..sessions import SessionManager, extract_token
-from ..statements import StatementManager, StatementStatus
+from ..statements import StatementStatus, new_query_id
 
 
 class _StreamingJSONBody:
@@ -88,7 +87,6 @@ class SnowflakeServer:
     def __init__(self, engine: Engine, host: str = "127.0.0.1", port: int = 8085):
         self.engine = engine
         self.sessions = SessionManager()
-        self.statements = StatementManager(engine.spark)
         # one transaction owner for the connectionless REST v2 surface
         # (see the /api/v2/statements handler)
         self._restv2_tx_owner = object()
@@ -96,16 +94,6 @@ class SnowflakeServer:
         self.port = port
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        # running gosnowflake queries: requestId/queryId -> Spark job group
-        self._running: dict[str, str] = {}
-        self._running_lock = threading.Lock()
-        # async queries (gosnowflake asyncExec, beyond reference):
-        # queryId -> {status, result|error, cls, sql} — the submit
-        # returns code 333334 immediately; the client polls
-        # GET /monitoring/queries/{qid} and fetches the finished rowset
-        # from GET /queries/{qid}/result
-        self._async: dict[str, dict] = {}
-        self._async_lock = threading.Lock()
 
     # ------------------------------------------------------------------
 
@@ -353,13 +341,12 @@ class SnowflakeServer:
             bindings = body.get("bindings") or None
             ctx = sess.context()
             cls = classify(sql)
-            qid = "01" + format(int(time.time() * 1000), "x") + "-" + uuid.uuid4().hex[:12]
             # describeOnly (gosnowflake PrepareContext / metadata
             # pre-fetch): return the result schema WITHOUT executing —
             # a LIMIT 0 plan for queries (no data scanned, no side
             # effects), and an empty statement-shaped payload otherwise
             if body.get("describeOnly"):
-                data = {"queryId": qid, "total": 0, "returned": 0,
+                data = {"queryId": new_query_id(), "total": 0, "returned": 0,
                         "statementTypeId": cls.statement_type_id,
                         "queryResultFormat": config.QUERY_RESULT_FORMAT_JSON,
                         "rowset": []}
@@ -373,147 +360,111 @@ class SnowflakeServer:
                 return {"data": data, "success": True}, 200
             # asyncExec (gosnowflake WithAsyncMode, beyond reference):
             # run on a worker thread, return code 333334 + getResultUrl
-            # immediately; the client polls /monitoring/queries/{qid}
-            # and fetches the rowset from /queries/{qid}/result
+            # once its record is open; the client polls its status and
+            # fetches the rowset from /queries/{qid}/result
             if body.get("asyncExec"):
-                entry = {"status": "RUNNING", "cls": cls, "ctx": ctx, "sql": sql}
-                with self._async_lock:
-                    self._async[qid] = entry
-                    while len(self._async) > 200:  # bounded like results
-                        self._async.pop(next(iter(self._async)))
+                qid = new_query_id()
 
                 def _worker():
-                    group_a = f"qreq-{qid}"
-                    with self._running_lock:
-                        self._running[qid] = group_a
-                    self.engine.spark.sparkContext.setJobGroup(group_a, sql[:100], True)
                     try:
-                        r = self.engine.execute(sql, ctx, bindings, query_id=qid)
-                        sess.database, sess.schema = ctx.database, ctx.schema
-                        sess.last_query_id = (getattr(ctx, "last_query_id", None)
-                                              or sess.last_query_id)
-                        with self._async_lock:
-                            entry.update(status="SUCCESS", result=r)
-                    except Exception as e:  # noqa: BLE001 — surfaced to poller
-                        with self._async_lock:
-                            entry.update(status="FAILED_WITH_ERROR", error=e)
-                    finally:
-                        self.engine.spark.sparkContext.setJobGroup("", "")
-                        with self._running_lock:
-                            self._running.pop(qid, None)
+                        self.engine.execute(sql, ctx, bindings, query_id=qid)
+                    except errors.SnowflakeError:
+                        return  # the record holds the error for the poller
+                    sess.database, sess.schema = ctx.database, ctx.schema
+                    sess.last_query_id = ctx.last_query_id or sess.last_query_id
 
                 threading.Thread(target=_worker, daemon=True,
                                  name=f"async-{qid}").start()
+                self.engine.statements.wait(qid)
                 return {"code": "333334", "success": True,
                         "data": {"queryId": qid,
                                  "getResultUrl": f"/queries/{qid}/result"}}, 200
-            # run inside a per-query Spark job group so an abort-request
-            # (by gosnowflake requestId or by our queryId) can interrupt
-            # the running jobs from another thread
-            group = f"qreq-{qid}"
-            req_id = params.get("requestId")
-            with self._running_lock:
-                self._running[qid] = group
-                if req_id:
-                    self._running[req_id] = group
-            self.engine.spark.sparkContext.setJobGroup(group, sql[:100], True)
-            try:
-                bind_stage = body.get("bindStage") or ""
-                if bind_stage:
-                    # gosnowflake bulk array binds: rows live in a
-                    # staged CSV, not the inline bindings field
-                    res = self.engine.execute_bind_stage(
-                        sql, bind_stage, ctx, query_id=qid)
-                else:
-                    res = self.engine.execute(sql, ctx, bindings, query_id=qid)
-            finally:
-                self.engine.spark.sparkContext.setJobGroup("", "")
-                with self._running_lock:
-                    self._running.pop(qid, None)
-                    if req_id:
-                        self._running.pop(req_id, None)
+            # an abort-request by gosnowflake requestId or by our
+            # queryId cancels it through its record; bulk array binds
+            # arrive as a staged CSV, not the inline bindings field
+            res = self.engine.execute(sql, ctx, bindings,
+                                      request_id=params.get("requestId"),
+                                      bind_stage=body.get("bindStage") or None)
             sess.database, sess.schema = ctx.database, ctx.schema
-            sess.last_query_id = getattr(ctx, "last_query_id", None) or sess.last_query_id
-            return self._query_result_payload(res, qid, cls, ctx, sql)
+            sess.last_query_id = ctx.last_query_id or sess.last_query_id
+            return self._query_result_payload(res, res.query_id, cls, ctx, sql)
 
-        # async result fetch (gosnowflake getResultUrl, beyond reference)
+        # result fetch (gosnowflake getResultUrl, beyond reference)
         m = re.match(r"^/queries/([\w-]+)/result$", path)
         if m and method == "GET":
-            self.sessions.validate(extract_token(headers.get("Authorization")))
-            with self._async_lock:
-                entry = self._async.get(m.group(1))
-            if entry is None:
+            sess = self.sessions.validate(extract_token(headers.get("Authorization")))
+            st = self.engine.statements.get(m.group(1))
+            if st is None:
                 return {"success": False, "message": f"unknown query {m.group(1)}",
                         "code": "000605"}, 200
-            if entry["status"] == "RUNNING":
+            if st.status is StatementStatus.RUNNING:
                 return {"code": "333334", "success": True,
-                        "data": {"queryId": m.group(1),
-                                 "getResultUrl": f"/queries/{m.group(1)}/result"}}, 200
-            if entry["status"] != "SUCCESS":
-                err = entry["error"]
-                return {"success": False, "message": str(err),
-                        "code": getattr(err, "code", "100037"),
-                        "data": {"queryId": m.group(1),
-                                 "sqlState": getattr(err, "sqlstate", "P0000")}}, 200
-            return self._query_result_payload(
-                entry["result"], m.group(1), entry["cls"], entry["ctx"], entry["sql"])
+                        "data": {"queryId": st.query_id,
+                                 "getResultUrl": f"/queries/{st.query_id}/result"}}, 200
+            if st.error is not None:
+                out = st.error.envelope()
+                out["data"]["queryId"] = st.query_id
+                return out, 200
+            out = self._query_result_payload(
+                self.engine.statements.result(st.query_id), st.query_id,
+                classify(st.sql), sess.context(), st.sql)
+            self.engine.statements.fetched(st.query_id)
+            return out
 
-        # async status poll (gosnowflake checkQueryStatus shape)
+        # status poll (gosnowflake checkQueryStatus shape)
         m = re.match(r"^/monitoring/queries/([\w-]+)$", path)
         if m and method == "GET":
             self.sessions.validate(extract_token(headers.get("Authorization")))
-            with self._async_lock:
-                entry = self._async.get(m.group(1))
-            if entry is None:
+            st = self.engine.statements.get(m.group(1))
+            if st is None:
                 return {"data": {"queries": []}, "success": True}, 200
-            err = entry.get("error")
             return {"data": {"queries": [{
-                "id": m.group(1),
-                "status": entry["status"],
-                "errorCode": getattr(err, "code", "") if err else "",
-                "errorMessage": str(err) if err else "",
+                "id": st.query_id,
+                "status": ("FAILED_WITH_ERROR" if st.error is not None
+                           else st.status.value),
+                "errorCode": st.error.code if st.error else "",
+                "errorMessage": st.error.message if st.error else "",
             }]}, "success": True}, 200
 
-        # (async routes above; cancellation below)
         # query cancellation (query.go:149-166 returns success without
         # cancelling; we actually interrupt the job group when the id is
         # known, and stay lenient — success either way — like the ref)
         if path == "/queries/v1/abort-request" and method == "POST":
-            qid = body.get("queryId") or body.get("requestId") or ""
-            with self._running_lock:
-                group = self._running.get(qid)
-            if group:
-                self.engine.spark.sparkContext.cancelJobGroup(group)
+            st = self.engine.statements.cancel(
+                body.get("queryId") or body.get("requestId") or "")
+            if st is not None and st.status is StatementStatus.CANCELED:
                 return {"success": True, "message": "query aborted"}, 200
             return {"success": True, "message": "query not running"}, 200
 
         # ---- REST v2 statements
         if path == "/api/v2/statements" and method == "POST":
-            sql = body.get("statement", "")
-            bindings = body.get("bindings") or None
-            st = self.statements.create(sql)
-            db = body.get("database")
-            schema = body.get("schema")
-            ctx = SessionContext(db, schema)
+            ctx = SessionContext(body.get("database"), body.get("schema"))
             # REST v2 is connectionless, but the reference executes every
             # statement against ONE shared engine handle, so transactions
             # span successive POSTs (rest_api_v2_test.go BEGIN/COMMIT
             # choreography). Thread a server-lifetime owner object so the
             # engine's tx bookkeeping sees one owner across requests.
             ctx._session = self._restv2_tx_owner
-            self.statements.run(st, lambda: self.engine.execute(sql, ctx, bindings,
-                                                                query_id=st.handle))
-            return self._statement_payload(st)
+            handle = new_query_id()
+            try:
+                self.engine.execute(body.get("statement", ""), ctx,
+                                    body.get("bindings") or None, query_id=handle)
+            except errors.SnowflakeError:
+                pass  # the record holds the error for the payload
+            return self._statement_payload(self._statement(handle))
         m = re.match(r"^/api/v2/statements/([\w-]+)$", path)
         if m and method == "GET":
             part = params.get("partition")
             return self._statement_payload(
-                self.statements.get(m.group(1)),
+                self._statement(m.group(1)),
                 partition=int(part) if part is not None else None)
         m = re.match(r"^/api/v2/statements/([\w-]+)/cancel$", path)
         if m and method == "POST":
-            st = self.statements.cancel(m.group(1))
-            return {"statementHandle": st.handle, "status": st.status.value}, 200
+            st = self.engine.statements.cancel(m.group(1))
+            if st is None:
+                raise errors.statement_not_found(m.group(1))
+            return {"statementHandle": st.query_id,
+                    "status": st.status.value.lower()}, 200
 
         # ---- REST v2 databases / schemas / tables
         # response field names / status codes mirror the reference's
@@ -640,25 +591,32 @@ class SnowflakeServer:
 
         raise errors.SnowflakeError("390404", f"unknown endpoint {method} {path}", "02000")
 
+    def _statement(self, handle: str):
+        st = self.engine.statements.get(handle)
+        if st is None:
+            raise errors.statement_not_found(handle)
+        return st
+
     def _statement_payload(self, st, partition: int | None = None):
-        if st.status == StatementStatus.FAILED and st.error is not None:
+        status = st.status.value.lower()
+        if st.status is StatementStatus.FAILED:
             return {
-                "statementHandle": st.handle,
-                "status": st.status.value,
+                "statementHandle": st.query_id,
+                "status": status,
                 "code": st.error.code,
                 "message": st.error.message,
                 "sqlState": st.error.sqlstate,
             }, 422
         payload = {
-            "statementHandle": st.handle,
-            "status": st.status.value,
-            "statementStatusUrl": f"/api/v2/statements/{st.handle}",
+            "statementHandle": st.query_id,
+            "status": status,
+            "statementStatusUrl": f"/api/v2/statements/{st.query_id}",
             # epoch MILLISECONDS (rest_api_v2.go:35 CreatedOn int64;
             # the reference's e2e asserts the ms range explicitly)
-            "createdOn": int(st.created_at * 1000),
+            "createdOn": int(st.start * 1000),
         }
-        if st.result is not None:
-            res = st.result
+        if st.status is StatementStatus.SUCCESS:
+            res = self.engine.statements.result(st.query_id)
             total = res.row_count
             bs = config.RESULT_STREAM_BATCH
             from ..result import StreamedResult, _jsonify
@@ -684,28 +642,31 @@ class SnowflakeServer:
                 raise errors.invalid_parameter(
                     f"partition {want} out of range (0..{n_parts - 1})")
             if streamed:
-                rows = self._fetch_partition(st, want, bs)
+                rows = self._fetch_partition(res, want, bs)
                 payload["data"] = [[_jsonify(v) for v in r] for r in rows]
             else:
                 payload["data"] = res.rowset_typed()
+            if want == n_parts - 1:
+                self.engine.statements.fetched(st.query_id)
         return payload, 200
 
-    def _fetch_partition(self, st, n: int, bs: int) -> list:
+    @staticmethod
+    def _fetch_partition(res, n: int, bs: int) -> list:
         """Sequential partition cursor over a StreamedResult: serves
         partition N by draining the result's batched iterator forward,
         caching only the LAST served partition (bounded memory).
         Fetching an earlier partition restarts the iterator — clients
         walk partitions in order, so the common path is one pass."""
-        cur = getattr(st, "_part_cursor", None)
+        cur = getattr(res, "_part_cursor", None)
         if cur is None:
-            cur = st._part_cursor = {"gen": None, "next": 0,
-                                     "last": (None, None),
-                                     "lock": threading.Lock()}
+            cur = res._part_cursor = {"gen": None, "next": 0,
+                                      "last": (None, None),
+                                      "lock": threading.Lock()}
         with cur["lock"]:  # concurrent fetches of one handle serialize
             if cur["last"][0] == n:
                 return cur["last"][1]
             if cur["gen"] is None or n < cur["next"]:
-                cur["gen"] = st.result.iter_rows(bs)
+                cur["gen"] = res.iter_rows(bs)
                 cur["next"] = 0
             rows: list = []
             while cur["next"] <= n:

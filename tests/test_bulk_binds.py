@@ -63,8 +63,8 @@ def _bulk_vs_inline(engine, ctx, tmp_path, insert, rows):
     into INLINE_T; return both tables' rows."""
     for t in ("BULK_T", "INLINE_T"):
         engine.execute(f"CREATE OR REPLACE TABLE {t} {COLUMNS}", ctx)
-    engine.execute_bind_stage(insert.format(t="BULK_T"),
-                              _stage_binds(engine, ctx, tmp_path, rows), ctx)
+    engine.execute(insert.format(t="BULK_T"), ctx,
+                   bind_stage=_stage_binds(engine, ctx, tmp_path, rows))
     for row in rows:
         engine.execute(insert.format(t="INLINE_T"), ctx,
                        {str(k + 1): {"type": "TEXT", "value": v}
@@ -112,8 +112,8 @@ def test_bulk_bind_lands_every_batch(engine, ctx, tmp_path):
     engine.execute("CREATE TABLE BIG_BIND (ID INTEGER, S VARCHAR)", ctx)
     stage = _stage_binds(engine, ctx, tmp_path,
                          [[str(i), f"row-{i}"] for i in range(1, n + 1)])
-    res = engine.execute_bind_stage(
-        "INSERT INTO BIG_BIND (ID, S) VALUES (?, ?)", stage, ctx)
+    res = engine.execute(
+        "INSERT INTO BIG_BIND (ID, S) VALUES (?, ?)", ctx, bind_stage=stage)
     assert res.rows_inserted == n
     got = engine.execute(
         "SELECT COUNT(*), COUNT(DISTINCT ID), SUM(ID), MIN(S) FROM BIG_BIND", ctx).rows
@@ -126,14 +126,14 @@ def test_bulk_bind_rejects_ragged_rows(engine, ctx, tmp_path):
     engine.execute("CREATE TABLE RAGGED (ID INTEGER, S VARCHAR)", ctx)
     stage = _stage_binds(engine, ctx, tmp_path, [["1", "a"], ["2"]])
     with pytest.raises(errors.SnowflakeError):
-        engine.execute_bind_stage("INSERT INTO RAGGED VALUES (?, ?)", stage, ctx)
+        engine.execute("INSERT INTO RAGGED VALUES (?, ?)", ctx, bind_stage=stage)
     assert _rows(engine, ctx, "RAGGED") == []
 
 
 def test_bulk_bind_template_with_default(engine, ctx, tmp_path):
     engine.execute("CREATE TABLE DFLT (ID INTEGER, S VARCHAR DEFAULT 'd')", ctx)
     stage = _stage_binds(engine, ctx, tmp_path, [["1"], ["2"]])
-    engine.execute_bind_stage("INSERT INTO DFLT VALUES (?, DEFAULT)", stage, ctx)
+    engine.execute("INSERT INTO DFLT VALUES (?, DEFAULT)", ctx, bind_stage=stage)
     assert _rows(engine, ctx, "DFLT") == [(1, "d"), (2, "d")]
 
 
@@ -144,7 +144,7 @@ def test_bulk_bind_keeps_null_apart_from_the_empty_string(engine, ctx, tmp_path)
     for t, insert in (("NB_BULK", "INSERT INTO NB_BULK (ID, V, S) VALUES (?, ?, ?)"),
                       ("NB_ROW", "INSERT INTO NB_ROW VALUES (?, ?, ?, DEFAULT)")):
         engine.execute(f"CREATE TABLE {t} (ID INT, V INT, S VARCHAR, D INT DEFAULT 0)", ctx)
-        engine.execute_bind_stage(insert, _stage_binds(engine, ctx, tmp_path, rows), ctx)
+        engine.execute(insert, ctx, bind_stage=_stage_binds(engine, ctx, tmp_path, rows))
         assert _rows(engine, ctx, t) == [(1, None, "", 0), (2, 5, None, 0)]
 
 
@@ -155,7 +155,7 @@ def test_one_column_bulk_bind_keeps_null_rows(engine, ctx, tmp_path):
     for t, insert in (("NV_BULK", "INSERT INTO NV_BULK (V) VALUES (?)"),
                       ("NV_ROW", "INSERT INTO NV_ROW VALUES (?, DEFAULT)")):
         engine.execute(f"CREATE TABLE {t} (V VARCHAR, D INT DEFAULT 0)", ctx)
-        engine.execute_bind_stage(insert, _stage_binds(engine, ctx, tmp_path, rows), ctx)
+        engine.execute(insert, ctx, bind_stage=_stage_binds(engine, ctx, tmp_path, rows))
         got = engine.execute(
             f"SELECT V, D FROM {t} ORDER BY V NULLS FIRST", ctx).rows
         assert [tuple(r) for r in got] == [(None, 0), (None, 0), ("", 0),
@@ -169,5 +169,5 @@ def test_bulk_bind_rejects_an_empty_line_among_wider_rows(engine, ctx, tmp_path)
     engine.execute("CREATE TABLE GAP (ID INTEGER, S VARCHAR)", ctx)
     stage = _stage_binds(engine, ctx, tmp_path, [["1", "a"], [], ["2", "b"]])
     with pytest.raises(errors.SnowflakeError):
-        engine.execute_bind_stage("INSERT INTO GAP VALUES (?, ?)", stage, ctx)
+        engine.execute("INSERT INTO GAP VALUES (?, ?)", ctx, bind_stage=stage)
     assert _rows(engine, ctx, "GAP") == []

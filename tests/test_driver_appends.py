@@ -5,7 +5,6 @@ exactly as rows Spark wrote; every other append keeps the Spark write."""
 import datetime
 import os
 import time
-import uuid
 from decimal import Decimal
 
 import pytest
@@ -54,15 +53,9 @@ def new_york():
 
 
 def _jobs(engine, ctx, sql) -> int:
-    """The number of Spark jobs ``sql`` ran."""
-    sc = engine.spark.sparkContext
-    group = f"driver-append-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "driver append test")
-    try:
-        engine.execute(sql, ctx)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    """The number of Spark jobs ``sql`` ran (under its query id's job group)."""
+    group = engine.execute(sql, ctx).query_id
+    return len(engine.spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(engine, ctx, table) -> list[tuple]:

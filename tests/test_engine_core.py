@@ -398,8 +398,8 @@ def test_time_travel_before_and_statement(engine):
     from datetime import datetime, timezone
 
     engine.execute("SELECT 1", ctx)
-    hist = [e for e in engine.executor.history if "INSERT INTO ttb" in e["sql"]]
-    ins_start = hist[0]["start"]
+    hist = [st for st in engine.statements.recent(100) if "INSERT INTO ttb" in st.sql]
+    ins_start = hist[0].start
     iso = datetime.fromtimestamp(ins_start, tz=timezone.utc).isoformat()
     res = engine.execute(
         f"SELECT count(*) AS n FROM ttb BEFORE(TIMESTAMP => '{iso}')", ctx)
@@ -979,7 +979,7 @@ def test_stage_file_sql_statements(engine, tmp_path):
 
 def test_bind_stage_non_insert_statement(engine, tmp_path):
     """bindStage with a non-INSERT statement executes once per staged
-    CSV row with positional TEXT binds (engine.execute_bind_stage)."""
+    CSV row with positional TEXT binds (engine.execute with bind_stage)."""
     from snowflake_emulator_spark.sessions import SessionContext
 
     ctx = SessionContext()
@@ -990,8 +990,8 @@ def test_bind_stage_non_insert_statement(engine, tmp_path):
     src = tmp_path / "binds_0.csv"
     src.write_text("one,1\ntwo,2\n")
     engine.execute(f"PUT file://{src} @bs_stage/req1", ctx)
-    engine.execute_bind_stage(
-        "UPDATE bs_upd SET v = ? WHERE id = ?", "bs_stage/req1", ctx)
+    engine.execute(
+        "UPDATE bs_upd SET v = ? WHERE id = ?", ctx, bind_stage="bs_stage/req1")
     res = engine.execute("SELECT id, v FROM bs_upd ORDER BY id", ctx)
     assert [tuple(r) for r in res.rows] == [(1, "one"), (2, "two"),
                                             (3, "keep")]

@@ -13,7 +13,7 @@ import warnings
 import pytest
 
 from snowflake_emulator_spark import errors
-from snowflake_emulator_spark import executor as executor_mod
+from snowflake_emulator_spark import statements as statements_mod
 from snowflake_emulator_spark.result import Result
 from snowflake_emulator_spark.sessions import SessionContext
 
@@ -165,15 +165,13 @@ def test_rename_is_a_metadata_move(engine, ctx):
     before = engine.catalog.get_table("RN_SRC", ctx.database, ctx.schema)
     old_v = before.version
 
-    sc = engine.spark.sparkContext
-    sc.setJobGroup("rename_probe", "rename")
-    try:
-        engine.execute("ALTER TABLE RN_SRC RENAME TO RN_DST", ctx)
-        renamed_jobs = list(sc.statusTracker().getJobIdsForGroup("rename_probe"))
-        assert engine.execute("SELECT * FROM RN_DST", ctx).rows == [[1, "a"]]
-        assert sc.statusTracker().getJobIdsForGroup("rename_probe")  # the probe sees jobs
-    finally:
-        sc.setJobGroup(None, None)
+    # each statement runs under the job group of its query id
+    tracker = engine.spark.sparkContext.statusTracker()
+    renamed = engine.execute("ALTER TABLE RN_SRC RENAME TO RN_DST", ctx)
+    renamed_jobs = list(tracker.getJobIdsForGroup(renamed.query_id))
+    read = engine.execute("SELECT * FROM RN_DST", ctx)
+    assert read.rows == [[1, "a"]]
+    assert tracker.getJobIdsForGroup(read.query_id)  # the probe sees jobs
     assert renamed_jobs == []
 
     tm = engine.catalog.get_table("RN_DST", ctx.database, ctx.schema)
@@ -208,21 +206,21 @@ def test_spark_error_mapping_emits_no_deprecation_warning(engine, ctx):
 
 
 def test_history_is_bounded_in_memory(engine, ctx, monkeypatch):
-    monkeypatch.setattr(executor_mod, "HISTORY_CAP", 5)
+    monkeypatch.setattr(statements_mod, "HISTORY_CAP", 5)
     engine.execute("CREATE TABLE HC (ID INTEGER)", ctx)
     for i in range(8):
         engine.execute("SELECT 1", ctx)
-        assert len(engine.executor.history) <= 5
+        assert len(engine.statements.recent(100)) <= 5
     res = engine.execute("INSERT INTO HC VALUES (1)", ctx)
     engine.execute("INSERT INTO HC VALUES (2)", ctx)
-    assert len(engine.executor.history) == 5
+    assert len(engine.statements.recent(100)) == 5
     assert engine.execute(
         f"SELECT ID FROM HC AT(STATEMENT => '{res.query_id}')", ctx).rows == [[1]]
     shown = engine.execute("SHOW QUERY HISTORY", ctx).rows
     assert 0 < len(shown) <= 5
     # a restart reloads no more than the cap either
-    reloaded = executor_mod.Executor(engine.spark, engine.catalog)
-    assert len(reloaded.history) == 5
+    reloaded = statements_mod.StatementStore(engine.spark, engine.statements._log_path)
+    assert len(reloaded.recent(100)) == 5
 
 
 def test_reads_and_appends_race_with_one_retained_version(engine, ctx):

@@ -63,17 +63,17 @@ def test_result_store_eviction(engine):
     engine.execute("CREATE TABLE rs_e (id INTEGER)", ctx)
     engine.execute("INSERT INTO rs_e VALUES (1)", ctx)
     first = engine.execute("SELECT id FROM rs_e", ctx)
-    ex = engine.executor
-    cap = ex._result_store_cap
-    ex._result_store_cap = 5
+    store = engine.statements
+    cap = store._result_store_cap
+    store._result_store_cap = 5
     try:
         for _ in range(8):
             engine.execute("SELECT id FROM rs_e", ctx)
-        assert len(ex._result_store) <= 5
+        assert len(store._results) <= 5
         with pytest.raises(errors.SnowflakeError):
             engine.execute(f"SELECT * FROM TABLE(RESULT_SCAN('{first.query_id}'))", ctx)
     finally:
-        ex._result_store_cap = cap
+        store._result_store_cap = cap
 
 
 def test_query_result_cache_hit_and_invalidation(engine):

@@ -129,7 +129,7 @@ def test_restv2_partitioned_fetch(spark, tmp_path, low_threshold):
         assert out["status"] == "success", out
         handle = out["statementHandle"]
         # the result is streamed (threshold 50, batch 16)
-        assert isinstance(srv.statements.get(handle).result, StreamedResult)
+        assert isinstance(srv.engine.statements.get(handle).result, StreamedResult)
         meta = out["resultSetMetaData"]
         assert meta["numRows"] == 100
         counts = [p["rowCount"] for p in meta["partitionInfo"]]

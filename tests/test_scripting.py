@@ -3,6 +3,7 @@ blocks, CREATE PROCEDURE / CALL / DROP / SHOW PROCEDURES."""
 
 import pytest
 
+from snowflake_emulator_spark import errors
 from snowflake_emulator_spark.sessions import SessionContext
 
 
@@ -348,7 +349,8 @@ def test_nested_loops_single_piece_header(engine):
 
 def test_cursor_for_loop_raises(engine):
     ctx = SessionContext()
-    with pytest.raises(NotImplementedError, match="cursor"):
+    # the record maps every failure onto a Snowflake code
+    with pytest.raises(errors.SnowflakeError, match="cursor"):
         engine.execute(
             "EXECUTE IMMEDIATE $$ BEGIN "
             "FOR rec IN cur DO LET x := 1; END FOR; RETURN 0; END $$", ctx)

@@ -77,7 +77,7 @@ def test_statements_drop_their_temp_views(engine, ctx, tmp_path):
     binds.parent.mkdir()
     binds.write_text("2,b\n3,c\n")
     engine.execute(f"PUT file://{binds} @TV_STAGE/binds", ctx)
-    engine.execute_bind_stage("INSERT INTO TV_T VALUES (?, ?)", "TV_STAGE/binds", ctx)
+    engine.execute("INSERT INTO TV_T VALUES (?, ?)", ctx, bind_stage="TV_STAGE/binds")
     engine.execute("MERGE INTO TV_T t USING (SELECT 1 AS ID, 'z' AS NAME) s "
                    "ON t.ID = s.ID WHEN MATCHED THEN UPDATE SET NAME = s.NAME", ctx)
     raw = tmp_path / "raw" / "raw.csv"
