@@ -41,6 +41,7 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import timezone
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -113,6 +114,10 @@ class TableMeta:
     # p ON (cols)): policy name + the table columns bound to its args
     row_access_policy: str | None = None
     row_access_columns: list[str] = field(default_factory=list)
+    # DYNAMIC TABLE / MATERIALIZED VIEW: the stored SELECT that ALTER
+    # ... REFRESH runs again, and the TARGET_LAG text (metadata only)
+    definition: str | None = None
+    target_lag: str | None = None
 
     def version_path(self, v: int | None = None) -> str:
         assert self.location
@@ -123,21 +128,70 @@ class TableMeta:
 
 
 @dataclass
-class StreamMeta:
+class SchemaObject:
+    """A schema-level object other than a table: one entry of
+    ``Catalog.objects``, keyed by its kind and its (database, schema,
+    name). Kinds differ only in their fields and in the three hooks
+    below, which do nothing unless a kind overrides them."""
+    KIND: ClassVar[str] = ""
+    database: str
+    schema: str
+    name: str
+
+    @property
+    def key(self) -> tuple[str, str, str]:
+        return (self.database, self.schema, self.name)
+
+    def check_create(self, catalog: Catalog) -> None:
+        """Raise when the name cannot be taken (caller holds the lock)."""
+
+    def check_drop(self, catalog: Catalog) -> None:
+        """Raise when a DROP by name must refuse (caller holds the lock)."""
+
+    def dropped(self, catalog: Catalog) -> None:
+        """Release what the object holds outside the catalog, once it has
+        left it: by DROP, or with its schema or database."""
+
+
+@dataclass
+class ViewMeta(SchemaObject):
+    """Named view: a stored SELECT, re-planned lazily against the
+    CURRENT table versions whenever referenced (Snowflake CREATE VIEW;
+    the reference declares a VIEW table type in its metadata model,
+    pkg/metadata/repository.go:46, but never implements the DDL — this
+    is a beyond-reference upgrade). The definition binds to the view's
+    own database/schema, like Snowflake."""
+    KIND: ClassVar[str] = "VIEW"
+    sql_text: str
+    column_names: list[str] | None = None
+    comment: str | None = None
+
+    @property
+    def physical(self) -> str:
+        return physical_name(self.database, self.schema, self.name) + "__view"
+
+    def check_create(self, catalog: Catalog) -> None:
+        if self.key in catalog.tables:
+            raise errors.object_exists(
+                f"{'.'.join(self.key)} (a table with that name exists)")
+
+    def ddl(self) -> str:
+        return f"CREATE OR REPLACE VIEW {self.name} AS {self.sql_text};"
+
+
+@dataclass
+class StreamMeta(SchemaObject):
     """CDC stream over a versioned table (Snowflake CREATE STREAM;
     beyond the reference). The stream's offset is a pinned version of
     the source table; reading the stream diffs the table's current
     contents against that version (``Executor._stream_ref``). The
     offset version is exempt from GC while the stream exists."""
-    database: str
-    schema: str
-    name: str
+    KIND: ClassVar[str] = "STREAM"
     src: tuple[str, str, str]
     src_uid: int
     offset_version: int
     append_only: bool = False
     comment: str | None = None
-    created_on: float = field(default_factory=time.time)
 
     @property
     def physical(self) -> str:
@@ -145,29 +199,22 @@ class StreamMeta:
 
 
 @dataclass
-class ViewMeta:
-    """Named view: a stored SELECT, re-planned lazily against the
-    CURRENT table versions whenever referenced (Snowflake CREATE VIEW;
-    the reference declares a VIEW table type in its metadata model,
-    pkg/metadata/repository.go:46, but never implements the DDL — this
-    is a beyond-reference upgrade). The definition binds to the view's
-    own database/schema, like Snowflake."""
-    database: str
-    schema: str
-    name: str
+class TaskMeta(SchemaObject):
+    """CREATE TASK (beyond the reference): stored SQL with a schedule
+    string. The emulator runs tasks on demand (EXECUTE TASK) — the
+    stream+task+MERGE incremental-maintenance triad — rather than
+    hosting a scheduler thread; SCHEDULE is carried as metadata the way
+    the reference carries CLUSTER BY."""
+    KIND: ClassVar[str] = "TASK"
     sql_text: str
-    column_names: list[str] | None = None
+    schedule: str | None = None
+    warehouse: str | None = None
     comment: str | None = None
-    created_on: float = field(default_factory=time.time)
-    uid: int = field(default_factory=itertools.count().__next__)
-
-    @property
-    def physical(self) -> str:
-        return physical_name(self.database, self.schema, self.name) + "__view"
+    state: str = "suspended"  # Snowflake tasks start suspended
 
 
 @dataclass
-class SequenceMeta:
+class SequenceMeta(SchemaObject):
     """CREATE SEQUENCE (beyond reference). Snowflake sequences
     guarantee uniqueness and per-statement monotonicity but NOT
     gaplessness — which is exactly what a distributed engine can
@@ -176,53 +223,76 @@ class SequenceMeta:
     inside the statement draw from the block via
     monotonically_increasing_id (unique per row, executor-parallel,
     no shuffle and no coordination)."""
-    database: str
-    schema: str
-    name: str
+    KIND: ClassVar[str] = "SEQUENCE"
     start: int = 1
     increment: int = 1
     next_base: int = 0  # statements reserve [next_base, next_base+block)
 
 
 @dataclass
-class MaskingPolicyMeta:
+class MaskingPolicyMeta(SchemaObject):
     """CREATE MASKING POLICY p AS (val <type>) RETURNS <type> -> <body>
     (beyond reference; Snowflake dynamic data masking). The body is a
     Snowflake-SQL expression over the single argument; the executor
     substitutes the masked column for the argument and evaluates the
     expression — including CURRENT_ROLE()-style context functions —
     with the QUERYING session's identity at read time."""
-    database: str
-    schema: str
-    name: str
+    KIND: ClassVar[str] = "MASKING POLICY"
     arg_name: str
     arg_type: str
     returns: str
     body: str
     comment: str | None = None
-    created_on: float = field(default_factory=time.time)
+
+    def check_drop(self, catalog: Catalog) -> None:
+        # Snowflake refuses to drop a policy still attached to a column
+        for tm in catalog.tables.values():
+            for c in tm.columns:
+                if c.masking_policy and catalog.resolve(
+                        c.masking_policy, tm.database, tm.schema) == self.key:
+                    raise errors.execution_error(
+                        f"masking policy {self.name} is attached to "
+                        f"{tm.name}.{c.name}; detach it first")
+
+    def ddl(self) -> str:
+        return (f"CREATE OR REPLACE MASKING POLICY {self.name} AS "
+                f"({self.arg_name} {self.arg_type}) RETURNS {self.returns} "
+                f"-> {self.body};")
 
 
 @dataclass
-class RowAccessPolicyMeta:
+class RowAccessPolicyMeta(SchemaObject):
     """CREATE ROW ACCESS POLICY p AS (a <t> [, b <t> ...]) RETURNS
     BOOLEAN -> <predicate> (beyond reference; Snowflake row-level
     security). Attached to a table with ALTER TABLE ... ADD ROW ACCESS
     POLICY p ON (col [, col ...]); reads keep only rows where the
     predicate — evaluated with the querying session's identity — is
     true."""
-    database: str
-    schema: str
-    name: str
+    KIND: ClassVar[str] = "ROW ACCESS POLICY"
     arg_names: list[str]
     arg_types: list[str]
     body: str
     comment: str | None = None
-    created_on: float = field(default_factory=time.time)
+
+    @property
+    def signature(self) -> str:
+        return "(" + ", ".join(f"{n} {t}" for n, t in zip(self.arg_names, self.arg_types)) + ")"
+
+    def check_drop(self, catalog: Catalog) -> None:
+        for tm in catalog.tables.values():
+            if tm.row_access_policy and catalog.resolve(
+                    tm.row_access_policy, tm.database, tm.schema) == self.key:
+                raise errors.execution_error(
+                    f"row access policy {self.name} is attached to "
+                    f"{tm.name}; detach it first")
+
+    def ddl(self) -> str:
+        return (f"CREATE OR REPLACE ROW ACCESS POLICY {self.name} AS "
+                f"{self.signature} RETURNS BOOLEAN -> {self.body};")
 
 
 @dataclass
-class FunctionMeta:
+class FunctionMeta(SchemaObject):
     """CREATE FUNCTION — SQL scalar UDF (beyond reference: the
     reference's README rules UDFs out). The body is a single SQL
     expression over the named arguments; call sites are expanded by
@@ -230,9 +300,7 @@ class FunctionMeta:
     the full Snowflake function surface and the expansion stays
     JVM-side (zero runtime dispatch cost — exactly how Snowflake
     inlines SQL UDFs into the calling query plan)."""
-    database: str
-    schema: str
-    name: str
+    KIND: ClassVar[str] = "FUNCTION"
     arg_names: list[str]
     arg_types: list[str]
     returns: str
@@ -246,43 +314,82 @@ class FunctionMeta:
     language: str = "SQL"
     handler: str | None = None
 
+    @property
+    def spark_name(self) -> str:
+        """Session-wide Spark registration name of a PYTHON UDF, mangled
+        with the full namespace so same-named functions in different
+        schemas never clobber each other."""
+        return re.sub(r"\W", "_", f"__pyudf__{self.database}__{self.schema}__{self.name}".lower())
 
-@dataclass
-class TaskMeta:
-    """CREATE TASK (beyond the reference): stored SQL with a schedule
-    string. The emulator runs tasks on demand (EXECUTE TASK) — the
-    stream+task+MERGE incremental-maintenance triad — rather than
-    hosting a scheduler thread; SCHEDULE is carried as metadata the way
-    the reference carries CLUSTER BY."""
-    database: str
-    schema: str
-    name: str
-    sql_text: str
-    schedule: str | None = None
-    warehouse: str | None = None
-    comment: str | None = None
-    state: str = "suspended"  # Snowflake tasks start suspended
-    created_on: float = field(default_factory=time.time)
-    last_run_on: float | None = None
+    @property
+    def return_text(self) -> str:
+        if self.table_columns is None:
+            return self.returns
+        return "TABLE (" + ", ".join(f"{n} {t}" for n, t in self.table_columns) + ")"
 
+    def dropped(self, catalog: Catalog) -> None:
+        if self.language == "PYTHON":
+            # without this the function would keep resolving after DROP
+            catalog.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {self.spark_name}")
 
-@dataclass
-class StageMeta:
-    database: str
-    schema: str
-    name: str
-    url: str | None = None
-    comment: str | None = None
-    directory: str = ""
+    def ddl(self) -> str:
+        args = ", ".join(f"{n} {t}" for n, t in zip(self.arg_names, self.arg_types))
+        head = f"CREATE OR REPLACE FUNCTION {self.name}({args}) RETURNS {self.return_text}"
+        if self.language == "PYTHON":
+            return f"{head} LANGUAGE PYTHON HANDLER='{self.handler}' AS $${self.body}$$;"
+        return f"{head} AS $${self.body}$$;"
 
 
 @dataclass
-class FileFormatMeta:
-    database: str
-    schema: str
-    name: str
+class ProcedureMeta(SchemaObject):
+    """CREATE PROCEDURE ... LANGUAGE SQL: a Snowflake Scripting block
+    run by CALL (plans/scripting.py)."""
+    KIND: ClassVar[str] = "PROCEDURE"
+    arg_names: list[str]
+    arg_types: list[str]
+    returns: str
+    body: str
+
+    def ddl(self) -> str:
+        args = ", ".join(f"{n} {t}" for n, t in zip(self.arg_names, self.arg_types))
+        return (f"CREATE OR REPLACE PROCEDURE {self.name}({args}) "
+                f"RETURNS {self.returns} LANGUAGE SQL AS $${self.body}$$;")
+
+
+@dataclass
+class StageMeta(SchemaObject):
+    """Internal stage: a directory of files (sources/stage.py)."""
+    KIND: ClassVar[str] = "STAGE"
+    directory: str
+
+    def dropped(self, catalog: Catalog) -> None:
+        shutil.rmtree(self.directory, ignore_errors=True)
+
+
+@dataclass
+class FileFormatMeta(SchemaObject):
+    KIND: ClassVar[str] = "FILE FORMAT"
     format_type: str = "CSV"
     options: dict = field(default_factory=dict)
+
+
+@dataclass
+class PipeMeta(SchemaObject):
+    """CREATE PIPE name AS COPY INTO ...: the stored COPY, run by ALTER
+    PIPE ... REFRESH (Snowpipe's REFRESH trigger; no auto-ingest
+    daemon in this emulator)."""
+    KIND: ClassVar[str] = "PIPE"
+    copy_sql: str
+
+    def ddl(self) -> str:
+        return f"CREATE OR REPLACE PIPE {self.name} AS {self.copy_sql};"
+
+
+# the kinds of Catalog.objects, by their Snowflake DDL keyword
+OBJECT_KINDS = {cls.KIND: cls for cls in (
+    ViewMeta, StreamMeta, TaskMeta, SequenceMeta, MaskingPolicyMeta,
+    RowAccessPolicyMeta, FunctionMeta, ProcedureMeta, StageMeta,
+    FileFormatMeta, PipeMeta)}
 
 
 class Catalog:
@@ -326,24 +433,19 @@ class Catalog:
         # dir renamed aside (O(1)); replaced when the same name is
         # dropped again (older graveyard dir is purged then)
         self.dropped_tables: dict[tuple[str, str, str], TableMeta] = {}
-        self.streams: dict[tuple[str, str, str], StreamMeta] = {}
-        self.tasks: dict[tuple[str, str, str], TaskMeta] = {}
-        self.views: dict[tuple[str, str, str], ViewMeta] = {}
+        # every schema-level object that is not a table: kind (its DDL
+        # keyword, OBJECT_KINDS) -> (database, schema, name) -> object.
+        # create, get, drop and list_objects are the one way in and
+        # out; DROP SCHEMA and DROP DATABASE empty it by walking it
+        self.objects: dict[str, dict[tuple[str, str, str], SchemaObject]] = {
+            kind: {} for kind in OBJECT_KINDS}
         # monotonic catalog-state counter, bumped on any table-data or
-        # view-definition change; view temp-view registrations cache on
-        # it so an unchanged catalog costs zero Spark calls per query
+        # object change; view temp-view registrations cache on it so an
+        # unchanged catalog costs zero Spark calls per query
         self.mutation: int = 0
-        self.stages: dict[tuple[str, str, str], StageMeta] = {}
-        self.sequences: dict[tuple[str, str, str], SequenceMeta] = {}
-        self.functions: dict[tuple[str, str, str], FunctionMeta] = {}
-        # column masking policies (beyond reference; Snowflake dynamic
-        # data masking): enforced at read time by the executor
-        self.masking_policies: dict[tuple[str, str, str], MaskingPolicyMeta] = {}
-        self.row_access_policies: dict[tuple[str, str, str], RowAccessPolicyMeta] = {}
         # metadata-only RBAC records: (priv, obj_type, obj_name,
         # grantee_type, grantee) — recorded + listable, not enforced
         self.grants: list[tuple[str, str, str, str, str]] = []
-        self.file_formats: dict[tuple[str, str, str], FileFormatMeta] = {}
         # TEMPORARY tables -> owning session object (strong ref: the
         # owner is compared by identity at cleanup, and holding the
         # ref prevents CPython id-reuse confusing ownership)
@@ -353,10 +455,6 @@ class Catalog:
         # re-COPY unless FORCE=TRUE; keyed per table, cleared on drop.
         # In-memory for the process lifetime (Snowflake's is 64 days).
         self.copy_load_history: dict[tuple[str, str, str], dict[str, tuple]] = {}
-        # CREATE PIPE name AS COPY INTO ... — stored COPY text,
-        # executed by ALTER PIPE ... REFRESH (Snowpipe's REFRESH
-        # trigger; no auto-ingest daemon in this emulator)
-        self.pipes: dict[tuple[str, str, str], str] = {}
         self._copy_locks: dict[tuple[str, str, str], threading.Lock] = {}
         # default namespace exists from the start, like the reference's
         # auto-created TEST_DB.PUBLIC (server/handlers/session.go:94-102)
@@ -389,12 +487,7 @@ class Catalog:
             for key in [k for k in self.tables if k[0] == db]:
                 self._drop_table_key(key)
             self.schemas = {k: v for k, v in self.schemas.items() if k[0] != db}
-            self.stages = {k: v for k, v in self.stages.items() if k[0] != db}
-            self.file_formats = {k: v for k, v in self.file_formats.items() if k[0] != db}
-            # every schema-level object namespace must empty too, or a
-            # recreated database inherits stale views/streams/UDFs that
-            # block same-named tables and stay listable forever
-            self._drop_namespace_objects(lambda k: k[0] == db)
+            self._drop_objects_in(db)
             del self.databases[db]
 
     def alter_database_comment(self, name: str, comment: str) -> None:
@@ -425,19 +518,70 @@ class Catalog:
                 raise errors.object_not_found(f"{db}.{sch}")
             for key in [k for k in self.tables if k[0] == db and k[1] == sch]:
                 self._drop_table_key(key)
-            self._drop_namespace_objects(lambda k: k[0] == db and k[1] == sch)
+            self._drop_objects_in(db, sch)
             del self.schemas[(db, sch)]
 
-    def _drop_namespace_objects(self, pred) -> None:
-        """Remove schema-level objects matching the key predicate (used
-        by DROP DATABASE/SCHEMA). Caller holds self._lock."""
-        for store_name in ("views", "streams", "tasks", "sequences",
-                           "functions", "procedures", "masking_policies",
-                           "row_access_policies"):
-            store = getattr(self, store_name, None)
-            if isinstance(store, dict):
-                for k in [k for k in store if pred(k)]:
-                    del store[k]
+    # ---------------- schema objects other than tables ----------------
+
+    def create(self, obj: SchemaObject, or_replace: bool = False,
+               if_not_exists: bool = False) -> SchemaObject:
+        """Add ``obj`` under its kind and key and return it. IF NOT
+        EXISTS returns the object already there, and without OR REPLACE
+        an existing one is 002002. Its schema must exist (002043)."""
+        with self._lock:
+            if (obj.database, obj.schema) not in self.schemas:
+                raise errors.object_not_found(f"{obj.database}.{obj.schema}")
+            store = self.objects[obj.KIND]
+            old = store.get(obj.key)
+            if old is not None:
+                if if_not_exists:
+                    return old
+                if not or_replace:
+                    raise errors.object_exists(".".join(obj.key))
+            obj.check_create(self)
+            store[obj.key] = obj
+            self.mutation += 1
+            return obj
+
+    def get(self, kind: str, name: str, database: str | None = None,
+            schema: str | None = None) -> SchemaObject:
+        key = self.resolve(name, database, schema)
+        obj = self.objects[kind].get(key)
+        if obj is None:
+            raise errors.object_not_found(".".join(key))
+        return obj
+
+    def drop(self, kind: str, name: str, database: str | None = None,
+             schema: str | None = None, if_exists: bool = False) -> SchemaObject | None:
+        """Remove the ``kind`` object ``name`` and return it; None when
+        IF EXISTS finds none."""
+        with self._lock:
+            key = self.resolve(name, database, schema)
+            obj = self.objects[kind].get(key)
+            if obj is None:
+                if if_exists:
+                    return None
+                raise errors.object_not_found(".".join(key))
+            obj.check_drop(self)
+            del self.objects[kind][key]
+            self.mutation += 1
+            obj.dropped(self)
+            return obj
+
+    def list_objects(self, kind: str, database: str | None = None) -> list:
+        """The ``kind`` objects in key order, of ``database`` only when
+        it is given."""
+        with self._lock:
+            return [obj for key, obj in sorted(self.objects[kind].items())
+                    if database is None or key[0] == database]
+
+    def _drop_objects_in(self, db: str, sch: str | None = None) -> None:
+        """Drop every object of database ``db`` (of its schema ``sch``
+        only, when given): DROP DATABASE's and DROP SCHEMA's cascade.
+        Caller holds self._lock."""
+        for store in self.objects.values():
+            for key in [k for k in store if k[0] == db and sch in (None, k[1])]:
+                store.pop(key).dropped(self)
         self.mutation += 1
 
     # ---------------- tables ----------------
@@ -483,8 +627,7 @@ class Catalog:
                     return existing
                 if key in self.tables:
                     self._drop_table_key(key)
-                if self.views.pop(key, None) is not None:
-                    self.mutation += 1
+                self.objects["VIEW"].pop(key, None)
                 if os.path.exists(tm.location):
                     # held by a table that swapped names, or left over
                     tm.location = f"{tm.location}.{tm.uid}"
@@ -510,7 +653,7 @@ class Catalog:
             if if_not_exists:
                 return self.tables[key]
             raise errors.object_exists(f"{db}.{sch}.{tbl}")
-        if key in self.views and not or_replace:
+        if key in self.objects["VIEW"] and not or_replace:
             raise errors.object_exists(f"{db}.{sch}.{tbl} (a view with that name exists)")
         return None
 
@@ -678,7 +821,7 @@ class Catalog:
             for store in (self.temp_owners, self.copy_load_history):
                 if old in store:
                     store[new] = store.pop(old)
-            for sm in self.streams.values():
+            for sm in self.objects["STREAM"].values():
                 if sm.src == old and sm.src_uid == tm.uid:
                     sm.src = new
             self.mutation += 1
@@ -770,99 +913,6 @@ class Catalog:
     def _table_lock(self, tm: TableMeta) -> threading.Lock:
         with self._lock:
             return self._table_locks.setdefault(tm.uid, threading.Lock())
-
-    # ---------------- masking policies ----------------
-
-    def create_masking_policy(self, name: str, arg_name: str, arg_type: str,
-                              returns: str, body: str,
-                              database: str | None = None, schema: str | None = None,
-                              or_replace: bool = False, if_not_exists: bool = False,
-                              comment: str | None = None) -> MaskingPolicyMeta:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key in self.masking_policies:
-                if if_not_exists:
-                    return self.masking_policies[key]
-                if not or_replace:
-                    raise errors.object_exists(".".join(key))
-            pm = MaskingPolicyMeta(key[0], key[1], key[2], arg_name.upper(),
-                                   arg_type.upper(), returns.upper(), body.strip(),
-                                   comment=comment)
-            self.masking_policies[key] = pm
-            self.mutation += 1
-            return pm
-
-    def drop_masking_policy(self, name: str, database: str | None = None,
-                            schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key not in self.masking_policies:
-                if if_exists:
-                    return
-                raise errors.object_not_found(".".join(key))
-            # Snowflake refuses to drop a policy still attached to a column
-            for tm in self.tables.values():
-                for c in tm.columns:
-                    if c.masking_policy and self.resolve(
-                            c.masking_policy, tm.database, tm.schema) == key:
-                        raise errors.execution_error(
-                            f"masking policy {key[2]} is attached to "
-                            f"{tm.name}.{c.name}; detach it first")
-            del self.masking_policies[key]
-            self.mutation += 1
-
-    def get_masking_policy(self, name: str, database: str | None = None,
-                           schema: str | None = None) -> MaskingPolicyMeta:
-        key = self.resolve(name, database, schema)
-        pm = self.masking_policies.get(key)
-        if pm is None:
-            raise errors.object_not_found(".".join(key))
-        return pm
-
-    def create_row_access_policy(self, name: str, arg_names: list[str],
-                                 arg_types: list[str], body: str,
-                                 database: str | None = None, schema: str | None = None,
-                                 or_replace: bool = False, if_not_exists: bool = False,
-                                 comment: str | None = None) -> RowAccessPolicyMeta:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key in self.row_access_policies:
-                if if_not_exists:
-                    return self.row_access_policies[key]
-                if not or_replace:
-                    raise errors.object_exists(".".join(key))
-            pm = RowAccessPolicyMeta(
-                key[0], key[1], key[2],
-                [a.upper() for a in arg_names],
-                [t.upper() for t in arg_types], body.strip(), comment=comment)
-            self.row_access_policies[key] = pm
-            self.mutation += 1
-            return pm
-
-    def drop_row_access_policy(self, name: str, database: str | None = None,
-                               schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key not in self.row_access_policies:
-                if if_exists:
-                    return
-                raise errors.object_not_found(".".join(key))
-            for tm in self.tables.values():
-                if tm.row_access_policy and self.resolve(
-                        tm.row_access_policy, tm.database, tm.schema) == key:
-                    raise errors.execution_error(
-                        f"row access policy {key[2]} is attached to "
-                        f"{tm.name}; detach it first")
-            del self.row_access_policies[key]
-            self.mutation += 1
-
-    def get_row_access_policy(self, name: str, database: str | None = None,
-                              schema: str | None = None) -> RowAccessPolicyMeta:
-        key = self.resolve(name, database, schema)
-        pm = self.row_access_policies.get(key)
-        if pm is None:
-            raise errors.object_not_found(".".join(key))
-        return pm
 
     def swap_tables(self, name_a: str, name_b: str,
                     database: str | None = None, schema: str | None = None) -> None:
@@ -1183,66 +1233,7 @@ class Catalog:
                     self._delete_versions(
                         tm, [x for x in self.versions(tm) if v < x <= live])
 
-    # ---------------- streams (CDC, beyond reference) ----------------
-
-    def create_stream(self, name: str, on_table: str, database: str | None = None,
-                      schema: str | None = None, append_only: bool = False,
-                      comment: str | None = None, if_not_exists: bool = False,
-                      or_replace: bool = False) -> StreamMeta:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key in self.streams:
-                if if_not_exists:
-                    return self.streams[key]
-                if not or_replace:
-                    raise errors.object_exists(".".join(key))
-            tm = self.get_table(on_table, database or key[0], schema or key[1])
-            sm = StreamMeta(*key, src=(tm.database, tm.schema, tm.name),
-                            src_uid=tm.uid, offset_version=tm.version,
-                            append_only=append_only, comment=comment)
-            self.streams[key] = sm
-            return sm
-
-    def create_task(self, name: str, sql_text: str, database: str | None = None,
-                    schema: str | None = None, schedule: str | None = None,
-                    warehouse: str | None = None, comment: str | None = None,
-                    if_not_exists: bool = False, or_replace: bool = False) -> TaskMeta:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key in self.tasks:
-                if if_not_exists:
-                    return self.tasks[key]
-                if not or_replace:
-                    raise errors.object_exists(".".join(key))
-            t = TaskMeta(*key, sql_text=sql_text, schedule=schedule,
-                         warehouse=warehouse, comment=comment)
-            self.tasks[key] = t
-            return t
-
-    def get_task(self, name: str, database: str | None = None,
-                 schema: str | None = None) -> TaskMeta:
-        key = self.resolve(name, database, schema)
-        if key not in self.tasks:
-            raise errors.object_not_found(".".join(key))
-        return self.tasks[key]
-
-    def drop_task(self, name: str, database: str | None = None,
-                  schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key not in self.tasks:
-                if if_exists:
-                    return
-                raise errors.object_not_found(".".join(key))
-            del self.tasks[key]
-
-    def drop_stream(self, name: str, database: str | None = None,
-                    schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            sm = self.streams.pop(key, None)
-            if sm is None and not if_exists:
-                raise errors.object_not_found(".".join(key))
+    # ---------------- streams and sequences ----------------
 
     def advance_stream(self, sm: StreamMeta) -> None:
         """Move the stream offset to the source table's current version
@@ -1254,86 +1245,8 @@ class Catalog:
 
     def _stream_pins(self, key: tuple[str, str, str]) -> set[int]:
         """Versions of table ``key`` pinned as stream offsets."""
-        return {sm.offset_version for sm in self.streams.values()
+        return {sm.offset_version for sm in self.objects["STREAM"].values()
                 if sm.src == key}
-
-    # ---------------- views (beyond reference) ----------------
-
-    def create_view(self, name: str, sql_text: str, database: str | None = None,
-                    schema: str | None = None, column_names: list[str] | None = None,
-                    comment: str | None = None, if_not_exists: bool = False,
-                    or_replace: bool = False) -> ViewMeta:
-        with self._lock:
-            db, sch, v = self.resolve(name, database, schema)
-            if (db, sch) not in self.schemas:
-                raise errors.object_not_found(f"{db}.{sch}")
-            key = (db, sch, v)
-            if key in self.tables:
-                raise errors.object_exists(f"{db}.{sch}.{v} (a table with that name exists)")
-            if key in self.views:
-                if if_not_exists:
-                    return self.views[key]
-                if not or_replace:
-                    raise errors.object_exists(f"{db}.{sch}.{v}")
-            vm = ViewMeta(db, sch, v, sql_text=sql_text, column_names=column_names,
-                          comment=comment)
-            self.views[key] = vm
-            self.mutation += 1
-            return vm
-
-    def get_view(self, name: str, database: str | None = None,
-                 schema: str | None = None) -> ViewMeta:
-        key = self.resolve(name, database, schema)
-        vm = self.views.get(key)
-        if vm is None:
-            raise errors.object_not_found(".".join(key))
-        return vm
-
-    def drop_view(self, name: str, database: str | None = None,
-                  schema: str | None = None, if_exists: bool = False) -> ViewMeta | None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            vm = self.views.pop(key, None)
-            if vm is None and not if_exists:
-                raise errors.object_not_found(".".join(key))
-            if vm is not None:
-                self.mutation += 1
-            return vm
-
-    # ---------------- SQL UDFs (beyond reference) ----------------
-
-    def create_function(self, name: str, arg_names: list[str], arg_types: list[str],
-                        returns: str, body: str, comment: str | None = None,
-                        database: str | None = None, schema: str | None = None,
-                        or_replace: bool = False,
-                        table_columns: list[tuple[str, str]] | None = None,
-                        language: str = "SQL",
-                        handler: str | None = None) -> FunctionMeta:
-        with self._lock:
-            db, sch, fn = self.resolve(name, database, schema)
-            key = (db, sch, fn)
-            if key in self.functions and not or_replace:
-                raise errors.object_exists(f"{db}.{sch}.{fn}")
-            fm = FunctionMeta(db, sch, fn, [a.upper() for a in arg_names],
-                              arg_types, returns, body, comment,
-                              table_columns=table_columns,
-                              language=language.upper(), handler=handler)
-            self.functions[key] = fm
-            self.mutation += 1
-            return fm
-
-    def drop_function(self, name: str, database: str | None = None,
-                      schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if key not in self.functions:
-                if if_exists:
-                    return
-                raise errors.object_not_found(".".join(key))
-            del self.functions[key]
-            self.mutation += 1
-
-    # ---------------- sequences (beyond reference) ----------------
 
     # per-statement NEXTVAL block: monotonically_increasing_id is
     # structured as partitionId * 2^33 + rowInPartition, so a block
@@ -1342,36 +1255,6 @@ class Catalog:
     # statements in the int64 value space at increment 1. Exhaustion
     # overflows loudly under ANSI mode rather than wrapping silently.
     SEQUENCE_BLOCK = 1 << 48
-
-    def create_sequence(self, name: str, start: int = 1, increment: int = 1,
-                        database: str | None = None, schema: str | None = None,
-                        if_not_exists: bool = False, or_replace: bool = False) -> SequenceMeta:
-        with self._lock:
-            db, sch, sq = self.resolve(name, database, schema)
-            key = (db, sch, sq)
-            if key in self.sequences:
-                if if_not_exists:
-                    return self.sequences[key]
-                if not or_replace:
-                    raise errors.object_exists(f"{db}.{sch}.{sq}")
-            sm = SequenceMeta(db, sch, sq, start=start, increment=increment)
-            self.sequences[key] = sm
-            return sm
-
-    def get_sequence(self, name: str, database: str | None = None,
-                     schema: str | None = None) -> SequenceMeta:
-        key = self.resolve(name, database, schema)
-        sm = self.sequences.get(key)
-        if sm is None:
-            raise errors.object_not_found(".".join(key))
-        return sm
-
-    def drop_sequence(self, name: str, database: str | None = None,
-                      schema: str | None = None, if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if self.sequences.pop(key, None) is None and not if_exists:
-                raise errors.object_not_found(".".join(key))
 
     def next_sequence_value(self, sm: SequenceMeta) -> int:
         """Draw ONE value (driver-side; used for inline VALUES rows,
@@ -1389,72 +1272,6 @@ class Catalog:
             base = sm.start + sm.next_base * sm.increment
             sm.next_base += self.SEQUENCE_BLOCK
             return base
-
-    # ---------------- stages / file formats ----------------
-
-    def create_stage(self, name: str, database: str | None = None, schema: str | None = None,
-                     url: str | None = None, comment: str | None = None,
-                     if_not_exists: bool = False, or_replace: bool = False,
-                     stage_root: str | None = None) -> StageMeta:
-        with self._lock:
-            db, sch, stg = self.resolve(name, database, schema)
-            if (db, sch, stg) in self.stages:
-                if if_not_exists:
-                    return self.stages[(db, sch, stg)]
-                if not or_replace:
-                    raise errors.object_exists(stg)
-            directory = url or os.path.join(stage_root or os.path.join(self.base_dir, "_stages"), db, sch, stg)
-            os.makedirs(directory, exist_ok=True)
-            sm = StageMeta(db, sch, stg, url=url, comment=comment, directory=directory)
-            self.stages[(db, sch, stg)] = sm
-            return sm
-
-    def get_stage(self, name: str, database: str | None = None, schema: str | None = None) -> StageMeta:
-        key = self.resolve(name, database, schema)
-        sm = self.stages.get(key)
-        if sm is None:
-            raise errors.object_not_found("@" + ".".join(key))
-        return sm
-
-    def drop_stage(self, name: str, database: str | None = None, schema: str | None = None,
-                   if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            sm = self.stages.pop(key, None)
-            if sm is None:
-                if if_exists:
-                    return
-                raise errors.object_not_found("@" + ".".join(key))
-            if sm.url is None and os.path.isdir(sm.directory):
-                shutil.rmtree(sm.directory, ignore_errors=True)
-
-    def create_file_format(self, name: str, format_type: str, options: dict,
-                           database: str | None = None, schema: str | None = None,
-                           or_replace: bool = False, if_not_exists: bool = False) -> FileFormatMeta:
-        with self._lock:
-            db, sch, ff = self.resolve(name, database, schema)
-            if (db, sch, ff) in self.file_formats:
-                if if_not_exists:
-                    return self.file_formats[(db, sch, ff)]
-                if not or_replace:
-                    raise errors.object_exists(ff)
-            fm = FileFormatMeta(db, sch, ff, format_type.upper(), options)
-            self.file_formats[(db, sch, ff)] = fm
-            return fm
-
-    def get_file_format(self, name: str, database: str | None = None, schema: str | None = None) -> FileFormatMeta:
-        key = self.resolve(name, database, schema)
-        fm = self.file_formats.get(key)
-        if fm is None:
-            raise errors.object_not_found(".".join(key))
-        return fm
-
-    def drop_file_format(self, name: str, database: str | None = None, schema: str | None = None,
-                         if_exists: bool = False) -> None:
-        with self._lock:
-            key = self.resolve(name, database, schema)
-            if self.file_formats.pop(key, None) is None and not if_exists:
-                raise errors.object_not_found(".".join(key))
 
     # ---------------- external registration (driver fixtures) ----------------
 

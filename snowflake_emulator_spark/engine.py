@@ -32,11 +32,6 @@ from .sources.stage import StageManager
 from .statements import StatementStore
 from .warehouse import WarehouseManager
 
-_CREATE_STAGE_RE = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMPORARY\s+|TEMP\s+)?STAGE\s+"
-    r"(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)", re.I
-)
-_DROP_STAGE_RE = re.compile(r"^\s*DROP\s+STAGE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 # stage file statements (gosnowflake sends these as plain sqlText)
 _PUT_RE = re.compile(
     r"^\s*PUT\s+('?file://[^\s']+'?)\s+@([\w.\"$/\-]+)"
@@ -45,11 +40,6 @@ _LIST_STAGE_RE = re.compile(r"^\s*(?:LIST|LS)\s+@([\w.\"$/\-]+)\s*$", re.I)
 _GET_STAGE_RE = re.compile(
     r"^\s*GET\s+@([\w.\"$/\-]+)\s+('?file://[^\s']+'?)(?:\s+.*)?$", re.I | re.S)
 _REMOVE_STAGE_RE = re.compile(r"^\s*(?:REMOVE|RM)\s+@([\w.\"$/\-]+)\s*$", re.I)
-_CREATE_FF_RE = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?FILE\s+FORMAT\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+(.*)$",
-    re.I | re.S,
-)
-_DROP_FF_RE = re.compile(r"^\s*DROP\s+FILE\s+FORMAT\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _CREATE_WH_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?WAREHOUSE\s+(IF\s+NOT\s+EXISTS\s+)?([\w\"$]+)(.*)$", re.I | re.S
 )
@@ -194,7 +184,7 @@ class Engine:
 
         path = bind_stage.strip().lstrip("@")
         name, _, prefix = path.partition("/")
-        stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
+        stage = self.catalog.get("STAGE", name, ctx.database, ctx.schema)
         table = bind_table([self.stages.get_file(stage, rel) for rel in
                             self.stages.list_files(stage, prefix=prefix or None)])
         if table is None:
@@ -294,18 +284,13 @@ class Engine:
         up = s.upper()
         # Snowflake Scripting surface (EXECUTE IMMEDIATE blocks,
         # CREATE PROCEDURE / CALL) — beyond reference
-        if up.startswith(("EXECUTE", "CREATE", "CALL", "DROP", "SHOW")):
+        if up.startswith(("EXECUTE", "CREATE", "CALL")):
             from .plans import scripting
 
             res = scripting.try_handle(self, s, ctx)
             if res is not None:
                 return res
-        # object-DDL handled at engine level (stage / file format / warehouse)
-        m = _CREATE_STAGE_RE.match(s)
-        if m:
-            self.catalog.create_stage(m.group(3), ctx.database, ctx.schema,
-                                      or_replace=bool(m.group(1)), if_not_exists=bool(m.group(2)))
-            return Result.status(f"Stage area {m.group(3).upper()} successfully created.")
+        # stage files and warehouses are handled at engine level
         m = _PUT_RE.match(s)
         if m:
             # local emulation of the client upload: both ends share a
@@ -316,7 +301,7 @@ class Engine:
 
             local = _up.unquote(_up.urlparse(m.group(1).strip("'")).path)
             name, _, prefix = m.group(2).partition("/")
-            stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
+            stage = self.catalog.get("STAGE", name, ctx.database, ctx.schema)
             base = os.path.basename(local)
             dest = f"{prefix.rstrip('/')}/{base}" if prefix else base
             self.stages.put_file(stage, local, dest)
@@ -335,7 +320,7 @@ class Engine:
         m = _LIST_STAGE_RE.match(s)
         if m:
             name, _, prefix = m.group(1).partition("/")
-            stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
+            stage = self.catalog.get("STAGE", name, ctx.database, ctx.schema)
             files = self.stages.list_files(stage, prefix=prefix or None)
             return Result(
                 columns=["name", "size", "md5", "last_modified"],
@@ -347,7 +332,7 @@ class Engine:
         m = _REMOVE_STAGE_RE.match(s)
         if m:
             name, _, prefix = m.group(1).partition("/")
-            stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
+            stage = self.catalog.get("STAGE", name, ctx.database, ctx.schema)
             removed = 0
             for rel in self.stages.list_files(stage, prefix=prefix or None):
                 self.stages.remove_file(stage, rel)
@@ -361,7 +346,7 @@ class Engine:
             dest_dir = _up.unquote(_up.urlparse(m.group(2).strip("'")).path)
             os.makedirs(dest_dir, exist_ok=True)
             name, _, prefix = m.group(1).partition("/")
-            stage = self.catalog.get_stage(name, ctx.database, ctx.schema)
+            stage = self.catalog.get("STAGE", name, ctx.database, ctx.schema)
             rows = []
             for rel in self.stages.list_files(stage, prefix=prefix or None):
                 data = self.stages.get_file(stage, rel)
@@ -375,20 +360,6 @@ class Engine:
                 column_types=[ColumnMetadata(c, "TEXT") for c in
                               ("file", "size", "status", "message")],
                 rows=rows)
-        m = _DROP_STAGE_RE.match(s)
-        if m:
-            self.catalog.drop_stage(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
-        m = _CREATE_FF_RE.match(s)
-        if m:
-            fmt, opts = _parse_ff_options(m.group(4))
-            self.catalog.create_file_format(m.group(3), fmt, opts, ctx.database, ctx.schema,
-                                            or_replace=bool(m.group(1)), if_not_exists=bool(m.group(2)))
-            return Result.status(f"File format {m.group(3).upper()} successfully created.")
-        m = _DROP_FF_RE.match(s)
-        if m:
-            self.catalog.drop_file_format(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CREATE_WH_RE.match(s)
         if m:
             size = "X-SMALL"
@@ -580,17 +551,3 @@ class Engine:
     def close(self) -> None:
         pass  # shared SparkSession is owned by the caller
 
-
-def _parse_ff_options(body: str) -> tuple[str, dict]:
-    fmt = "CSV"
-    opts: dict = {}
-    for m in re.finditer(r"(\w+)\s*=\s*('(?:[^']|'')*'|\S+)", body or ""):
-        k = m.group(1).upper()
-        v = m.group(2)
-        if v.startswith("'"):
-            v = v[1:-1].replace("''", "'")
-        if k == "TYPE":
-            fmt = v.upper()
-        else:
-            opts[k] = v
-    return fmt, opts

@@ -17,6 +17,7 @@ without one session's namespace living in Spark's shared temp views.
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import os
 import re
 import threading
@@ -28,7 +29,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from . import config, errors
-from .catalog import Catalog, ColumnDef, column_defs
+from .catalog import (OBJECT_KINDS, Catalog, ColumnDef, FileFormatMeta, FunctionMeta,
+                      MaskingPolicyMeta, PipeMeta, RowAccessPolicyMeta, SequenceMeta,
+                      StageMeta, StreamMeta, TaskMeta, ViewMeta, column_defs)
 from .plans import bindings as bindmod
 from .plans.classifier import StatementType, classify
 from .plans.translator import Translator
@@ -84,7 +87,19 @@ _CTAS_RE = re.compile(
     r"(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+AS\s+(SELECT\b.*|WITH\b.*|VALUES\b.*)$",
     re.I | re.S,
 )
-_DROP_TABLE_RE = re.compile(r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
+# DROP of any schema object, tables included: the kind is a key of
+# catalog.OBJECT_KINDS or one of _TABLE_KINDS; a function's or
+# procedure's argument types may follow its name
+_TABLE_KINDS = ("TABLE", "DYNAMIC TABLE", "MATERIALIZED VIEW")
+_DROP_OBJECT_RE = re.compile(
+    r"^\s*DROP\s+(" + "|".join(k.replace(" ", r"\s+") for k in (*_TABLE_KINDS, *OBJECT_KINDS))
+    + r")\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*(?:\([^)]*\))?\s*$", re.I)
+_CREATE_STAGE_RE = re.compile(
+    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMPORARY\s+|TEMP\s+)?STAGE\s+"
+    r"(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)", re.I)
+_CREATE_FF_RE = re.compile(
+    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?FILE\s+FORMAT\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+(.*)$",
+    re.I | re.S)
 _CREATE_EXT_TABLE_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?EXTERNAL\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+"
     r"(?:WITH\s+)?LOCATION\s*=\s*@([\w.\"$]+)(/\S*)?\s*"
@@ -94,13 +109,11 @@ _CREATE_EXT_TABLE_RE = re.compile(
 _ALTER_EXT_REFRESH_RE = re.compile(
     r"^\s*ALTER\s+EXTERNAL\s+TABLE\s+([\w.\"$]+)\s+REFRESH\s*(?:'[^']*')?\s*$", re.I)
 _CREATE_PIPE_RE = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?PIPE\s+([\w.\"$]+)\s+"
+    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?PIPE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+"
     r"(?:AUTO_INGEST\s*=\s*\w+\s+)?(?:COMMENT\s*=\s*'[^']*'\s+)?"
     r"AS\s+(COPY\s+INTO\b.*)$",
     re.I | re.S,
 )
-_DROP_PIPE_RE = re.compile(
-    r"^\s*DROP\s+PIPE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _ALTER_PIPE_REFRESH_RE = re.compile(
     r"^\s*ALTER\s+PIPE\s+([\w.\"$]+)\s+REFRESH\s*$", re.I)
 _CLONE_TABLE_RE = re.compile(
@@ -113,7 +126,6 @@ _CREATE_SEQ_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?SEQUENCE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)(.*)$",
     re.I | re.S,
 )
-_DROP_SEQ_RE = re.compile(r"^\s*DROP\s+SEQUENCE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 # SQL scalar UDF: CREATE FUNCTION f(a NUMBER, b VARCHAR) RETURNS NUMBER
 # LANGUAGE PYTHON scalar UDFs (Snowflake-real surface; the reference
 # rules all UDFs out): the body is a Python module, HANDLER names the
@@ -138,8 +150,6 @@ _CREATE_FUNC_RE = re.compile(
     r"(?:COMMENT\s*=\s*'([^']*)'\s*)?AS\s+(?:\$\$(.*?)\$\$|'(.*?)')\s*$",
     re.I | re.S,
 )
-_DROP_FUNC_RE = re.compile(
-    r"^\s*DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*(?:\([^)]*\))?\s*$", re.I)
 # metadata-only RBAC (beyond reference): grants recorded and listable,
 # not enforced — the single-user emulator has no authz boundary to
 # enforce against, like the reference's single-account model
@@ -156,21 +166,18 @@ _CREATE_VIEW_RE = re.compile(
     r"(?:\(([^)]*)\)\s*)?(?:COMMENT\s*=\s*'([^']*)'\s*)?AS\s+(SELECT\b.*|WITH\b.*)$",
     re.I | re.S,
 )
-_DROP_VIEW_RE = re.compile(r"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*;?\s*$", re.I)
 _CREATE_STREAM_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?STREAM\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)\s+"
     r"ON\s+TABLE\s+([\w.\"$]+)\s*(?:APPEND_ONLY\s*=\s*(TRUE|FALSE))?\s*"
     r"(?:COMMENT\s*=\s*'((?:[^']|'')*)')?\s*$",
     re.I,
 )
-_DROP_STREAM_RE = re.compile(r"^\s*DROP\s+STREAM\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _CREATE_TASK_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TASK\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"$]+)"
     r"((?:\s+(?:WAREHOUSE\s*=\s*[\w\"$]+|SCHEDULE\s*=\s*'(?:[^']|'')*'|COMMENT\s*=\s*'(?:[^']|'')*'))*)"
     r"\s+AS\s+(.+)$",
     re.I | re.S,
 )
-_DROP_TASK_RE = re.compile(r"^\s*DROP\s+TASK\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _CREATE_DYNTABLE_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?DYNAMIC\s+TABLE\s+([\w.\"$]+)"
     r"(?:\s+TARGET_LAG\s*=\s*'((?:[^']|'')*)')?(?:\s+WAREHOUSE\s*=\s*[\w\"$]+)?"
@@ -180,14 +187,9 @@ _CREATE_DYNTABLE_RE = re.compile(
 _CREATE_MV_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+([\w.\"$]+)\s+AS\s+(.*)$",
     re.I | re.S)
-_REFRESH_MV_RE = re.compile(
-    r"^\s*ALTER\s+MATERIALIZED\s+VIEW\s+([\w.\"$]+)\s+REFRESH\s*$", re.I)
-_DROP_MV_RE = re.compile(
-    r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
-_REFRESH_DYNTABLE_RE = re.compile(
-    r"^\s*ALTER\s+DYNAMIC\s+TABLE\s+([\w.\"$]+)\s+REFRESH\s*$", re.I)
-_DROP_DYNTABLE_RE = re.compile(
-    r"^\s*DROP\s+DYNAMIC\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
+# ALTER DYNAMIC TABLE | MATERIALIZED VIEW t REFRESH
+_REFRESH_RE = re.compile(
+    r"^\s*ALTER\s+(DYNAMIC\s+TABLE|MATERIALIZED\s+VIEW)\s+([\w.\"$]+)\s+REFRESH\s*$", re.I)
 _ALTER_TASK_RE = re.compile(r"^\s*ALTER\s+TASK\s+([\w.\"$]+)\s+(RESUME|SUSPEND)\s*$", re.I)
 _EXECUTE_TASK_RE = re.compile(r"^\s*EXECUTE\s+TASK\s+([\w.\"$]+)\s*$", re.I)
 # Snowflake stream metadata columns: Spark SQL needs them backticked
@@ -259,15 +261,11 @@ _CREATE_MASKING_POLICY_RE = re.compile(
     r"RETURNS\s+([A-Za-z_]\w*(?:\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*->\s*(.+?)\s*$",
     re.I | re.S,
 )
-_DROP_MASKING_POLICY_RE = re.compile(
-    r"^\s*DROP\s+MASKING\s+POLICY\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _CREATE_ROW_POLICY_RE = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?ROW\s+ACCESS\s+POLICY\s+(IF\s+NOT\s+EXISTS\s+)?"
     r"([\w.\"$]+)\s+AS\s*\(([^)]*)\)\s*RETURNS\s+BOOLEAN\s*->\s*(.+?)\s*$",
     re.I | re.S,
 )
-_DROP_ROW_POLICY_RE = re.compile(
-    r"^\s*DROP\s+ROW\s+ACCESS\s+POLICY\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*$", re.I)
 _ALTER_TABLE_ADD_ROW_POLICY_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+([\w.\"$]+)\s+ADD\s+ROW\s+ACCESS\s+POLICY\s+([\w.\"$]+)"
     r"\s+ON\s*\(([^)]*)\)\s*$", re.I)
@@ -340,6 +338,75 @@ def sql_literal(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
+# INFORMATION_SCHEMA views over Catalog.objects: the kind, the view's
+# schema, and the columns of one object after its catalog, schema and name
+_INFO_SCHEMA_OBJECTS = {
+    "VIEWS": ("VIEW", "table_catalog string, table_schema string, table_name string, "
+              "view_definition string", lambda o: (o.sql_text,)),
+    "STREAMS": ("STREAM", "stream_catalog string, stream_schema string, stream_name string, "
+                "table_name string, mode string, comment string",
+                lambda o: (".".join(o.src), "APPEND_ONLY" if o.append_only else "DEFAULT",
+                           o.comment)),
+    "TASKS": ("TASK", "task_catalog string, task_schema string, task_name string, "
+              "schedule string, state string, definition string, comment string",
+              lambda o: (o.schedule, o.state, o.sql_text, o.comment)),
+    "FUNCTIONS": ("FUNCTION", "function_catalog string, function_schema string, "
+                  "function_name string, argument_signature string, data_type string, "
+                  "function_language string, function_definition string, comment string",
+                  lambda o: (", ".join(o.arg_types),
+                             "TABLE" if o.table_columns is not None else o.returns,
+                             o.language, o.body, o.comment)),
+    "SEQUENCES": ("SEQUENCE", "sequence_catalog string, sequence_schema string, "
+                  "sequence_name string, start_value bigint, increment bigint",
+                  lambda o: (o.start, o.increment)),
+    "PIPES": ("PIPE", "pipe_catalog string, pipe_schema string, pipe_name string, "
+              "definition string", lambda o: (o.copy_sql,)),
+}
+
+# SHOW <kind> over Catalog.objects: the kind, the result's columns and
+# the row of one object
+_SHOW_OBJECTS = {
+    "VIEWS": ("VIEW", ["name", "database_name", "schema_name", "text", "comment"],
+              lambda o: [o.name, o.database, o.schema, o.sql_text[:200], o.comment]),
+    "STREAMS": ("STREAM", ["name", "database_name", "schema_name", "table_name", "mode",
+                           "comment"],
+                lambda o: [o.name, o.database, o.schema, ".".join(o.src),
+                           "APPEND_ONLY" if o.append_only else "DEFAULT", o.comment]),
+    "TASKS": ("TASK", ["name", "database_name", "schema_name", "schedule", "state",
+                       "warehouse", "definition", "comment"],
+              lambda o: [o.name, o.database, o.schema, o.schedule, o.state, o.warehouse,
+                         o.sql_text[:200], o.comment]),
+    "SEQUENCES": ("SEQUENCE", ["name", "database_name", "schema_name", "start", "increment"],
+                  lambda o: [o.name, o.database, o.schema, o.start, o.increment]),
+    "FUNCTIONS": ("FUNCTION", ["name", "database_name", "schema_name", "arguments",
+                               "language", "comment"],
+                  lambda o: [o.name, o.database, o.schema,
+                             f"{o.name}({', '.join(o.arg_types)}) RETURN {o.returns}",
+                             "SQL", o.comment]),
+    "PROCEDURES": ("PROCEDURE", ["name", "schema_name", "database_name", "arguments",
+                                 "language"],
+                   lambda o: [o.name, o.schema, o.database,
+                              f"{o.name}({', '.join(o.arg_types)}) RETURN {o.returns}",
+                              "SQL"]),
+    "MASKING POLICIES": ("MASKING POLICY", ["name", "database_name", "schema_name",
+                                            "signature", "return_type", "body", "comment"],
+                         lambda o: [o.name, o.database, o.schema,
+                                    f"({o.arg_name} {o.arg_type})", o.returns, o.body,
+                                    o.comment]),
+    "ROW ACCESS POLICIES": ("ROW ACCESS POLICY", ["name", "database_name", "schema_name",
+                                                  "signature", "return_type", "body",
+                                                  "comment"],
+                            lambda o: [o.name, o.database, o.schema, o.signature,
+                                       "BOOLEAN", o.body, o.comment]),
+    "STAGES": ("STAGE", ["name", "database_name", "schema_name"],
+               lambda o: [o.name, o.database, o.schema]),
+    "FILE FORMATS": ("FILE FORMAT", ["name", "type"], lambda o: [o.name, o.format_type]),
+    "PIPES": ("PIPE", ["name", "database_name", "schema_name", "definition"],
+              lambda o: [o.name, o.database, o.schema, o.copy_sql]),
+}
+_SHOW_OBJECTS["USER FUNCTIONS"] = _SHOW_OBJECTS["FUNCTIONS"]
+
+
 class Executor:
     def __init__(self, spark: SparkSession, catalog: Catalog, statements: StatementStore):
         self.spark = spark
@@ -357,8 +424,6 @@ class Executor:
         # INFORMATION_SCHEMA registrations: view name -> catalog.mutation
         # at build time
         self._info_schema_cache: dict[str, int] = {}
-        # dynamic tables: table key -> (stored SELECT, target_lag)
-        self._dyntable_defs: dict[tuple[str, str, str], tuple[str, str | None]] = {}
         # query result cache (r8; Snowflake USE_CACHED_RESULT): an
         # identical SELECT against an unchanged catalog re-serves the
         # stored Result instead of re-executing. Keyed on the bound
@@ -443,7 +508,7 @@ class Executor:
 
         def repl(m: re.Match) -> str:
             try:
-                sm = self.catalog.get_sequence(m.group(1), ctx.database, ctx.schema)
+                sm = self.catalog.get("SEQUENCE", m.group(1), ctx.database, ctx.schema)
             except errors.SnowflakeError:
                 return m.group(0)
             return str(self.catalog.next_sequence_value(sm))
@@ -462,7 +527,7 @@ class Executor:
 
         def repl(m: re.Match) -> str:
             try:
-                sm = self.catalog.get_sequence(m.group(1), ctx.database, ctx.schema)
+                sm = self.catalog.get("SEQUENCE", m.group(1), ctx.database, ctx.schema)
             except errors.SnowflakeError:
                 return m.group(0)  # not a sequence: leave for Spark to resolve
             if getattr(self._tt_local, "describe_only", False):
@@ -541,7 +606,7 @@ class Executor:
             return None
         if self._UNCACHEABLE_RE.search(sql):
             return None
-        for (_db, _sch, fn) in self.catalog.functions:
+        for (_db, _sch, fn) in self.catalog.objects["FUNCTION"]:
             if re.search(rf"\b{re.escape(fn)}\s*\(", sql, re.I):
                 return None
         import hashlib
@@ -552,7 +617,7 @@ class Executor:
         # masked reads depend on session identity even when the query
         # text mentions no context function: key per role/user whenever
         # any masking policy exists (zero-cost when the feature is unused)
-        if self.catalog.masking_policies or self.catalog.row_access_policies:
+        if self.catalog.objects["MASKING POLICY"] or self.catalog.objects["ROW ACCESS POLICY"]:
             payload += f"|{ctx.role}|{ctx.user}"
         return hashlib.md5(payload.encode()).hexdigest()
 
@@ -817,15 +882,16 @@ class Executor:
         r"\bGET_DDL\s*\(\s*'(\w+)'\s*,\s*'([\w.\"$]+)'\s*\)", re.I)
 
     def _rewrite_get_ddl(self, sql: str, ctx: SessionContext) -> str:
-        """GET_DDL('TABLE'|'VIEW'|'FUNCTION', 'name') -> the object's
-        reconstructed CREATE statement as a string literal (resolved at
-        rewrite time against the catalog, like Snowflake's server-side
-        evaluation)."""
+        """GET_DDL('<kind>', 'name') -> the object's reconstructed
+        CREATE statement as a string literal (resolved at rewrite time
+        against the catalog, like Snowflake's server-side evaluation)."""
         if "GET_DDL" not in sql.upper():
             return sql
 
         def _ddl_text(kind: str, name: str) -> str:
-            kind = kind.upper()
+            kind = kind.upper().replace("_", " ")
+            if kind == "POLICY":
+                kind = "MASKING POLICY"
             if kind == "TABLE":
                 tm = self.catalog.get_table(name, ctx.database, ctx.schema)
                 cols = []
@@ -842,50 +908,8 @@ class Executor:
                 if tm.clustering_key:
                     ddl += f" CLUSTER BY ({tm.clustering_key})"
                 return ddl + ";"
-            if kind == "VIEW":
-                vm = self.catalog.get_view(name, ctx.database, ctx.schema)
-                return f"CREATE OR REPLACE VIEW {vm.name} AS {vm.sql_text};"
-            if kind == "FUNCTION":
-                key = self.catalog.resolve(name, ctx.database, ctx.schema)
-                fm = self.catalog.functions.get(key)
-                if fm is None:
-                    raise errors.object_not_found(".".join(key))
-                args = ", ".join(f"{n} {t}" for n, t in zip(fm.arg_names, fm.arg_types))
-                ret = ("TABLE (" + ", ".join(f"{n} {t}" for n, t in fm.table_columns) + ")"
-                       if fm.table_columns is not None else fm.returns)
-                if fm.language == "PYTHON":
-                    return (f"CREATE OR REPLACE FUNCTION {fm.name}({args}) "
-                            f"RETURNS {ret} LANGUAGE PYTHON "
-                            f"HANDLER='{fm.handler}' AS $${fm.body}$$;")
-                return (f"CREATE OR REPLACE FUNCTION {fm.name}({args}) "
-                        f"RETURNS {ret} AS $${fm.body}$$;")
-            if kind == "PROCEDURE":
-                key = self.catalog.resolve(name, ctx.database, ctx.schema)
-                pm = getattr(self.catalog, "procedures", {}).get(key)
-                if pm is None:
-                    raise errors.object_not_found(".".join(key))
-                args = ", ".join(
-                    f"{n} {t}" for n, t in zip(pm["arg_names"], pm["arg_types"]))
-                return (f"CREATE OR REPLACE PROCEDURE {key[2]}({args}) "
-                        f"RETURNS {pm['returns']} LANGUAGE SQL AS "
-                        f"$${pm['body']}$$;")
-            if kind == "PIPE":
-                key = self.catalog.resolve(name, ctx.database, ctx.schema)
-                body = self.catalog.pipes.get(key)
-                if body is None:
-                    raise errors.object_not_found(".".join(key))
-                return f"CREATE OR REPLACE PIPE {key[2]} AS {body};"
-            if kind in ("POLICY", "MASKING_POLICY"):
-                pm = self.catalog.get_masking_policy(name, ctx.database, ctx.schema)
-                return (f"CREATE OR REPLACE MASKING POLICY {pm.name} AS "
-                        f"({pm.arg_name} {pm.arg_type}) RETURNS {pm.returns} "
-                        f"-> {pm.body};")
-            if kind == "ROW_ACCESS_POLICY":
-                rp = self.catalog.get_row_access_policy(name, ctx.database, ctx.schema)
-                args = ", ".join(f"{n} {t}" for n, t in
-                                 zip(rp.arg_names, rp.arg_types))
-                return (f"CREATE OR REPLACE ROW ACCESS POLICY {rp.name} AS "
-                        f"({args}) RETURNS BOOLEAN -> {rp.body};")
+            if hasattr(OBJECT_KINDS.get(kind), "ddl"):
+                return self.catalog.get(kind, name, ctx.database, ctx.schema).ddl()
             raise errors.invalid_parameter(f"GET_DDL: unsupported object type {kind}")
 
         return self._GET_DDL_RE.sub(
@@ -1072,31 +1096,23 @@ class Executor:
     # dispatch. Bodies may call other UDFs (bounded depth).
     # ------------------------------------------------------------------
 
-    @staticmethod
-    def _py_udf_spark_name(db: str, sch: str, fn: str) -> str:
-        """Session-wide Spark registration name for a PYTHON UDF:
-        uid-mangled with the full namespace so same-named functions in
-        different schemas/databases never clobber each other, and DROP
-        FUNCTION can deregister exactly one of them."""
-        return re.sub(r"\W", "_", f"__pyudf__{db}__{sch}__{fn}".lower())
-
     def _expand_udfs(self, sql: str, ctx: SessionContext) -> str:
-        if not self.catalog.functions:
+        functions = self.catalog.objects["FUNCTION"]
+        if not functions:
             return sql
         by_name: dict[str, object] = {}
         py_names: dict[str, str] = {}
-        for (db, sch, fn), fm in list(self.catalog.functions.items()):
+        for (db, sch, fn), fm in list(functions.items()):
             if db != ctx.database:
                 continue
             if fm.language != "SQL":
                 # PYTHON UDFs resolve as registered Spark UDFs under
                 # their mangled session-wide name: rewrite call sites
                 # (same binding rules as SQL UDFs)
-                mangled = self._py_udf_spark_name(db, sch, fn)
-                py_names[f"{sch}.{fn}"] = mangled
-                py_names[f"{db}.{sch}.{fn}"] = mangled
+                py_names[f"{sch}.{fn}"] = fm.spark_name
+                py_names[f"{db}.{sch}.{fn}"] = fm.spark_name
                 if sch == ctx.schema:
-                    py_names[fn] = mangled
+                    py_names[fn] = fm.spark_name
                 continue
             # qualified spellings always resolve; the BARE name binds
             # only to the session schema's function (a same-named UDF
@@ -1349,12 +1365,8 @@ class Executor:
             return self._transaction(sql)
         m = _EXECUTE_TASK_RE.match(sql)
         if m:
-            import time as _time
-
-            task = self.catalog.get_task(m.group(1), ctx.database, ctx.schema)
-            res = self._dispatch(task.sql_text, ctx, None)
-            task.last_run_on = _time.time()
-            return res
+            task = self.catalog.get("TASK", m.group(1), ctx.database, ctx.schema)
+            return self._dispatch(task.sql_text, ctx, None)
         return self._dml(sql, ctx)
 
     # ------------------------------------------------------------------
@@ -1545,7 +1557,7 @@ class Executor:
         """Record that the statement reads ``key`` when it is a stream
         and a ``reading_streams`` block is collecting on this thread."""
         reading = getattr(self._tt_local, "streams", None)
-        sm = self.catalog.streams.get(key)
+        sm = self.catalog.objects["STREAM"].get(key)
         if reading is not None and sm is not None:
             reading.append(sm)
 
@@ -1559,10 +1571,10 @@ class Executor:
         tm = self.catalog.tables.get(key)
         if tm is not None:
             return self._governed_ref(tm, self._pinned_view(tm), ctx, ctes)
-        sm = self.catalog.streams.get(key)
+        sm = self.catalog.objects["STREAM"].get(key)
         if sm is not None:
             return self._stream_ref(sm, ctx, ctes)
-        vm = self.catalog.views.get(key)
+        vm = self.catalog.objects["VIEW"].get(key)
         if vm is not None:
             # a view's plan can depend on its reader (context functions,
             # governed tables, views under it that do): never shared
@@ -1610,16 +1622,15 @@ class Executor:
             if not c.masking_policy:
                 exprs.append(f"`{c.name}`")
                 continue
-            pm = self.catalog.get_masking_policy(
-                c.masking_policy, tm.database, tm.schema)
+            pm = self.catalog.get("MASKING POLICY", c.masking_policy, tm.database, tm.schema)
             body = re.sub(rf"(?<![\w$]){re.escape(pm.arg_name)}(?![\w$])",
                           f"`{c.name}`", pm.body, flags=re.I)
             exprs.append(f"({self._rewrite_context_fns(body, ctx)}) AS `{c.name}`")
         exprs += [f"`{f}`" for f in passthrough]
         sel = f"SELECT {', '.join(exprs)} FROM {src}"
         if tm.row_access_policy:
-            rp = self.catalog.get_row_access_policy(
-                tm.row_access_policy, tm.database, tm.schema)
+            rp = self.catalog.get("ROW ACCESS POLICY", tm.row_access_policy,
+                                  tm.database, tm.schema)
             pred = rp.body
             for arg, coln in zip(rp.arg_names, tm.row_access_columns):
                 pred = re.sub(rf"(?<![\w$]){re.escape(arg)}(?![\w$])",
@@ -1636,8 +1647,7 @@ class Executor:
     # pkg/contentdata/repository_test.go:69; here the views are built
     # from catalog metadata with Snowflake-style logical names, scoped
     # to the session database like Snowflake's per-DB info schema)
-    _INFO_SCHEMA_VIEWS = {"TABLES", "COLUMNS", "VIEWS", "SCHEMATA", "DATABASES",
-                          "STREAMS", "TASKS", "SEQUENCES", "FUNCTIONS", "PIPES"}
+    _INFO_SCHEMA_VIEWS = {"TABLES", "COLUMNS", "SCHEMATA", "DATABASES", *_INFO_SCHEMA_OBJECTS}
 
     def _register_info_schema_view(self, which: str, db: str) -> str:
         # one registration per database: sessions in different databases
@@ -1657,7 +1667,7 @@ class Executor:
                      "YES" if tm.kind == "TRANSIENT" else "NO", tm.comment)
                     for tm in c.tables.values() if tm.database == db]
             rows += [(vm.database, vm.schema, vm.name, "VIEW", "NO", vm.comment)
-                     for vm in c.views.values() if vm.database == db]
+                     for vm in c.list_objects("VIEW", db)]
             schema = ("table_catalog string, table_schema string, table_name string, "
                       "table_type string, is_transient string, comment string")
         elif which == "COLUMNS":
@@ -1668,44 +1678,13 @@ class Executor:
             schema = ("table_catalog string, table_schema string, table_name string, "
                       "column_name string, ordinal_position int, data_type string, "
                       "is_nullable string")
-        elif which == "VIEWS":
-            rows = [(vm.database, vm.schema, vm.name, vm.sql_text)
-                    for vm in c.views.values() if vm.database == db]
-            schema = ("table_catalog string, table_schema string, table_name string, "
-                      "view_definition string")
         elif which == "SCHEMATA":
             rows = [(d, s) for (d, s) in c.schemas if d == db]
             schema = "catalog_name string, schema_name string"
-        elif which == "STREAMS":
-            rows = [(sm.database, sm.schema, sm.name, ".".join(sm.src),
-                     "APPEND_ONLY" if sm.append_only else "DEFAULT", sm.comment)
-                    for sm in c.streams.values() if sm.database == db]
-            schema = ("stream_catalog string, stream_schema string, stream_name string, "
-                      "table_name string, mode string, comment string")
-        elif which == "TASKS":
-            rows = [(t.database, t.schema, t.name, t.schedule, t.state, t.sql_text, t.comment)
-                    for t in c.tasks.values() if t.database == db]
-            schema = ("task_catalog string, task_schema string, task_name string, "
-                      "schedule string, state string, definition string, comment string")
-        elif which == "FUNCTIONS":
-            rows = [(f.database, f.schema, f.name,
-                     ", ".join(f.arg_types),
-                     "TABLE" if f.table_columns is not None else f.returns,
-                     f.language, f.body, f.comment)
-                    for f in c.functions.values() if f.database == db]
-            schema = ("function_catalog string, function_schema string, function_name string, "
-                      "argument_signature string, data_type string, function_language string, "
-                      "function_definition string, comment string")
-        elif which == "SEQUENCES":
-            rows = [(sq.database, sq.schema, sq.name, sq.start, sq.increment)
-                    for sq in c.sequences.values() if sq.database == db]
-            schema = ("sequence_catalog string, sequence_schema string, sequence_name string, "
-                      "start_value bigint, increment bigint")
-        elif which == "PIPES":
-            rows = [(k[0], k[1], k[2], v)
-                    for k, v in c.pipes.items() if k[0] == db]
-            schema = ("pipe_catalog string, pipe_schema string, pipe_name string, "
-                      "definition string")
+        elif which in _INFO_SCHEMA_OBJECTS:
+            kind, schema, row = _INFO_SCHEMA_OBJECTS[which]
+            rows = [(o.database, o.schema, o.name, *row(o))
+                    for o in c.list_objects(kind, db)]
         else:  # DATABASES
             rows = [(name, meta.get("comment")) for name, meta in c.databases.items()]
             schema = "database_name string, comment string"
@@ -1778,6 +1757,39 @@ class Executor:
     # DDL
     # ------------------------------------------------------------------
 
+    def _key(self, name: str, ctx: SessionContext) -> tuple[str, str, str]:
+        return self.catalog.resolve(name, ctx.database, ctx.schema)
+
+    def _create(self, obj, or_replace, if_not_exists=None) -> Result:
+        """CREATE [OR REPLACE] <kind> [IF NOT EXISTS] of a schema object
+        other than a table; the flags are the statement's matched
+        keywords (None: absent)."""
+        return self._created(self.catalog.create(
+            obj, or_replace=bool(or_replace), if_not_exists=bool(if_not_exists)))
+
+    @staticmethod
+    def _created(obj) -> Result:
+        kind = "Stage area" if obj.KIND == "STAGE" else obj.KIND.capitalize()
+        return Result.status(f"{kind} {obj.name} successfully created.")
+
+    def _drop(self, kind: str, name: str, if_exists: bool, ctx: SessionContext) -> Result:
+        """DROP <kind> [IF EXISTS] <name> of any schema object: a table
+        kind drops through the table path, where DROP DYNAMIC TABLE and
+        DROP MATERIALIZED VIEW refuse a table of another kind; the other
+        kinds through ``Catalog.drop``."""
+        key = self._key(name, ctx)
+        if kind in _TABLE_KINDS:
+            found = self.catalog.tables.get(key)
+            if found is not None and kind != "TABLE" and found.kind != kind:
+                raise errors.execution_error(f"{found.name} is not a {kind.lower()}")
+            self.catalog.drop_table(name, ctx.database, ctx.schema, if_exists=if_exists)
+        else:
+            found = self.catalog.drop(kind, name, ctx.database, ctx.schema, if_exists=if_exists)
+        if found is None:
+            return Result.status(
+                f"Drop statement executed successfully ({key[2]} already dropped).")
+        return Result.status(f"{key[2]} successfully dropped.")
+
     def _ddl(self, sql: str, ctx: SessionContext) -> Result:
         # COPY GRANTS is metadata-only here (grants are unenforced
         # records): accept and strip it anywhere in a CREATE statement
@@ -1793,20 +1805,27 @@ class Executor:
         if m:
             self.catalog.drop_database(m.group(2), if_exists=bool(m.group(1)))
             return Result.status(f"{m.group(2).upper()} successfully dropped.")
+        m = _DROP_OBJECT_RE.match(sql)
+        if m:
+            return self._drop(" ".join(m.group(1).upper().split()), m.group(3),
+                              bool(m.group(2)), ctx)
+        m = _CREATE_STAGE_RE.match(sql)
+        if m:
+            key = self._key(m.group(3), ctx)
+            directory = os.path.join(self.catalog.base_dir, "_stages", *key)
+            res = self._create(StageMeta(*key, directory=directory), m.group(1), m.group(2))
+            os.makedirs(directory, exist_ok=True)
+            return res
+        m = _CREATE_FF_RE.match(sql)
+        if m:
+            fmt, opts = _parse_ff_options(m.group(4))
+            return self._create(FileFormatMeta(*self._key(m.group(3), ctx), fmt, opts),
+                                m.group(1), m.group(2))
         m = _CREATE_MASKING_POLICY_RE.match(sql)
         if m:
-            pm = self.catalog.create_masking_policy(
-                m.group(3), m.group(4), m.group(5), m.group(6),
-                m.group(7).rstrip(";").strip(),
-                ctx.database, ctx.schema,
-                or_replace=bool(m.group(1)), if_not_exists=bool(m.group(2)))
-            return Result.status(
-                f"Masking policy {pm.name} successfully created.")
-        m = _DROP_MASKING_POLICY_RE.match(sql)
-        if m:
-            self.catalog.drop_masking_policy(
-                m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status("Statement executed successfully.")
+            return self._create(MaskingPolicyMeta(
+                *self._key(m.group(3), ctx), m.group(4).upper(), m.group(5).upper(),
+                m.group(6).upper(), m.group(7).rstrip(";").strip()), m.group(1), m.group(2))
         m = _CREATE_ROW_POLICY_RE.match(sql)
         if m:
             names, types = [], []
@@ -1814,23 +1833,15 @@ class Executor:
                 bits = part.strip().split(None, 1)
                 if len(bits) != 2:
                     raise errors.syntax_error(f"bad policy signature: ({m.group(4)})")
-                names.append(bits[0])
-                types.append(bits[1])
-            pm = self.catalog.create_row_access_policy(
-                m.group(3), names, types, m.group(5).rstrip(";").strip(),
-                ctx.database, ctx.schema,
-                or_replace=bool(m.group(1)), if_not_exists=bool(m.group(2)))
-            return Result.status(
-                f"Row access policy {pm.name} successfully created.")
-        m = _DROP_ROW_POLICY_RE.match(sql)
-        if m:
-            self.catalog.drop_row_access_policy(
-                m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status("Statement executed successfully.")
+                names.append(bits[0].upper())
+                types.append(bits[1].upper())
+            return self._create(RowAccessPolicyMeta(
+                *self._key(m.group(3), ctx), names, types, m.group(5).rstrip(";").strip()),
+                m.group(1), m.group(2))
         m = _ALTER_TABLE_ADD_ROW_POLICY_RE.match(sql)
         if m:
             tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-            pm = self.catalog.get_row_access_policy(m.group(2), tm.database, tm.schema)
+            pm = self.catalog.get("ROW ACCESS POLICY", m.group(2), tm.database, tm.schema)
             cols = [c.strip().strip('"').upper() for c in m.group(3).split(",") if c.strip()]
             if len(cols) != len(pm.arg_names):
                 raise errors.execution_error(
@@ -1905,7 +1916,7 @@ class Executor:
                     targets = [f"{d}.{s}.{t}" for (d, s, t) in self.catalog.tables
                                if d == db and s == sch]
                 else:
-                    targets = [f"{d}.{s}.{v}" for (d, s, v) in self.catalog.views
+                    targets = [f"{d}.{s}.{v}" for (d, s, v) in self.catalog.objects["VIEW"]
                                if d == db and s == sch]
                 for p in privs:
                     for t in targets:
@@ -1968,10 +1979,10 @@ class Executor:
 
             from .functions.typemap import snowflake_to_spark
 
-            fm = self.catalog.create_function(
-                m.group(2), arg_names, arg_types, m.group(4).strip(), body,
-                comment=m.group(5), database=ctx.database, schema=ctx.schema,
-                or_replace=bool(m.group(1)), language="PYTHON", handler=handler)
+            fm = self.catalog.create(FunctionMeta(
+                *self._key(m.group(2), ctx), [a.upper() for a in arg_names], arg_types,
+                m.group(4).strip(), body, m.group(5), language="PYTHON", handler=handler),
+                or_replace=bool(m.group(1)))
             spark_t = snowflake_to_spark(fm.returns)
             if isinstance(spark_t, T.DecimalType):
                 # NUMBER maps to DecimalType, but Python handlers
@@ -1988,11 +1999,8 @@ class Executor:
             # uid-mangled with the namespace; call sites are rewritten
             # via the catalog in _expand_udfs (the catalog entry carries
             # the user-facing name + DDL reconstruction)
-            self.spark.udf.register(
-                self._py_udf_spark_name(fm.database, fm.schema, fm.name),
-                fn, spark_t)
-            return Result.status(
-                f"Function {m.group(2).upper()} successfully created.")
+            self.spark.udf.register(fm.spark_name, fn, spark_t)
+            return self._created(fm)
         m = _CREATE_FUNC_RE.match(sql)
         if m:
             arg_names, arg_types = [], []
@@ -2018,70 +2026,39 @@ class Executor:
                         (parts[0].strip('"').upper(),
                          parts[1].strip() if len(parts) > 1 else "VARCHAR"))
                 returns = "TABLE"
-            self.catalog.create_function(
-                m.group(2), arg_names, arg_types, returns, body,
-                comment=m.group(5), database=ctx.database, schema=ctx.schema,
-                or_replace=bool(m.group(1)), table_columns=table_columns)
-            return Result.status(f"Function {m.group(2).upper()} successfully created.")
-        m = _DROP_FUNC_RE.match(sql)
-        if m:
-            key = self.catalog.resolve(m.group(2), ctx.database, ctx.schema)
-            fm = self.catalog.functions.get(key)
-            self.catalog.drop_function(m.group(2), ctx.database, ctx.schema,
-                                       if_exists=bool(m.group(1)))
-            if fm is not None and fm.language == "PYTHON":
-                # deregister the Spark-side UDF too: without this the
-                # function would keep resolving after DROP
-                self.spark.sql(
-                    "DROP TEMPORARY FUNCTION IF EXISTS "
-                    + self._py_udf_spark_name(*key))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
+            return self._create(FunctionMeta(
+                *self._key(m.group(2), ctx), [a.upper() for a in arg_names], arg_types,
+                returns, body, m.group(5), table_columns=table_columns), m.group(1))
         m = _CREATE_SEQ_RE.match(sql)
         if m:
             opts = m.group(4) or ""
             sm_ = re.search(r"START\s*(?:WITH\s*|=\s*)?(-?\d+)", opts, re.I)
             im_ = re.search(r"INCREMENT\s*(?:BY\s*|=\s*)?(-?\d+)", opts, re.I)
-            self.catalog.create_sequence(
-                m.group(3), start=int(sm_.group(1)) if sm_ else 1,
-                increment=int(im_.group(1)) if im_ else 1,
-                database=ctx.database, schema=ctx.schema,
-                if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
-            return Result.status(f"Sequence {m.group(3).upper()} successfully created.")
-        m = _DROP_SEQ_RE.match(sql)
-        if m:
-            self.catalog.drop_sequence(m.group(2), ctx.database, ctx.schema,
-                                       if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
+            return self._create(SequenceMeta(
+                *self._key(m.group(3), ctx), start=int(sm_.group(1)) if sm_ else 1,
+                increment=int(im_.group(1)) if im_ else 1), m.group(1), m.group(2))
         m = _CREATE_VIEW_RE.match(sql)
         if m:
             cols = [c.strip().strip('"').upper() for c in m.group(4).split(",")] if m.group(4) else None
-            # snapshot a pre-existing view so CREATE OR REPLACE with an
-            # INVALID definition restores it — Snowflake leaves the
-            # original view untouched when compilation fails
-            prior_key = self.catalog.resolve(m.group(3), ctx.database, ctx.schema)
-            prior_vm = self.catalog.views.get(prior_key)
-            vm = self.catalog.create_view(
-                m.group(3), m.group(6).strip(), ctx.database, ctx.schema,
-                column_names=cols, comment=m.group(5),
-                if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
+            key = self._key(m.group(3), ctx)
+            prior = self.catalog.objects["VIEW"].get(key)
+            vm = self.catalog.create(
+                ViewMeta(*key, m.group(6).strip(), cols, m.group(5)),
+                or_replace=bool(m.group(1)), if_not_exists=bool(m.group(2)))
             try:
                 # validate the definition now (Snowflake compiles the view
-                # at creation)
+                # at creation, and a failed CREATE OR REPLACE leaves the
+                # view it would replace in place)
                 self.spark.sql(self._view_sql(vm))
             except Exception as e:
-                if prior_vm is not None:
-                    self.catalog.views[prior_key] = prior_vm
+                if prior is not None:
+                    self.catalog.create(prior, or_replace=True)
                 else:
-                    self.catalog.drop_view(vm.name, vm.database, vm.schema, if_exists=True)
+                    self.catalog.drop("VIEW", vm.name, vm.database, vm.schema, if_exists=True)
                 if isinstance(e, errors.SnowflakeError):
                     raise
                 raise errors.execution_error(f"invalid view definition: {e}") from e
-            return Result.status(f"View {vm.name} successfully created.")
-        m = _DROP_VIEW_RE.match(sql)
-        if m:
-            self.catalog.drop_view(m.group(2), ctx.database, ctx.schema,
-                                   if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
+            return self._created(vm)
         m = _CREATE_DYNTABLE_RE.match(sql)
         if m:
             # DYNAMIC TABLE (beyond-reference): materialized query with
@@ -2090,23 +2067,10 @@ class Executor:
             # mode of Snowflake's dynamic tables; incremental refresh is
             # the stream+task+MERGE triad this engine also supports).
             df = self.query_df(m.group(4), ctx)
-            cols = column_defs(df.schema)
-            self.catalog.create_table(m.group(2), cols, ctx.database, ctx.schema,
-                                      or_replace=bool(m.group(1)), df=df)
-            tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            tm.kind = "DYNAMIC TABLE"
-            self._dyntable_defs[(tm.database, tm.schema, tm.name)] = (
-                m.group(4).strip(), m.group(3))
-            return Result.status(f"Dynamic table {m.group(2).upper()} successfully created.")
-        m = _REFRESH_DYNTABLE_RE.match(sql)
-        if m:
-            tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-            key = (tm.database, tm.schema, tm.name)
-            if key not in self._dyntable_defs:
-                raise errors.execution_error(f"{tm.name} is not a dynamic table")
-            df = self.query_df(self._dyntable_defs[key][0], ctx)
-            self.catalog.write_table(tm, lambda _live: df)
-            return Result.status("Statement executed successfully.")
+            tm = self.catalog.create_table(m.group(2), column_defs(df.schema), ctx.database,
+                                           ctx.schema, or_replace=bool(m.group(1)), df=df)
+            tm.kind, tm.definition, tm.target_lag = "DYNAMIC TABLE", m.group(4).strip(), m.group(3)
+            return Result.status(f"Dynamic table {tm.name} successfully created.")
         m = _CREATE_MV_RE.match(sql)
         if m:
             # MATERIALIZED VIEW (beyond reference): same machinery as
@@ -2114,89 +2078,45 @@ class Executor:
             # immutable versioned table; Snowflake's background
             # auto-refresh becomes explicit ALTER … REFRESH here
             df = self.query_df(m.group(3), ctx)
-            cols = column_defs(df.schema)
-            self.catalog.create_table(m.group(2), cols, ctx.database, ctx.schema,
-                                      or_replace=bool(m.group(1)), df=df)
-            tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            tm.kind = "MATERIALIZED VIEW"
-            self._dyntable_defs[(tm.database, tm.schema, tm.name)] = (
-                m.group(3).strip(), None)
-            return Result.status(
-                f"Materialized view {m.group(2).upper()} successfully created.")
-        m = _REFRESH_MV_RE.match(sql)
+            tm = self.catalog.create_table(m.group(2), column_defs(df.schema), ctx.database,
+                                           ctx.schema, or_replace=bool(m.group(1)), df=df)
+            tm.kind, tm.definition = "MATERIALIZED VIEW", m.group(3).strip()
+            return Result.status(f"Materialized view {tm.name} successfully created.")
+        m = _REFRESH_RE.match(sql)
         if m:
-            tm = self.catalog.get_table(m.group(1), ctx.database, ctx.schema)
-            key = (tm.database, tm.schema, tm.name)
-            if key not in self._dyntable_defs or tm.kind != "MATERIALIZED VIEW":
-                raise errors.execution_error(f"{tm.name} is not a materialized view")
-            df = self.query_df(self._dyntable_defs[key][0], ctx)
+            # the stored SELECT runs again into a new version of the table
+            kind = " ".join(m.group(1).upper().split())
+            tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
+            if tm.kind != kind or tm.definition is None:
+                raise errors.execution_error(f"{tm.name} is not a {kind.lower()}")
+            df = self.query_df(tm.definition, ctx)
             self.catalog.write_table(tm, lambda _live: df)
             return Result.status("Statement executed successfully.")
-        m = _DROP_MV_RE.match(sql)
-        if m:
-            try:
-                tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            except errors.SnowflakeError:
-                if m.group(1):
-                    return Result.status("Drop statement executed successfully.")
-                raise
-            # kind check: DROP MATERIALIZED VIEW on a base table must
-            # raise, not silently destroy the table (Snowflake parity)
-            if tm.kind != "MATERIALIZED VIEW":
-                raise errors.execution_error(
-                    f"{tm.name} is not a materialized view")
-            self._dyntable_defs.pop((tm.database, tm.schema, tm.name), None)
-            self.catalog.drop_table(m.group(2), ctx.database, ctx.schema)
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
-        m = _DROP_DYNTABLE_RE.match(sql)
-        if m:
-            tm = None
-            try:
-                tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            except errors.SnowflakeError:
-                if not m.group(1):
-                    raise
-            if tm is not None:
-                if tm.kind != "DYNAMIC TABLE":
-                    raise errors.execution_error(
-                        f"{tm.name} is not a dynamic table")
-                self._dyntable_defs.pop((tm.database, tm.schema, tm.name), None)
-                self.catalog.drop_table(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _CREATE_TASK_RE.match(sql)
         if m:
             opts = m.group(4) or ""
             wm = re.search(r"WAREHOUSE\s*=\s*([\w\"$]+)", opts, re.I)
             sm_ = re.search(r"SCHEDULE\s*=\s*'((?:[^']|'')*)'", opts, re.I)
             cm_ = re.search(r"COMMENT\s*=\s*'((?:[^']|'')*)'", opts, re.I)
-            self.catalog.create_task(
-                m.group(3), m.group(5).strip(), ctx.database, ctx.schema,
+            return self._create(TaskMeta(
+                *self._key(m.group(3), ctx), sql_text=m.group(5).strip(),
                 schedule=sm_.group(1) if sm_ else None,
                 warehouse=wm.group(1) if wm else None,
-                comment=cm_.group(1) if cm_ else None,
-                if_not_exists=bool(m.group(2)), or_replace=bool(m.group(1)))
-            return Result.status(f"Task {m.group(3).upper()} successfully created.")
-        m = _DROP_TASK_RE.match(sql)
-        if m:
-            self.catalog.drop_task(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
+                comment=cm_.group(1) if cm_ else None), m.group(1), m.group(2))
         m = _ALTER_TASK_RE.match(sql)
         if m:
-            t = self.catalog.get_task(m.group(1), ctx.database, ctx.schema)
+            t = self.catalog.get("TASK", m.group(1), ctx.database, ctx.schema)
             t.state = "started" if m.group(2).upper() == "RESUME" else "suspended"
+            self.catalog.mutation += 1
             return Result.status("Statement executed successfully.")
         m = _CREATE_STREAM_RE.match(sql)
         if m:
-            self.catalog.create_stream(
-                m.group(3), m.group(4), ctx.database, ctx.schema,
+            tm = self.catalog.get_table(m.group(4), ctx.database, ctx.schema)
+            return self._create(StreamMeta(
+                *self._key(m.group(3), ctx), src=(tm.database, tm.schema, tm.name),
+                src_uid=tm.uid, offset_version=tm.version,
                 append_only=bool(m.group(5)) and m.group(5).upper() == "TRUE",
-                comment=m.group(6), if_not_exists=bool(m.group(2)),
-                or_replace=bool(m.group(1)))
-            return Result.status(f"Stream {m.group(3).upper()} successfully created.")
-        m = _DROP_STREAM_RE.match(sql)
-        if m:
-            self.catalog.drop_stream(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
+                comment=m.group(6)), m.group(1), m.group(2))
         m = _CTAS_RE.match(sql)
         if m and " AS " in up:
             df = self.query_df(m.group(5), ctx)
@@ -2233,16 +2153,12 @@ class Executor:
             return Result.status("Statement executed successfully.")
         m = _ALTER_VIEW_RENAME_RE.match(sql)
         if m:
-            vm = self.catalog.get_view(m.group(1), ctx.database, ctx.schema)
-            new_key = self.catalog.resolve(m.group(2), ctx.database, ctx.schema)
+            vm = self.catalog.get("VIEW", m.group(1), ctx.database, ctx.schema)
+            new = self._key(m.group(2), ctx)
             with self.catalog._lock:
-                if new_key in self.catalog.views or new_key in self.catalog.tables:
-                    raise errors.object_exists(".".join(new_key))
-                old_key = (vm.database, vm.schema, vm.name)
-                del self.catalog.views[old_key]
-                vm.database, vm.schema, vm.name = new_key
-                self.catalog.views[new_key] = vm
-                self.catalog.mutation += 1
+                self.catalog.create(dataclasses.replace(
+                    vm, database=new[0], schema=new[1], name=new[2]))
+                self.catalog.drop("VIEW", vm.name, vm.database, vm.schema)
             return Result.status("Statement executed successfully.")
         m = _ALTER_TABLE_RETENTION_RE.match(sql)
         if m:
@@ -2299,7 +2215,7 @@ class Executor:
             # the files; file list snapshots at CREATE, REFRESH re-reads.
             from .sources.stage import StageManager
 
-            stage = self.catalog.get_stage(m.group(4), ctx.database, ctx.schema)
+            stage = self.catalog.get("STAGE", m.group(4), ctx.database, ctx.schema)
             path = StageManager(self.catalog)._resolve_inside(
                 stage, (m.group(5) or "").lstrip("/"))
             ff_opts: dict[str, str] = {}
@@ -2328,38 +2244,22 @@ class Executor:
         if m:
             from .operators.copy_into import parse_copy
 
-            parse_copy(m.group(3))  # validate the COPY text up front
-            key = self.catalog.resolve(m.group(2), ctx.database, ctx.schema)
-            if key in self.catalog.pipes and not m.group(1):
-                raise errors.object_exists(".".join(key))
-            self.catalog.pipes[key] = m.group(3).strip()
-            self.catalog.mutation += 1
-            return Result.status(f"Pipe {key[-1]} successfully created.")
+            parse_copy(m.group(4))  # validate the COPY text up front
+            return self._create(PipeMeta(*self._key(m.group(3), ctx), m.group(4).strip()),
+                                m.group(1), m.group(2))
         m = _ALTER_PIPE_REFRESH_RE.match(sql)
         if m:
-            key = self.catalog.resolve(m.group(1), ctx.database, ctx.schema)
-            if key not in self.catalog.pipes:
-                raise errors.object_not_found(".".join(key))
+            pipe = self.catalog.get("PIPE", m.group(1), ctx.database, ctx.schema)
             from .operators.copy_into import CopyProcessor
 
             # Snowflake resolves a pipe's COPY definition in the PIPE's
             # own schema, not the refreshing session's: run with a
             # context pinned to the pipe's database/schema so unqualified
             # table/stage names resolve as they did at CREATE PIPE time
-            pipe_ctx = SessionContext(database=key[0], schema=key[1])
+            pipe_ctx = SessionContext(database=pipe.database, schema=pipe.schema)
             pipe_ctx.parameters = ctx.parameters
             return CopyProcessor(self.spark, self.catalog).execute(
-                self.catalog.pipes[key], pipe_ctx, query_df=self.query_df)
-        m = _DROP_PIPE_RE.match(sql)
-        if m:
-            key = self.catalog.resolve(m.group(2), ctx.database, ctx.schema)
-            if key not in self.catalog.pipes:
-                if m.group(1):
-                    return Result.status("Drop skipped: pipe does not exist.")
-                raise errors.object_not_found(".".join(key))
-            del self.catalog.pipes[key]
-            self.catalog.mutation += 1
-            return Result.status(f"{key[-1]} successfully dropped.")
+                pipe.copy_sql, pipe_ctx, query_df=self.query_df)
         m = _CREATE_TABLE_RE.match(sql)
         if m:
             or_replace = bool(re.match(r"^\s*CREATE\s+OR\s+REPLACE", sql, re.I))
@@ -2369,17 +2269,6 @@ class Executor:
                                       or_replace=or_replace, clustering_key=clustering_key)
             self._apply_table_kind(m.group("kind"), m.group(3), ctx)
             return Result.status(f"Table {m.group(3).upper()} successfully created.")
-        m = _DROP_TABLE_RE.match(sql)
-        if m:
-            tm = None
-            try:
-                tm = self.catalog.get_table(m.group(2), ctx.database, ctx.schema)
-            except errors.SnowflakeError:
-                if not m.group(1):
-                    raise
-            if tm is not None:
-                self.catalog.drop_table(m.group(2), ctx.database, ctx.schema, if_exists=bool(m.group(1)))
-            return Result.status(f"{m.group(2).upper()} successfully dropped.")
         m = _ALTER_TABLE_RECLUSTER_RE.match(sql)
         if m:
             # RECLUSTER: rewrite the live version in clustering-key
@@ -2451,7 +2340,7 @@ class Executor:
         m = _ALTER_COLUMN_RE.match(sql)
         if m:
             return self._alter_column(m.group(1), m.group(2), m.group(3), ctx)
-        # stages / file formats / warehouses are handled by Engine wrappers
+        # warehouses are handled by Engine._run
         raise errors.syntax_error(f"unsupported DDL: {sql[:80]}")
 
     def _alter_column(self, tname: str, colname: str, rest: str,
@@ -2512,8 +2401,7 @@ class Executor:
             return Result.status("Statement executed successfully.")
         mp = re.match(r"^SET\s+MASKING\s+POLICY\s+([\w.\"$]+)(?:\s+FORCE)?$", r, re.I)
         if mp:
-            pm = self.catalog.get_masking_policy(
-                mp.group(1), tm.database, tm.schema)  # raises if absent
+            self.catalog.get("MASKING POLICY", mp.group(1), tm.database, tm.schema)  # raises if absent
             col.masking_policy = mp.group(1).upper()
             self.catalog.mutation += 1
             return Result.status("Statement executed successfully.")
@@ -2820,11 +2708,12 @@ class Executor:
 
     def _show(self, sql: str, ctx: SessionContext) -> Result:
         up = sql.upper()
-        # route on the FIRST keyword after SHOW [TERSE]: substring
-        # matching sent SHOW GRANTS ON TABLE MY_TABLES to the TABLES
-        # handler (the object name contained "TABLES")
-        fm0 = re.match(r"^\s*SHOW\s+(?:TERSE\s+)?([A-Z]+)", up)
-        first = fm0.group(1) if fm0 else ""
+        # route on the kind after SHOW [TERSE]: substring matching sent
+        # SHOW GRANTS ON TABLE MY_TABLES to the TABLES handler (the
+        # object name contained "TABLES")
+        fm0 = re.match(r"^\s*SHOW\s+(?:TERSE\s+)?((?:USER|FILE|MASKING|ROW\s+ACCESS)\s+\w+|\w+)", up)
+        what = " ".join(fm0.group(1).split()) if fm0 else ""
+        first = what.split(" ")[0]
         like = None
         lm = re.search(r"LIKE\s+'([^']*)'", sql, re.I)
         if lm:
@@ -2873,11 +2762,11 @@ class Executor:
                     if _match(sch) and (scope_db is None or db == scope_db
                                         or not sm_)]
             return Result(columns=["name", "database_name"], rows=rows)
-        if first == "PIPES":
-            rows = [[k[2], k[0], k[1], v]
-                    for k, v in sorted(self.catalog.pipes.items()) if _match(k[2])]
-            return Result(columns=["name", "database_name", "schema_name",
-                                   "definition"], rows=rows)
+        if what in _SHOW_OBJECTS:
+            kind, columns, row = _SHOW_OBJECTS[what]
+            return Result(columns=columns, rows=[
+                row(o) for o in self.catalog.list_objects(kind)
+                if _in_scope(o.database, o.schema) and _match(o.name)])
         if first == "COLUMNS":
             # SHOW COLUMNS [IN <table>]: current DB scope, optional table
             tm_ = re.search(r"IN\s+(?:TABLE\s+)?([\w.\"$]+)", up)
@@ -2897,17 +2786,9 @@ class Executor:
                                    "data_type", "null?", "default", "kind"], rows=rows)
         if first == "MATERIALIZED":
             rows = [
-                [tbl, db, sch, self._dyntable_defs.get((db, sch, tbl), ("",))[0][:200],
-                 tm.comment]
+                [tbl, db, sch, (tm.definition or "")[:200], tm.comment]
                 for (db, sch, tbl), tm in sorted(self.catalog.tables.items())
                 if _in_scope(db, sch) and tm.kind == "MATERIALIZED VIEW" and _match(tbl)
-            ]
-            return Result(columns=["name", "database_name", "schema_name", "text", "comment"], rows=rows)
-        if first == "VIEWS":
-            rows = [
-                [name, db, sch, vm.sql_text[:200], vm.comment]
-                for (db, sch, name), vm in sorted(self.catalog.views.items())
-                if _in_scope(db, sch) and _match(name)
             ]
             return Result(columns=["name", "database_name", "schema_name", "text", "comment"], rows=rows)
         if first == "OBJECTS":
@@ -2916,18 +2797,15 @@ class Executor:
                 for (db, sch, tbl), tm in sorted(self.catalog.tables.items())
                 if _in_scope(db, sch) and _match(tbl)
             ] + [
-                [name, db, sch, "VIEW", vm.comment]
-                for (db, sch, name), vm in sorted(self.catalog.views.items())
-                if _in_scope(db, sch) and _match(name)
+                [vm.name, vm.database, vm.schema, "VIEW", vm.comment]
+                for vm in self.catalog.list_objects("VIEW")
+                if _in_scope(vm.database, vm.schema) and _match(vm.name)
             ]
             return Result(columns=["name", "database_name", "schema_name", "kind", "comment"],
                           rows=sorted(rows))
         if first == "DYNAMIC":
             rows = [
-                [tbl, db, sch,
-                 (self._dyntable_defs.get((db, sch, tbl)) or (None, None))[1],
-                 (self._dyntable_defs.get((db, sch, tbl)) or (None, None))[0],
-                 tm.comment]
+                [tbl, db, sch, tm.target_lag, tm.definition, tm.comment]
                 for (db, sch, tbl), tm in sorted(self.catalog.tables.items())
                 if _in_scope(db, sch) and tm.kind == "DYNAMIC TABLE" and _match(tbl)
             ]
@@ -2975,47 +2853,6 @@ class Executor:
             rows = [[p, ot, on, gt, gr] for (p, ot, on, gt, gr) in sorted(grants)]
             return Result(columns=["privilege", "granted_on", "name",
                                    "granted_to", "grantee_name"], rows=rows)
-        if first in ("FUNCTIONS", "USER"):
-            # SHOW [USER] FUNCTIONS: per-DB scoped like the other handlers
-            rows = [
-                [name, db, sch,
-                 f"{name}({', '.join(f.arg_types)}) RETURN {f.returns}",
-                 "SQL", f.comment]
-                for (db, sch, name), f in sorted(self.catalog.functions.items())
-                if _in_scope(db, sch) and _match(name)
-            ]
-            return Result(columns=["name", "database_name", "schema_name",
-                                   "arguments", "language", "comment"], rows=rows)
-        if first == "TASKS":
-            # per-DB scoping like the other SHOW handlers
-            rows = [
-                [name, db, sch, t.schedule, t.state, t.warehouse,
-                 t.sql_text[:200], t.comment]
-                for (db, sch, name), t in sorted(self.catalog.tasks.items())
-                if _in_scope(db, sch) and _match(name)
-            ]
-            return Result(columns=["name", "database_name", "schema_name", "schedule",
-                                   "state", "warehouse", "definition", "comment"], rows=rows)
-        if first == "STREAMS":
-            rows = [
-                [name, db, sch, ".".join(sm.src), "APPEND_ONLY" if sm.append_only else "DEFAULT", sm.comment]
-                for (db, sch, name), sm in sorted(self.catalog.streams.items())
-                if _match(name)
-            ]
-            return Result(columns=["name", "database_name", "schema_name", "table_name", "mode", "comment"], rows=rows)
-        if first == "STAGES":
-            rows = [[stg, db, sch] for (db, sch, stg) in sorted(self.catalog.stages) if _match(stg)]
-            return Result(columns=["name", "database_name", "schema_name"], rows=rows)
-        if first == "SEQUENCES":
-            rows = [
-                [name, db, sch, sm.start, sm.increment]
-                for (db, sch, name), sm in sorted(self.catalog.sequences.items())
-                if _match(name)
-            ]
-            return Result(columns=["name", "database_name", "schema_name", "start", "increment"], rows=rows)
-        if first == "FILE":
-            rows = [[ff, fm.format_type] for (db, sch, ff), fm in sorted(self.catalog.file_formats.items()) if _match(ff)]
-            return Result(columns=["name", "type"], rows=rows)
         if first == "QUERY":
             # query-history log (reference: pkg/metadata/repository.go:1213-1378)
             rows = [[st.sql[:200], st.status.value, st.rows,
@@ -3024,24 +2861,6 @@ class Executor:
                     for st in self.statements.recent(100)]
             return Result(columns=["query_text", "status", "rows", "total_elapsed_time",
                                    "error_message", "query_id"], rows=rows)
-        if first == "ROW":  # SHOW ROW ACCESS POLICIES
-            rows = [[pm.name, db, sch,
-                     "(" + ", ".join(f"{n} {t}" for n, t in
-                                     zip(pm.arg_names, pm.arg_types)) + ")",
-                     "BOOLEAN", pm.body, pm.comment]
-                    for (db, sch, _n), pm in sorted(self.catalog.row_access_policies.items())
-                    if _match(pm.name)]
-            return Result(columns=["name", "database_name", "schema_name",
-                                   "signature", "return_type", "body", "comment"],
-                          rows=rows)
-        if first == "MASKING":
-            rows = [[pm.name, db, sch, f"({pm.arg_name} {pm.arg_type})",
-                     pm.returns, pm.body, pm.comment]
-                    for (db, sch, _n), pm in sorted(self.catalog.masking_policies.items())
-                    if _match(pm.name)]
-            return Result(columns=["name", "database_name", "schema_name",
-                                   "signature", "return_type", "body", "comment"],
-                          rows=rows)
         if first == "ROLES":
             return Result(columns=["name", "is_current"],
                           rows=[[ctx.role, "Y"]])
@@ -3073,9 +2892,8 @@ class Executor:
             rows = [[name, tm.kind]
                     for (d, s, name), tm in sorted(self.catalog.tables.items())
                     if d == db and s == sch]
-            rows += [[name, "VIEW"]
-                     for (d, s, name) in sorted(self.catalog.views)
-                     if d == db and s == sch]
+            rows += [[vm.name, "VIEW"] for vm in self.catalog.list_objects("VIEW", db)
+                     if vm.schema == sch]
             return Result(columns=["name", "kind"], rows=rows)
         rm_ = re.match(
             r"^\s*DESC(?:RIBE)?\s+RESULT\s+(?:'([^']+)'|LAST_QUERY_ID\s*\(\s*\))\s*$",
@@ -3092,7 +2910,7 @@ class Executor:
             return Result(columns=["name", "type", "kind", "null?"], rows=rows)
         vm_ = re.match(r"^\s*DESC(?:RIBE)?\s+VIEW\s+([\w.\"$]+)\s*$", sql, re.I)
         if vm_:
-            vm = self.catalog.get_view(vm_.group(1), ctx.database, ctx.schema)
+            vm = self.catalog.get("VIEW", vm_.group(1), ctx.database, ctx.schema)
             from .functions.typemap import spark_to_snowflake_name
 
             fields = self.spark.sql(self._view_sql(vm)).schema.fields
@@ -3104,14 +2922,9 @@ class Executor:
         fm_ = re.match(r"^\s*DESC(?:RIBE)?\s+FUNCTION\s+([\w.\"$]+)\s*(?:\([^)]*\))?\s*$",
                        sql, re.I)
         if fm_:
-            key = self.catalog.resolve(fm_.group(1), ctx.database, ctx.schema)
-            f = self.catalog.functions.get(key)
-            if f is None:
-                raise errors.object_not_found(".".join(key))
-            ret = ("TABLE (" + ", ".join(f"{n} {t}" for n, t in f.table_columns) + ")"
-                   if f.table_columns is not None else f.returns)
+            f = self.catalog.get("FUNCTION", fm_.group(1), ctx.database, ctx.schema)
             rows = [["signature", f"({', '.join(f.arg_types)})"],
-                    ["returns", ret], ["language", "SQL"], ["body", f.body]]
+                    ["returns", f.return_text], ["language", "SQL"], ["body", f.body]]
             return Result(columns=["property", "value"], rows=rows)
         m = re.match(r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?([\w.\"$]+)\s*$", sql, re.I)
         if not m:
@@ -3133,6 +2946,22 @@ class Executor:
     def _transaction(self, sql: str) -> Result:
         # Engine-level snapshot semantics; see Engine.begin/commit/rollback.
         raise errors.syntax_error("transaction statements must go through Engine.execute")
+
+
+def _parse_ff_options(body: str) -> tuple[str, dict]:
+    """The TYPE and the other options of a CREATE FILE FORMAT body."""
+    fmt = "CSV"
+    opts: dict = {}
+    for m in re.finditer(r"(\w+)\s*=\s*('(?:[^']|'')*'|\S+)", body or ""):
+        k = m.group(1).upper()
+        v = m.group(2)
+        if v.startswith("'"):
+            v = v[1:-1].replace("''", "'")
+        if k == "TYPE":
+            fmt = v.upper()
+        else:
+            opts[k] = v
+    return fmt, opts
 
 
 def parse_column_defs(body: str) -> list[ColumnDef]:

@@ -184,9 +184,9 @@ class CopyProcessor:
             return self._execute_load(stmt, tm, ctx)
 
     def _execute_load(self, stmt: CopyStatement, tm: TableMeta, ctx) -> Result:
-        stage = self.catalog.get_stage(stmt.stage, ctx.database, ctx.schema)
+        stage = self.catalog.get("STAGE", stmt.stage, ctx.database, ctx.schema)
         if "FORMAT_NAME" in stmt.options:
-            ff = self.catalog.get_file_format(stmt.options["FORMAT_NAME"], ctx.database, ctx.schema)
+            ff = self.catalog.get("FILE FORMAT", stmt.options["FORMAT_NAME"], ctx.database, ctx.schema)
             stmt.format_type = ff.format_type
             merged = dict(ff.options)
             merged.update({k: v for k, v in stmt.options.items() if k != "FORMAT_NAME"})
@@ -323,7 +323,7 @@ class CopyProcessor:
         """COPY INTO @stage FROM <table|(SELECT ...)> — distributed
         export. Each executor writes its partitions directly; the only
         driver work is path resolution and the row-count observation."""
-        stage = self.catalog.get_stage(um.group(1), ctx.database, ctx.schema)
+        stage = self.catalog.get("STAGE", um.group(1), ctx.database, ctx.schema)
         prefix = (um.group(2) or "").lstrip("/")
         src_sql, rest = _split_unload_source(um.string[um.end():])
         src_sql = src_sql.strip()

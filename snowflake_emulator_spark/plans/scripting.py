@@ -5,8 +5,9 @@ Supported surface, modeled on Snowflake's public Scripting docs:
 
 * ``EXECUTE IMMEDIATE '<sql>'`` / ``EXECUTE IMMEDIATE $$ <sql|block> $$``
 * ``CREATE [OR REPLACE] PROCEDURE p(a NUMBER, ...) RETURNS <type>
-  [LANGUAGE SQL] AS $$ <block> $$`` / ``CALL p(<exprs>)`` /
-  ``DROP PROCEDURE [IF EXISTS] p`` / ``SHOW PROCEDURES``
+  [LANGUAGE SQL] AS $$ <block> $$`` / ``CALL p(<exprs>)`` (DROP
+  PROCEDURE and SHOW PROCEDURES are the executor's, as for every
+  catalog object)
 
 Block grammar::
 
@@ -67,6 +68,7 @@ from __future__ import annotations
 
 import re
 
+from ..catalog import ProcedureMeta
 from ..result import ColumnMetadata, Result
 
 _EXEC_IMM_RE = re.compile(r"^\s*EXECUTE\s+IMMEDIATE\s+(.+)$", re.I | re.S)
@@ -78,11 +80,6 @@ _CREATE_PROC_RE = re.compile(
     re.I | re.S,
 )
 _CALL_RE = re.compile(r"^\s*CALL\s+([\w.\"$]+)\s*\((.*)\)\s*$", re.I | re.S)
-_DROP_PROC_RE = re.compile(
-    r"^\s*DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?([\w.\"$]+)\s*(?:\([^)]*\))?\s*$",
-    re.I,
-)
-_SHOW_PROC_RE = re.compile(r"^\s*SHOW\s+PROCEDURES\s*$", re.I)
 
 
 def try_handle(engine, s: str, ctx) -> Result | None:
@@ -97,11 +94,6 @@ def try_handle(engine, s: str, ctx) -> Result | None:
     m = _CALL_RE.match(s)
     if m:
         return _call_procedure(engine, ctx, m.group(1), m.group(2))
-    m = _DROP_PROC_RE.match(s)
-    if m:
-        return _drop_procedure(engine, ctx, m.group(2), bool(m.group(1)))
-    if _SHOW_PROC_RE.match(s):
-        return _show_procedures(engine, ctx)
     return None
 
 
@@ -168,75 +160,28 @@ def _create_procedure(engine, ctx, m: re.Match) -> Result:
                 raise errors.syntax_error(f"bad procedure argument: {part}")
             arg_names.append(am.group(1).upper())
             arg_types.append(am.group(2).strip())
-    procs = _proc_store(engine)
-    key = _resolve(engine, name, ctx)
-    if key in procs and not or_replace:
-        from .. import errors
-
-        raise errors.object_exists(".".join(key))
-    procs[key] = {"arg_names": arg_names, "arg_types": arg_types,
-                  "returns": returns.upper(), "body": body}
-    return Result.status(f"Procedure {key[-1]} successfully created.")
+    pm = engine.catalog.create(ProcedureMeta(
+        *engine.catalog.resolve(name, ctx.database, ctx.schema),
+        arg_names, arg_types, returns.upper(), body), or_replace=or_replace)
+    return Result.status(f"Procedure {pm.name} successfully created.")
 
 
 def _call_procedure(engine, ctx, name: str, args_src: str) -> Result:
-    procs = _proc_store(engine)
-    key = _resolve(engine, name, ctx)
-    if key not in procs:
-        from .. import errors
-
-        raise errors.object_not_found(".".join(key))
-    pm = procs[key]
+    pm = engine.catalog.get("PROCEDURE", name, ctx.database, ctx.schema)
     args = [a for a in engine.executor.translator._split_args(args_src)
             if a.strip()] if args_src.strip() else []
-    if len(args) != len(pm["arg_names"]):
+    if len(args) != len(pm.arg_names):
         from .. import errors
 
         raise errors.invalid_parameter(
-            f"{key[-1]} expects {len(pm['arg_names'])} argument(s), got {len(args)}")
+            f"{pm.name} expects {len(pm.arg_names)} argument(s), got {len(args)}")
     values = {an: _eval_expr(engine, ctx, a, {})
-              for an, a in zip(pm["arg_names"], args)}
-    body = pm["body"]
+              for an, a in zip(pm.arg_names, args)}
+    body = pm.body
     if not re.match(r"^(DECLARE|BEGIN)\b", body, re.I):
         body = f"BEGIN {body}; END"
-    return _run_block(engine, ctx, body, values, result_col=key[-1],
-                      declared=pm["returns"])
-
-
-def _drop_procedure(engine, ctx, name: str, if_exists: bool) -> Result:
-    procs = _proc_store(engine)
-    key = _resolve(engine, name, ctx)
-    if key not in procs:
-        if if_exists:
-            return Result.status("Drop skipped: procedure does not exist.")
-        from .. import errors
-
-        raise errors.object_not_found(".".join(key))
-    del procs[key]
-    return Result.status(f"{key[-1]} successfully dropped.")
-
-
-def _show_procedures(engine, ctx) -> Result:
-    procs = _proc_store(engine)
-    cols = ["name", "schema_name", "database_name", "arguments", "language"]
-    rows = [
-        [k[2], k[1], k[0],
-         f"{k[2]}({', '.join(p['arg_types'])}) RETURN {p['returns']}", "SQL"]
-        for k, p in sorted(procs.items())
-    ]
-    return Result(columns=cols,
-                  column_types=[ColumnMetadata(c, "TEXT") for c in cols],
-                  rows=rows)
-
-
-def _proc_store(engine) -> dict:
-    if not hasattr(engine.catalog, "procedures"):
-        engine.catalog.procedures = {}
-    return engine.catalog.procedures
-
-
-def _resolve(engine, name: str, ctx) -> tuple:
-    return engine.catalog.resolve(name, ctx.database, ctx.schema)
+    return _run_block(engine, ctx, body, values, result_col=pm.name,
+                      declared=pm.returns)
 
 
 # ---------------------------------------------------------------------------

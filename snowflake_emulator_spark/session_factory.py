@@ -38,12 +38,7 @@ def build_spark(app_name: str = "snowflake_emulator_spark", master: str | None =
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    from .functions.extras import register_extras
-    from .functions.textsim import register_text_similarity
-
-    register_text_similarity(spark)
-    register_extras(spark)
-    return spark
+    return ensure_engine_confs(spark)
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
@@ -53,6 +48,13 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    # PySpark logs the JVM stack trace of every failed analysis (about
+    # 10 KB each) through these two loggers; the engine maps the error
+    # to a Snowflake code and returns it, so the trace is only noise
+    from pyspark.logger import PySparkLogger
+
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        PySparkLogger.getLogger(name).disabled = True
     from .functions.extras import register_extras
     from .functions.textsim import register_text_similarity
 

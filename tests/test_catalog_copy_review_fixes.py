@@ -27,7 +27,7 @@ def test_rollback_then_copy_does_not_resurrect_rows(engine, tmp_path):
     engine.execute("CREATE STAGE rb_stage", ctx)
     f = tmp_path / "rb.csv"
     f.write_text("2,copied\n")
-    engine.stages.put_file(engine.catalog.get_stage("rb_stage", ctx.database, ctx.schema), str(f))
+    engine.stages.put_file(engine.catalog.get("STAGE", "rb_stage", ctx.database, ctx.schema), str(f))
     engine.execute("BEGIN", ctx)
     engine.execute("COPY INTO rb_t FROM @rb_stage/rb.csv", ctx)
     engine.execute("COMMIT", ctx)
@@ -51,7 +51,7 @@ def test_copy_ndjson_stage_file(engine, tmp_path):
     engine.execute("CREATE STAGE nd_stage", ctx)
     f = tmp_path / "docs.json"
     f.write_text('{"a":1}\n{"a":2}\n{"a":3}\n')
-    engine.stages.put_file(engine.catalog.get_stage("nd_stage", ctx.database, ctx.schema), str(f))
+    engine.stages.put_file(engine.catalog.get("STAGE", "nd_stage", ctx.database, ctx.schema), str(f))
     res = engine.execute("COPY INTO nd_t FROM @nd_stage/docs.json "
                          "FILE_FORMAT=(TYPE=JSON)", ctx)
     assert res.rows_loaded == 3
@@ -68,7 +68,7 @@ def test_copy_null_if_list_option(engine, tmp_path):
     engine.execute("CREATE STAGE ni_stage", ctx)
     f = tmp_path / "ni.csv"
     f.write_text("1,NULL\n2,N/A\n3,ok\n")
-    engine.stages.put_file(engine.catalog.get_stage("ni_stage", ctx.database, ctx.schema), str(f))
+    engine.stages.put_file(engine.catalog.get("STAGE", "ni_stage", ctx.database, ctx.schema), str(f))
     engine.execute("COPY INTO ni_t FROM @ni_stage/ni.csv "
                    "FILE_FORMAT=(TYPE=CSV NULL_IF=('NULL','N/A'))", ctx)
     got = dict(_rows(engine.execute("SELECT id, v FROM ni_t", ctx)))
@@ -81,7 +81,7 @@ def test_copy_validation_mode_never_loads(engine, tmp_path):
     engine.execute("CREATE STAGE vm_stage", ctx)
     f = tmp_path / "vm.csv"
     f.write_text("1\n2\n")
-    engine.stages.put_file(engine.catalog.get_stage("vm_stage", ctx.database, ctx.schema), str(f))
+    engine.stages.put_file(engine.catalog.get("STAGE", "vm_stage", ctx.database, ctx.schema), str(f))
     for mode in ("RETURN_ERRORS", "RETURN_ALL_ERRORS", "RETURN_2_ROWS"):
         engine.execute(
             f"COPY INTO vm_t FROM @vm_stage/vm.csv VALIDATION_MODE='{mode}'", ctx)
@@ -95,7 +95,7 @@ def test_copy_pattern_is_anchored(engine, tmp_path):
     engine.execute("CREATE STAGE pt_stage", ctx)
     (tmp_path / "a.csv").write_text("1\n")
     (tmp_path / "a.csv.bak").write_text("99\n")
-    stage = engine.catalog.get_stage("pt_stage", ctx.database, ctx.schema)
+    stage = engine.catalog.get("STAGE", "pt_stage", ctx.database, ctx.schema)
     engine.stages.put_file(stage, str(tmp_path / "a.csv"))
     engine.stages.put_file(stage, str(tmp_path / "a.csv.bak"))
     res = engine.execute("COPY INTO pt_t FROM @pt_stage PATTERN='a[.]csv'", ctx)

@@ -68,7 +68,7 @@ def test_concurrent_identical_copy_loads_once(engine, tmp_path):
     engine.execute("CREATE STAGE cc_s", ctx)
     p = tmp_path / "r.csv"
     p.write_text("1\n2\n3\n")
-    engine.stages.put_file(engine.catalog.get_stage("cc_s"), str(p))
+    engine.stages.put_file(engine.catalog.get("STAGE", "cc_s"), str(p))
     errs = []
 
     def run():

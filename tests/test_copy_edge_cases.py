@@ -15,7 +15,7 @@ def ctx():
 
 def _stage_with(engine, tmp_path, name, files):
     engine.execute(f"CREATE STAGE {name}")
-    stage = engine.catalog.get_stage(name)
+    stage = engine.catalog.get("STAGE", name)
     for fname, content in files.items():
         p = tmp_path / fname
         if isinstance(content, bytes):
@@ -88,7 +88,7 @@ def test_copy_parquet(engine, tmp_path, ctx):
     src = glob.glob(str(tmp_path / "pq" / "*.parquet"))[0]
     shutil.copy(src, local)
     engine.execute("CREATE STAGE s6", ctx)
-    engine.stages.put_file(engine.catalog.get_stage("s6"), str(local), "data.parquet")
+    engine.stages.put_file(engine.catalog.get("STAGE", "s6"), str(local), "data.parquet")
     r = engine.execute("COPY INTO p1 FROM @s6 FILE_FORMAT=(TYPE=PARQUET)", ctx)
     assert r.rows_loaded == 2
     rows = [tuple(x) for x in engine.execute("SELECT * FROM p1 ORDER BY id", ctx).rows]
@@ -136,7 +136,7 @@ def test_copy_unload_csv_header(engine, tmp_path):
         "HEADER = TRUE OVERWRITE = TRUE", ctx)
     assert r.rows[0][0] == 1
     import glob as _glob
-    stage = engine.catalog.get_stage("unload_csv")
+    stage = engine.catalog.get("STAGE", "unload_csv")
     from snowflake_emulator_spark.sources.stage import StageManager
     root = StageManager(engine.catalog)._resolve_inside(stage, "c")
     files = [f for f in _glob.glob(root + "/*.csv")]
@@ -176,7 +176,7 @@ def test_copy_transformation_select(engine, tmp_path):
     ctx = SessionContext()
     engine.execute("CREATE TABLE xform_t (id INTEGER, name VARCHAR, score INTEGER)", ctx)
     engine.execute("CREATE STAGE xform_stage", ctx)
-    stage = engine.catalog.get_stage("xform_stage")
+    stage = engine.catalog.get("STAGE", "xform_stage")
     (tmp_path / "raw.csv").write_text("1,  alice ,90\n2, bob ,80\n")
     engine.stages.put_file(stage, str(tmp_path / "raw.csv"))
     r = engine.execute(
@@ -198,7 +198,7 @@ def test_copy_xml_load_and_unload(engine, tmp_path, ctx):
     local = tmp_path / "data.xml"
     local.write_text(xml)
     engine.execute("CREATE STAGE sx1", ctx)
-    engine.stages.put_file(engine.catalog.get_stage("sx1"), str(local), "data.xml")
+    engine.stages.put_file(engine.catalog.get("STAGE", "sx1"), str(local), "data.xml")
     r = engine.execute(
         "COPY INTO x1 FROM @sx1 FILE_FORMAT=(TYPE=XML ROW_TAG='row')", ctx)
     assert r.rows_loaded == 2
@@ -209,7 +209,7 @@ def test_copy_xml_load_and_unload(engine, tmp_path, ctx):
     r = engine.execute(
         "COPY INTO @sx1/out/ FROM x1 FILE_FORMAT=(TYPE=XML ROW_TAG='row')", ctx)
     assert r.rows_loaded == 2
-    stage_dir = engine.catalog.get_stage("sx1").directory
+    stage_dir = engine.catalog.get("STAGE", "sx1").directory
     back = (engine.spark.read.format("xml").option("rowTag", "row")
             .load(stage_dir + "/out"))
     # unloaded tags carry the catalog's uppercase column names
@@ -226,7 +226,7 @@ def test_copy_avro_corrupt_file_clear_error(engine, tmp_path, ctx):
     local = tmp_path / "a.avro"
     local.write_bytes(b"Obj\x01fake")
     engine.execute("CREATE STAGE savbad", ctx)
-    engine.stages.put_file(engine.catalog.get_stage("savbad"), str(local), "a.avro")
+    engine.stages.put_file(engine.catalog.get("STAGE", "savbad"), str(local), "a.avro")
     with _pytest.raises(Exception, match="(?i)avro|truncated|COPY failed"):
         engine.execute("COPY INTO avbad FROM @savbad FILE_FORMAT=(TYPE=AVRO)", ctx)
 
@@ -253,7 +253,7 @@ def test_copy_load_history_and_force(engine, tmp_path, ctx):
     import time as _time
 
     _time.sleep(0.01)  # ensure a distinct mtime_ns
-    stage = engine.catalog.get_stage("slh")
+    stage = engine.catalog.get("STAGE", "slh")
     local = tmp_path / "a2.csv"
     local.write_text("1,x\n2,y\n3,z\n")
     engine.stages.put_file(stage, str(local), "a.csv")
@@ -279,7 +279,7 @@ def test_pipe_create_refresh_show_drop(engine, tmp_path, ctx):
     engine.execute("ALTER PIPE p1 REFRESH", ctx)
     assert engine.execute("SELECT count(*) AS n FROM pt", ctx).rows == [[1]]
     # new file arrives -> only it loads on the next refresh
-    stage = engine.catalog.get_stage("sp")
+    stage = engine.catalog.get("STAGE", "sp")
     local = tmp_path / "f2.csv"
     local.write_text("2,b\n3,c\n")
     engine.stages.put_file(stage, str(local), "f2.csv")
@@ -310,7 +310,7 @@ def test_copy_xml_nested_into_variant(engine, tmp_path, ctx):
     local = tmp_path / "n.xml"
     local.write_text(xml)
     engine.execute("CREATE STAGE sxv", ctx)
-    engine.stages.put_file(engine.catalog.get_stage("sxv"), str(local), "n.xml")
+    engine.stages.put_file(engine.catalog.get("STAGE", "sxv"), str(local), "n.xml")
     r = engine.execute(
         "COPY INTO xv FROM @sxv FILE_FORMAT=(TYPE=XML ROW_TAG='row')", ctx)
     assert r.rows_loaded == 2
@@ -395,7 +395,7 @@ def test_copy_avro_load_and_unload(engine, tmp_path, ctx):
               ["bigint", "string", "double"],
               [(1, "a", 0.5), (2, None, -1.25), (None, "c", None)])
     _stage_with(engine, tmp_path, "sav", {})
-    engine.stages.put_file(engine.catalog.get_stage("sav"), str(src), "in.avro")
+    engine.stages.put_file(engine.catalog.get("STAGE", "sav"), str(src), "in.avro")
     r = engine.execute("COPY INTO av1 FROM @sav FILE_FORMAT=(TYPE=AVRO)", ctx)
     assert r.rows_loaded == 3
     rows = [tuple(x) for x in engine.execute(
@@ -407,7 +407,7 @@ def test_copy_avro_load_and_unload(engine, tmp_path, ctx):
     import glob
     import os as _os
 
-    stage_dir = engine.catalog.get_stage("sav").directory
+    stage_dir = engine.catalog.get("STAGE", "sav").directory
     files = glob.glob(_os.path.join(stage_dir, "out", "*.avro"))
     assert files
     got = []
@@ -427,7 +427,7 @@ def test_copy_avro_transform_select(engine, tmp_path, ctx):
     write_ocf(str(src), ["id", "name"], ["bigint", "string"],
               [(7, "abc"), (8, "xyz")], codec="null")
     _stage_with(engine, tmp_path, "sav2", {})
-    engine.stages.put_file(engine.catalog.get_stage("sav2"), str(src), "t.avro")
+    engine.stages.put_file(engine.catalog.get("STAGE", "sav2"), str(src), "t.avro")
     r = engine.execute(
         "COPY INTO av2 FROM (SELECT $1, UPPER($2) FROM @sav2) "
         "FILE_FORMAT=(TYPE=AVRO)", ctx)

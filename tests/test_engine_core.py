@@ -135,7 +135,7 @@ def test_copy_into_csv(engine, tmp_path):
     ctx = SessionContext()
     engine.execute("CREATE TABLE copy_t (id INTEGER, name VARCHAR)", ctx)
     engine.execute("CREATE STAGE mystage", ctx)
-    stage = engine.catalog.get_stage("mystage")
+    stage = engine.catalog.get("STAGE", "mystage")
     (tmp_path / "data.csv").write_text("id,name\n1,Alice\n2,Bob\n")
     engine.stages.put_file(stage, str(tmp_path / "data.csv"))
     r = engine.execute(
@@ -275,7 +275,7 @@ def test_copy_inside_transaction_rolls_back(engine, tmp_path):
     engine.execute("CREATE TABLE tx_copy (id INTEGER, v VARCHAR)", ctx)
     engine.execute("INSERT INTO tx_copy VALUES (1,'pre')", ctx)
     engine.execute("CREATE STAGE txstage", ctx)
-    engine.stages.put_file(engine.catalog.get_stage("txstage"), str(f))
+    engine.stages.put_file(engine.catalog.get("STAGE", "txstage"), str(f))
     engine.execute("BEGIN", ctx)
     engine.execute(
         "COPY INTO tx_copy FROM @txstage FILE_FORMAT = (TYPE = 'CSV' SKIP_HEADER = 1)", ctx)
@@ -841,7 +841,7 @@ def test_external_table_over_stage(engine, tmp_path):
     writes rejected (EXTERNAL kind)."""
     ctx = SessionContext()
     engine.execute("CREATE STAGE ext_s", ctx)
-    stage = engine.catalog.get_stage("ext_s")
+    stage = engine.catalog.get("STAGE", "ext_s")
     df = engine.spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     import glob
     import shutil

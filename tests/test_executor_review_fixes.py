@@ -354,7 +354,7 @@ def test_stage_put_to_root_raises_typed_error(engine):
 
     ctx = SessionContext()
     engine.execute("CREATE STAGE rootput_stage", ctx)
-    stage = engine.catalog.get_stage("rootput_stage", ctx.database, ctx.schema)
+    stage = engine.catalog.get("STAGE", "rootput_stage", ctx.database, ctx.schema)
     with pytest.raises(err.SnowflakeError, match="directory"):
         engine.stages.put_bytes(stage, b"x", "/")
 

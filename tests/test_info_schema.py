@@ -90,7 +90,7 @@ def test_info_schema_pipes_and_table_kinds(engine, tmp_path):
     engine.execute("CREATE STAGE isk_s", ctx)
     p = tmp_path / "one.csv"
     p.write_text("1\n")
-    engine.stages.put_file(engine.catalog.get_stage("isk_s"), str(p))
+    engine.stages.put_file(engine.catalog.get("STAGE", "isk_s"), str(p))
     engine.execute(
         "CREATE PIPE isk_p AS COPY INTO isk_base FROM @isk_s "
         "FILE_FORMAT=(TYPE=CSV)", ctx)

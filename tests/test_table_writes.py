@@ -82,7 +82,7 @@ def test_copy_keeps_time_travel_before_it(engine, tmp_path):
     f = tmp_path / "two.csv"
     f.write_text("2,b\n3,c\n")
     engine.stages.put_file(
-        engine.catalog.get_stage("tt_copy_s", ctx.database, ctx.schema), str(f))
+        engine.catalog.get("STAGE", "tt_copy_s", ctx.database, ctx.schema), str(f))
     qid = engine.execute("COPY INTO tt_copy FROM @tt_copy_s/two.csv", ctx).query_id
     res = engine.execute(
         f"SELECT count(*) AS n FROM tt_copy BEFORE(STATEMENT => '{qid}')", ctx)
@@ -102,7 +102,7 @@ def test_multi_file_copy_is_one_version(engine, tmp_path):
     pre = tm.version
     time.sleep(1.2)
     engine.execute("CREATE STAGE tt_mcopy_s", ctx)
-    stage = engine.catalog.get_stage("tt_mcopy_s", ctx.database, ctx.schema)
+    stage = engine.catalog.get("STAGE", "tt_mcopy_s", ctx.database, ctx.schema)
     for i in range(4):
         f = tmp_path / f"part{i}.csv"
         f.write_text(f"{10 + 2 * i},x\n{11 + 2 * i},y\n")
@@ -143,7 +143,7 @@ def test_copy_error_found_after_the_read_names_the_file(engine, tmp_path):
     version, ABORT_STATEMENT names it and loads nothing."""
     ctx = SessionContext()
     engine.execute("CREATE STAGE ce_s", ctx)
-    stage = engine.catalog.get_stage("ce_s", ctx.database, ctx.schema)
+    stage = engine.catalog.get("STAGE", "ce_s", ctx.database, ctx.schema)
     for name, body in (("a.csv", "1,x\n"), ("b.csv", "oops,y\n"), ("c.csv", "3,z\n")):
         f = tmp_path / name
         f.write_text(body)
